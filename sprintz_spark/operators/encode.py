@@ -21,7 +21,8 @@ python/codec.py:439-535) onto Spark:
     ``query_encoded_container``: the multi-series 'C' format — one blob
     per (partition, column) holding ALL series of the slice, so output
     rows/files are O(partitions) not O(keys) and tiny series cost a few
-    bytes each. The retention tier store uses this by default.
+    bytes each; series longer than chunk_rows are cut into row-sliced
+    pieces. This is the retention tier store's only layout.
 
 Scale notes: group state is O(chunk) not O(series); chunk_rows bounds
 executor memory; a year of 1-minute buckets per url is ~525k rows → a few
@@ -352,6 +353,32 @@ def _enc_schema(key_cols: list[str], value_cols: list[str], key_types) -> Struct
     return StructType(fields)
 
 
+def _series_pieces(
+    pdf: pd.DataFrame, key_cols: list[str], chunk_rows: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Cut a key-sorted frame into row-sliced pieces of at most
+    ``chunk_rows`` rows that never cross a series (key) boundary. Pure
+    numpy: series boundaries from key-change points, pieces by
+    arithmetic. Returns each piece's index within its series, first row
+    and row count; the pieces tile the frame's rows in order."""
+    n = len(pdf)
+    change = np.zeros(n, dtype=bool)
+    change[0] = True
+    for k in key_cols:
+        a = pdf[k].to_numpy()
+        change[1:] |= a[1:] != a[:-1]
+    s_starts = np.flatnonzero(change)
+    s_lens = np.diff(np.append(s_starts, n))
+    reps = (s_lens + chunk_rows - 1) // chunk_rows
+    piece_series = np.repeat(np.arange(len(s_starts)), reps)
+    piece_ord = np.arange(int(reps.sum()), dtype=np.int64) - np.repeat(
+        np.concatenate([[0], np.cumsum(reps)[:-1]]), reps
+    )
+    piece_starts = s_starts[piece_series] + piece_ord * chunk_rows
+    piece_lens = np.minimum(chunk_rows, s_lens[piece_series] - piece_ord * chunk_rows)
+    return piece_ord, piece_starts, piece_lens
+
+
 def encode_series(
     df: DataFrame,
     key_cols: list[str] = ("url",),
@@ -404,26 +431,12 @@ def encode_series(
         n = len(pdf)
         if n == 0:
             return pd.DataFrame(columns=col_names)
-        # one vectorized sort, then pure-numpy segmentation: series
-        # boundaries from key-change points, chunk pieces by arithmetic —
-        # no per-series pandas objects anywhere
+        # one vectorized sort, then pure-numpy segmentation — no
+        # per-series pandas objects anywhere
         pdf = pdf.sort_values(key_cols + [ts_col], kind="mergesort").reset_index(
             drop=True
         )
-        change = np.zeros(n, dtype=bool)
-        change[0] = True
-        for k in key_cols:
-            a = pdf[k].to_numpy()
-            change[1:] |= a[1:] != a[:-1]
-        s_starts = np.flatnonzero(change)
-        s_lens = np.diff(np.append(s_starts, n))
-        reps = (s_lens + chunk_rows - 1) // chunk_rows
-        piece_series = np.repeat(np.arange(len(s_starts)), reps)
-        piece_ord = np.arange(int(reps.sum()), dtype=np.int64) - np.repeat(
-            np.concatenate([[0], np.cumsum(reps)[:-1]]), reps
-        )
-        piece_starts = s_starts[piece_series] + piece_ord * chunk_rows
-        piece_lens = np.minimum(chunk_rows, s_lens[piece_series] - piece_ord * chunk_rows)
+        piece_ord, piece_starts, piece_lens = _series_pieces(pdf, key_cols, chunk_rows)
         n_pieces = len(piece_starts)
 
         ts_np = pdf[ts_col].astype("datetime64[us]").to_numpy()
@@ -640,9 +653,7 @@ def query_encoded(
     )
 
 
-# --- multi-series containers (tiny-series tiers) ---------------------------
-
-_CONT_COLS = None  # built per call
+# --- multi-series containers (the retention store layout) ------------------
 
 
 def encode_series_container(
@@ -658,9 +669,14 @@ def encode_series_container(
     packed into one blob per column (codecs.sprintz.encode_container).
     For tiers whose per-key series are tiny (the daily tier's 1-3 points)
     this amortizes per-blob framing to ~2-9 B per series — per-series rows
-    would pay 10-21 B of head each. Series never straddle containers;
-    containers are capped at ~chunk_rows rows, so decode memory is
-    bounded regardless of partition size. int64 measures only."""
+    would pay 10-21 B of head each. A series longer than ``chunk_rows`` is
+    cut into row-sliced pieces of at most ``chunk_rows`` rows (the
+    per-series chunking of encode_series); pieces are packed by their
+    cumulative row offset, so a key appears at most once per container,
+    a container holds fewer than 2 * ``chunk_rows`` rows (decode memory
+    is bounded regardless of series length), and TTL expiry finds whole
+    old pieces to drop. ``start_bucket`` / ``end_bucket`` are the
+    container's min / max bucket. int64 measures only."""
     if len(list(key_cols)) != 1:
         raise ValueError("container encoding supports a single key column")
     key = list(key_cols)[0]
@@ -697,46 +713,44 @@ def encode_series_container(
 
     def enc(pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.perf_counter()
-        n = len(pdf)
-        if n == 0:
+        if len(pdf) == 0:
             return pd.DataFrame(columns=col_names)
         pdf = pdf.sort_values([key, ts_col], kind="mergesort").reset_index(drop=True)
+        _, p_starts, p_lens = _series_pieces(pdf, [key], chunk_rows)
+        # the pieces tile the rows, so a piece's first row is its
+        # cumulative offset: container = offset // chunk_rows. A piece has
+        # at most chunk_rows rows, so one series' consecutive pieces land
+        # in consecutive containers — a key appears at most once per
+        # container
+        cont = p_starts // chunk_rows
+        firsts = np.flatnonzero(np.diff(cont, prepend=-1))
         karr = pdf[key].to_numpy()
-        change = np.zeros(n, dtype=bool)
-        change[0] = True
-        change[1:] = karr[1:] != karr[:-1]
-        s_starts = np.flatnonzero(change)
-        s_lens = np.diff(np.append(s_starts, n))
-        # assign whole series to containers of <= chunk_rows rows
-        cum = np.cumsum(s_lens)
-        cont_of_series = ((cum - s_lens) // chunk_rows).astype(np.int64)
         ts_np = pdf[ts_col].astype("datetime64[us]").to_numpy()
         ts_i64 = ts_np.view(np.int64)
+        vals = {c: pdf[c].to_numpy().astype(np.int64, copy=False) for c in value_cols}
         rows = []
-        for c_id in np.unique(cont_of_series):
-            sel = cont_of_series == c_id
-            lens_c = s_lens[sel]
-            lo = int(s_starts[sel][0])
-            hi = int(s_starts[sel][-1] + lens_c[-1])
+        for sel in np.split(np.arange(len(p_starts)), firsts[1:]):
+            lens_c = p_lens[sel]
+            lo = int(p_starts[sel[0]])
+            hi = int(p_starts[sel[-1]] + lens_c[-1])
             total = hi - lo
             ts_blob = sz.encode_container(ts_i64[lo:hi], lens_c, "doubledelta")
             raw = total * 8
             comp = len(ts_blob)
             rec = {
-                "chunk": int(c_id),
-                "n_series": int(sel.sum()),
-                "keys": karr[s_starts[sel]].tolist(),
-                "start_bucket": ts_np[lo],
-                "end_bucket": ts_np[lo:hi].max(),
+                "chunk": int(cont[sel[0]]),
+                "n_series": len(sel),
+                "keys": karr[p_starts[sel]].tolist(),
+                # each piece is time-sorted, so the container's bucket
+                # range spans its pieces' first and last buckets
+                "start_bucket": ts_np[p_starts[sel]].min(),
+                "end_bucket": ts_np[p_starts[sel] + lens_c - 1].max(),
                 "n": total,
                 "ts_blob": ts_blob,
             }
             metas = {"ts": {"codec": "sprintz-container", "mode": "doubledelta"}}
             for c in value_cols:
-                vals = pdf[c].to_numpy()[lo:hi]
-                if vals.dtype != np.int64:
-                    vals = vals.astype(np.int64)
-                blob = sz.encode_container(vals, lens_c, "auto")
+                blob = sz.encode_container(vals[c][lo:hi], lens_c, "auto")
                 metas[c] = {"codec": "sprintz-container", "np_dtype": "int64"}
                 rec[f"blob_{c}"] = blob
                 raw += total * 8

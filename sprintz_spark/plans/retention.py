@@ -34,10 +34,9 @@ from pyspark.sql import functions as F
 from sprintz_spark.operators import rollup as R
 from sprintz_spark.operators.encode import (
     DEFAULT_CHUNK,
-    decode_series,
     decode_series_container,
-    encode_series,
     encode_series_container,
+    query_encoded_container,
 )
 
 MEASURES = ["crawl_count", "byte_size_sum", "byte_size_max", "byte_size_min"]
@@ -102,21 +101,94 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
         return None
 
 
-def _pending_parts(
-    spark: SparkSession, out_dir: str, tier: str, snapshot_id: str, n_buckets: int
-) -> list[int]:
-    man = read_manifest(spark, out_dir)
-    if man is None:
-        return list(range(n_buckets))
-    done = {
-        r["part"]
-        for r in man.where(
-            (F.col("tier") == tier) & (F.col("snapshot_id") == snapshot_id)
+def _enc_dir(out_dir: str, snapshot_id: str, tier: str) -> str:
+    return os.path.join(out_dir, f"snap={snapshot_id}", f"encoded_tier={tier}")
+
+
+def _read_encoded(
+    spark: SparkSession, paths: list[str], base_path: str | None = None
+) -> DataFrame:
+    """The one reader of encoded-tier directories. With ``base_path``,
+    partition discovery turns the dir names under it (snap /
+    encoded_tier / part) into columns, so several directories read as
+    one scan. Spark's listing skips ``_``/``.``-prefixed paths, so a
+    leftover ``_temporary`` file of a failed write is never read.
+    Raises ValueError on a store without the container ``keys`` column
+    (the per-series chunk layout older versions could write)."""
+    reader = spark.read
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    enc = reader.parquet(*paths)
+    if "keys" not in enc.columns:
+        raise ValueError(
+            f"{', '.join(paths)}: per-series chunk layout (no 'keys' column); "
+            "the retention store reads only the multi-series container "
+            "layout — rebuild it with run_retention"
         )
-        .select("part")
-        .collect()
-    }
-    return [p for p in range(n_buckets) if p not in done]
+    return enc
+
+
+def _write_encoded(
+    df: DataFrame,
+    tier_col: str,
+    tiers: tuple[str, ...],
+    n_buckets: int,
+    chunk_rows: int,
+    dest_dir: str,
+) -> None:
+    """ONE container encode job over every tier in ``df`` (rows carry
+    ``tier_col`` and ``part``), grouped by the composite ``_tp =
+    tier_index*n_buckets + part`` — each applyInPandas group is still a
+    single (tier, part) slice, so the chunk bytes are identical to
+    per-tier encodes — and written with ``partitionBy(encoded_tier,
+    part)``: the <dest_dir>/encoded_tier=<t>/part=<p> layout."""
+    spark = df.sparkSession
+    tier_arr = F.array(*[F.lit(t) for t in tiers])
+    df = df.withColumn(
+        "_tp",
+        (F.array_position(tier_arr, F.col(tier_col)) - 1) * n_buckets + F.col("part"),
+    ).drop(tier_col, "part")
+    enc = encode_series_container(
+        df,
+        key_cols=["url"],
+        part_col="_tp",
+        value_cols=MEASURES,
+        chunk_rows=chunk_rows,
+        # pin the encode task count (scale-adaptive) so AQE's byte-based
+        # coalescing can't serialize the CPU-bound encode UDF onto one
+        # task (operators/encode.py r10 note)
+        n_parts=spark.sparkContext.defaultParallelism * 2,
+    )
+    enc.withColumn(
+        "encoded_tier",
+        F.element_at(tier_arr, F.expr(f"cast(_tp DIV {n_buckets} AS int) + 1")),
+    ).withColumn(
+        "part", F.pmod(F.col("_tp"), F.lit(n_buckets)).cast("int")
+    ).drop("_tp").write.partitionBy("encoded_tier", "part").mode(
+        "overwrite"
+    ).parquet(dest_dir)
+
+
+def _chunk_stats(enc: DataFrame, snapshot_id: str, t0: float) -> DataFrame:
+    """Manifest rows, one per (tier, part), from encoded chunk rows read
+    with ``encoded_tier`` as a partition column."""
+    return (
+        enc.groupBy(F.col("encoded_tier").alias("tier"), "part")
+        .agg(
+            F.count(F.lit(1)).alias("n_chunks"),
+            F.sum("n").alias("n_rows"),
+            F.sum("raw_bytes").alias("raw_bytes"),
+            F.sum("comp_bytes").alias("comp_bytes"),
+            F.sum("encode_secs").alias("encode_secs"),
+            F.min("start_bucket").alias("min_bucket"),
+        )
+        .withColumn("snapshot_id", F.lit(snapshot_id))
+        .withColumn("wall_secs", F.lit(time.perf_counter() - t0))
+        .select(
+            "part", "n_chunks", "n_rows", "raw_bytes", "comp_bytes",
+            "encode_secs", "min_bucket", "tier", "snapshot_id", "wall_secs",
+        )
+    )
 
 
 def run_retention(
@@ -126,17 +198,16 @@ def run_retention(
     tiers: tuple[str, ...] = ("1m", "1h", "1d"),
     n_buckets: int = 8,
     chunk_rows: int = DEFAULT_CHUNK,
-    salted: bool = False,
-    container_tiers: tuple[str, ...] = ("1m", "1h", "1d"),
 ) -> dict:
     """Execute the cascade; returns {tier: {parts_written, skipped, ...}}.
 
-    ``salted=False`` by default: the tier measures are all algebraic, so
-    Catalyst's map-side partial aggregation already combines hot
-    (url, bucket) keys before the shuffle — measured, the explicit
-    two-phase salt costs a second full shuffle for identical output. Set
-    ``salted=True`` for non-algebraic extensions or pathological single-key
-    skew; equivalence is oracle-verified (rollup_1d_salted query).
+    Every tier is stored as multi-series containers
+    (operators.encode.encode_series_container): they amortize blob
+    framing across all series of a partition AND give the deflate
+    post-pass cross-series redundancy (measured against per-series
+    chunks: 1m 4.8->7.7x, 1h 4.9->8.8x, 1d 1.7->4.7x); series longer
+    than ``chunk_rows`` are cut into row-sliced pieces, so TTL expiry
+    has whole chunks to drop.
 
     Job-count discipline (r8 verdict item 3 — a lifecycle that launches
     ~12 driver actions per snapshot is scheduler-bound at fleet scale):
@@ -146,11 +217,7 @@ def run_retention(
         byte-identical to per-tier writes), cascading off the
         materialized finest tier, so raw pages are never re-read;
       * ONE manifest read resolves pending parts for all tiers;
-      * ONE encode job per wire format covers all pending tiers, grouped
-        by the composite ``_tp = tier_index*n_buckets + part`` (each
-        applyInPandas group is still a single (tier, part) slice, so the
-        chunk bytes are identical to per-tier encodes) and written with
-        ``partitionBy(encoded_tier, part)`` — again the existing layout;
+      * ONE encode job covers all pending tiers (see _write_encoded);
       * ONE stats job over the written chunks appends every tier's
         manifest rows (wall_secs is the whole run's wall, attributed to
         each row — per-tier encode cost stays separable via encode_secs).
@@ -164,16 +231,12 @@ def run_retention(
     def _series_path(tier: str) -> str:
         return os.path.join(snap_dir, f"series_tier={tier}")
 
-    def _enc_path(tier: str) -> str:
-        return os.path.join(snap_dir, f"encoded_tier={tier}")
-
     def _with_part(df: DataFrame) -> DataFrame:
         return df.withColumn(
             "part", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
         )
 
-    derive = R.derive_series_salted if salted else R.derive_series
-    first = _with_part(derive(pages, tiers[0]))
+    first = _with_part(R.derive_series(pages, tiers[0]))
     first.withColumn("series_tier", F.lit(tiers[0])).write.partitionBy(
         "series_tier"
     ).mode("overwrite").parquet(snap_dir)
@@ -206,93 +269,33 @@ def run_retention(
         ):
             done[r["tier"]].add(r["part"])
     pending = {t: [p for p in range(n_buckets) if p not in done[t]] for t in tiers}
+    todo = tuple(t for t in tiers if pending[t])
 
-    # the multi-series container amortizes blob framing across all series
-    # of a partition AND gives the deflate post-pass cross-series
-    # redundancy (measured: 1m 4.8->7.7x, 1h 4.9->8.8x, 1d 1.7->4.7x).
-    # Pass container_tiers=() for per-series rows when the store must
-    # serve single-url reads.
-    tier_idx = {t: i for i, t in enumerate(tiers)}
-    tier_arr = F.array(*[F.lit(t) for t in tiers])
-    for is_container in (True, False):
-        todo = [
-            t for t in tiers if pending[t] and ((t in container_tiers) == is_container)
-        ]
-        if not todo:
-            continue
+    def _is_pending(tier_col: str):
+        keep = None
+        for t in todo:
+            c = (F.col(tier_col) == t) & F.col("part").isin(pending[t])
+            keep = c if keep is None else (keep | c)
+        return keep
+
+    if todo:
         # ONE partition-discovery scan over all pending tiers (the
         # series_tier dir name becomes a partition column) instead of a
         # per-tier read + union: same rows, one scan subtree in the plan
         s = spark.read.option("basePath", snap_dir).parquet(
             *[_series_path(t) for t in todo]
         )
-        keep = None
-        for t in todo:
-            c = (F.col("series_tier") == t) & F.col("part").isin(pending[t])
-            keep = c if keep is None else (keep | c)
-        u = s.where(keep).withColumn(
-            "_tp",
-            (F.array_position(tier_arr, F.col("series_tier")) - 1) * n_buckets
-            + F.col("part"),
-        ).drop("series_tier")
-        encoder = encode_series_container if is_container else encode_series
-        enc = encoder(
-            u,
-            key_cols=["url"],
-            part_col="_tp",
-            value_cols=MEASURES,
-            chunk_rows=chunk_rows,
-            # pin the encode task count (scale-adaptive) so AQE's
-            # byte-based coalescing can't serialize the CPU-bound encode
-            # UDF onto one task (operators/encode.py r10 note)
-            n_parts=spark.sparkContext.defaultParallelism * 2,
+        _write_encoded(
+            s.where(_is_pending("series_tier")), "series_tier", todo,
+            n_buckets, chunk_rows, snap_dir,
         )
-        enc = (
-            enc.withColumn(
-                "encoded_tier",
-                F.element_at(tier_arr, F.expr(f"cast(_tp DIV {n_buckets} AS int) + 1")),
-            )
-            .withColumn("part", F.pmod(F.col("_tp"), F.lit(n_buckets)).cast("int"))
-            .drop("_tp")
+        # manifest rows for every written tier from one stats job over
+        # ONE partition-discovery scan
+        written = _read_encoded(
+            spark, [_enc_dir(out_dir, snapshot_id, t) for t in todo], snap_dir
         )
-        enc.write.partitionBy("encoded_tier", "part").mode("overwrite").parquet(
-            snap_dir
-        )
-
-    # manifest rows for every written tier from one stats job over ONE
-    # partition-discovery scan (encoded_tier/part are dir-name partition
-    # columns — no per-tier read + union)
-    written = [t for t in tiers if pending[t]]
-    if written:
-        su = (
-            spark.read.option("basePath", snap_dir)
-            .parquet(*[_enc_path(t) for t in written])
-            .withColumn("tier", F.col("encoded_tier"))
-        )
-        keep = None
-        for t in written:
-            c = (F.col("tier") == t) & F.col("part").isin(pending[t])
-            keep = c if keep is None else (keep | c)
-        su = su.where(keep).select(
-            "tier", "part", "n", "raw_bytes", "comp_bytes", "encode_secs",
-            "start_bucket",
-        )
-        stats = (
-            su.groupBy("tier", "part")
-            .agg(
-                F.count(F.lit(1)).alias("n_chunks"),
-                F.sum("n").alias("n_rows"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("comp_bytes").alias("comp_bytes"),
-                F.sum("encode_secs").alias("encode_secs"),
-                F.min("start_bucket").alias("min_bucket"),
-            )
-            .withColumn("snapshot_id", F.lit(snapshot_id))
-            .withColumn("wall_secs", F.lit(time.perf_counter() - t_run0))
-            .select(
-                "part", "n_chunks", "n_rows", "raw_bytes", "comp_bytes",
-                "encode_secs", "min_bucket", "tier", "snapshot_id", "wall_secs",
-            )
+        stats = _chunk_stats(
+            written.where(_is_pending("encoded_tier")), snapshot_id, t_run0
         )
         with _MANIFEST_LOCK:
             stats.write.mode("append").parquet(_manifest_path(out_dir))
@@ -301,7 +304,7 @@ def run_retention(
             "parts_written": len(pending[tier]),
             "parts_skipped": n_buckets - len(pending[tier]),
             "series_path": _series_path(tier),
-            "encoded_path": _enc_path(tier),
+            "encoded_path": _enc_dir(out_dir, snapshot_id, tier),
         }
         for tier in tiers
     }
@@ -338,53 +341,19 @@ def tier_ratio_report(spark: SparkSession, out_dir: str, snapshot_id: str) -> di
 def read_tier_decoded(
     spark: SparkSession, out_dir: str, snapshot_id: str, tier: str
 ) -> DataFrame:
-    """Read an encoded tier back as decoded rows, dispatching on the
-    stored format (per-series chunks vs multi-series containers)."""
-    enc = spark.read.parquet(
-        os.path.join(out_dir, f"snap={snapshot_id}", f"encoded_tier={tier}")
-    )
-    if "keys" in enc.columns:  # container format
-        return decode_series_container(enc, key_cols=["url"], value_cols=MEASURES)
-    return decode_series(enc, key_cols=["url"], value_cols=MEASURES)
+    """Read an encoded tier back as decoded rows."""
+    enc = _read_encoded(spark, [_enc_dir(out_dir, snapshot_id, tier)])
+    return decode_series_container(enc, key_cols=["url"], value_cols=MEASURES)
 
 
 def query_tier(
     spark: SparkSession, out_dir: str, snapshot_id: str, tier: str, value_col: str
 ) -> DataFrame:
     """Per-url sum/max/min/count of a measure straight from the encoded
-    tier store — query-on-compressed dispatching on the stored format;
-    never materializes the decoded tier."""
-    from sprintz_spark.operators.encode import query_encoded, query_encoded_container
-
-    enc = spark.read.parquet(
-        os.path.join(out_dir, f"snap={snapshot_id}", f"encoded_tier={tier}")
-    )
-    if "keys" in enc.columns:
-        return query_encoded_container(enc, value_col, key_col="url")
-    return query_encoded(enc, value_col, key_cols=["url"])
-
-
-def _is_container_store(spark: SparkSession, path: str) -> bool:
-    """Wire-format sniff for one encoded-tier directory: container stores
-    carry a ``keys`` column. A ``spark.read.parquet(...).columns`` schema
-    resolve costs ~70 ms of driver planning per call (r10 measurement:
-    6 calls = 0.44 s of a 3.4 s compact); a driver-side pyarrow footer
-    read answers the same question in ~1 ms when the store is on a local
-    filesystem. Non-local stores (no globbable files) fall back to the
-    spark.read resolve."""
-    try:
-        import glob
-
-        import pyarrow.parquet as pq
-
-        local = path[len("file:"):] if path.startswith("file:") else path
-        for f in glob.iglob(
-            os.path.join(local, "**", "*.parquet"), recursive=True
-        ):
-            return "keys" in pq.ParquetFile(f).schema_arrow.names
-    except Exception:
-        pass
-    return "keys" in spark.read.parquet(path).columns
+    tier store — query-on-compressed; never materializes the decoded
+    tier."""
+    enc = _read_encoded(spark, [_enc_dir(out_dir, snapshot_id, tier)])
+    return query_encoded_container(enc, value_col, key_col="url")
 
 
 def compact_tiers(
@@ -422,7 +391,7 @@ def compact_tiers(
 
     report: dict = {}
     lineage: dict = {"source_snapshots": list(snapshot_ids), "tiers": {}}
-    # resume idempotence (mirrors run_retention's _pending_parts): a tier
+    # resume idempotence (mirrors run_retention's pending parts): a tier
     # whose (tier, dest_snapshot_id) manifest rows already exist was fully
     # compacted by a prior run — re-running must not append a second set
     # of rows (which would double-count bytes in tier_ratio_report)
@@ -455,12 +424,11 @@ def compact_tiers(
                 src_covered.add((r["tier"], r["snapshot_id"]))
     for tier in tiers:
         if tier in done_tiers:
-            enc_done = spark.read.parquet(
-                os.path.join(out_dir, f"snap={dest_snapshot_id}", f"encoded_tier={tier}")
+            agg = (
+                _read_encoded(spark, [_enc_dir(out_dir, dest_snapshot_id, tier)])
+                .agg(F.count(F.lit(1)).alias("c"), F.sum("n").alias("r"))
+                .collect()[0]
             )
-            agg = enc_done.agg(
-                F.count(F.lit(1)).alias("c"), F.sum("n").alias("r")
-            ).collect()[0]
             report[tier] = {
                 "src_chunks": None,
                 "dst_chunks": agg["c"],
@@ -469,132 +437,52 @@ def compact_tiers(
             }
             lineage["tiers"][tier] = report[tier]
     # ALL pending tiers compact in one pass (r8 verdict item 3 — the
-    # per-tier loop was 4 driver actions x tiers): one union counts
-    # source chunks per tier, one hash aggregation resolves newest-wins
-    # across every (tier, url, bucket), one encode job groups by the
-    # composite (tier, part) key — each applyInPandas group is still a
-    # single (tier, part) slice, so chunk bytes match per-tier encodes —
-    # and one partitionBy(encoded_tier, part) write lands the existing
-    # snap=<dest>/encoded_tier=<t>/part=<p> layout.
+    # per-tier loop was 4 driver actions x tiers): ONE partition-discovery
+    # read of every (source snapshot, tier) directory (snap / encoded_tier
+    # become columns from the dir names), one decode, one hash
+    # aggregation resolving newest-wins across every (tier, url, bucket),
+    # and one encode job + write (_write_encoded).
     todo = tuple(t for t in tiers if t not in done_tiers)
     if todo:
         t0 = time.perf_counter()
         dest_dir = os.path.join(out_dir, f"snap={dest_snapshot_id}")
-        # ONE partition-discovery read per wire format (snap / encoded_tier
-        # become partition columns from the dir names) instead of a decode
-        # subtree per (tier, snapshot) — a 3-tier x 2-snapshot compact used
-        # to union 6 mapInPandas branches; now it is 1 per format present.
-        by_fmt: dict[bool, list[tuple[str, str, str]]] = {}
+        enc = _read_encoded(
+            spark,
+            [_enc_dir(out_dir, sid, t) for t in todo for sid in snapshot_ids],
+            out_dir,
+        )
+        # fall back to counting chunk rows only for sources the manifest
+        # does not cover (manifest-less stores)
+        uncovered = None
         for tier in todo:
             for sid in snapshot_ids:
-                p = os.path.join(out_dir, f"snap={sid}", f"encoded_tier={tier}")
-                by_fmt.setdefault(_is_container_store(spark, p), []).append(
-                    (tier, sid, p)
+                if (tier, sid) not in src_covered:
+                    c = (F.col("encoded_tier") == tier) & (F.col("snap") == sid)
+                    uncovered = c if uncovered is None else (uncovered | c)
+        if uncovered is not None:
+            for r in enc.where(uncovered).groupBy("encoded_tier").count().collect():
+                src_chunks[r["encoded_tier"]] = (
+                    src_chunks.get(r["encoded_tier"], 0) + r["count"]
                 )
         sid_arr = F.array(*[F.lit(s) for s in snapshot_ids])
-        decs, metas = [], []
-        for is_cont, members in by_fmt.items():
-            enc = spark.read.option("basePath", out_dir).parquet(
-                *[p for _, _, p in members]
-            )
-            # fall back to counting chunk rows only for sources the
-            # manifest does not cover (manifest-less stores)
-            for tier, sid, _p in members:
-                if (tier, sid) not in src_covered:
-                    metas.append(
-                        enc.where(
-                            (F.col("encoded_tier") == tier)
-                            & (F.col("snap") == sid)
-                        ).select(F.col("encoded_tier").alias("tier"))
-                    )
-            dec = (
-                decode_series_container(enc, key_cols=["url"], value_cols=MEASURES)
-                if is_cont
-                else decode_series(
-                    enc, key_cols=["snap", "encoded_tier", "url"],
-                    value_cols=MEASURES,
-                )
-            )
-            # fixed column set: container decode passes extra columns
-            # (snap / encoded_tier / part) through; normalize both formats
-            # to the same shape so mixed-format stores union cleanly
-            decs.append(
-                dec.withColumn("_snap_ord", F.array_position(sid_arr, F.col("snap")) - 1)
-                .withColumn("tier", F.col("encoded_tier"))
-                .select("tier", "url", "bucket", *MEASURES, "_snap_ord")
-            )
-        if metas:
-            src_meta = metas[0]
-            for m in metas[1:]:
-                src_meta = src_meta.unionAll(m)
-            for r in src_meta.groupBy("tier").count().collect():
-                src_chunks[r["tier"]] = src_chunks.get(r["tier"], 0) + r["count"]
-        merged = decs[0]
-        for d in decs[1:]:
-            merged = merged.unionByName(d)
-        # newest-snapshot-wins per (tier, url, bucket): one hash aggregation
-        merged = merged.groupBy("tier", "url", "bucket").agg(
-            *[F.max_by(c, "_snap_ord").alias(c) for c in MEASURES]
+        merged = (
+            decode_series_container(enc, key_cols=["url"], value_cols=MEASURES)
+            .withColumn("_snap_ord", F.array_position(sid_arr, F.col("snap")) - 1)
+            .groupBy(F.col("encoded_tier").alias("tier"), "url", "bucket")
+            .agg(*[F.max_by(c, "_snap_ord").alias(c) for c in MEASURES])
+            .withColumn("part", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
         )
-        tier_idx = {t: i for i, t in enumerate(todo)}
-        tier_arr = F.array(*[F.lit(t) for t in todo])
-        merged = merged.withColumn(
-            "part", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-        ).withColumn(
-            "_tp",
-            (F.array_position(tier_arr, F.col("tier")) - 1) * n_buckets
-            + F.col("part"),
-        )
-        enc = encode_series_container(
-            merged,
-            key_cols=["url"],
-            part_col="_tp",
-            value_cols=MEASURES,
-            chunk_rows=chunk_rows,
-            # pinned task count — same AQE-coalescing rationale as
-            # run_retention's encode job
-            n_parts=spark.sparkContext.defaultParallelism * 2,
-        )
-        enc = (
-            enc.withColumn(
-                "encoded_tier",
-                F.element_at(tier_arr, F.expr(f"cast(_tp DIV {n_buckets} AS int) + 1")),
-            )
-            .withColumn("part", F.pmod(F.col("_tp"), F.lit(n_buckets)).cast("int"))
-            .drop("_tp")
-        )
-        enc.write.partitionBy("encoded_tier", "part").mode("overwrite").parquet(
-            dest_dir
-        )
+        _write_encoded(merged, "tier", todo, n_buckets, chunk_rows, dest_dir)
         # one stats job over all written tiers -> manifest append from
-        # local rows; the report's totals derive from the same rows.
-        # ONE partition-discovery scan (encoded_tier from dir names)
-        # replaces the per-tier read + union.
-        su = (
-            spark.read.option("basePath", dest_dir)
-            .parquet(*[os.path.join(dest_dir, f"encoded_tier={t}") for t in todo])
-            .withColumn("tier", F.col("encoded_tier"))
-            .select(
-                "tier", "part", "n", "raw_bytes", "comp_bytes", "encode_secs",
-                "start_bucket",
-            )
-        )
-        stats = (
-            su.groupBy("tier", "part")
-            .agg(
-                F.count(F.lit(1)).alias("n_chunks"),
-                F.sum("n").alias("n_rows"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("comp_bytes").alias("comp_bytes"),
-                F.sum("encode_secs").alias("encode_secs"),
-                F.min("start_bucket").alias("min_bucket"),
-            )
-            .withColumn("snapshot_id", F.lit(dest_snapshot_id))
-            .withColumn("wall_secs", F.lit(time.perf_counter() - t0))
-            .select(
-                "part", "n_chunks", "n_rows", "raw_bytes", "comp_bytes",
-                "encode_secs", "min_bucket", "tier", "snapshot_id", "wall_secs",
-            )
+        # local rows; the report's totals derive from the same rows
+        stats = _chunk_stats(
+            _read_encoded(
+                spark,
+                [_enc_dir(out_dir, dest_snapshot_id, t) for t in todo],
+                dest_dir,
+            ),
+            dest_snapshot_id,
+            t0,
         )
         stats_rows = stats.collect()
         from sprintz_spark.session import local_values_df
@@ -638,13 +526,10 @@ def read_tier_range(
     [start_bucket, end_bucket] window misses the range are pruned at the
     parquet scan (column min/max stats — no decode, no read of the blob
     bytes), then exact row filtering happens after decode."""
-    enc = spark.read.parquet(
-        os.path.join(out_dir, f"snap={snapshot_id}", f"encoded_tier={tier}")
-    ).where((F.col("start_bucket") <= F.lit(hi)) & (F.col("end_bucket") >= F.lit(lo)))
-    if "keys" in enc.columns:
-        dec = decode_series_container(enc, key_cols=["url"], value_cols=MEASURES)
-    else:
-        dec = decode_series(enc, key_cols=["url"], value_cols=MEASURES)
+    enc = _read_encoded(spark, [_enc_dir(out_dir, snapshot_id, tier)]).where(
+        (F.col("start_bucket") <= F.lit(hi)) & (F.col("end_bucket") >= F.lit(lo))
+    )
+    dec = decode_series_container(enc, key_cols=["url"], value_cols=MEASURES)
     return dec.where((F.col("bucket") >= F.lit(lo)) & (F.col("bucket") <= F.lit(hi)))
 
 
@@ -681,7 +566,7 @@ def expire_tier(
     tier's manifest rows are recomputed from the surviving chunks so
     tier_ratio_report never counts expired bytes.
     """
-    enc_path = os.path.join(out_dir, f"snap={snapshot_id}", f"encoded_tier={tier}")
+    enc_path = _enc_dir(out_dir, snapshot_id, tier)
     # heal any interrupted prior swap before reading (crash-idempotence).
     # NEVER from a dry run — a preview must not rename or delete anything;
     # if the store needs healing, tell the operator instead of mutating.
@@ -698,7 +583,7 @@ def expire_tier(
     else:
         recovery = _recover_swap(enc_path, ".expiring", ".expired")
         _recover_swap(_manifest_path(out_dir), ".rewriting", ".old")
-    enc = spark.read.parquet(enc_path)
+    enc = _read_encoded(spark, [enc_path])
     keep = enc.where(F.col("end_bucket") >= F.lit(older_than))
     # ONE metadata pass yields the drop totals AND the surviving-chunk
     # manifest stats per part (this frame is chunk metadata — tiny — but

@@ -623,17 +623,15 @@ def _staged_lifecycle_store(spark, sf_dir) -> str:
     core claim, was pytest-only): events reshaped into the pages schema
     (url from user_id, warc_ts from ts, html with a DuckDB-recomputable
     byte length), ingested as TWO snapshots split at a day boundary via
-    plans.retention.run_retention in per-series chunk format
-    (container_tiers=(): containers never split a series, so their
-    chunks span the series' whole range and TTL would have nothing
-    whole to drop — row-sliced chunks are the format a TTL-tiered store
-    keeps its finest tier in), then the OLD snapshot's 1m tier
-    TTL-expired at the mid-month cutoff (plans/retention.py:411 —
-    chunk-granular staged-swap rewrite; the real lifecycle order:
-    expiry trims history, compaction merges the survivors), then both
-    snapshots compacted into one re-chunked container snapshot
-    (plans/retention.py:251 — newest-wins merge, lineage.json). The
-    store is then read BACK through read_tier_decoded (full sprintz
+    plans.retention.run_retention (series longer than chunk_rows are
+    cut into row-sliced container pieces, so TTL has whole chunks to
+    drop), then the OLD snapshot's 1m tier TTL-expired at the mid-month
+    cutoff (plans.retention.expire_tier — chunk-granular staged-swap
+    rewrite; the real lifecycle order: expiry trims history, compaction
+    merges the survivors), then both snapshots compacted into one
+    re-chunked container snapshot (plans.retention.compact_tiers —
+    newest-wins merge, lineage.json). The store is then read BACK
+    through read_tier_decoded (full sprintz
     decode of the surviving chunks) and must hash-equal DuckDB's direct
     rollup of the raw events: 1m filtered to the retained window
     (expiry is conservative — a chunk straddling the cutoff survives
@@ -681,10 +679,6 @@ def _staged_lifecycle_store(spark, sf_dir) -> str:
     # is ~80 rows/chunk instead of 5.6k eight-row chunks (3x wall). The
     # count doubles as the cache materialization.
     chunk_rows = max(8, pages.count() // 1200)
-    # per-series chunk format (container_tiers=()): containers never split
-    # a series, so their chunks span the series\' whole time range and TTL
-    # has nothing whole to drop — row-sliced per-series chunks are the
-    # format a TTL-tiered store keeps its finest tier in
     # the two snapshots are INDEPENDENT ingests (disjoint snap dirs;
     # manifest appends serialized by retention._MANIFEST_LOCK): overlap
     # them from a 2-thread pool (guide §2.6) so the second snapshot's
@@ -700,7 +694,6 @@ def _staged_lifecycle_store(spark, sf_dir) -> str:
             snapshot_id=sid,
             n_buckets=4,
             chunk_rows=chunk_rows,
-            container_tiers=(),
         )
 
     with ThreadPoolExecutor(max_workers=2) as pool:

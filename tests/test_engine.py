@@ -232,6 +232,114 @@ def test_query_encoded_container(spark, pages_small):
     pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
 
 
+def test_container_piece_cap_roundtrip(spark, pages_small):
+    """Series longer than chunk_rows are cut into row-sliced pieces: the
+    container round trip and query-on-compressed stay exact, every
+    container holds each key at most once, and no container reaches
+    2 * chunk_rows rows."""
+    from sprintz_spark.operators.encode import (
+        decode_series_container,
+        encode_series_container,
+        query_encoded_container,
+    )
+
+    chunk_rows = 16
+    t1h = R.derive_series(pages_small, "1h")
+    want = t1h.toPandas().sort_values(["url", "bucket"]).reset_index(drop=True)
+    assert want.groupby("url").size().max() > 2 * chunk_rows  # real pieces
+    cols = ["crawl_count", "byte_size_sum", "byte_size_max", "byte_size_min"]
+    enc = encode_series_container(
+        t1h, key_cols=["url"], value_cols=cols, chunk_rows=chunk_rows
+    ).cache()
+    dec = decode_series_container(enc, key_cols=["url"], value_cols=cols)
+    got = dec.toPandas().sort_values(["url", "bucket"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
+
+    meta = enc.select("keys", "n").toPandas()
+    assert all(len(set(k)) == len(k) for k in meta["keys"])
+    assert (meta["n"] < 2 * chunk_rows).all()
+    key_containers = pd.Series([k for ks in meta["keys"] for k in ks]).value_counts()
+    assert key_containers.max() > 2  # some series spans several containers
+
+    q = (
+        query_encoded_container(enc, "byte_size_sum")
+        .toPandas().sort_values("url").reset_index(drop=True)
+    )
+    qw = (
+        want.groupby("url")["byte_size_sum"]
+        .agg(["sum", "max", "min", "count"])
+        .reset_index()
+    )
+    assert q["url"].tolist() == qw["url"].tolist()
+    assert q["byte_size_sum_sum"].tolist() == qw["sum"].tolist()
+    assert q["byte_size_sum_max"].tolist() == qw["max"].tolist()
+    assert q["byte_size_sum_min"].tolist() == qw["min"].tolist()
+    assert q["n_points"].tolist() == qw["count"].tolist()
+    enc.unpersist()
+
+
+def test_container_short_series_layout_unchanged(spark, pages_small):
+    """With every series at most chunk_rows rows, containers pack WHOLE
+    series by cumulative row offset and their blobs are exactly
+    codecs.sprintz.encode_container over those whole series."""
+    from sprintz_spark.codecs import sprintz as sz
+    from sprintz_spark.operators.encode import encode_series_container
+
+    t1d = R.derive_series(pages_small, "1d").withColumn("p", F.lit(0))
+    want = t1d.toPandas().sort_values(["url", "bucket"]).reset_index(drop=True)
+    lens = want.groupby("url", sort=True).size()
+    chunk_rows = int(lens.max())  # every series fits, several containers
+    cols = ["crawl_count", "byte_size_sum", "byte_size_max", "byte_size_min"]
+    enc = (
+        encode_series_container(
+            t1d, key_cols=["url"], value_cols=cols, chunk_rows=chunk_rows,
+            part_col="p",
+        )
+        .toPandas()
+        .sort_values("chunk")
+        .reset_index(drop=True)
+    )
+    cont = (lens.cumsum() - lens) // chunk_rows
+    assert len(enc) == cont.nunique() > 1
+    ts = want["bucket"].astype("datetime64[us]").to_numpy().view(np.int64)
+    for row in enc.itertuples():
+        keys = cont.index[cont == row.chunk].tolist()
+        assert list(row.keys) == keys
+        sel = want["url"].isin(keys).to_numpy()
+        lens_c = lens[keys].to_numpy()
+        assert row.ts_blob == sz.encode_container(ts[sel], lens_c, "doubledelta")
+        for c in cols:
+            blob = sz.encode_container(
+                want[c].to_numpy(np.int64)[sel], lens_c, "auto"
+            )
+            assert getattr(row, f"blob_{c}") == blob
+        assert row.start_bucket == want["bucket"][sel].min()
+        assert row.end_bucket == want["bucket"][sel].max()
+
+
+def test_expire_tier_drops_pieces_of_long_series(spark, pages_small, tmp_path):
+    """A default-layout store with a small chunk_rows gives TTL expiry
+    whole chunks to drop inside ONE long series: its old pieces go, its
+    rows at/after the cutoff all stay."""
+    from sprintz_spark.plans import retention as RT
+
+    out = str(tmp_path / "store")
+    RT.run_retention(pages_small, out, snapshot_id="s1", n_buckets=2, chunk_rows=8)
+    before = RT.read_tier_decoded(spark, out, "s1", "1h").toPandas()
+    hot = before["url"].value_counts().index[0]
+    hot_rows = before[before["url"] == hot].sort_values("bucket")
+    assert len(hot_rows) > 4 * 8
+    cutoff = hot_rows["bucket"].iloc[len(hot_rows) // 2]
+
+    rep = RT.expire_tier(spark, out, "s1", "1h", cutoff)
+    assert rep["chunks_dropped"] > 0
+    after = RT.read_tier_decoded(spark, out, "s1", "1h").toPandas()
+    hot_after = after[after["url"] == hot]
+    assert len(hot_after) < len(hot_rows)  # old pieces of the series dropped
+    kept = set(hot_after["bucket"])
+    assert set(hot_rows["bucket"][hot_rows["bucket"] >= cutoff]) <= kept
+
+
 def test_npy_feather_smart_dfsets(spark, tmp_path):
     """NpyDfSet/FeatherDfSet/SmartDfSet analogs (reference
     python/dfset.py:445-560): round-trips + the Smart numpy-vs-feather

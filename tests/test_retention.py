@@ -2,6 +2,7 @@
 fixture: run, truncate manifest after partition k, re-run, assert
 byte-identical tier output and that completed partitions were skipped)."""
 
+import datetime as dt
 import glob
 import os
 import shutil
@@ -9,7 +10,8 @@ import shutil
 import pandas as pd
 from pyspark.sql import functions as F
 
-from sprintz_spark.operators.encode import decode_series
+import pytest
+
 from sprintz_spark.plans import retention as RT
 
 
@@ -127,6 +129,108 @@ def test_read_tier_range_prunes_and_matches(spark, pages_small, tmp_path):
         enc.explain("simple")
     assert "PushedFilters: [" in buf.getvalue()
     assert "LessThanOrEqual(start_bucket" in buf.getvalue()
+
+
+def test_read_tier_range_container_starting_late_series_first(spark, tmp_path):
+    """A container's start_bucket is its minimum bucket, not its first
+    series' first bucket: url 'a' (packed first) starts on Jan 5, url 'b'
+    on Jan 1, and a range read over Jan 1-2 must still find b's rows."""
+    from sprintz_spark.operators import rollup as R
+
+    day = dt.timedelta(days=1)
+    rows = [("https://a/", dt.datetime(2024, 1, 5) + i * day, b"x" * (i + 1))
+            for i in range(5)]
+    rows += [("https://b/", dt.datetime(2024, 1, 1) + i * day, b"y" * (i + 2))
+             for i in range(10)]
+    pages = spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary")
+    out = str(tmp_path / "late")
+    RT.run_retention(pages, out, snapshot_id="s1", n_buckets=1)
+    lo, hi = dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2, 23, 59)
+    got = (
+        RT.read_tier_range(spark, out, "s1", "1h", lo, hi)
+        .toPandas().sort_values(["url", "bucket"]).reset_index(drop=True)
+    )
+    t = R.derive_series(pages, "1h").toPandas()
+    want = (
+        t[(t["bucket"] >= lo) & (t["bucket"] <= hi)]
+        .sort_values(["url", "bucket"]).reset_index(drop=True)
+    )
+    assert len(want) == 2
+    pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
+    man = RT.read_manifest(spark, out).where(F.col("tier") == "1h").first()
+    assert man["min_bucket"] == dt.datetime(2024, 1, 1)
+
+
+def _per_series_encoded(spark, pages_small, path):
+    """Write a 1h tier in the per-series chunk layout (encode_series rows,
+    no ``keys`` column) — what older stores held."""
+    from sprintz_spark.operators import rollup as R
+    from sprintz_spark.operators.encode import encode_series
+
+    t1h = R.derive_series(pages_small, "1h").withColumn("part", F.lit(0))
+    encode_series(
+        t1h, key_cols=["url"], value_cols=RT.MEASURES, part_col="part"
+    ).write.partitionBy("part").parquet(path)
+
+
+_JAN1 = dt.datetime(2024, 1, 1)
+
+
+@pytest.mark.parametrize(
+    "read",
+    [
+        lambda spark, out: RT.read_tier_decoded(spark, out, "old", "1h"),
+        lambda spark, out: RT.query_tier(spark, out, "old", "1h", "crawl_count"),
+        lambda spark, out: RT.read_tier_range(spark, out, "old", "1h", _JAN1, _JAN1),
+        lambda spark, out: RT.compact_tiers(spark, out, ["old"], "c", tiers=("1h",)),
+        lambda spark, out: RT.expire_tier(spark, out, "old", "1h", _JAN1),
+    ],
+    ids=["read_tier_decoded", "query_tier", "read_tier_range", "compact_tiers",
+         "expire_tier"],
+)
+def test_per_series_store_raises_typed_error(spark, pages_small, tmp_path, read):
+    """Every retention reader names the per-series layout in a
+    ValueError instead of failing on a missing column."""
+    out = str(tmp_path / "old_store")
+    _per_series_encoded(spark, pages_small, f"{out}/snap=old/encoded_tier=1h")
+    with pytest.raises(ValueError, match="per-series chunk layout"):
+        read(spark, out)
+
+
+def test_compact_ignores_stale_temporary_files(spark, pages_small, tmp_path):
+    """A leftover _temporary/.../part-*.parquet with the per-series schema
+    (a failed earlier write) under an encoded-tier directory changes
+    nothing compact_tiers returns or writes."""
+    split = pages_small.agg(
+        F.date_trunc("day", F.min("warc_ts")) + F.expr("INTERVAL 2 DAYS")
+    ).collect()[0][0]
+    stale_src = str(tmp_path / "stale_src")
+    _per_series_encoded(spark, pages_small, stale_src)
+    stale_file = glob.glob(f"{stale_src}/part=0/*.parquet")[0]
+    results = []
+    for name in ("clean", "stale"):
+        out = str(tmp_path / name)
+        RT.run_retention(
+            pages_small.where(F.col("warc_ts") < F.lit(split)), out, "s1",
+            n_buckets=1, chunk_rows=8,
+        )
+        RT.run_retention(
+            pages_small.where(F.col("warc_ts") >= F.lit(split)), out, "s2",
+            n_buckets=1, chunk_rows=8,
+        )
+        if name == "stale":
+            for sid in ("s1", "s2"):
+                for tier in ("1m", "1h", "1d"):
+                    tmp = f"{out}/snap={sid}/encoded_tier={tier}/_temporary/0"
+                    os.makedirs(tmp)
+                    shutil.copy(stale_file, f"{tmp}/part-00000-stale.c000.snappy.parquet")
+        rep = RT.compact_tiers(spark, out, ["s1", "s2"], "c1", n_buckets=1)
+        dec = {t: _decode_tier(spark, out, t, snap="c1") for t in ("1m", "1h", "1d")}
+        results.append((rep, dec))
+    (rep_a, dec_a), (rep_b, dec_b) = results
+    assert rep_a == rep_b
+    for t in ("1m", "1h", "1d"):
+        pd.testing.assert_frame_equal(dec_a[t], dec_b[t])
 
 
 def test_expire_tier_drops_old_chunks_conservatively(spark, pages_small, tmp_path):
