@@ -11,7 +11,7 @@ python/codec.py:439-535) onto Spark:
     reference's C core) → SZ1 block format. Timestamps get delta-of-delta.
     Float columns that defeat the decimal quantizer fall back to Gorilla
     XOR. Output: ONE ROW PER (key, chunk) with binary blobs + metrics.
-  * ``decode_series``: mapInPandas — decoding needs no shuffle at all;
+  * ``decode_series``: mapInArrow — decoding needs no shuffle at all;
     each encoded row explodes back to its original rows, exactly.
   * ``query_encoded``: fused decode+aggregate (reference query-on-
     compressed, cpp/Compress/query.hpp) — mapInPandas emits per-chunk
@@ -522,6 +522,8 @@ def decode_series(
     zero-copy, so the Python boundary carries only the blob bytes in and
     Arrow buffers out."""
     import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
 
     key_cols = list(key_cols)
     value_cols = list(value_cols)
@@ -536,11 +538,7 @@ def decode_series(
     fields += [StructField(c, vt.get(c, LongType())) for c in value_cols]
     schema = StructType(fields)
     tz = enc.sparkSession.conf.get("spark.sql.session.timeZone") or "UTC"
-    _arrow_named = {"long": pa.int64(), "double": pa.float64(),
-                    "boolean": pa.bool_()}
-    val_arrow = {
-        c: _arrow_named[vt.get(c, LongType()).typeName()] for c in value_cols
-    }
+    val_arrow = {c: to_arrow_type(vt.get(c, LongType())) for c in value_cols}
     names = key_cols + [ts_col] + value_cols
 
     def dec(batches):
@@ -561,9 +559,12 @@ def decode_series(
             )
             idx = pa.array(np.repeat(np.arange(n_rows, dtype=np.int64), ns))
             arrays = [col[k].take(idx) for k in key_cols]
-            arrays.append(
-                pa.array(ts_concat).cast(pa.timestamp("us", tz=tz))
-            )
+            # the encoder stored session-zone wall-clock micros: localize
+            # them (as pandas' tz_localize(ambiguous=False) did), never
+            # relabel them as UTC
+            arrays.append(pc.assume_timezone(
+                pa.array(ts_concat, pa.timestamp("us")), tz, ambiguous="latest"
+            ))
             for c in value_cols:
                 vals = decode_value_columns_batch(
                     col[f"blob_{c}"].to_pylist(), [m[c] for m in metas]
@@ -628,7 +629,8 @@ def query_encoded(
                 c, s, mx, mn = sz.query_batch_partials([blobs[i] for i in plain])
                 idx = np.array(plain, np.int64)
                 ns[idx], sums[idx], maxs[idx], mins[idx] = c, s, mx, mn
-            rest = [i for i in range(n_b) if i not in set(plain)]
+            plain_set = set(plain)
+            rest = [i for i in range(n_b) if i not in plain_set]
             if rest:
                 vals = decode_value_columns_batch(
                     [blobs[i] for i in rest], [metas[i] for i in rest]

@@ -9,6 +9,7 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 from sprintz_spark.functions.text import extract_text
 from sprintz_spark.operators import gapfill as GF
@@ -129,6 +130,122 @@ def test_encode_float_gapfilled_series(spark):
     )
     orig = df.toPandas().sort_values("bucket").reset_index(drop=True)
     assert (back.v.to_numpy().view(np.uint64) == orig.v.to_numpy().view(np.uint64)).all()
+
+
+def test_decode_series_non_utc_session_across_dst(spark):
+    """Under a non-UTC session zone the decoder localizes the encoder's
+    wall-clock micros: every hour across the 2024 spring-forward change
+    in New York decodes to the instant it was encoded from."""
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        t0 = int(dt.datetime(2024, 3, 9, tzinfo=dt.timezone.utc).timestamp() * 1e6)
+        df = spark.range(72).select(
+            F.lit("u").alias("url"),
+            F.timestamp_micros(F.lit(t0) + F.col("id") * 3_600_000_000).alias("bucket"),
+            F.col("id").alias("v"),
+        )
+        dec = decode_series(encode_series(df, value_cols=["v"]), value_cols=["v"])
+        back = dec.select(F.unix_micros("bucket").alias("us"), "v").toPandas()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    back = back.sort_values("v").reset_index(drop=True)
+    assert back.v.tolist() == list(range(72))
+    assert (back.us.to_numpy() == t0 + np.arange(72) * 3_600_000_000).all()
+
+
+def test_decode_series_integer_value_column(spark):
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [("u", t0 + dt.timedelta(hours=i), (i * 37) % 1000 - 500) for i in range(300)]
+    df = _mk_series(spark, rows).withColumn("v", F.col("v").cast("int"))
+    enc = encode_series(df, value_cols=["v"])
+    back = decode_series(enc, value_cols=["v"], value_types={"v": IntegerType()})
+    assert back.schema["v"].dataType == IntegerType()
+    got = back.toPandas().sort_values("bucket").v.tolist()
+    assert got == [r[2] for r in rows]
+
+
+def test_zip_invalidate_skips_unchanged_archive(tmp_path, monkeypatch):
+    """``importlib.invalidate_caches()`` does not re-read an unchanged zip
+    (the package's fix for CPython < 3.13), and a rewritten zip is still
+    picked up."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    import sprintz_spark  # noqa: F401  (installs the fix)
+
+    archive = tmp_path / "szzip.zip"
+
+    def write(*extra):
+        with zipfile.ZipFile(archive, "w") as z:
+            for name in ("szzip_pkg/__init__.py", "szzip_pkg/sub/__init__.py",
+                         "szzip_pkg/sub/mod.py", *extra):
+                z.writestr(name, "")
+
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory",
+        lambda path: (reads.append(path) if path == str(archive) else None) or real(path),
+    )
+    write()
+    sys.path.insert(0, str(archive))
+    try:
+        import szzip_pkg.sub.mod  # noqa: F401
+
+        assert sum(isinstance(f, zipimport.zipimporter) and f.archive == str(archive)
+                   for f in sys.path_importer_cache.values()) >= 2
+        importlib.invalidate_caches()  # first call after import: reads once
+        reads.clear()
+        importlib.invalidate_caches()
+        assert reads == []
+
+        write("szzip_pkg/sub/new.py")
+        importlib.invalidate_caches()
+        assert len(reads) == 1  # one re-read, shared by every importer
+        import szzip_pkg.sub.new  # noqa: F401
+    finally:
+        sys.path.remove(str(archive))
+        for p in [p for p in sys.path_importer_cache if p.startswith(str(archive))]:
+            del sys.path_importer_cache[p]
+        for m in [m for m in sys.modules if m.split(".")[0] == "szzip_pkg"]:
+            del sys.modules[m]
+
+
+def test_worker_zip_invalidate_skips_unchanged(spark):
+    """On a Python worker that has imported the package, the per-task
+    ``importlib.invalidate_caches()`` re-reads no zip archive."""
+
+    def count(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        import sprintz_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        importlib.invalidate_caches()  # as the worker's next task setup would
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda path: reads.append(path) or real(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        n_zip = sum(isinstance(f, zipimport.zipimporter)
+                    for f in sys.path_importer_cache.values())
+        yield pa.RecordBatch.from_pydict({"reads": [len(reads)], "zips": [n_zip]})
+
+    got = spark.range(0, 4, 1, 4).mapInArrow(count, "reads long, zips long").collect()
+    assert len(got) == 4
+    if not any(r.zips for r in got):
+        pytest.skip("workers import nothing from zip archives")
+    assert [r.reads for r in got] == [0, 0, 0, 0]
 
 
 def test_io_dispatch_roundtrip(spark, tmp_path):
