@@ -57,6 +57,10 @@ BLOCK = bitpack.BLOCK
 DEFLATE_MIN = 64  # don't bother below this size
 
 
+class CorruptBlobError(ValueError):
+    """A blob that is malformed (bad magic, truncated) or that its row contradicts."""
+
+
 def _maybe_deflate(blob: bytes, enable: bool = True) -> bytes:
     if not enable or len(blob) < DEFLATE_MIN:
         return blob
@@ -65,7 +69,10 @@ def _maybe_deflate(blob: bytes, enable: bool = True) -> bytes:
 
 
 def _inflate(buf: bytes) -> bytes:
-    return zlib.decompress(memoryview(buf)[1:]) if buf[0] == MAGIC_DEFLATE else buf
+    try:
+        return zlib.decompress(memoryview(buf)[1:]) if buf[0] == MAGIC_DEFLATE else buf
+    except (IndexError, zlib.error) as e:
+        raise CorruptBlobError(f"empty blob or bad zlib stream ({e})") from None
 
 MODES = {"delta": 0, "doubledelta": 1, "dyndelta": 2, "fire": 3, "raw": 4,
          "ewma": 5, "booldelta": 6}
@@ -120,13 +127,16 @@ def _uvarint(v: int) -> bytes:
 
 def _read_uvarint(buf, pos: int) -> tuple[int, int]:
     v = shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        v |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            return v, pos
-        shift += 7
+    try:
+        while True:
+            b = buf[pos]
+            pos += 1
+            v |= (b & 0x7F) << shift
+            if not (b & 0x80):
+                return v, pos
+            shift += 7
+    except IndexError:
+        raise CorruptBlobError("blob truncated inside a varint") from None
 
 
 def _zz_scalar(u_val: int, w: int) -> int:
@@ -339,7 +349,8 @@ def _parse(buf: bytes):
         )
         payload = buf[5 + used - 4 :]
         return mode, w, n, pad, b"", nbits, payload, None
-    assert buf[:3] == MAGIC, "bad magic"
+    if buf[:3] != MAGIC:
+        raise CorruptBlobError(f"bad magic {bytes(buf[:3])!r}")
     mode = _MODE_NAMES[buf[3]]
     w = buf[4]
     n = int(np.frombuffer(buf[5:9], dtype=np.uint32)[0])
@@ -1333,7 +1344,8 @@ def _parse_container(buf: bytes):
     """Container head parse shared by decode and the query fast path:
     returns (mode, w, ns, x0s, gaps_or_None, nbits, payload)."""
     buf = _inflate(buf)
-    assert buf[0] == MAGIC_CONTAINER, "bad container magic"
+    if buf[0] != MAGIC_CONTAINER:
+        raise CorruptBlobError(f"bad container magic {buf[0]:#04x}")
     packed = buf[1]
     mode = _MODE_NAMES[packed >> 5]
     w = _W_FROM_CODE[(packed >> 3) & 0x3]

@@ -22,7 +22,15 @@ python/codec.py:439-535) onto Spark:
     per (partition, column) holding ALL series of the slice, so output
     rows/files are O(partitions) not O(keys) and tiny series cost a few
     bytes each; series longer than chunk_rows are cut into row-sliced
-    pieces. This is the retention tier store's only layout.
+    pieces. This is the retention tier store's only layout. The three
+    are Arrow-native (groupBy().applyInArrow / mapInArrow, no pandas
+    frames) and the store holds UTC epoch micros: its bytes and decoded
+    instants do not depend on the session time zone. The per-series
+    encoder above still stores session wall-clock micros. The three
+    are Arrow-native (groupBy().applyInArrow / mapInArrow, no pandas
+    frames) and the store holds UTC epoch micros: its bytes and decoded
+    instants do not depend on the session time zone. The per-series
+    encoder above still stores session wall-clock micros.
 
 Scale notes: group state is O(chunk) not O(series); chunk_rows bounds
 executor memory; a year of 1-minute buckets per url is ~525k rows → a few
@@ -37,6 +45,8 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -354,21 +364,15 @@ def _enc_schema(key_cols: list[str], value_cols: list[str], key_types) -> Struct
 
 
 def _series_pieces(
-    pdf: pd.DataFrame, key_cols: list[str], chunk_rows: int
+    starts: np.ndarray, chunk_rows: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Cut a key-sorted frame into row-sliced pieces of at most
-    ``chunk_rows`` rows that never cross a series (key) boundary. Pure
-    numpy: series boundaries from key-change points, pieces by
-    arithmetic. Returns each piece's index within its series, first row
-    and row count; the pieces tile the frame's rows in order."""
-    n = len(pdf)
-    change = np.zeros(n, dtype=bool)
-    change[0] = True
-    for k in key_cols:
-        a = pdf[k].to_numpy()
-        change[1:] |= a[1:] != a[:-1]
-    s_starts = np.flatnonzero(change)
-    s_lens = np.diff(np.append(s_starts, n))
+    """Cut key-sorted rows into row-sliced pieces of at most ``chunk_rows``
+    rows that never cross a series boundary; ``starts`` marks each row
+    that begins a series. Pure numpy: pieces by arithmetic. Returns each
+    piece's index within its series, first row and row count; the pieces
+    tile the rows in order."""
+    s_starts = np.flatnonzero(starts)
+    s_lens = np.diff(np.append(s_starts, len(starts)))
     reps = (s_lens + chunk_rows - 1) // chunk_rows
     piece_series = np.repeat(np.arange(len(s_starts)), reps)
     piece_ord = np.arange(int(reps.sum()), dtype=np.int64) - np.repeat(
@@ -377,6 +381,48 @@ def _series_pieces(
     piece_starts = s_starts[piece_series] + piece_ord * chunk_rows
     piece_lens = np.minimum(chunk_rows, s_lens[piece_series] - piece_ord * chunk_rows)
     return piece_ord, piece_starts, piece_lens
+
+
+def _pin_parts(
+    df: DataFrame, key_cols: list[str], part_col: str | None, n_parts: int | None
+) -> tuple[DataFrame, str, bool]:
+    """Derive ``_enc_part`` (the keys hashed into ``n_parts`` buckets, default
+    defaultParallelism * 2) unless the caller names ``part_col``, then pin
+    the encode task count. Returns (df, part_col, derived)."""
+    derived = part_col is None
+    if derived:
+        part_col = "_enc_part"
+        n_parts = n_parts or df.sparkSession.sparkContext.defaultParallelism * 2
+        df = df.withColumn(
+            part_col, F.pmod(F.xxhash64(*key_cols), F.lit(n_parts)).cast("int")
+        )
+    if n_parts:
+        # explicit repartition-by-NUM pins the encode stage's task count:
+        # the groupBy exchange alone lets AQE coalesce by BYTES, and the
+        # probe/pack kernels are CPU-bound per row, not per byte — at
+        # sf0.1 AQE squeezed the whole codec-search encode onto ONE task
+        # (5.6 s wall vs 0.9 s pinned, r10 A/B). AQE never coalesces a
+        # user-specified numbered repartition, and the hash partitioning
+        # satisfies the groupBy requirement so no second exchange
+        # appears. n_parts stays scale-adaptive (defaultParallelism*2).
+        df = df.repartition(n_parts, part_col)
+    return df, part_col, derived
+
+
+def _partials_schema(key_fields: list[StructField]) -> StructType:
+    """Per-blob query partials: the key fields, then p_sum/p_max/p_min/p_cnt."""
+    parts = ("p_sum", "p_max", "p_min", "p_cnt")
+    return StructType(key_fields + [StructField(p, LongType()) for p in parts])
+
+
+def _combine_partials(part: DataFrame, key_cols: list[str], value_col: str) -> DataFrame:
+    """Final per-key aggregate over _partials_schema rows."""
+    return part.groupBy(*key_cols).agg(
+        F.sum("p_sum").alias(f"{value_col}_sum"),
+        F.max("p_max").alias(f"{value_col}_max"),
+        F.min("p_min").alias(f"{value_col}_min"),
+        F.sum("p_cnt").alias("n_points"),
+    )
 
 
 def encode_series(
@@ -399,24 +445,7 @@ def encode_series(
     100 TB (bounded group memory, no million-group scheduling)."""
     key_cols = list(key_cols)
     value_cols = list(value_cols)
-    spark = df.sparkSession
-    drop_part = part_col is None
-    if part_col is None:
-        part_col = "_enc_part"
-        n_parts = n_parts or spark.sparkContext.defaultParallelism * 2
-        df = df.withColumn(
-            part_col, F.pmod(F.xxhash64(*key_cols), F.lit(n_parts)).cast("int")
-        )
-    if n_parts:
-        # explicit repartition-by-NUM pins the encode stage's task count:
-        # the groupBy exchange alone lets AQE coalesce by BYTES, and the
-        # probe/pack kernels are CPU-bound per row, not per byte — at
-        # sf0.1 AQE squeezed the whole codec-search encode onto ONE task
-        # (5.6 s wall vs 0.9 s pinned, r10 A/B). AQE never coalesces a
-        # user-specified numbered repartition, and the hash partitioning
-        # satisfies the groupBy requirement so no second exchange
-        # appears. n_parts stays scale-adaptive (defaultParallelism*2).
-        df = df.repartition(n_parts, part_col)
+    df, part_col, drop_part = _pin_parts(df, key_cols, part_col, n_parts)
     key_types = [df.schema[k].dataType for k in key_cols]
     out_keys = ([] if drop_part else [part_col]) + key_cols
     out_key_types = (
@@ -436,7 +465,11 @@ def encode_series(
         pdf = pdf.sort_values(key_cols + [ts_col], kind="mergesort").reset_index(
             drop=True
         )
-        piece_ord, piece_starts, piece_lens = _series_pieces(pdf, key_cols, chunk_rows)
+        starts = np.arange(n) == 0
+        for k in key_cols:
+            a = pdf[k].to_numpy()
+            starts[1:] |= a[1:] != a[:-1]
+        piece_ord, piece_starts, piece_lens = _series_pieces(starts, chunk_rows)
         n_pieces = len(piece_starts)
 
         ts_np = pdf[ts_col].astype("datetime64[us]").to_numpy()
@@ -521,8 +554,6 @@ def decode_series(
     key columns in C++ and the numeric columns wrap decode buffers
     zero-copy, so the Python boundary carries only the blob bytes in and
     Arrow buffers out."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_type
 
     key_cols = list(key_cols)
@@ -590,16 +621,7 @@ def query_encoded(
     """Per-key sum/max/min/count of a value column computed from blobs —
     the reference's REDUCE_SUM/REDUCE_MAX without materialization."""
     key_cols = list(key_cols)
-    key_fields = [enc.schema[k] for k in key_cols]
-    schema = StructType(
-        key_fields
-        + [
-            StructField("p_sum", LongType()),
-            StructField("p_max", LongType()),
-            StructField("p_min", LongType()),
-            StructField("p_cnt", LongType()),
-        ]
-    )
+    schema = _partials_schema([enc.schema[k] for k in key_cols])
     blob_col = f"blob_{value_col}"
 
     def partials(it):
@@ -646,16 +668,12 @@ def query_encoded(
             out["p_cnt"] = ns
             yield out[cols]
 
-    part = enc.mapInPandas(partials, schema)
-    return part.groupBy(*key_cols).agg(
-        F.sum("p_sum").alias(f"{value_col}_sum"),
-        F.max("p_max").alias(f"{value_col}_max"),
-        F.min("p_min").alias(f"{value_col}_min"),
-        F.sum("p_cnt").alias("n_points"),
-    )
+    return _combine_partials(enc.mapInPandas(partials, schema), key_cols, value_col)
 
 
 # --- multi-series containers (the retention store layout) ------------------
+
+_UTC_US = pa.timestamp("us", "UTC")
 
 
 def encode_series_container(
@@ -683,18 +701,7 @@ def encode_series_container(
         raise ValueError("container encoding supports a single key column")
     key = list(key_cols)[0]
     value_cols = list(value_cols)
-    spark = df.sparkSession
-    drop_part = part_col is None
-    if part_col is None:
-        part_col = "_enc_part"
-        n_parts = n_parts or spark.sparkContext.defaultParallelism * 2
-        df = df.withColumn(
-            part_col, F.pmod(F.xxhash64(key), F.lit(n_parts)).cast("int")
-        )
-    if n_parts:
-        # pin the encode task count against AQE byte-coalescing — see
-        # encode_series (the container packer is equally CPU-bound)
-        df = df.repartition(n_parts, part_col)
+    df, part_col, drop_part = _pin_parts(df, [key], part_col, n_parts)
     key_t = df.schema[key].dataType
     part_t = df.schema[part_col].dataType
     fields = ([] if drop_part else [StructField(part_col, part_t)]) + [
@@ -711,14 +718,23 @@ def encode_series_container(
         StructField("encode_secs", DoubleType()),
     ] + [StructField(f"blob_{c}", BinaryType()) for c in value_cols]
     schema = StructType(fields)
-    col_names = [f.name for f in schema.fields]
+    meta = json.dumps({
+        "ts": {"codec": "sprintz-container", "mode": "doubledelta"},
+        **{c: {"codec": "sprintz-container", "np_dtype": "int64"} for c in value_cols},
+    })
 
-    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
+    def enc(table: pa.Table) -> pa.Table:
         t0 = time.perf_counter()
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=col_names)
-        pdf = pdf.sort_values([key, ts_col], kind="mergesort").reset_index(drop=True)
-        _, p_starts, p_lens = _series_pieces(pdf, [key], chunk_rows)
+        # a stable sort: rows tied on (key, ts) keep their input order
+        t = table.take(
+            pc.sort_indices(table, [(key, "ascending"), (ts_col, "ascending")])
+        )
+        n = t.num_rows
+        karr = t.column(key).combine_chunks()
+        run_ends = pc.run_end_encode(karr).run_ends.to_numpy()
+        starts = np.zeros(n, dtype=bool)
+        starts[np.append(0, run_ends[:-1])] = True
+        _, p_starts, p_lens = _series_pieces(starts, chunk_rows)
         # the pieces tile the rows, so a piece's first row is its
         # cumulative offset: container = offset // chunk_rows. A piece has
         # at most chunk_rows rows, so one series' consecutive pieces land
@@ -726,48 +742,51 @@ def encode_series_container(
         # container
         cont = p_starts // chunk_rows
         firsts = np.flatnonzero(np.diff(cont, prepend=-1))
-        karr = pdf[key].to_numpy()
-        ts_np = pdf[ts_col].astype("datetime64[us]").to_numpy()
-        ts_i64 = ts_np.view(np.int64)
-        vals = {c: pdf[c].to_numpy().astype(np.int64, copy=False) for c in value_cols}
-        rows = []
-        for sel in np.split(np.arange(len(p_starts)), firsts[1:]):
-            lens_c = p_lens[sel]
-            lo = int(p_starts[sel[0]])
-            hi = int(p_starts[sel[-1]] + lens_c[-1])
-            total = hi - lo
-            ts_blob = sz.encode_container(ts_i64[lo:hi], lens_c, "doubledelta")
-            raw = total * 8
-            comp = len(ts_blob)
-            rec = {
-                "chunk": int(cont[sel[0]]),
-                "n_series": len(sel),
-                "keys": karr[p_starts[sel]].tolist(),
-                # each piece is time-sorted, so the container's bucket
-                # range spans its pieces' first and last buckets
-                "start_bucket": ts_np[p_starts[sel]].min(),
-                "end_bucket": ts_np[p_starts[sel] + lens_c - 1].max(),
-                "n": total,
-                "ts_blob": ts_blob,
-            }
-            metas = {"ts": {"codec": "sprintz-container", "mode": "doubledelta"}}
-            for c in value_cols:
-                blob = sz.encode_container(vals[c][lo:hi], lens_c, "auto")
-                metas[c] = {"codec": "sprintz-container", "np_dtype": "int64"}
-                rec[f"blob_{c}"] = blob
-                raw += total * 8
-                comp += len(blob)
-            rec["meta"] = json.dumps(metas)
-            rec["raw_bytes"] = raw
-            rec["comp_bytes"] = comp
-            rows.append(rec)
-        out = pd.DataFrame(rows)
+        bounds = np.append(p_starts[firsts], n)
+        offsets = np.append(firsts, len(p_starts))  # of each container's keys
+        p_ends = p_starts + p_lens - 1
+        lens = np.split(p_lens, firsts[1:])
+        # Spark hands Arrow UDFs the session zone's view of UTC micros:
+        # the zero-copy int64 cast yields the UTC micros, zone-free
+        ts = t.column(ts_col).cast(pa.int64()).to_numpy()
+        cols = [ts] + [t.column(c).to_numpy().astype(np.int64, copy=False)
+                       for c in value_cols]
+        blobs = [
+            [sz.encode_container(v[lo:hi], ln, mode) for lo, hi, ln in
+             zip(bounds[:-1], bounds[1:], lens)]
+            for v, mode in zip(cols, ["doubledelta"] + ["auto"] * len(value_cols))
+        ]
+        n_cont = len(firsts)
+        totals = np.diff(bounds)
+        out = {
+            "chunk": cont[firsts],
+            "n_series": np.diff(offsets),
+            "keys": pa.ListArray.from_arrays(offsets, karr.take(p_starts)),
+            # each piece is time-sorted, so the container's bucket range
+            # spans its pieces' first and last buckets
+            "start_bucket": pa.array(np.minimum.reduceat(ts[p_starts], firsts), _UTC_US),
+            "end_bucket": pa.array(np.maximum.reduceat(ts[p_ends], firsts), _UTC_US),
+            "n": totals,
+            "ts_blob": blobs[0],
+            "meta": [meta] * n_cont,
+            "raw_bytes": totals * 8 * len(cols),
+            "comp_bytes": [sum(map(len, bs)) for bs in zip(*blobs)],
+        }
+        out |= {f"blob_{c}": bs for c, bs in zip(value_cols, blobs[1:])}
         if not drop_part:
-            out[part_col] = pdf[part_col].iloc[0]
-        out["encode_secs"] = (time.perf_counter() - t0) / max(len(rows), 1)
-        return out[col_names]
+            out[part_col] = pa.repeat(table.column(part_col)[0], n_cont)
+        out["encode_secs"] = np.full(n_cont, (time.perf_counter() - t0) / n_cont)
+        return pa.Table.from_pydict(out).select(schema.names)
 
-    return df.groupBy(part_col).applyInPandas(enc, schema)
+    return df.groupBy(part_col).applyInArrow(enc, schema)
+
+
+def _series_lengths(counts: tuple[np.ndarray, ...], keys: pa.ListArray) -> np.ndarray:
+    """Concatenated per-series lengths of a batch's container blobs;
+    CorruptBlobError unless each row's blob holds one series per key."""
+    if not np.array_equal([len(c) for c in counts], keys.value_lengths()):
+        raise sz.CorruptBlobError("container blob's series count differs from its keys")
+    return np.concatenate(counts)
 
 
 def decode_series_container(
@@ -776,10 +795,11 @@ def decode_series_container(
     ts_col: str = "bucket",
     value_cols: list[str] = ("crawl_count", "byte_size_sum", "byte_size_max"),
 ) -> DataFrame:
-    """Explode container rows back to the original series rows (narrow).
-
-    Any scalar column outside the container wire schema (e.g. the
-    encoder's part_col, whatever it was named) passes through per row."""
+    """Explode container rows back to the original series rows (narrow;
+    mapInArrow, one output batch per input batch). Any scalar column
+    outside the container wire schema (e.g. the encoder's part_col,
+    whatever it was named) passes through per row. A row whose blobs
+    disagree with its ``keys`` / ``n`` or each other raises CorruptBlobError."""
     key = list(key_cols)[0]
     value_cols = list(value_cols)
     wire = {
@@ -787,35 +807,37 @@ def decode_series_container(
         "ts_blob", "meta", "raw_bytes", "comp_bytes", "encode_secs",
     } | {f"blob_{c}" for c in value_cols}
     extra = [c for c in enc.columns if c not in wire]
-    fields = [StructField(p, enc.schema[p].dataType) for p in extra]
-    fields += [
-        StructField(key, enc.schema["keys"].dataType.elementType),
-        StructField(ts_col, TimestampType()),
-    ]
-    fields += [StructField(c, LongType()) for c in value_cols]
-    schema = StructType(fields)
+    key_t = enc.schema["keys"].dataType.elementType
+    schema = StructType(
+        [StructField(p, enc.schema[p].dataType) for p in extra]
+        + [StructField(key, key_t), StructField(ts_col, TimestampType())]
+        + [StructField(c, LongType()) for c in value_cols]
+    )
 
-    def dec(it):
-        col_order = [f.name for f in schema.fields]
-        for pdf in it:
-            extras_np = {p: pdf[p].to_numpy() for p in extra}
-            blob_cols = [pdf[f"blob_{c}"].to_numpy() for c in value_cols]
-            for i, (keys, ts_blob) in enumerate(
-                zip(pdf["keys"].to_numpy(), pdf["ts_blob"].to_numpy())
-            ):
-                ts_vals, ns = sz.decode_container(ts_blob)
-                base = pd.DataFrame(
-                    {key: np.repeat(np.asarray(keys, dtype=object), ns)}
+    def dec(batches):
+        for b in batches:
+            if not b.num_rows:
+                continue
+            keys, n = b.column("keys"), b.column("n").to_numpy(zero_copy_only=False)
+            ts, counts = zip(*map(sz.decode_container, b.column("ts_blob").to_pylist()))
+            series_ns = _series_lengths(counts, keys)
+            if not np.array_equal([c.sum() for c in counts], n):
+                raise sz.CorruptBlobError("container blob's row count differs from n")
+            rows = np.repeat(np.arange(b.num_rows), n)
+            arrays = [b.column(p).take(rows) for p in extra]
+            key_idx = np.repeat(np.arange(len(series_ns)), series_ns)
+            arrays.append(keys.flatten().take(key_idx))
+            arrays.append(pa.array(np.concatenate(ts).view(np.int64), _UTC_US))
+            for c in value_cols:
+                vals, lens = zip(
+                    *map(sz.decode_container, b.column(f"blob_{c}").to_pylist())
                 )
-                for p in extra:
-                    base.insert(0, p, extras_np[p][i])
-                base[ts_col] = ts_vals.view(np.int64).astype("datetime64[us]")
-                for c, blobs in zip(value_cols, blob_cols):
-                    vals, _ = sz.decode_container(blobs[i])
-                    base[c] = vals.view(np.int64)
-                yield base[col_order]
+                if not all(map(np.array_equal, lens, counts)):
+                    raise sz.CorruptBlobError(f"blob_{c} disagrees with ts_blob")
+                arrays.append(pa.array(np.concatenate(vals).view(np.int64)))
+            yield pa.RecordBatch.from_arrays(arrays, names=schema.names)
 
-    return enc.mapInPandas(dec, schema)
+    return enc.mapInArrow(dec, schema)
 
 
 def query_encoded_container(
@@ -828,43 +850,22 @@ def query_encoded_container(
     container's series in two numpy passes); Catalyst's partial+final
     aggregate combines across containers/partitions. No materialization."""
     key_t = enc.schema["keys"].dataType.elementType
-    schema = StructType(
-        [
-            StructField(key_col, key_t),
-            StructField("p_sum", LongType()),
-            StructField("p_max", LongType()),
-            StructField("p_min", LongType()),
-            StructField("p_cnt", LongType()),
-        ]
-    )
+    schema = _partials_schema([StructField(key_col, key_t)])
     blob_col = f"blob_{value_col}"
 
-    def partials(it):
-        cols = [f.name for f in schema.fields]
-        for pdf in it:
-            frames = []
-            for keys, blob in zip(pdf["keys"], pdf[blob_col]):
-                # RLE-run fast path: per-series partials from block headers
-                # (constant/affine runs never unpack payload)
-                ns, sums, maxs, mins = sz.query_container_partials(blob)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            key_col: np.asarray(keys, dtype=object),
-                            "p_sum": sums,
-                            "p_max": maxs,
-                            "p_min": mins,
-                            "p_cnt": ns,
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)[cols]
+    def partials(batches):
+        for b in batches:
+            if not b.num_rows:
+                continue
+            # RLE-run fast path: per-series partials from block headers
+            # (constant/affine runs never unpack payload)
+            ns, sums, maxs, mins = zip(
+                *map(sz.query_container_partials, b.column(blob_col).to_pylist())
+            )
+            keys = b.column("keys")
+            arrays = [keys.flatten()]
+            arrays += [pa.array(np.concatenate(x)) for x in (sums, maxs, mins)]
+            arrays.append(pa.array(_series_lengths(ns, keys)))
+            yield pa.RecordBatch.from_arrays(arrays, names=schema.names)
 
-    part = enc.mapInPandas(partials, schema)
-    return part.groupBy(key_col).agg(
-        F.sum("p_sum").alias(f"{value_col}_sum"),
-        F.max("p_max").alias(f"{value_col}_max"),
-        F.min("p_min").alias(f"{value_col}_min"),
-        F.sum("p_cnt").alias("n_points"),
-    )
+    return _combine_partials(enc.mapInArrow(partials, schema), [key_col], value_col)

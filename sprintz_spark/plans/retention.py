@@ -24,11 +24,14 @@ cascade encodes each tier from the materialized finer tier (1m parquet →
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import threading
 import time
+from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 from sprintz_spark.operators import rollup as R
@@ -38,6 +41,7 @@ from sprintz_spark.operators.encode import (
     encode_series_container,
     query_encoded_container,
 )
+from sprintz_spark.session import local_values_df
 
 MEASURES = ["crawl_count", "byte_size_sum", "byte_size_max", "byte_size_min"]
 
@@ -67,8 +71,6 @@ def _recover_swap(path: str, staged_suffix: str, old_suffix: str) -> str | None:
     Data is never destroyed before a complete replacement is in place.
     Object-store deployments swap a metadata pointer instead (same
     guard as lineage.json). Returns the action taken, for audit."""
-    import shutil
-
     staged, old = path + staged_suffix, path + old_suffix
     action = None
     if not os.path.exists(path):
@@ -83,6 +85,18 @@ def _recover_swap(path: str, staged_suffix: str, old_suffix: str) -> str | None:
             shutil.rmtree(p)
             action = action or "dropped_stale"
     return action
+
+
+def _swap_in(
+    writer: DataFrameWriter, path: str, staged_suffix: str, old_suffix: str
+) -> None:
+    """Replace the directory ``path`` with ``writer``'s output by the
+    staged+rename swap protocol that _recover_swap heals."""
+    staged, old = path + staged_suffix, path + old_suffix
+    writer.mode("overwrite").parquet(staged)
+    os.rename(path, old)
+    os.rename(staged, path)
+    shutil.rmtree(old)
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -138,7 +152,7 @@ def _write_encoded(
 ) -> None:
     """ONE container encode job over every tier in ``df`` (rows carry
     ``tier_col`` and ``part``), grouped by the composite ``_tp =
-    tier_index*n_buckets + part`` — each applyInPandas group is still a
+    tier_index*n_buckets + part`` — each applyInArrow group is still a
     single (tier, part) slice, so the chunk bytes are identical to
     per-tier encodes — and written with ``partitionBy(encoded_tier,
     part)``: the <dest_dir>/encoded_tier=<t>/part=<p> layout."""
@@ -386,9 +400,6 @@ def compact_tiers(
 
     Returns {tier: {src_chunks, dst_chunks, rows}}.
     """
-    import json as _json
-    from urllib.parse import urlparse
-
     report: dict = {}
     lineage: dict = {"source_snapshots": list(snapshot_ids), "tiers": {}}
     # resume idempotence (mirrors run_retention's pending parts): a tier
@@ -485,8 +496,6 @@ def compact_tiers(
             t0,
         )
         stats_rows = stats.collect()
-        from sprintz_spark.session import local_values_df
-
         with _MANIFEST_LOCK:
             # VALUES relation, not createDataFrame: a Python-RDD-backed
             # parquet write stalls seconds in driver planning (r10)
@@ -504,12 +513,12 @@ def compact_tiers(
     lin_path = os.path.join(out_dir, f"snap={dest_snapshot_id}", "lineage.json")
     if urlparse(out_dir).scheme in ("", "file"):
         with open(lin_path, "w") as f:
-            _json.dump(lineage, f)
+            json.dump(lineage, f)
     else:
         # object-store out_dir: a driver-local open() cannot write there;
         # route through Spark's Hadoop filesystem like every other artifact
         spark.createDataFrame(
-            [(_json.dumps(lineage),)], "lineage string"
+            [(json.dumps(lineage),)], "lineage string"
         ).coalesce(1).write.mode("overwrite").text(lin_path + ".d")
     return report
 
@@ -636,19 +645,12 @@ def expire_tier(
         total == kept and recovery != "promoted_staged" and not man_stale
     ):
         return report
-    import shutil
-
     if total != kept:
-        staged = enc_path + ".expiring"
         # preserve the ingest-time part=<p> directory layout (the rewrite
         # used to flatten `part` back into the data files, so an expired
         # tier lost partition pruning on part and mixed dir depths broke
         # whole-store partition-discovery reads)
-        keep.write.partitionBy("part").mode("overwrite").parquet(staged)
-        old = enc_path + ".expired"
-        os.rename(enc_path, old)
-        os.rename(staged, enc_path)
-        shutil.rmtree(old)
+        _swap_in(keep.write.partitionBy("part"), enc_path, ".expiring", ".expired")
     # recompute this (tier, snapshot)'s manifest rows from the surviving
     # chunks — otherwise tier_ratio_report and any manifest-vs-store
     # reconciliation keep counting the expired chunks' bytes and rows
@@ -668,8 +670,6 @@ def expire_tier(
             for r in per_part
             if int(r["n_chunks"] or 0) > 0
         ]
-        from sprintz_spark.session import local_values_df
-
         fresh = local_values_df(
             spark,
             fresh_rows,
@@ -677,18 +677,11 @@ def expire_tier(
             " comp_bytes long, encode_secs double, min_bucket timestamp,"
             " tier string, snapshot_id string, wall_secs double",
         )
-        others = man.where(
+        rows = man.where(
             ~((F.col("tier") == tier) & (F.col("snapshot_id") == snapshot_id))
-        )
+        ).unionByName(fresh.select(*man.columns))
         with _MANIFEST_LOCK:
-            staged_m = _manifest_path(out_dir) + ".rewriting"
-            others.unionByName(fresh.select(*man.columns)).write.mode(
-                "overwrite"
-            ).parquet(staged_m)
-            old_m = _manifest_path(out_dir) + ".old"
-            os.rename(_manifest_path(out_dir), old_m)
-            os.rename(staged_m, _manifest_path(out_dir))
-            shutil.rmtree(old_m)
+            _swap_in(rows.write, _manifest_path(out_dir), ".rewriting", ".old")
     log_row = [
         (
             tier,
@@ -700,8 +693,6 @@ def expire_tier(
             float(time.time()),
         )
     ]
-    from sprintz_spark.session import local_values_df
-
     local_values_df(
         spark,
         log_row,
@@ -723,8 +714,6 @@ def expire_snapshots(
     two renames — a crash between them leaves `.rewriting`/`.old`
     siblings to recover from, never a destroyed manifest. The compacted
     snapshot's lineage.json still records which sources it merged."""
-    import shutil
-
     _recover_swap(_manifest_path(out_dir), ".rewriting", ".old")
     keep = set(keep_ids)
     doomed = [
@@ -734,14 +723,9 @@ def expire_snapshots(
     ]
     man = read_manifest(spark, out_dir)
     if man is not None and doomed:
-        staged = _manifest_path(out_dir) + ".rewriting"
-        man.where(F.col("snapshot_id").isin(list(keep))).write.mode(
-            "overwrite"
-        ).parquet(staged)
-        old = _manifest_path(out_dir) + ".old"
-        os.rename(_manifest_path(out_dir), old)
-        os.rename(staged, _manifest_path(out_dir))
-        shutil.rmtree(old)
+        rows = man.where(F.col("snapshot_id").isin(list(keep)))
+        with _MANIFEST_LOCK:
+            _swap_in(rows.write, _manifest_path(out_dir), ".rewriting", ".old")
     for sid in doomed:
         shutil.rmtree(os.path.join(out_dir, f"snap={sid}"))
     return {"dropped_snapshots": doomed, "kept": sorted(keep)}

@@ -409,3 +409,70 @@ def test_payload_ends_matches_rstrip():
     ends = _payload_ends(payload, lo, hi)
     for a, b, e in zip(lo, hi, ends):
         assert payload[a:e] == payload[a:b].rstrip(b"\x00"), (a, b, e)
+
+
+def _corrupt_blobs():
+    vals = np.arange(200, dtype=np.int64) ** 2
+    lens = np.array([50, 150])
+    return (
+        sz.encode_column(np.arange(70000, dtype=np.uint64) * 5, "delta", deflate=False),
+        sz.encode_container(vals, lens, "auto"),  # zlib-wrapped
+        sz.encode_container(vals, lens, "auto", deflate=False),
+    )
+
+
+def test_corrupt_blob_bad_magic():
+    sz1, _, cont = _corrupt_blobs()
+    assert sz1[:3] == b"SZ1" and cont[:1] == b"C"
+    with pytest.raises(sz.CorruptBlobError, match="bad magic"):
+        sz.decode_column(b"SZ9" + sz1[3:])
+    for fn in (sz.decode_container, sz.query_container_partials):
+        with pytest.raises(sz.CorruptBlobError, match="bad container magic"):
+            fn(b"D" + cont[1:])
+    with pytest.raises(sz.CorruptBlobError):
+        sz.decode_container(b"")
+    assert issubclass(sz.CorruptBlobError, ValueError)
+
+
+def test_corrupt_blob_truncated():
+    _, deflated, cont = _corrupt_blobs()
+    assert deflated[:1] == b"W"
+    with pytest.raises(sz.CorruptBlobError, match="zlib"):
+        sz.decode_container(deflated[: len(deflated) // 2])
+    with pytest.raises(sz.CorruptBlobError, match="truncated"):
+        sz.decode_container(cont[:4])
+    with pytest.raises(sz.CorruptBlobError, match="truncated"):
+        sz.query_container_partials(cont[:4])
+
+
+def test_magic_check_survives_python_O():
+    """The magic checks are raises, not asserts: ``python -O`` keeps them."""
+    import pathlib
+    import subprocess
+    import sys
+
+    probe = (
+        "import numpy as np\n"
+        "from sprintz_spark.codecs import sprintz as sz\n"
+        "blob = sz.encode_column(np.arange(70000, dtype=np.uint64), 'delta',"
+        " deflate=False)\n"
+        "cont = sz.encode_container(np.arange(9), np.array([9]), deflate=False)\n"
+        "for fn, bad in ((sz.decode_column, b'SZ9' + blob[3:]),"
+        " (sz.decode_container, b'D' + cont[1:])):\n"
+        "    try:\n"
+        "        fn(bad)\n"
+        "    except sz.CorruptBlobError:\n"
+        "        continue\n"
+        "    raise SystemExit('no CorruptBlobError')\n"
+    )
+    root = pathlib.Path(__file__).resolve().parents[1]
+
+    def run(src):
+        return subprocess.run(
+            [sys.executable, "-O", "-c", src], cwd=root, capture_output=True,
+            text=True, timeout=120,
+        )
+
+    assert run("assert False").returncode == 0  # -O strips asserts
+    r = run(probe)
+    assert r.returncode == 0, r.stderr

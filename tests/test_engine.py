@@ -154,6 +154,74 @@ def test_decode_series_non_utc_session_across_dst(spark):
     assert (back.us.to_numpy() == t0 + np.arange(72) * 3_600_000_000).all()
 
 
+def test_container_store_independent_of_session_zone(spark, tmp_path):
+    """The container store holds UTC micros, so the session zone never
+    enters it: 30-minute buckets across the 2024 fall-back in New York
+    (04:00Z to 08:00Z, the repeated 01:00-01:59 local hour inside) decode
+    to every instant they were encoded from and aggregate exactly under
+    America/New_York, and a store written under New York decodes to the
+    same instants under UTC."""
+    from sprintz_spark.operators.encode import (
+        decode_series_container,
+        encode_series_container,
+        query_encoded_container,
+    )
+
+    t0 = int(dt.datetime(2024, 11, 3, 4, tzinfo=dt.timezone.utc).timestamp() * 1e6)
+    step = 1_800_000_000
+    want_us = t0 + np.arange(9) * step
+
+    def decoded(enc):
+        dec = decode_series_container(enc, value_cols=["v"])
+        out = dec.select("url", F.unix_micros("bucket").alias("us"), "v").toPandas()
+        return out.sort_values("v").reset_index(drop=True)
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        df = spark.range(9).select(
+            F.when(F.col("id") % 3 == 0, "a").otherwise("b").alias("url"),
+            F.timestamp_micros(F.lit(t0) + F.col("id") * step).alias("bucket"),
+            (F.col("id") * 10).alias("v"),
+        )
+        enc = encode_series_container(df, value_cols=["v"])
+        ny = decoded(enc)
+        q = query_encoded_container(enc, "v").toPandas().set_index("url")
+        enc.write.parquet(str(tmp_path / "ny_store"))
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        utc = decoded(spark.read.parquet(str(tmp_path / "ny_store")))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    for back in (ny, utc):
+        assert back.v.tolist() == list(range(0, 90, 10))
+        assert (back.us.to_numpy() == want_us).all()
+    assert q.loc["a"].tolist() == [90, 60, 0, 3]
+    assert q.loc["b"].tolist() == [270, 80, 10, 6]
+
+
+def test_decode_series_container_rejects_mismatched_rows(spark):
+    """A container row whose blobs disagree with its keys or n, or with
+    each other, raises CorruptBlobError instead of decoding wrong rows."""
+    from sprintz_spark.codecs import sprintz as sz
+    from sprintz_spark.operators.encode import (
+        decode_series_container,
+        encode_series_container,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(f"u{i % 3}", t0 + dt.timedelta(hours=i), i) for i in range(30)]
+    enc = encode_series_container(_mk_series(spark, rows), value_cols=["v"], n_parts=1)
+    other = bytearray(sz.encode_container(np.arange(30), np.array([10, 20])))
+    bad = {
+        "keys": F.concat("keys", F.array(F.lit("extra"))),
+        "n": F.col("n") + 1,
+        "blob_v": F.lit(other),
+    }
+    for col, expr in bad.items():
+        with pytest.raises(Exception, match="CorruptBlobError"):
+            decode_series_container(enc.withColumn(col, expr), value_cols=["v"]).count()
+
+
 def test_decode_series_integer_value_column(spark):
     t0 = dt.datetime(2024, 1, 1)
     rows = [("u", t0 + dt.timedelta(hours=i), (i * 37) % 1000 - 500) for i in range(300)]
