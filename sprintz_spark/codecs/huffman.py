@@ -51,6 +51,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from sprintz_spark.codecs.sprintz import CorruptBlobError
+
 MAGIC = b"HUF1"
 MAX_LEN = 15
 # Decoder window width, DECOUPLED from the code-length cap (round 7):
@@ -361,7 +363,8 @@ def huffman_decode_batch(blobs: list[bytes]) -> list[np.ndarray]:
     small: list[tuple] = []
     for i, buf in enumerate(blobs):
         mv = memoryview(buf)
-        assert bytes(mv[:4]) == MAGIC, "not a HUF1 container"
+        if bytes(mv[:4]) != MAGIC:
+            raise CorruptBlobError(f"not a HUF1 container: {bytes(mv[:4])!r}")
         n = int(np.frombuffer(mv[4:8], np.uint32)[0])
         if n == 0 or n >= (1 << 14):
             out[i] = huffman_decode(buf)
@@ -453,7 +456,8 @@ def huffman_decode_batch(blobs: list[bytes]) -> list[np.ndarray]:
 
 def huffman_decode(buf: bytes) -> np.ndarray:
     mv = memoryview(buf)
-    assert bytes(mv[:4]) == MAGIC, "not a HUF1 container"
+    if bytes(mv[:4]) != MAGIC:
+        raise CorruptBlobError(f"not a HUF1 container: {bytes(mv[:4])!r}")
     n = int(np.frombuffer(mv[4:8], np.uint32)[0])
     bs = int(np.frombuffer(mv[8:10], np.uint16)[0])
     nib = np.frombuffer(mv[10:138], np.uint8)

@@ -2,19 +2,25 @@
 
 Maps the reference's dataframe-compression pipeline (reference:
 python/dfsqueeze.py:15-231 encode→measure→decode→verify; codec selection
-python/codec.py:439-535) onto Spark:
+python/codec.py:439-535) onto Spark. Every operator here is Arrow-native
+(groupBy().applyInArrow / mapInArrow) and every encoded store holds UTC
+epoch micros, so neither the bytes nor the decoded instants depend on
+the session time zone. Both encoders share one front end
+(``_sort_pieces``): a stable Arrow sort on (keys…, ts), series starts
+from ``pc.run_end_encode``, ts as a zero-copy int64 cast, series cut
+into row-sliced pieces of at most chunk_rows rows.
 
-  * ``encode_series``: groupBy(key) → applyInPandas; inside each group the
-    series is sorted by bucket, split into bounded chunks, and every value
-    column goes through quantize → per-column cost-based mode selection
-    (delta / doubledelta / fire / raw; fire only for u8/u16, like the
-    reference's C core) → SZ1 block format. Timestamps get delta-of-delta.
-    Float columns that defeat the decimal quantizer fall back to Gorilla
-    XOR. Output: ONE ROW PER (key, chunk) with binary blobs + metrics.
+  * ``encode_series``: groupBy(hash part) → applyInArrow; every piece of
+    every value column goes through quantize → per-column cost-based mode
+    selection (delta / doubledelta / fire / raw; fire only for u8/u16,
+    like the reference's C core) → SZ1 block format. Timestamps get
+    delta-of-delta. Float columns that defeat the decimal quantizer fall
+    back to Gorilla XOR. Output: ONE ROW PER (key, chunk) with binary
+    blobs + metrics.
   * ``decode_series``: mapInArrow — decoding needs no shuffle at all;
     each encoded row explodes back to its original rows, exactly.
   * ``query_encoded``: fused decode+aggregate (reference query-on-
-    compressed, cpp/Compress/query.hpp) — mapInPandas emits per-chunk
+    compressed, cpp/Compress/query.hpp) — mapInArrow emits per-chunk
     partials straight from the blobs, Catalyst's partial+final aggregate
     combines. Never materializes the decoded table.
   * ``encode_series_container``/``decode_series_container``/
@@ -22,15 +28,7 @@ python/codec.py:439-535) onto Spark:
     per (partition, column) holding ALL series of the slice, so output
     rows/files are O(partitions) not O(keys) and tiny series cost a few
     bytes each; series longer than chunk_rows are cut into row-sliced
-    pieces. This is the retention tier store's only layout. The three
-    are Arrow-native (groupBy().applyInArrow / mapInArrow, no pandas
-    frames) and the store holds UTC epoch micros: its bytes and decoded
-    instants do not depend on the session time zone. The per-series
-    encoder above still stores session wall-clock micros. The three
-    are Arrow-native (groupBy().applyInArrow / mapInArrow, no pandas
-    frames) and the store holds UTC epoch micros: its bytes and decoded
-    instants do not depend on the session time zone. The per-series
-    encoder above still stores session wall-clock micros.
+    pieces. This is the retention tier store's only layout.
 
 Scale notes: group state is O(chunk) not O(series); chunk_rows bounds
 executor memory; a year of 1-minute buckets per url is ~525k rows → a few
@@ -71,26 +69,7 @@ except ImportError:  # pragma: no cover - environment-dependent
     _json_loads = json.loads
 
 DEFAULT_CHUNK = 1 << 16
-
-
-def _raw_itemsize(dtype) -> int:
-    """True raw element width in bytes for ratio accounting (bool = 1,
-    floats/ints = their width). Resolves pandas extension dtypes
-    (nullable BooleanDtype, arrow-backed bool, Int64Dtype, ...) via
-    their numpy counterpart so a nullable bool costs 1 raw byte, not a
-    flat 8 (a flat 8 overstated booldelta compression ratios 8x)."""
-    try:
-        return int(np.dtype(dtype).itemsize) or 8
-    except TypeError:
-        npdt = getattr(dtype, "numpy_dtype", None)
-        if npdt is not None:
-            try:
-                return int(np.dtype(npdt).itemsize) or 8
-            except TypeError:
-                pass
-        if getattr(dtype, "kind", "") == "b":
-            return 1
-        return 8  # object dtypes land on floats
+_UTC_US = pa.timestamp("us", "UTC")
 
 
 def _encode_value_column(s: pd.Series, force: str | None = None) -> tuple[bytes, dict]:
@@ -383,6 +362,28 @@ def _series_pieces(
     return piece_ord, piece_starts, piece_lens
 
 
+def _sort_pieces(
+    table: pa.Table, key_cols: list[str], ts_col: str, chunk_rows: int
+) -> tuple[pa.Table, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The encoders' shared front end. A stable sort on (keys…, ts) — rows
+    tied on it keep their input order; a series starts wherever any key
+    column's run (``pc.run_end_encode``) starts; the series are cut by
+    ``_series_pieces``. Returns the sorted table, its ts as UTC epoch
+    micros, and each piece's index within its series, first row and row
+    count."""
+    t = table.take(pc.sort_indices(
+        table, [(k, "ascending") for k in key_cols] + [(ts_col, "ascending")]
+    ))
+    starts = np.zeros(t.num_rows, dtype=bool)
+    for k in key_cols:
+        run_ends = pc.run_end_encode(t.column(k).combine_chunks()).run_ends.to_numpy()
+        starts[np.append(0, run_ends[:-1])] = True
+    # Spark hands Arrow UDFs the session zone's view of UTC micros:
+    # the zero-copy int64 cast yields the UTC micros, zone-free
+    ts = t.column(ts_col).cast(pa.int64()).to_numpy()
+    return (t, ts, *_series_pieces(starts, chunk_rows))
+
+
 def _pin_parts(
     df: DataFrame, key_cols: list[str], part_col: str | None, n_parts: int | None
 ) -> tuple[DataFrame, str, bool]:
@@ -431,111 +432,76 @@ def encode_series(
     ts_col: str = "bucket",
     value_cols: list[str] = ("crawl_count", "byte_size_sum", "byte_size_max"),
     chunk_rows: int = DEFAULT_CHUNK,
-    part_col: str | None = None,
-    n_parts: int | None = None,
     codecs: dict | None = None,
 ) -> DataFrame:
     """One output row per (series, chunk).
 
-    Physical grouping is by a hash partition (``part_col`` if given, else a
-    derived one), NOT per series: one Arrow batch carries many series and
-    the per-series loop happens pandas-side. This keeps applyInPandas
-    group count == shuffle partition count — per-group Arrow overhead is
-    amortized over thousands of series, which is also the correct shape at
-    100 TB (bounded group memory, no million-group scheduling)."""
+    Physical grouping is by a derived hash partition, NOT per series: one
+    Arrow table carries many series and the per-series cut is numpy
+    arithmetic. This keeps applyInArrow group count == shuffle partition
+    count — per-group Arrow overhead is amortized over thousands of
+    series, which is also the correct shape at 100 TB (bounded group
+    memory, no million-group scheduling). Integer columns without nulls
+    and float columns encode in batched calls; only the fallback codecs
+    (quantizer misses, gorilla, booldelta, search*) see a pandas Series."""
     key_cols = list(key_cols)
     value_cols = list(value_cols)
-    df, part_col, drop_part = _pin_parts(df, key_cols, part_col, n_parts)
-    key_types = [df.schema[k].dataType for k in key_cols]
-    out_keys = ([] if drop_part else [part_col]) + key_cols
-    out_key_types = (
-        [] if drop_part else [df.schema[part_col].dataType]
-    ) + key_types
-    schema = _enc_schema(out_keys, value_cols, out_key_types)
+    df, part_col, _ = _pin_parts(df, key_cols, None, None)
+    schema = _enc_schema(key_cols, value_cols, [df.schema[k].dataType for k in key_cols])
+    ts_meta = {"ts": {"codec": "sprintz", "mode": "doubledelta"}}
 
-    col_names = [f.name for f in schema.fields]
-
-    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
+    def enc(table: pa.Table) -> pa.Table:
         t0 = time.perf_counter()
-        n = len(pdf)
-        if n == 0:
-            return pd.DataFrame(columns=col_names)
-        # one vectorized sort, then pure-numpy segmentation — no
-        # per-series pandas objects anywhere
-        pdf = pdf.sort_values(key_cols + [ts_col], kind="mergesort").reset_index(
-            drop=True
+        t, ts, piece_ord, piece_starts, piece_lens = _sort_pieces(
+            table, key_cols, ts_col, chunk_rows
         )
-        starts = np.arange(n) == 0
-        for k in key_cols:
-            a = pdf[k].to_numpy()
-            starts[1:] |= a[1:] != a[:-1]
-        piece_ord, piece_starts, piece_lens = _series_pieces(starts, chunk_rows)
         n_pieces = len(piece_starts)
-
-        ts_np = pdf[ts_col].astype("datetime64[us]").to_numpy()
-        ts_blobs = sz.encode_batch_concat(ts_np.view(np.int64), piece_lens, "doubledelta")
+        out = {k: t.column(k).take(piece_starts) for k in key_cols}
+        out["ts_blob"] = sz.encode_batch_concat(ts, piece_lens, "doubledelta")
         raws = piece_lens * 8
-        comps = np.fromiter((len(b) for b in ts_blobs), np.int64, n_pieces)
-        col_metas: dict[str, list] = {}
-        col_blobs: dict[str, list] = {}
+        col_metas = []
         for c in value_cols:
-            s = pdf[c]
+            vals = t.column(c).to_numpy()
             force = (codecs or {}).get(c)
-            if force is None and s.dtype.kind in "iu":
-                blobs = sz.encode_batch_concat(s.to_numpy(), piece_lens, None)
-                dt = str(s.dtype)
-                metas_c = [
-                    {"codec": "sprintz", "mode": sz.blob_mode(b), "np_dtype": dt}
+            blobs, metas = [None] * n_pieces, [None] * n_pieces
+            if force is None and vals.dtype.kind in "iu":
+                blobs = sz.encode_batch_concat(vals, piece_lens, None)
+                metas = [
+                    {"codec": "sprintz", "mode": sz.blob_mode(b), "np_dtype": str(vals.dtype)}
                     for b in blobs
                 ]
-                raws = raws + s.dtype.itemsize * piece_lens
-            else:
-                blobs = metas_c = None
-                if force != "gorilla" and s.dtype.kind == "f":
-                    res = _encode_float_batch(
-                        s.to_numpy(), piece_starts, piece_lens, str(s.dtype)
-                    )
-                    if res is not None:
-                        blobs, metas_c = res
-                        for i in range(n_pieces):  # quantizer-defeating pieces
-                            if blobs[i] is None:
-                                st, ln = piece_starts[i], piece_lens[i]
-                                blobs[i], metas_c[i] = _encode_value_column(
-                                    s.iloc[st : st + ln], force
-                                )
-                if blobs is None:
-                    blobs, metas_c = [], []
-                    for st, ln in zip(piece_starts, piece_lens):
-                        blob, m = _encode_value_column(s.iloc[st : st + ln], force)
-                        blobs.append(blob)
-                        metas_c.append(m)
-                itemsize = _raw_itemsize(s.dtype)
-                raws = raws + itemsize * piece_lens
-            comps = comps + np.fromiter((len(b) for b in blobs), np.int64, n_pieces)
-            col_blobs[c] = blobs
-            col_metas[c] = metas_c
-        wall = time.perf_counter() - t0
-        out = pd.DataFrame(
-            {k: pdf[k].to_numpy()[piece_starts] for k in out_keys}
-        )
-        out["chunk"] = piece_ord
-        out["start_bucket"] = ts_np[piece_starts]
-        out["end_bucket"] = ts_np[piece_starts + piece_lens - 1]
-        out["n"] = piece_lens
-        out["ts_blob"] = ts_blobs
-        ts_meta = {"ts": {"codec": "sprintz", "mode": "doubledelta"}}
-        out["meta"] = [
-            json.dumps({**ts_meta, **{c: col_metas[c][i] for c in value_cols}})
-            for i in range(n_pieces)
-        ]
-        out["raw_bytes"] = raws
-        out["comp_bytes"] = comps
-        out["encode_secs"] = wall / n_pieces
-        for c in value_cols:
-            out[f"blob_{c}"] = col_blobs[c]
-        return out[col_names]
+            elif force != "gorilla" and vals.dtype.kind == "f":
+                blobs, metas = _encode_float_batch(
+                    vals, piece_starts, piece_lens, str(vals.dtype)
+                ) or (blobs, metas)
+            # the fallback codecs and the quantizer-defeating pieces
+            misses = [i for i, b in enumerate(blobs) if b is None]
+            s = pd.Series(vals) if misses else None
+            for i in misses:
+                st = piece_starts[i]
+                blobs[i], metas[i] = _encode_value_column(s.iloc[st : st + piece_lens[i]], force)
+            raws = raws + max(t.schema.field(c).type.bit_width // 8, 1) * piece_lens
+            out[f"blob_{c}"] = blobs
+            col_metas.append(metas)
+        out |= {
+            "chunk": piece_ord,
+            "start_bucket": pa.array(ts[piece_starts], _UTC_US),
+            "end_bucket": pa.array(ts[piece_starts + piece_lens - 1], _UTC_US),
+            "n": piece_lens,
+            "meta": [
+                json.dumps({**ts_meta, **{c: m[i] for c, m in zip(value_cols, col_metas)}})
+                for i in range(n_pieces)
+            ],
+            "raw_bytes": raws,
+            "comp_bytes": [
+                sum(map(len, bs))
+                for bs in zip(out["ts_blob"], *(out[f"blob_{c}"] for c in value_cols))
+            ],
+            "encode_secs": np.full(n_pieces, (time.perf_counter() - t0) / n_pieces),
+        }
+        return pa.Table.from_pydict(out).select(schema.names)
 
-    return df.groupBy(part_col).applyInPandas(enc, schema)
+    return df.groupBy(part_col).applyInArrow(enc, schema)
 
 
 def decode_series(
@@ -547,13 +513,12 @@ def decode_series(
 ) -> DataFrame:
     """Explode encoded chunks back to rows — narrow (no shuffle).
 
-    mapInArrow, not mapInPandas (r10): the decoded output is millions of
-    rows whose key columns are string repeats — building them as pandas
-    object arrays paid one Python object per row plus a pandas→Arrow
-    conversion of the whole decoded table. Arrow-side ``take`` repeats the
-    key columns in C++ and the numeric columns wrap decode buffers
-    zero-copy, so the Python boundary carries only the blob bytes in and
-    Arrow buffers out."""
+    mapInArrow: the decoded output is millions of rows whose key columns
+    are string repeats, and pandas object arrays would pay one Python
+    object per row (r10). Arrow-side ``take`` repeats the key columns in
+    C++ and the numeric columns wrap decode buffers zero-copy, so the
+    Python boundary carries only the blob bytes in and Arrow buffers
+    out. The stored micros are UTC and decode as UTC instants."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     key_cols = list(key_cols)
@@ -568,7 +533,6 @@ def decode_series(
     fields = key_fields + [StructField(ts_col, TimestampType())]
     fields += [StructField(c, vt.get(c, LongType())) for c in value_cols]
     schema = StructType(fields)
-    tz = enc.sparkSession.conf.get("spark.sql.session.timeZone") or "UTC"
     val_arrow = {c: to_arrow_type(vt.get(c, LongType())) for c in value_cols}
     names = key_cols + [ts_col] + value_cols
 
@@ -590,12 +554,7 @@ def decode_series(
             )
             idx = pa.array(np.repeat(np.arange(n_rows, dtype=np.int64), ns))
             arrays = [col[k].take(idx) for k in key_cols]
-            # the encoder stored session-zone wall-clock micros: localize
-            # them (as pandas' tz_localize(ambiguous=False) did), never
-            # relabel them as UTC
-            arrays.append(pc.assume_timezone(
-                pa.array(ts_concat, pa.timestamp("us")), tz, ambiguous="latest"
-            ))
+            arrays.append(pa.array(ts_concat, _UTC_US))
             for c in value_cols:
                 vals = decode_value_columns_batch(
                     col[f"blob_{c}"].to_pylist(), [m[c] for m in metas]
@@ -624,56 +583,41 @@ def query_encoded(
     schema = _partials_schema([enc.schema[k] for k in key_cols])
     blob_col = f"blob_{value_col}"
 
-    def partials(it):
-        cols = [f.name for f in schema.fields]
-        for pdf in it:
-            if not len(pdf):
+    def partials(batches):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            metas = [_json_loads(m)[value_col] for m in pdf["meta"]]
-            blobs = list(pdf[blob_col])
-            n_b = len(blobs)
-            sums = np.zeros(n_b, np.int64)
-            maxs = np.zeros(n_b, np.int64)
-            mins = np.zeros(n_b, np.int64)
-            ns = np.zeros(n_b, np.int64)
+            metas = [_json_loads(m)[value_col] for m in b.column("meta").to_pylist()]
+            blobs = b.column(blob_col).to_pylist()
+            ns, sums, maxs, mins = np.zeros((4, len(blobs)), np.int64)
             # plain int64 sprintz blobs (no value transform in meta) take
             # the codec-level RLE-run fast path: zero-width blocks
             # aggregate from headers with no payload unpack
-            plain = [
-                i
-                for i, m in enumerate(metas)
-                if m.get("codec") == "sprintz"
-                and m.get("np_dtype") == "int64"
-                and "qparams" not in m
-                and "offset" not in m
-            ]
-            if plain:
-                c, s, mx, mn = sz.query_batch_partials([blobs[i] for i in plain])
-                idx = np.array(plain, np.int64)
-                ns[idx], sums[idx], maxs[idx], mins[idx] = c, s, mx, mn
-            plain_set = set(plain)
-            rest = [i for i in range(n_b) if i not in plain_set]
-            if rest:
-                vals = decode_value_columns_batch(
-                    [blobs[i] for i in rest], [metas[i] for i in rest]
+            is_plain = np.array([
+                m.get("codec") == "sprintz" and m.get("np_dtype") == "int64"
+                and "qparams" not in m and "offset" not in m
+                for m in metas
+            ], dtype=bool)
+            plain, rest = np.flatnonzero(is_plain), np.flatnonzero(~is_plain)
+            if len(plain):
+                ns[plain], sums[plain], maxs[plain], mins[plain] = sz.query_batch_partials(
+                    [blobs[i] for i in plain]
                 )
-                for i, v in zip(rest, vals):
-                    a = np.asarray(v, dtype=np.int64)
-                    ns[i] = len(a)
-                    sums[i], maxs[i], mins[i] = a.sum(), a.max(), a.min()
-            out = pd.DataFrame({k: pdf[k].to_numpy() for k in key_cols})
-            out["p_sum"] = sums
-            out["p_max"] = maxs
-            out["p_min"] = mins
-            out["p_cnt"] = ns
-            yield out[cols]
+            vals = decode_value_columns_batch(
+                [blobs[i] for i in rest], [metas[i] for i in rest]
+            )
+            for i, v in zip(rest, vals):
+                a = np.asarray(v, dtype=np.int64)
+                ns[i] = len(a)
+                sums[i], maxs[i], mins[i] = a.sum(), a.max(), a.min()
+            arrays = [b.column(k) for k in key_cols]
+            arrays += [pa.array(x) for x in (sums, maxs, mins, ns)]
+            yield pa.RecordBatch.from_arrays(arrays, names=schema.names)
 
-    return _combine_partials(enc.mapInPandas(partials, schema), key_cols, value_col)
+    return _combine_partials(enc.mapInArrow(partials, schema), key_cols, value_col)
 
 
 # --- multi-series containers (the retention store layout) ------------------
-
-_UTC_US = pa.timestamp("us", "UTC")
 
 
 def encode_series_container(
@@ -725,16 +669,8 @@ def encode_series_container(
 
     def enc(table: pa.Table) -> pa.Table:
         t0 = time.perf_counter()
-        # a stable sort: rows tied on (key, ts) keep their input order
-        t = table.take(
-            pc.sort_indices(table, [(key, "ascending"), (ts_col, "ascending")])
-        )
+        t, ts, _, p_starts, p_lens = _sort_pieces(table, [key], ts_col, chunk_rows)
         n = t.num_rows
-        karr = t.column(key).combine_chunks()
-        run_ends = pc.run_end_encode(karr).run_ends.to_numpy()
-        starts = np.zeros(n, dtype=bool)
-        starts[np.append(0, run_ends[:-1])] = True
-        _, p_starts, p_lens = _series_pieces(starts, chunk_rows)
         # the pieces tile the rows, so a piece's first row is its
         # cumulative offset: container = offset // chunk_rows. A piece has
         # at most chunk_rows rows, so one series' consecutive pieces land
@@ -746,9 +682,6 @@ def encode_series_container(
         offsets = np.append(firsts, len(p_starts))  # of each container's keys
         p_ends = p_starts + p_lens - 1
         lens = np.split(p_lens, firsts[1:])
-        # Spark hands Arrow UDFs the session zone's view of UTC micros:
-        # the zero-copy int64 cast yields the UTC micros, zone-free
-        ts = t.column(ts_col).cast(pa.int64()).to_numpy()
         cols = [ts] + [t.column(c).to_numpy().astype(np.int64, copy=False)
                        for c in value_cols]
         blobs = [
@@ -761,7 +694,9 @@ def encode_series_container(
         out = {
             "chunk": cont[firsts],
             "n_series": np.diff(offsets),
-            "keys": pa.ListArray.from_arrays(offsets, karr.take(p_starts)),
+            "keys": pa.ListArray.from_arrays(
+                offsets, t.column(key).take(p_starts).combine_chunks()
+            ),
             # each piece is time-sorted, so the container's bucket range
             # spans its pieces' first and last buckets
             "start_bucket": pa.array(np.minimum.reduceat(ts[p_starts], firsts), _UTC_US),

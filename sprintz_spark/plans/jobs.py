@@ -3,7 +3,7 @@ in a single shuffle.
 
 Shape (the 100 TB design):
 
-    pages ──project──> (url, warc_ts, nbytes, part)        # ~40B rows, not pages
+    pages ──project──> (url, ts_us, nbytes, part)          # ~40B rows, not pages
           ──shuffle on part=hash(url)──> applyInPandas:
                per partition (every row of its urls is present):
                  sort once by (url, ts)
@@ -15,7 +15,13 @@ Shape (the 100 TB design):
 
 One wide job, one shuffle, no intermediate materialization. Compared to
 the modular plan (plans.retention), this trades per-tier resumability for
-~4x less fixed overhead; both produce bit-identical tier values (tested).
+~4x less fixed overhead. The UDF gets ``unix_micros(warc_ts)`` and
+returns UTC instants, so buckets are UTC epoch arithmetic whatever the
+session time zone, and the store holds UTC micros like every encoded
+store. The modular plan's ``R.derive_series`` truncates with
+``date_trunc``, which follows the session zone: the two produce
+bit-identical tier values under a UTC session (tested), which
+``get_spark`` pins.
 
 ``codec='fire'`` offset-quantizes each measure piece to u8/u16 when its
 span fits and runs the FIRE forecaster (the reference's max-ratio
@@ -42,6 +48,11 @@ from pyspark.sql.types import (
 )
 
 from sprintz_spark.codecs import sprintz as sz
+from sprintz_spark.operators.encode import (
+    _series_pieces,
+    decode_series,
+    decode_value_columns_batch,
+)
 
 try:  # C JSON parser if present (meta parse is once per chunk row)
     from orjson import loads as _json_loads  # type: ignore
@@ -278,6 +289,8 @@ def fused_rollup_encode(
     spark = pages.sparkSession
     n_parts = n_parts or spark.sparkContext.defaultParallelism * 2
     out_cols = _COLS_ID if shuffle_ids else _COLS
+    # UTC epoch micros, never the session zone's wall clock
+    utc_us = F.unix_micros("warc_ts").alias("ts_us")
 
     def udf(pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.perf_counter()
@@ -293,7 +306,7 @@ def fused_rollup_encode(
             url_codes = pdf["url_id"].to_numpy()
         else:
             url_codes = pd.factorize(pdf["url"].to_numpy(), sort=False)[0]
-        ts_us = pdf["warc_ts"].astype("datetime64[us]").to_numpy().view(np.int64)
+        ts_us = pdf["ts_us"].to_numpy()
         order = np.lexsort((ts_us, url_codes))
         url_codes = url_codes[order]
         ts_us = ts_us[order]
@@ -314,18 +327,9 @@ def fused_rollup_encode(
             g_codes = url_codes[g_starts]
             g_bucket = bucket[g_starts]
             # series (per-url) boundaries over the grouped arrays
-            s_change = np.zeros(len(g_starts), dtype=bool)
-            s_change[0] = True
+            s_change = np.ones(len(g_starts), dtype=bool)
             s_change[1:] = g_codes[1:] != g_codes[:-1]
-            s_starts = np.flatnonzero(s_change)
-            s_lens = np.diff(np.append(s_starts, len(g_starts)))
-            reps = (s_lens + chunk_rows - 1) // chunk_rows
-            p_series = np.repeat(np.arange(len(s_starts)), reps)
-            p_ord = np.arange(int(reps.sum()), dtype=np.int64) - np.repeat(
-                np.concatenate([[0], np.cumsum(reps)[:-1]]), reps
-            )
-            p_starts = s_starts[p_series] + p_ord * chunk_rows
-            p_lens = np.minimum(chunk_rows, s_lens[p_series] - p_ord * chunk_rows)
+            p_ord, p_starts, p_lens = _series_pieces(s_change, chunk_rows)
             n_pieces = len(p_starts)
             ts_blobs = sz.encode_batch_concat(g_bucket, p_lens, "doubledelta", False)
             raws = p_lens * 8
@@ -336,8 +340,10 @@ def fused_rollup_encode(
                     "part": part,
                     ("url_id" if shuffle_ids else "url"): g_url[p_starts],
                     "chunk": p_ord,
-                    "start_bucket": g_bucket[p_starts].view("datetime64[us]"),
-                    "end_bucket": g_bucket[p_starts + p_lens - 1].view("datetime64[us]"),
+                    "start_bucket": pd.to_datetime(g_bucket[p_starts], unit="us", utc=True),
+                    "end_bucket": pd.to_datetime(
+                        g_bucket[p_starts + p_lens - 1], unit="us", utc=True
+                    ),
                     "n": p_lens,
                     "ts_blob": ts_blobs,
                 }
@@ -406,12 +412,12 @@ def fused_rollup_encode(
             if "part" in pages.columns
             else F.pmod(F.xxhash64("url"), F.lit(n_parts)).alias("part")
         )
-        slim = pages.select("url", "warc_ts", "nbytes", part_col)
+        slim = pages.select("url", utc_us, "nbytes", part_col)
         return slim.groupBy("part").applyInPandas(udf, _SCHEMA)
     if shuffle_ids:
         slim = pages.select(
             F.xxhash64("url").alias("url_id"),
-            "warc_ts",
+            utc_us,
             F.length("html").cast("long").alias("nbytes"),
             F.pmod(F.xxhash64("url"), F.lit(n_parts)).alias("part"),
         )
@@ -425,7 +431,7 @@ def fused_rollup_encode(
         return enc.join(urls.hint("shuffle_hash"), "url_id").select(*_COLS)
     slim = pages.select(
         "url",
-        "warc_ts",
+        utc_us,
         F.length("html").cast("long").alias("nbytes"),
         F.pmod(F.xxhash64("url"), F.lit(n_parts)).alias("part"),
     )
@@ -437,15 +443,12 @@ def verify_encoded(enc: DataFrame) -> DataFrame:
     encode→decode→verify harness, python/dfsqueeze.py:133-231, as a narrow
     Spark stage): decode every blob of every chunk and check it against
     the crc32 of the raw values captured at encode time. Returns one row
-    per (tier, part) with chunk/row counts; raises inside the task on any
-    mismatch, failing the job loudly.
+    per (tier, part) with chunk/row counts; raises CorruptBlobError inside
+    the task on any length or crc mismatch, failing the job loudly.
 
     No shuffle: mapInPandas straight over the encoded rows.
     """
     import zlib
-
-    from sprintz_spark.codecs import sprintz as szc
-    from sprintz_spark.operators.encode import decode_value_columns_batch
 
     schema = "tier string, part long, n_chunks long, n_rows long, n_cols_checked long"
 
@@ -456,23 +459,20 @@ def verify_encoded(enc: DataFrame) -> DataFrame:
             metas = [_json_loads(m) for m in pdf["meta"]]
             ns = pdf["n"].to_numpy(np.int64)
             checked = np.zeros(len(pdf), dtype=np.int64)
-            ts_arrays = szc.decode_batch(list(pdf["ts_blob"]))
-            for i, (arr, meta, n) in enumerate(zip(ts_arrays, metas, ns)):
-                assert len(arr) == n, "ts length mismatch"
-                crc = meta.get("crc", {}).get("ts")
-                if crc is not None:
-                    assert zlib.crc32(arr.view(np.int64).tobytes()) == crc, "ts crc mismatch"
-                    checked[i] += 1
+            cols = {"ts": sz.decode_batch(list(pdf["ts_blob"]))}
             for m in MEASURES:
-                vals = decode_value_columns_batch(
+                cols[m] = decode_value_columns_batch(
                     list(pdf[f"blob_{m}"]), [mt[m] for mt in metas]
                 )
-                for i, (v, meta, n) in enumerate(zip(vals, metas, ns)):
+            for name, arrays in cols.items():
+                for i, (v, meta, n) in enumerate(zip(arrays, metas, ns)):
                     arr = np.asarray(v).astype(np.int64, copy=False)
-                    assert len(arr) == n, f"{m} length mismatch"
-                    crc = meta.get("crc", {}).get(m)
+                    if len(arr) != n:
+                        raise sz.CorruptBlobError(f"{name} length mismatch")
+                    crc = meta.get("crc", {}).get(name)
                     if crc is not None:
-                        assert zlib.crc32(arr.tobytes()) == crc, f"{m} crc mismatch"
+                        if zlib.crc32(arr.tobytes()) != crc:
+                            raise sz.CorruptBlobError(f"{name} crc mismatch")
                         checked[i] += 1
             stats = pd.DataFrame(
                 {
@@ -501,8 +501,6 @@ def decode_fused_tier(enc: DataFrame, tier: str) -> DataFrame:
     just serialize that cost. The fix lives in the decode kernels
     (vectorized meta parse + batched transforms in operators/encode.py,
     codecs/sprintz.py), not in partitioning."""
-    from sprintz_spark.operators.encode import decode_series
-
     return decode_series(
         enc.where(F.col("tier") == tier),
         key_cols=["part", "url"],

@@ -446,19 +446,23 @@ def test_corrupt_blob_truncated():
 
 
 def test_magic_check_survives_python_O():
-    """The magic checks are raises, not asserts: ``python -O`` keeps them."""
+    """The SZ1, container and HUF1 magic checks are raises, not asserts:
+    ``python -O`` keeps them."""
     import pathlib
     import subprocess
     import sys
 
     probe = (
         "import numpy as np\n"
+        "from sprintz_spark.codecs import huffman as hf\n"
         "from sprintz_spark.codecs import sprintz as sz\n"
         "blob = sz.encode_column(np.arange(70000, dtype=np.uint64), 'delta',"
         " deflate=False)\n"
         "cont = sz.encode_container(np.arange(9), np.array([9]), deflate=False)\n"
+        "huf = b'HUF9' + hf.huffman_encode(np.arange(300, dtype=np.uint8) % 7)[4:]\n"
         "for fn, bad in ((sz.decode_column, b'SZ9' + blob[3:]),"
-        " (sz.decode_container, b'D' + cont[1:])):\n"
+        " (sz.decode_container, b'D' + cont[1:]), (hf.huffman_decode, huf),"
+        " (lambda b: hf.huffman_decode_batch([b]), huf)):\n"
         "    try:\n"
         "        fn(bad)\n"
         "    except sz.CorruptBlobError:\n"

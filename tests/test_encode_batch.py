@@ -181,26 +181,22 @@ def test_float_batch_uses_fire_mode():
     assert (np.asarray(out, dtype=np.float64) == vals).all()
 
 
-def test_raw_itemsize_extension_dtypes():
-    """Round-7 (ADVICE): nullable/arrow-backed bool columns must cost 1
-    raw byte like plain bool, and nullable ints their true width — the
-    np.dtype() fallback alone sent every extension dtype to 8."""
-    import pandas as pd
+def test_encode_series_raw_bytes_take_arrow_widths(spark):
+    """Raw bytes count each value column at its Arrow type's width: a
+    boolean 1 byte, an int32 4 (also with nulls, which reach the encoder
+    as float64), a double 8, plus 8 for the timestamp."""
+    from pyspark.sql import functions as F
 
-    from sprintz_spark.operators.encode import _raw_itemsize
+    from sprintz_spark.operators.encode import encode_series
 
-    assert _raw_itemsize(np.dtype(bool)) == 1
-    assert _raw_itemsize(np.dtype(np.float64)) == 8
-    assert _raw_itemsize(np.dtype(np.uint16)) == 2
-    assert _raw_itemsize(pd.BooleanDtype()) == 1
-    assert _raw_itemsize(pd.Int32Dtype()) == 4
-    assert _raw_itemsize(pd.array([True, None], dtype="boolean").dtype) == 1
-    try:
-        import pyarrow as pa
-
-        arrow_bool = pd.ArrowDtype(pa.bool_())
-    except (ImportError, TypeError, ValueError):
-        arrow_bool = None
-    if arrow_bool is not None:
-        assert _raw_itemsize(arrow_bool) == 1
-    assert _raw_itemsize(np.dtype(object)) == 8
+    df = spark.range(40).select(
+        F.lit("u").alias("url"),
+        F.timestamp_seconds(F.lit(1704067200) + F.col("id") * 60).alias("bucket"),
+        (F.col("id") % 3 == 0).alias("b"),
+        F.when(F.col("id") != 5, F.col("id")).cast("int").alias("i"),
+        (F.col("id") / 4).alias("d"),
+    )
+    enc = encode_series(df, value_cols=["b", "i", "d"], codecs={"b": "booldelta"})
+    row = enc.agg(F.sum("n").alias("n"), F.sum("raw_bytes").alias("raw")).first()
+    assert row["n"] == 40
+    assert row["raw"] == 40 * (8 + 1 + 4 + 8)

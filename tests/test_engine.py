@@ -14,7 +14,14 @@ from pyspark.sql.types import IntegerType
 from sprintz_spark.functions.text import extract_text
 from sprintz_spark.operators import gapfill as GF
 from sprintz_spark.operators import rollup as R
-from sprintz_spark.operators.encode import decode_series, encode_series, query_encoded
+from sprintz_spark.operators.encode import (
+    decode_series,
+    decode_series_container,
+    encode_series,
+    encode_series_container,
+    query_encoded,
+    query_encoded_container,
+)
 
 
 def test_pages_deterministic_and_extractable(pages_small):
@@ -133,9 +140,9 @@ def test_encode_float_gapfilled_series(spark):
 
 
 def test_decode_series_non_utc_session_across_dst(spark):
-    """Under a non-UTC session zone the decoder localizes the encoder's
-    wall-clock micros: every hour across the 2024 spring-forward change
-    in New York decodes to the instant it was encoded from."""
+    """Under a non-UTC session zone every hour across the 2024
+    spring-forward change in New York decodes to the instant it was
+    encoded from."""
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
@@ -154,25 +161,27 @@ def test_decode_series_non_utc_session_across_dst(spark):
     assert (back.us.to_numpy() == t0 + np.arange(72) * 3_600_000_000).all()
 
 
-def test_container_store_independent_of_session_zone(spark, tmp_path):
-    """The container store holds UTC micros, so the session zone never
-    enters it: 30-minute buckets across the 2024 fall-back in New York
+@pytest.mark.parametrize(
+    "encode, decode, query",
+    [
+        (encode_series, decode_series, query_encoded),
+        (encode_series_container, decode_series_container, query_encoded_container),
+    ],
+    ids=["per_series", "container"],
+)
+def test_store_independent_of_session_zone(spark, tmp_path, encode, decode, query):
+    """Both encoded stores hold UTC micros, so the session zone never
+    enters them: 30-minute buckets across the 2024 fall-back in New York
     (04:00Z to 08:00Z, the repeated 01:00-01:59 local hour inside) decode
     to every instant they were encoded from and aggregate exactly under
     America/New_York, and a store written under New York decodes to the
     same instants under UTC."""
-    from sprintz_spark.operators.encode import (
-        decode_series_container,
-        encode_series_container,
-        query_encoded_container,
-    )
-
     t0 = int(dt.datetime(2024, 11, 3, 4, tzinfo=dt.timezone.utc).timestamp() * 1e6)
     step = 1_800_000_000
     want_us = t0 + np.arange(9) * step
 
     def decoded(enc):
-        dec = decode_series_container(enc, value_cols=["v"])
+        dec = decode(enc, value_cols=["v"])
         out = dec.select("url", F.unix_micros("bucket").alias("us"), "v").toPandas()
         return out.sort_values("v").reset_index(drop=True)
 
@@ -184,9 +193,9 @@ def test_container_store_independent_of_session_zone(spark, tmp_path):
             F.timestamp_micros(F.lit(t0) + F.col("id") * step).alias("bucket"),
             (F.col("id") * 10).alias("v"),
         )
-        enc = encode_series_container(df, value_cols=["v"])
+        enc = encode(df, value_cols=["v"])
         ny = decoded(enc)
-        q = query_encoded_container(enc, "v").toPandas().set_index("url")
+        q = query(enc, "v").toPandas().set_index("url")
         enc.write.parquet(str(tmp_path / "ny_store"))
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         utc = decoded(spark.read.parquet(str(tmp_path / "ny_store")))

@@ -96,3 +96,63 @@ def test_fused_fire_actually_uses_fire(spark, pages_small):
         1 for m in metas for c, v in m.items() if c != "ts" and v.get("mode") == "fire"
     )
     assert fire_cols > 0
+
+
+def test_fused_tiers_independent_of_session_zone(spark):
+    """The fused job buckets UTC epoch micros: nine half-hour crawls from
+    2024-11-03 04:00Z (New York's repeated 01:00-01:59 local hour inside)
+    give 9 one-minute and 5 one-hour buckets with the same instants and
+    counts under America/New_York as under UTC."""
+    from pyspark.sql import functions as F
+
+    t0 = int(pd.Timestamp("2024-11-03 04:00", tz="UTC").value // 1000)
+    pages = spark.range(9).select(
+        F.lit("u").alias("url"),
+        F.timestamp_micros(F.lit(t0) + F.col("id") * 1_800_000_000).alias("warc_ts"),
+        F.repeat(F.lit("x"), (F.col("id") + 1).cast("int")).alias("html"),
+    )
+
+    def tiers():
+        enc = fused_rollup_encode(pages, n_parts=2)
+        return {
+            tier: decode_fused_tier(enc, tier)
+            .select(F.unix_micros("bucket").alias("us"), "crawl_count", "byte_size_sum")
+            .toPandas().sort_values("us").reset_index(drop=True)
+            for tier in ("1m", "1h")
+        }
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        ny = tiers()
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        utc = tiers()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert [len(utc["1m"]), len(utc["1h"])] == [9, 5]
+    assert (utc["1m"].us.to_numpy() == t0 + np.arange(9) * 1_800_000_000).all()
+    assert utc["1h"].crawl_count.tolist() == [2, 2, 2, 2, 1]
+    for tier in ("1m", "1h"):
+        pd.testing.assert_frame_equal(ny[tier], utc[tier])
+
+
+def test_verify_encoded_checks_crc_and_length(spark, pages_small):
+    """A clean fused store verifies every column of every chunk (the ts
+    and four measure crcs); a tampered crc or row count fails the job
+    with CorruptBlobError."""
+    from pyspark.sql import functions as F
+
+    from sprintz_spark.plans.jobs import verify_encoded
+
+    enc = fused_rollup_encode(pages_small, n_parts=4).cache()
+    got = verify_encoded(enc).toPandas()
+    assert got.n_chunks.sum() == enc.count()
+    assert (got.n_cols_checked == 5 * got.n_chunks).all()
+    bad = {
+        "meta": F.regexp_replace("meta", r'"crc": \{"ts": \d+', '"crc": {"ts": 1'),
+        "n": F.col("n") + 1,
+    }
+    for col, expr in bad.items():
+        with pytest.raises(Exception, match="CorruptBlobError"):
+            verify_encoded(enc.withColumn(col, expr)).collect()
+    enc.unpersist()

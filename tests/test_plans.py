@@ -55,7 +55,7 @@ def test_fused_job_id_shuffle_carries_no_strings(spark, pages_small):
     assert "ShuffledHashJoin" in plan  # never a broadcast of the blob side
     assert "length(html" in plan
     assert "Exchange hashpartitioning(part" in plan
-    # the UDF consumes (url_id, warc_ts, nbytes, part) — int64 id, no
+    # the UDF consumes (url_id, ts_us, nbytes, part) — int64 id, no
     # url-string column crosses the row-scale shuffle into Python
     udf_line = next(l for l in plan.splitlines() if "FlatMapGroupsInPandas" in l)
     udf_args = udf_line.split("udf(")[1].split(")")[0]
@@ -126,9 +126,40 @@ def test_decode_adds_no_shuffle_over_encode(spark):
     )
     enc = encode_series(ev, key_cols=["user_id"], value_cols=["cents"])
     dec = decode_series(enc, key_cols=["user_id"], value_cols=["cents"])
-    # decode is mapInPandas on top of the encode stage: same single shuffle
+    # decode is mapInArrow on top of the encode stage: same single shuffle
     assert _count(_plan(enc), "Exchange hashpartitioning") == 1
     assert _count(_plan(dec), "Exchange hashpartitioning") == 1
+
+
+def test_encode_operators_are_arrow_udfs(spark):
+    """The per-series and container operators cross the Python boundary
+    as Arrow UDFs only: each plan holds its FlatMapGroupsInArrow /
+    MapInArrow node and no pandas UDF node."""
+    from sprintz_spark.operators import encode as E
+
+    ev = spark.read.parquet(f"{SF}/events.parquet").select(
+        "user_id", F.col("ts").alias("bucket"),
+        F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
+    )
+    k, v = ["user_id"], ["cents"]
+    enc = E.encode_series(ev, key_cols=k, value_cols=v)
+    cont = E.encode_series_container(ev, key_cols=k, value_cols=v)
+    plans = {
+        "encode_series": (enc, "FlatMapGroupsInArrow"),
+        "decode_series": (E.decode_series(enc, key_cols=k, value_cols=v), "MapInArrow"),
+        "query_encoded": (E.query_encoded(enc, "cents", key_cols=k), "MapInArrow"),
+        "encode_series_container": (cont, "FlatMapGroupsInArrow"),
+        "decode_series_container": (
+            E.decode_series_container(cont, key_cols=k, value_cols=v), "MapInArrow"
+        ),
+        "query_encoded_container": (
+            E.query_encoded_container(cont, "cents", key_col="user_id"), "MapInArrow"
+        ),
+    }
+    for name, (df, node) in plans.items():
+        plan = _plan(df)
+        assert re.search(rf"\b{node}\b", plan), name
+        assert "InPandas" not in plan, name
 
 
 def test_range_join_is_hash_join(spark):

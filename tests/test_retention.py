@@ -167,9 +167,9 @@ def _per_series_encoded(spark, pages_small, path):
     from sprintz_spark.operators import rollup as R
     from sprintz_spark.operators.encode import encode_series
 
-    t1h = R.derive_series(pages_small, "1h").withColumn("part", F.lit(0))
-    encode_series(
-        t1h, key_cols=["url"], value_cols=RT.MEASURES, part_col="part"
+    t1h = R.derive_series(pages_small, "1h")
+    encode_series(t1h, key_cols=["url"], value_cols=RT.MEASURES).withColumn(
+        "part", F.lit(0)
     ).write.partitionBy("part").parquet(path)
 
 
