@@ -66,6 +66,10 @@ def run_pipeline(spark, n_rows: int) -> dict:
             "tier_ratios": {
                 t: round(v["ratio"], 3) for t, v in sorted(ratios.items())
             },
+            "tier_disk_bytes_per_raw_byte": {
+                t: round(v["disk_bytes"] / v["raw_bytes"], 4)
+                for t, v in sorted(ratios.items())
+            },
             "tier_encode_rows_per_sec": {
                 t: round(v["encode_rows_per_sec"], 1)
                 for t, v in sorted(ratios.items())

@@ -61,6 +61,13 @@ def cmd_retention(args) -> dict:
         "secs": round(wall, 2),
         "rows_per_sec": round(n / wall, 1),
         "tier_ratios": {t: round(v["ratio"], 3) for t, v in sorted(ratios.items())},
+        # blobs plus parquet framing per raw byte; None off a local disk
+        "tier_disk_bytes_per_raw_byte": {
+            t: round(v["disk_bytes"] / v["raw_bytes"], 4)
+            if v["disk_bytes"] is not None
+            else None
+            for t, v in sorted(ratios.items())
+        },
     }
 
 

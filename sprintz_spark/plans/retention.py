@@ -19,7 +19,10 @@ output is byte-identical to a single clean run (verified in tests).
 
 Scale notes: one Spark job per tier regardless of partition count; the
 cascade encodes each tier from the materialized finer tier (1m parquet →
-1h), so raw pages are scanned exactly once per snapshot.
+1h), so raw pages are scanned exactly once per snapshot. That rolled-up
+intermediate is staged under ``snap=<id>/_cascade`` and removed once the
+snapshot's manifest rows are committed: a snapshot on disk holds only
+its ``encoded_tier=*`` dirs.
 """
 
 from __future__ import annotations
@@ -53,6 +56,11 @@ MEASURES = ["crawl_count", "byte_size_sum", "byte_size_max", "byte_size_min"]
 # Iceberg deployment gets this from the catalog's commit protocol; the
 # parquet-dir manifest needs the explicit lock.
 _MANIFEST_LOCK = threading.Lock()
+
+# Longest min/max a parquet footer keeps for a binary column. Without it
+# parquet-java copies every blob in full as its column chunk's min and
+# max: each blob's bytes twice more, in the footer.
+_STATS_TRUNCATE_BYTES = 64
 
 
 def _recover_swap(path: str, staged_suffix: str, old_suffix: str) -> str | None:
@@ -142,6 +150,15 @@ def _read_encoded(
     return enc
 
 
+def _encoded_writer(df: DataFrame) -> DataFrameWriter:
+    """The writer of every encoded-tier parquet file (ingest, compaction
+    and the expiry rewrite): binary footer statistics are truncated to
+    _STATS_TRUNCATE_BYTES, so a footer holds no copy of the blobs."""
+    return df.write.option(
+        "parquet.statistics.truncate.length", str(_STATS_TRUNCATE_BYTES)
+    )
+
+
 def _write_encoded(
     df: DataFrame,
     tier_col: str,
@@ -173,12 +190,13 @@ def _write_encoded(
         # task (operators/encode.py r10 note)
         n_parts=spark.sparkContext.defaultParallelism * 2,
     )
-    enc.withColumn(
+    enc = enc.withColumn(
         "encoded_tier",
         F.element_at(tier_arr, F.expr(f"cast(_tp DIV {n_buckets} AS int) + 1")),
     ).withColumn(
         "part", F.pmod(F.col("_tp"), F.lit(n_buckets)).cast("int")
-    ).drop("_tp").write.partitionBy("encoded_tier", "part").mode(
+    ).drop("_tp")
+    _encoded_writer(enc).partitionBy("encoded_tier", "part").mode(
         "overwrite"
     ).parquet(dest_dir)
 
@@ -225,50 +243,39 @@ def run_retention(
 
     Job-count discipline (r8 verdict item 3 — a lifecycle that launches
     ~12 driver actions per snapshot is scheduler-bound at fleet scale):
-      * job 1 writes the FINEST tier's series (raw pages scanned once);
-      * job 2 writes every coarser tier in one union
-        (``partitionBy(series_tier)`` into ``snap=<id>/`` — the layout is
-        byte-identical to per-tier writes), cascading off the
-        materialized finest tier, so raw pages are never re-read;
-      * ONE manifest read resolves pending parts for all tiers;
+      * ONE manifest read resolves pending parts for all tiers; a re-run
+        with nothing pending launches no further job;
+      * job 1 stages the FINEST tier's series (raw pages scanned once)
+        under ``snap=<id>/_cascade/series_tier=<t>``;
+      * job 2 stages every coarser tier in one union
+        (``partitionBy(series_tier)`` — the layout is byte-identical to
+        per-tier writes), cascading off the staged finest tier, so raw
+        pages are never re-read;
       * ONE encode job covers all pending tiers (see _write_encoded);
       * ONE stats job over the written chunks appends every tier's
         manifest rows (wall_secs is the whole run's wall, attributed to
         each row — per-tier encode cost stays separable via encode_secs).
+    The staged series are deleted once the manifest append has committed
+    (or the run failed): nothing reads them again, and each run restages
+    them, so they are no resume checkpoint — the manifest is. The
+    ``_``-prefixed, ``=``-free name keeps them out of Spark's file
+    listing meanwhile, and a crash leftover goes with the next run of the
+    snapshot or with its snap dir in expire_snapshots.
     """
     spark = pages.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     t_run0 = time.perf_counter()
     tiers = tuple(tiers)
     snap_dir = os.path.join(out_dir, f"snap={snapshot_id}")
+    stage_dir = os.path.join(snap_dir, "_cascade")
 
     def _series_path(tier: str) -> str:
-        return os.path.join(snap_dir, f"series_tier={tier}")
+        return os.path.join(stage_dir, f"series_tier={tier}")
 
     def _with_part(df: DataFrame) -> DataFrame:
         return df.withColumn(
             "part", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
         )
-
-    first = _with_part(R.derive_series(pages, tiers[0]))
-    first.withColumn("series_tier", F.lit(tiers[0])).write.partitionBy(
-        "series_tier"
-    ).mode("overwrite").parquet(snap_dir)
-    if len(tiers) > 1:
-        # every coarser tier in ONE job, cascading off the materialized
-        # finest tier. The intermediate cascade aggregates recompute once
-        # per consuming branch (no exchange reuse across union branches —
-        # measured), but those run over the tiny finer-tier rollup, never
-        # over raw pages.
-        finer = spark.read.parquet(_series_path(tiers[0]))
-        branches = []
-        for tier in tiers[1:]:
-            finer = _with_part(R.cascade(finer, tier))
-            branches.append(finer.withColumn("series_tier", F.lit(tier)))
-        union = branches[0]
-        for b in branches[1:]:
-            union = union.unionByName(b)
-        union.write.partitionBy("series_tier").mode("overwrite").parquet(snap_dir)
 
     # pending parts for ALL tiers from one manifest read
     man = read_manifest(spark, out_dir)
@@ -292,40 +299,75 @@ def run_retention(
             keep = c if keep is None else (keep | c)
         return keep
 
-    if todo:
-        # ONE partition-discovery scan over all pending tiers (the
-        # series_tier dir name becomes a partition column) instead of a
-        # per-tier read + union: same rows, one scan subtree in the plan
-        s = spark.read.option("basePath", snap_dir).parquet(
-            *[_series_path(t) for t in todo]
-        )
-        _write_encoded(
-            s.where(_is_pending("series_tier")), "series_tier", todo,
-            n_buckets, chunk_rows, snap_dir,
-        )
-        # manifest rows for every written tier from one stats job over
-        # ONE partition-discovery scan
-        written = _read_encoded(
-            spark, [_enc_dir(out_dir, snapshot_id, t) for t in todo], snap_dir
-        )
-        stats = _chunk_stats(
-            written.where(_is_pending("encoded_tier")), snapshot_id, t_run0
-        )
-        with _MANIFEST_LOCK:
-            stats.write.mode("append").parquet(_manifest_path(out_dir))
+    try:
+        if todo:
+            first = _with_part(R.derive_series(pages, tiers[0]))
+            first.withColumn("series_tier", F.lit(tiers[0])).write.partitionBy(
+                "series_tier"
+            ).mode("overwrite").parquet(stage_dir)
+            if len(tiers) > 1:
+                # every coarser tier in ONE job, cascading off the staged
+                # finest tier. The intermediate cascade aggregates
+                # recompute once per consuming branch (no exchange reuse
+                # across union branches — measured), but those run over
+                # the tiny finer-tier rollup, never over raw pages.
+                finer = spark.read.parquet(_series_path(tiers[0]))
+                branches = []
+                for tier in tiers[1:]:
+                    finer = _with_part(R.cascade(finer, tier))
+                    branches.append(finer.withColumn("series_tier", F.lit(tier)))
+                union = branches[0]
+                for b in branches[1:]:
+                    union = union.unionByName(b)
+                union.write.partitionBy("series_tier").mode("overwrite").parquet(
+                    stage_dir
+                )
+            # ONE partition-discovery scan over all pending tiers (the
+            # series_tier dir name becomes a partition column) instead of
+            # a per-tier read + union: same rows, one scan subtree
+            s = spark.read.option("basePath", stage_dir).parquet(
+                *[_series_path(t) for t in todo]
+            )
+            _write_encoded(
+                s.where(_is_pending("series_tier")), "series_tier", todo,
+                n_buckets, chunk_rows, snap_dir,
+            )
+            # manifest rows for every written tier from one stats job over
+            # ONE partition-discovery scan
+            written = _read_encoded(
+                spark, [_enc_dir(out_dir, snapshot_id, t) for t in todo], snap_dir
+            )
+            stats = _chunk_stats(
+                written.where(_is_pending("encoded_tier")), snapshot_id, t_run0
+            )
+            with _MANIFEST_LOCK:
+                stats.write.mode("append").parquet(_manifest_path(out_dir))
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
     return {
         tier: {
             "parts_written": len(pending[tier]),
             "parts_skipped": n_buckets - len(pending[tier]),
-            "series_path": _series_path(tier),
             "encoded_path": _enc_dir(out_dir, snapshot_id, tier),
         }
         for tier in tiers
     }
 
 
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+
+
 def tier_ratio_report(spark: SparkSession, out_dir: str, snapshot_id: str) -> dict:
-    """Compression ratio + throughput per tier from the manifest."""
+    """Compression ratio + throughput per tier from the manifest, with
+    ``disk_bytes``: every byte under the tier's encoded dir (blobs plus
+    parquet framing and footers) for a local ``out_dir``, None for an
+    object store (same guard as lineage.json)."""
+    local = urlparse(out_dir).scheme in ("", "file")
     man = read_manifest(spark, out_dir)
     if man is None:
         return {}
@@ -347,6 +389,9 @@ def tier_ratio_report(spark: SparkSession, out_dir: str, snapshot_id: str) -> di
             "comp_bytes": r["comp"],
             "ratio": r["raw"] / r["comp"] if r["comp"] else None,
             "encode_rows_per_sec": r["rows"] / r["enc_s"] if r["enc_s"] else None,
+            "disk_bytes": (
+                _dir_bytes(_enc_dir(out_dir, snapshot_id, r["tier"])) if local else None
+            ),
         }
         for r in rows
     }
@@ -531,10 +576,13 @@ def read_tier_range(
     lo,
     hi,
 ) -> DataFrame:
-    """Decoded tier rows restricted to [lo, hi]: blobs whose
-    [start_bucket, end_bucket] window misses the range are pruned at the
-    parquet scan (column min/max stats — no decode, no read of the blob
-    bytes), then exact row filtering happens after decode."""
+    """Decoded tier rows restricted to [lo, hi]: containers whose
+    [start_bucket, end_bucket] window misses the range are dropped before
+    decode, then exact row filtering happens after decode. The window
+    filter is pushed to the parquet scan but skips no row group:
+    start_bucket / end_bucket are INT96, for which parquet-java writes no
+    statistics, so every blob is still read. The saving is decode work
+    only."""
     enc = _read_encoded(spark, [_enc_dir(out_dir, snapshot_id, tier)]).where(
         (F.col("start_bucket") <= F.lit(hi)) & (F.col("end_bucket") >= F.lit(lo))
     )
@@ -650,7 +698,9 @@ def expire_tier(
         # used to flatten `part` back into the data files, so an expired
         # tier lost partition pruning on part and mixed dir depths broke
         # whole-store partition-discovery reads)
-        _swap_in(keep.write.partitionBy("part"), enc_path, ".expiring", ".expired")
+        _swap_in(
+            _encoded_writer(keep).partitionBy("part"), enc_path, ".expiring", ".expired"
+        )
     # recompute this (tier, snapshot)'s manifest rows from the surviving
     # chunks — otherwise tier_ratio_report and any manifest-vs-store
     # reconciliation keep counting the expired chunks' bytes and rows

@@ -304,7 +304,7 @@ def test_ivfpq_scan_is_broadcast_cell_join(spark):
 
 def test_tier_query_pushdown_never_decodes(spark, pages_small, tmp_path):
     """Round-8: query_tier over a container store must compile to scan ->
-    mapInPandas partials -> ONE hash aggregation; no join, no window, no
+    mapInArrow partials -> ONE hash aggregation; no join, no window, no
     decode stage (decode_series_container would add an explode/posexplode
     projection)."""
     from sprintz_spark.plans import retention as RT

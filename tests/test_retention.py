@@ -8,6 +8,7 @@ import os
 import shutil
 
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 import pytest
@@ -69,6 +70,96 @@ def test_retention_run_and_resume(spark, pages_small, tmp_path):
     assert all(v["rows"] > 0 and v["ratio"] > 0 for v in ratios.values())
 
 
+def test_run_retention_leaves_only_encoded_tiers(spark, pages_small, tmp_path):
+    """The rolled-up cascade intermediate is staged and removed: a
+    snapshot holds its encoded_tier=* dirs and the write's _SUCCESS /
+    .crc markers, and no series_tier=* or _cascade path remains."""
+    out = str(tmp_path / "layout")
+    RT.run_retention(pages_small, out, snapshot_id="s1", n_buckets=2)
+    names = sorted(os.listdir(f"{out}/snap=s1"))
+    tiers = [n for n in names if n.startswith("encoded_tier=")]
+    assert tiers == ["encoded_tier=1d", "encoded_tier=1h", "encoded_tier=1m"]
+    assert all(n in tiers or n == "_SUCCESS" or n.endswith(".crc") for n in names)
+    for dirpath, dirs, _files in os.walk(out):
+        stray = [d for d in dirs if d.startswith(("series_tier=", "_cascade"))]
+        assert not stray, dirpath
+
+
+def _binary_stat_lengths(path):
+    """Lengths of every BYTE_ARRAY column chunk's footer min and max in
+    every parquet file under ``path``."""
+    files = glob.glob(f"{path}/**/*.parquet", recursive=True)
+    assert files, path
+    lengths = []
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(rg).column(c)
+                st = col.statistics
+                if col.physical_type == "BYTE_ARRAY" and st and st.has_min_max:
+                    lengths += [len(st.min_raw), len(st.max_raw)]
+    return lengths
+
+
+def test_encoded_tier_footers_hold_no_blob_copies(spark, pages_small, tmp_path):
+    """Every encoded-tier write — ingest, compaction and the expiry
+    rewrite — truncates binary footer statistics to 64 bytes, so a
+    footer never repeats a blob as its min/max."""
+    out = str(tmp_path / "footers")
+    RT.run_retention(pages_small, out, snapshot_id="s1", n_buckets=2, chunk_rows=8)
+    RT.compact_tiers(spark, out, ["s1"], "c1", n_buckets=2, chunk_rows=8)
+    before = RT.read_tier_decoded(spark, out, "s1", "1h").toPandas()
+    cutoff = sorted(before["bucket"].unique())[len(before["bucket"].unique()) // 2]
+    assert RT.expire_tier(spark, out, "s1", "1h", cutoff)["chunks_dropped"] > 0
+    for sid in ("s1", "c1"):
+        for tier in ("1m", "1h", "1d"):
+            lengths = _binary_stat_lengths(RT._enc_dir(out, sid, tier))
+            assert lengths and max(lengths) <= RT._STATS_TRUNCATE_BYTES, (sid, tier)
+
+
+@pytest.mark.parametrize(
+    "leftover", ["_cascade/series_tier=1m", "series_tier=1m"],
+    ids=["crashed_ingest", "old_layout"],
+)
+def test_leftover_series_dir_changes_no_answer(spark, pages_small, tmp_path, leftover):
+    """A rolled-up series dir inside a snapshot — the staging dir of a
+    crashed ingest, or the series_tier=* dir older versions kept beside
+    the encoded tiers — changes nothing read, compacted or expired; a
+    re-run of the snapshot's ingest removes a staging leftover."""
+    from sprintz_spark.operators import rollup as R
+
+    answers = []
+    for name in ("clean", "leftover"):
+        out = str(tmp_path / name)
+        RT.run_retention(pages_small, out, "s1", n_buckets=2, chunk_rows=8)
+        if name == "leftover":
+            R.derive_series(pages_small, "1m").write.mode("overwrite").parquet(
+                f"{out}/snap=s1/{leftover}"
+            )
+        dec = _decode_tier(spark, out, "1m", snap="s1")
+        query = (
+            RT.query_tier(spark, out, "s1", "1m", "byte_size_sum")
+            .toPandas().sort_values("url").reset_index(drop=True)
+        )
+        comp = RT.compact_tiers(spark, out, ["s1"], "c1", n_buckets=2)
+        comp_dec = _decode_tier(spark, out, "1h", snap="c1")
+        cutoff = sorted(dec["bucket"].unique())[len(dec["bucket"].unique()) // 2]
+        exp = RT.expire_tier(spark, out, "s1", "1m", cutoff)
+        exp_dec = _decode_tier(spark, out, "1m", snap="s1")
+        answers.append((dec, query, comp, comp_dec, exp, exp_dec))
+    clean, planted = answers
+    assert clean[4]["chunks_dropped"] > 0
+    for want, got in zip(clean, planted):
+        if isinstance(want, pd.DataFrame):
+            pd.testing.assert_frame_equal(got, want)
+        else:
+            assert got == want
+    if leftover.startswith("_cascade"):
+        RT.run_retention(pages_small, out, "s1", n_buckets=2, chunk_rows=8)
+        assert not os.path.exists(f"{out}/snap=s1/_cascade")
+
+
 def test_query_tier_from_store(spark, pages_small, tmp_path):
     """query_tier answers per-url aggregates from the encoded store
     (container format) equal to aggregating the raw tier."""
@@ -119,7 +210,8 @@ def test_read_tier_range_prunes_and_matches(spark, pages_small, tmp_path):
         .sort_values(["url", "bucket"]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
-    # the predicate reaches the parquet scan (stats-based row-group skip)
+    # the predicate reaches the parquet scan; INT96 columns carry no
+    # statistics, so it skips no row group and saves decode work only
     enc = spark.read.parquet(out + "/snap=snapR/encoded_tier=1h").where(
         (F.col("start_bucket") <= F.lit(hi)) & (F.col("end_bucket") >= F.lit(lo))
     )
