@@ -1,33 +1,27 @@
-"""Scaling-efficiency evidence: the fused derive+FIRE-encode job at two
-parallelism levels (local[N] vs local[4N]) on the same cached input.
-
-Round 6: the legs time the RECURRING job shape — fused rollup+encode
-over the bucketed silver table (narrow columns, zero shuffle; see
-plans.jobs.ingest_silver). The raw-html scan happens once at ingest
-(ensure_input), never inside a timed leg: the round-5 decomposition
-(BASELINE.md) showed the html parquet scan (eff 0.60) and the row-scale
-shuffle (eff 0.50) were the only non-scaling legs on this host's shared
-DRAM bus, while the engine's UDF leg scales at ~1.0.
+"""Scaling-efficiency evidence: one retention ingest (run_retention:
+derive 1m/1h/1d from raw pages, container-encode every tier, write the
+store and its manifest) at two parallelism levels (local[N] vs
+local[4N]) on the same cached pages table.
 
 Sandbox stand-in for the north_rule's N-vs-4N-executor criterion (no real
 cluster here): efficiency = (throughput@4N / throughput@N) / 4, target
->= 0.8. Each level runs in its own subprocess (own JVM); wall noise in the
-shared sandbox is handled by interleaving levels and taking the best of
-``SCALING_TRIALS`` runs per level (the reference's own methodology is
-best-of-10, communicate/results.tex:6).
+>= 0.8. Each level runs in its own subprocess (own JVM), pinned to its
+cores; wall noise in the shared sandbox is handled by interleaving levels
+and taking the best of ``SCALING_TRIALS`` runs per level (the reference's
+own methodology is best-of-10, communicate/results.tex:6). The pages
+table is generated once per machine (ensure_input), outside every timed
+leg; each leg writes its store into its own temp dir and removes it.
 
-Default pair is local[2] vs local[8]: a measured microbenchmark (32
-independent numpy-streaming processes run 3x slower each than 8 do) shows
-this VM's shared DRAM bus saturates at ~12 effective streaming cores, so
-8->32 measures the host memory bus, not the engine. 2->8 stays under the
-bus ceiling — the faithful emulation of a multi-node cluster where every
-4N-executor brings its own memory bandwidth. The 8->32 numbers are also
-reported in BASELINE.md with that analysis.
+The default SCALING_ROWS (6M requested, 4.8M pages after the
+generator's crawl gaps; the same table as bench.py's pipeline input)
+keeps the 4-core leg above ~30 s on a 4-vCPU host (51.5 s measured):
+below that, fixed JVM and scan overhead under-reads the ratio.
 
 Usage:
-  python bench_scaling.py                      # full comparison
-  python bench_scaling.py --level 8            # one timed run (subprocess)
-Env: SCALING_ROWS (default 24_000_000), SCALING_TRIALS (default 2).
+  python bench_scaling.py --small 1 --big 4    # full comparison
+  python bench_scaling.py --level 4            # one timed run (subprocess)
+Env: SCALING_ROWS (default 6_000_000), SCALING_TRIALS (default 3),
+     SCALING_SALVAGE (default 2).
 """
 
 from __future__ import annotations
@@ -37,59 +31,45 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-ROWS = int(os.environ.get("SCALING_ROWS", "24000000"))
-INPUT = os.path.join(REPO, ".data", f"pages_scaling_{ROWS}")
-SILVER = os.path.join(REPO, ".data", f"silver_scaling_{ROWS}")
-SILVER_BUCKETS = 64
+ROWS = int(os.environ.get("SCALING_ROWS", "6000000"))
+# same cache naming as bench.py's pipeline input, so equal sizes share it
+INPUT = os.path.join(REPO, ".data", f"pages_bench_{ROWS}")
+N_BUCKETS = 64
 
 
 def ensure_input() -> None:
-    """Materialize the bucketed silver table once per machine (the
-    ingest-time bronze→silver hop — see plans.jobs.ingest_silver). The
-    recurring fused job the legs time reads THIS narrow table; the raw
-    html is scanned exactly once here, outside every timed section —
-    the 100-TB medallion design, not a bench cosmetic. An existing
-    bronze pages cache is reused as the ingest source when present;
-    otherwise pages are generated and projected in one pass without
-    ever materializing the html to disk."""
-    if os.path.exists(os.path.join(SILVER, "_SUCCESS")):
+    """Materialize the pages table once per machine, on every core."""
+    if os.path.exists(os.path.join(INPUT, "_SUCCESS")):
         return
-    from sprintz_spark.plans.jobs import ingest_silver
     from sprintz_spark.session import get_spark
     from sprintz_spark.sources.pages import generate_pages
 
-    spark = get_spark(app="scaling-gen", master="local[32]")
-    if os.path.exists(os.path.join(INPUT, "_SUCCESS")):
-        pages = spark.read.parquet(INPUT)
-    else:
-        pages = generate_pages(spark, ROWS)
-    ingest_silver(pages, SILVER, table="silver_scaling", n_buckets=SILVER_BUCKETS)
+    spark = get_spark(app="scaling-gen")
+    generate_pages(spark, ROWS).write.mode("overwrite").parquet(INPUT)
     spark.stop()
 
 
 def run_once(cpus: int) -> dict:
-    from sprintz_spark.plans.jobs import fused_rollup_encode, register_silver
+    from sprintz_spark.plans.retention import run_retention
     from sprintz_spark.session import get_spark
 
     spark = get_spark(app=f"scaling-{cpus}", master=f"local[{cpus}]")
-    silver = register_silver(
-        spark, SILVER, table="silver_scaling", n_buckets=SILVER_BUCKETS
-    )
-    n = silver.count()  # warm the scan / JVM before the timed section
-    # warm the Python workers (pandas/numpy/package imports) so the timed
-    # section measures steady-state throughput, not interpreter startup
-    fused_rollup_encode(
-        silver.limit(20000).drop("part"), codec="fire", n_parts=cpus
-    ).write.format("noop").mode("overwrite").save()
-    t0 = time.perf_counter()
-    enc = fused_rollup_encode(silver, codec="fire")
-    enc.write.format("noop").mode("overwrite").save()
-    wall = time.perf_counter() - t0
+    pages = spark.read.parquet(INPUT)
+    n = pages.count()  # warm the scan / JVM before the timed section
+    with tempfile.TemporaryDirectory(prefix="scaling-") as tmp:
+        # warm the Python workers (pandas/numpy/package imports) so the
+        # timed section measures steady-state throughput, not startup
+        run_retention(pages.limit(20000), os.path.join(tmp, "warm"), "warm",
+                      n_buckets=N_BUCKETS)
+        t0 = time.perf_counter()
+        run_retention(pages, os.path.join(tmp, "ret"), "scaling", n_buckets=N_BUCKETS)
+        wall = time.perf_counter() - t0
     spark.stop()
     return {"cpus": cpus, "rows": n, "secs": round(wall, 2),
             "rows_per_sec": round(n / wall, 1)}
@@ -98,10 +78,10 @@ def run_once(cpus: int) -> dict:
 def _pin_cmd(cpus: int) -> list[str]:
     """Confine the leg's process tree (JVM tasks, GC/JIT threads, Python
     workers) to exactly ``cpus`` host cores via taskset. Without this the
-    SMALL leg is flattered: a local[2] JVM still spreads GC, JIT, Arrow
-    IPC, and Python workers across all 32 host cores, under-reading the
-    scaling ratio vs a real 2-core executor host. Round-5 change; no-op
-    where taskset is unavailable."""
+    SMALL leg is flattered: a local[1] JVM still spreads GC, JIT, Arrow
+    IPC, and Python workers across every host core, under-reading the
+    scaling ratio vs a real 1-core executor host. No-op where taskset is
+    unavailable."""
     import shutil as _sh
 
     if _sh.which("taskset"):
@@ -129,8 +109,8 @@ def run_level(cpus: int, trials: int) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--level", type=int, default=None)
-    ap.add_argument("--small", type=int, default=2)
-    ap.add_argument("--big", type=int, default=8)
+    ap.add_argument("--small", type=int, default=1)
+    ap.add_argument("--big", type=int, default=4)
     args = ap.parse_args()
     ensure_input()
     if args.level:
@@ -210,7 +190,7 @@ def main() -> None:
         "metric": "scaling_efficiency",
         "value": round(eff, 3),
         "unit": "ratio",
-        "job": "fused derive(1m/1h/1d) + FIRE encode over bucketed silver (shuffle-free)",
+        "job": "run_retention: derive 1m/1h/1d + container encode + manifest",
         "input_rows": small["rows"],
         "trials": rounds,
         "salvage_rounds": salvage_used,

@@ -4,17 +4,22 @@
 Local / driver-side launch:
     python -m sprintz_spark retention --input /data/pages --out /data/tiers \
         --snapshot snap-123 --n-buckets 256
-    python -m sprintz_spark fused --input /data/pages --out /data/enc
-    python -m sprintz_spark verify --enc /data/enc
+    python -m sprintz_spark verify --out /data/tiers --snapshot snap-123
+    python -m sprintz_spark compact --out /data/tiers --snapshots s1 s2 --dest c1
+    python -m sprintz_spark expire --out /data/tiers --snapshot c1 --tier 1m \
+        --older-than 2024-01-07
 
 Cluster launch (the module file doubles as the spark-submit script; the
 package zip travels to executors):
     spark-submit --py-files sprintz_spark_pkg.zip \
         sprintz_spark/__main__.py retention --input ... --out ... --snapshot ...
 
-Each command prints ONE JSON metrics line (rows, seconds, rows/sec, and
-per-tier compression ratios where applicable) — the manifest carries the
-same metrics per partition for lineage.
+Every command works on one retention store (plans.retention). Each prints
+ONE JSON metrics line (rows, seconds, rows/sec, and per-tier compression
+ratios where applicable) — the manifest carries the same metrics per
+partition for lineage. ``verify`` re-encodes every stored blob and checks
+the row counts against the manifest; it raises CorruptBlobError on any
+mismatch.
 """
 
 from __future__ import annotations
@@ -71,45 +76,17 @@ def cmd_retention(args) -> dict:
     }
 
 
-def cmd_fused(args) -> dict:
-    from sprintz_spark.plans.jobs import fused_rollup_encode
-
-    spark = _spark(args)
-    pages = _load_pages(spark, args)
-    n = pages.count()
-    t0 = time.perf_counter()
-    enc = fused_rollup_encode(pages, codec=args.codec)
-    enc.write.mode("overwrite").partitionBy("tier").parquet(args.out)
-    wall = time.perf_counter() - t0
-    return {
-        "job": "fused",
-        "rows": n,
-        "secs": round(wall, 2),
-        "rows_per_sec": round(n / wall, 1),
-        "out": args.out,
-    }
-
-
 def cmd_verify(args) -> dict:
-    from pyspark.sql import functions as F
-
-    from sprintz_spark.plans.jobs import verify_encoded
+    from sprintz_spark.plans.retention import verify_snapshot
 
     spark = _spark(args)
-    enc = spark.read.parquet(args.enc)
-    # verify_encoded raises inside the tasks on any CRC mismatch, failing
-    # the job loudly — reaching the aggregate means every blob round-trips
-    rep = verify_encoded(enc).agg(
-        F.sum("n_chunks").alias("chunks"),
-        F.sum("n_rows").alias("rows"),
-        F.sum("n_cols_checked").alias("cols_checked"),
-    ).first()
+    t0 = time.perf_counter()
+    rep = verify_snapshot(spark, args.out, args.snapshot)
     return {
         "job": "verify",
-        "chunks": int(rep["chunks"] or 0),
-        "rows": int(rep["rows"] or 0),
-        "cols_checked": int(rep["cols_checked"] or 0),
-        "all_ok": True,
+        "snapshot_id": args.snapshot,
+        "secs": round(time.perf_counter() - t0, 2),
+        "tiers": rep,
     }
 
 
@@ -154,18 +131,17 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="sprintz_spark")
     p.add_argument("--master", default=None, help="Spark master (default: env/local)")
     sub = p.add_subparsers(dest="cmd", required=True)
-    for name in ("retention", "fused"):
-        sp = sub.add_parser(name)
-        sp.add_argument("--input", help="pages table path")
-        sp.add_argument("--format", default=None, help="input format override")
-        sp.add_argument("--generate", type=int, default=0,
-                        help="synthesize N deterministic pages instead of --input")
-        sp.add_argument("--out", required=True)
-    sub.choices["retention"].add_argument("--snapshot", required=True)
-    sub.choices["retention"].add_argument("--n-buckets", type=int, default=64)
-    sub.choices["fused"].add_argument("--codec", default="fire")
+    sr = sub.add_parser("retention")
+    sr.add_argument("--input", help="pages table path")
+    sr.add_argument("--format", default=None, help="input format override")
+    sr.add_argument("--generate", type=int, default=0,
+                    help="synthesize N deterministic pages instead of --input")
+    sr.add_argument("--out", required=True)
+    sr.add_argument("--snapshot", required=True)
+    sr.add_argument("--n-buckets", type=int, default=64)
     sv = sub.add_parser("verify")
-    sv.add_argument("--enc", required=True)
+    sv.add_argument("--out", required=True, help="retention store dir")
+    sv.add_argument("--snapshot", required=True)
     sc = sub.add_parser("compact")
     sc.add_argument("--out", required=True, help="retention store dir")
     sc.add_argument("--snapshots", nargs="+", required=True,
@@ -185,12 +161,12 @@ def main(argv=None) -> int:
         args.snapshot and args.tier and args.older_than
     ):
         p.error("expire needs either --keep (gc) or --snapshot --tier --older-than (TTL)")
-    if args.cmd in ("retention", "fused") and not (args.input or args.generate):
+    if args.cmd == "retention" and not (args.input or args.generate):
         p.error("one of --input / --generate is required")
-    out = {"retention": cmd_retention, "fused": cmd_fused, "verify": cmd_verify,
+    out = {"retention": cmd_retention, "verify": cmd_verify,
            "compact": cmd_compact, "expire": cmd_expire}[args.cmd](args)
     print(json.dumps(out))
-    return 0 if out.get("all_ok", True) else 1
+    return 0
 
 
 if __name__ == "__main__":

@@ -30,6 +30,13 @@ into row-sliced pieces of at most chunk_rows rows.
     bytes each; series longer than chunk_rows are cut into row-sliced
     pieces. This is the retention tier store's only layout.
 
+The per-series operators (``encode_series`` / ``decode_series`` /
+``query_encoded``) write no store: they are the codec testbed of the
+gated codec queries (sprintz, huffman, codec search, gorilla, booldelta,
+quantize, colsum and squeeze round trips), where one row per series
+keeps every codec and mode choice visible. The retention store
+(plans.retention) is the engine's one write path.
+
 Scale notes: group state is O(chunk) not O(series); chunk_rows bounds
 executor memory; a year of 1-minute buckets per url is ~525k rows → a few
 chunks. Hot urls are bounded by the time axis, not crawl count, because

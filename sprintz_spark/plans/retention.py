@@ -34,9 +34,12 @@ import threading
 import time
 from urllib.parse import urlparse
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
+from sprintz_spark.codecs import sprintz as sz
 from sprintz_spark.operators import rollup as R
 from sprintz_spark.operators.encode import (
     DEFAULT_CHUNK,
@@ -47,6 +50,7 @@ from sprintz_spark.operators.encode import (
 from sprintz_spark.session import local_values_df
 
 MEASURES = ["crawl_count", "byte_size_sum", "byte_size_max", "byte_size_min"]
+_BLOB_COLS = ["ts_blob"] + [f"blob_{c}" for c in MEASURES]
 
 # Serializes manifest-directory mutations (appends, rewrites) within one
 # driver process so INDEPENDENT snapshots can ingest concurrently (guide
@@ -413,6 +417,102 @@ def query_tier(
     tier."""
     enc = _read_encoded(spark, [_enc_dir(out_dir, snapshot_id, tier)])
     return query_encoded_container(enc, value_col, key_col="url")
+
+
+def _check_container(blobs: list[bytes], n_keys: int, n: int) -> str | None:
+    """None when every blob of one container row re-encodes to its own
+    bytes (ts by doubledelta, measures by auto, as the encoder writes
+    them) and holds ``n_keys`` series of ``n`` rows in total; otherwise
+    what is wrong."""
+    lens0 = None
+    for col, blob in zip(_BLOB_COLS, blobs):
+        mode = "doubledelta" if col == "ts_blob" else "auto"
+        try:
+            v, lens = sz.decode_container(blob)
+            same = sz.encode_container(v.view(np.int64), lens, mode) == blob
+        except (ValueError, IndexError) as e:
+            # CorruptBlobError is a ValueError; a cut or bit-flipped
+            # blob can also index past its buffer
+            return f"{col}: {type(e).__name__}: {e}"
+        if not same:
+            return f"{col}: re-encode differs from the stored bytes"
+        if lens0 is None:
+            if len(lens) != n_keys or lens.sum() != n:
+                return (f"{col}: {len(lens)} series of {lens.sum()} rows, "
+                        f"row says {n_keys} of {n}")
+            lens0 = lens
+        elif not np.array_equal(lens, lens0):
+            return f"{col}: series lengths differ from ts_blob's"
+    return None
+
+
+def verify_snapshot(spark: SparkSession, out_dir: str, snapshot_id: str) -> dict:
+    """Check every stored blob of a snapshot without its input: one
+    mapInArrow over the snapshot's encoded tiers decodes each container
+    blob, re-encodes it and requires the same bytes, and requires each
+    row's ``keys`` and ``n`` to match its blobs (_check_container); the
+    rows per (tier, part) must then equal the manifest's ``n_rows``.
+    Raises CorruptBlobError naming the first mismatches; returns
+    {tier: {containers, rows}}."""
+    man = read_manifest(spark, out_dir)
+    want = {} if man is None else {
+        (r["tier"], r["part"]): r["n_rows"]
+        for r in man.where(F.col("snapshot_id") == snapshot_id)
+        .groupBy("tier", "part")
+        .agg(F.sum("n_rows").alias("n_rows"))
+        .collect()
+    }
+    if not want:
+        raise ValueError(f"no manifest rows for snapshot {snapshot_id!r} in {out_dir}")
+    tiers = sorted({t for t, _ in want})
+    enc = _read_encoded(
+        spark,
+        [_enc_dir(out_dir, snapshot_id, t) for t in tiers],
+        os.path.join(out_dir, f"snap={snapshot_id}"),
+    ).select("encoded_tier", "part", "keys", "n", *_BLOB_COLS)
+
+    def check(batches):
+        for b in batches:
+            n_keys = b.column("keys").value_lengths().to_pylist()
+            blobs = zip(*(b.column(c).to_pylist() for c in _BLOB_COLS))
+            yield pa.RecordBatch.from_pydict({
+                "tier": b.column("encoded_tier"),
+                "part": b.column("part"),
+                "rows": b.column("n"),
+                "bad": [
+                    _check_container(list(bl), k, n)
+                    for bl, k, n in zip(blobs, n_keys, b.column("n").to_pylist())
+                ],
+            })
+
+    got = (
+        enc.mapInArrow(check, "tier string, part int, rows long, bad string")
+        .groupBy("tier", "part")
+        .agg(
+            F.count(F.lit(1)).alias("containers"),
+            F.sum("rows").alias("rows"),
+            F.max("bad").alias("bad"),
+        )
+        .collect()
+    )
+    errors = [
+        f"tier {r['tier']} part {r['part']}: {r['bad']}" for r in got if r["bad"]
+    ]
+    have = {(r["tier"], r["part"]): r["rows"] for r in got}
+    errors += [
+        f"tier {t} part {p}: {have.get((t, p), 0)} rows stored, manifest says "
+        f"{want.get((t, p), 0)}"
+        for t, p in sorted(want.keys() | have.keys())
+        if have.get((t, p), 0) != want.get((t, p), 0)
+    ]
+    if errors:
+        raise sz.CorruptBlobError(
+            f"snapshot {snapshot_id!r}: " + "; ".join(errors[:5])
+        )
+    return {
+        t: {k: sum(r[k] for r in got if r["tier"] == t) for k in ("containers", "rows")}
+        for t in tiers
+    }
 
 
 def compact_tiers(

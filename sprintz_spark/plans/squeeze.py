@@ -6,8 +6,9 @@ measure per-column compressed sizes, decode, and verify exact equality
 with the input — except that "files per column" becomes blob columns of
 the encoded DataFrame and the equality check is a distributed multiset
 compare (exceptAll both ways) instead of a single-process DataFrame
-compare. At production scale the CRC path (plans.jobs.verify_encoded)
-replaces the exceptAll compare; this harness is the exactness oracle.
+compare. A retention store is checked without its input by
+plans.retention.verify_snapshot (every blob re-encodes to itself and the
+row counts match the manifest); this harness is the exactness oracle.
 """
 
 from __future__ import annotations

@@ -10,10 +10,9 @@ are dropped by the engine (documented retention-engine behavior); anything
 newer updates its bucket before emission (append mode emits only finalized
 buckets).
 
-``encoded_stream_sink`` shows the full streaming path: each micro-batch's
-finalized buckets are sprintz-encoded via the same batched UDFs as the
-batch plan and appended to the tier store — streaming and batch produce
-the same wire format.
+Nothing here encodes: the retention store (plans.retention.run_retention)
+is the engine's one write path for sprintz blobs. A stream's finalized
+buckets are plain rows, written with any streaming sink.
 """
 
 from __future__ import annotations
@@ -49,138 +48,6 @@ def stream_derive_series(
             "byte_size_max",
             "byte_size_min",
         )
-    )
-
-
-def encoded_stream_sink(
-    series_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-):
-    """writeStream via foreachBatch: sprintz-encode each micro-batch of
-    finalized buckets and append to the tier store (same SZ1 blobs as the
-    batch plan). Returns the StreamingQuery."""
-    from sprintz_spark.operators.encode import encode_series
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        enc = encode_series(
-            batch_df,
-            key_cols=["url"],
-            value_cols=[
-                "crawl_count",
-                "byte_size_sum",
-                "byte_size_max",
-                "byte_size_min",
-            ],
-        )
-        enc.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            out_dir
-        )
-
-    writer = (
-        series_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
-def stream_encode_stateful(
-    points_stream: DataFrame,
-    value_col: str = "v",
-    min_rows: int = 64,
-    key_col: str = "url",
-    ts_col: str = "bucket",
-):
-    """Custom stateful streaming operator (applyInPandasWithState): a
-    per-key sprintz encoder that BUFFERS points across micro-batches and
-    emits an SZ1-encoded chunk only once >= ``min_rows`` points are
-    pending (or a flush marker arrives), so a trickle of updates never
-    produces pathological 1-point blobs.
-
-    Input stream columns: (key, ts, value, flush:boolean). Rows with
-    flush=true carry no data; they force the key's pending buffer out
-    (the streaming analog of end-of-input; production pipelines would use
-    state timeouts instead). State per key = the pending (ts, value)
-    arrays serialized as bytes — O(min_rows) per key, bounded.
-
-    Output: one row per emitted chunk (key, start_bucket, n, ts_blob,
-    value_blob), decodable with codecs.sprintz.decode_column — the same
-    wire format as the batch encoder.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField(key_col, StringType()),
-            StructField("start_bucket", TimestampType()),
-            StructField("n", LongType()),
-            StructField("ts_blob", BinaryType()),
-            StructField("value_blob", BinaryType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("ts_bytes", BinaryType()), StructField("v_bytes", BinaryType())]
-    )
-
-    def fn(key, pdf_iter, state):
-        from sprintz_spark.codecs import sprintz as sz
-
-        if state.exists:
-            ts_b, v_b = state.get
-            ts_pend = np.frombuffer(ts_b, dtype=np.int64)
-            v_pend = np.frombuffer(v_b, dtype=np.int64)
-        else:
-            ts_pend = np.zeros(0, np.int64)
-            v_pend = np.zeros(0, np.int64)
-        flush = False
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            flush = flush or bool(pdf["flush"].any())
-            data = pdf[~pdf["flush"].astype(bool)]
-            if len(data):
-                ts_new = data[ts_col].astype("datetime64[us]").to_numpy().view(np.int64)
-                v_new = data[value_col].to_numpy(np.int64)
-                ts_pend = np.concatenate([ts_pend, ts_new])
-                v_pend = np.concatenate([v_pend, v_new])
-        if len(ts_pend) and (flush or len(ts_pend) >= min_rows):
-            order = np.argsort(ts_pend, kind="stable")
-            ts_s, v_s = ts_pend[order], v_pend[order]
-            row = pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "start_bucket": [ts_s[0].astype("datetime64[us]")],
-                    "n": [len(ts_s)],
-                    "ts_blob": [sz.encode_column(ts_s, "doubledelta")],
-                    "value_blob": [
-                        sz.encode_column(v_s, sz.choose_mode(v_s, ("delta", "doubledelta")))
-                    ],
-                }
-            )
-            state.remove()
-            yield row
-        else:
-            if len(ts_pend):
-                state.update((ts_pend.tobytes(), v_pend.tobytes()))
-            yield pd.DataFrame(columns=[f.name for f in out_schema.fields])
-
-    return points_stream.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
     )
 
 
@@ -322,14 +189,7 @@ def stream_gap_alerts(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
     out_schema = StructType(
         [
@@ -344,12 +204,7 @@ def stream_gap_alerts(
 
     def fn(key, pdf_iter, state):
         last = state.get[0] if state.exists else None
-        ts_all = []
-        for pdf in pdf_iter:
-            if len(pdf):
-                ts_all.append(
-                    pdf[ts_col].astype("datetime64[us]").to_numpy().view(np.int64)
-                )
+        ts_all = [pdf[ts_col].to_numpy(np.int64) for pdf in pdf_iter if len(pdf)]
         if not ts_all:
             yield pd.DataFrame(columns=[f.name for f in out_schema.fields])
             return
@@ -362,12 +217,16 @@ def stream_gap_alerts(
         yield pd.DataFrame(
             {
                 key_col: key[0],
-                "gap_start": ts[hit].view("datetime64[us]"),
-                "gap_end": ts[hit + 1].view("datetime64[us]"),
+                "gap_start": pd.to_datetime(ts[hit], unit="us", utc=True),
+                "gap_end": pd.to_datetime(ts[hit + 1], unit="us", utc=True),
                 "gap_us": deltas[hit],
             }
         )
 
-    return points_stream.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
+    # the UDF sees UTC epoch micros, not pandas timestamps (which carry
+    # the session zone's wall clock and so break gaps across DST)
+    return (
+        points_stream.select(key_col, F.unix_micros(ts_col).alias(ts_col))
+        .groupBy(key_col)
+        .applyInPandasWithState(fn, out_schema, state_schema, "append", "NoTimeout")
     )

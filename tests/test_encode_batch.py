@@ -37,6 +37,19 @@ def test_batch_auto_picks_doubledelta_for_ramps():
         np.testing.assert_array_equal(sz.decode_column(b).view(np.int64), a)
 
 
+def test_batch_fire_matches_encode_column():
+    rng = np.random.default_rng(3)
+    arrays = [
+        (np.cumsum(rng.integers(-3, 4, n)) & 0xFFFF).astype(np.uint16)
+        for n in [0, 1, 8, 40, 100]
+    ]
+    lens = np.array([len(a) for a in arrays])
+    concat = np.concatenate([a for a in arrays if len(a)]) if any(lens) else np.zeros(0, np.uint16)
+    blobs = sz.encode_batch_concat_fire(concat, lens)
+    for a, b in zip(arrays, blobs):
+        assert b == sz.encode_column(a, "fire")
+        np.testing.assert_array_equal(sz.decode_column(b), a)
+
 def test_batch_speed_on_tiny_series():
     import time
 

@@ -1,5 +1,5 @@
 """Physical-plan regression tests: the scale properties PLANS.md
-documents (single-shuffle fused job, broadcast dims, predicate pushdown,
+documents (html never shuffled, broadcast dims, predicate pushdown,
 column pruning, no nested-loop joins) asserted by pytest so a refactor
 cannot silently regress the 100-TB plan shape."""
 
@@ -29,59 +29,19 @@ def _count(plan: str, token: str) -> int:
     return plan.count(token)
 
 
-def test_fused_job_single_shuffle(spark, pages_small):
-    from sprintz_spark.plans.jobs import fused_rollup_encode
+def test_retention_derive_never_shuffles_html(spark, pages_small):
+    """The first job of run_retention derives the finest tier from raw
+    pages: html is reduced to its length in a projection below the
+    exchange, so only (url, bucket, nbytes) partials ever move."""
+    from sprintz_spark.operators import rollup as R
 
-    # default (string) path: exactly one exchange, html never crosses it
-    plan = _plan(fused_rollup_encode(pages_small))
-    assert _count(plan, "Exchange hashpartitioning") == 1
-    # page payloads must not cross the shuffle: html is reduced to its
-    # length in a projection below the exchange, so only (url, ts, nbytes)
-    # ever move
-    assert "length(html" in plan
-    exchange_line = next(
-        l for l in plan.splitlines() if "Exchange hashpartitioning" in l
+    plan = _plan(R.derive_series(pages_small, "1m"))
+    lines = plan.splitlines()
+    exchange = next(
+        i for i, l in enumerate(lines) if "Exchange hashpartitioning" in l
     )
-    assert "html" not in exchange_line
-
-
-def test_fused_job_id_shuffle_carries_no_strings(spark, pages_small):
-    """Opt-in wide-url plan (round 5): the row-scale exchange moves an
-    8-byte url_id, never url strings or html; strings re-attach via a
-    shuffle-hash join on the chunk-level output only."""
-    from sprintz_spark.plans.jobs import fused_rollup_encode
-
-    plan = _plan(fused_rollup_encode(pages_small, shuffle_ids=True))
-    assert "ShuffledHashJoin" in plan  # never a broadcast of the blob side
-    assert "length(html" in plan
-    assert "Exchange hashpartitioning(part" in plan
-    # the UDF consumes (url_id, ts_us, nbytes, part) — int64 id, no
-    # url-string column crosses the row-scale shuffle into Python
-    udf_line = next(l for l in plan.splitlines() if "FlatMapGroupsInPandas" in l)
-    udf_args = udf_line.split("udf(")[1].split(")")[0]
-    assert "url_id#" in udf_args
-    assert "url#" not in udf_args.replace("url_id#", "")
-    assert "html" not in udf_args
-
-
-def test_fused_job_on_silver_is_shuffle_free(spark, pages_small, tmp_path):
-    """The recurring-rollup fast path (round 6): fused over the bucketed
-    silver table must have ZERO exchanges — the ingest-time bucketing on
-    part satisfies the groupBy distribution, so the recurring job is
-    scan→sort→UDF with no row-scale shuffle and no html read ever."""
-    from sprintz_spark.plans.jobs import fused_rollup_encode, ingest_silver, register_silver
-
-    ingest_silver(
-        pages_small, str(tmp_path / "s"), table="silver_plan_test", n_parts=32, n_buckets=8
-    )
-    silver = register_silver(spark, str(tmp_path / "s"), "silver_plan_test", n_buckets=8)
-    df = fused_rollup_encode(silver)
-    plan = _plan(df)
-    assert "Exchange" not in plan
-    assert "html" not in plan  # narrow scan: html never touched
-    fmt = _formatted(df)
-    assert "Bucketed: true" in fmt
-    spark.sql("DROP TABLE IF EXISTS silver_plan_test")
+    assert "html" not in lines[exchange]
+    assert any("length(html" in l for l in lines[exchange + 1:])
 
 
 def test_rollup_has_mapside_partial_aggregation(spark):

@@ -8,6 +8,7 @@ import os
 import shutil
 
 import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
@@ -548,3 +549,74 @@ def test_expire_tier_dry_run_never_mutates_interrupted_store(spark, pages_small,
     # a real run still heals
     RT.expire_tier(spark, out, "s1", "1h", cut)
     assert os.path.exists(enc) and not os.path.exists(enc + ".expiring")
+
+
+def test_cli_verify_after_compact_and_expire(spark, tmp_path, capsys):
+    """The CLI's retention then verify return 0, and so does verify of a
+    compacted snapshot after a TTL expiry dropped some of its chunks; the
+    verified rows are the manifest's."""
+    import json
+
+    from sprintz_spark.__main__ import main
+
+    out = str(tmp_path / "cli")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        assert main(["retention", "--generate", "2000", "--out", out,
+                     "--snapshot", "s1", "--n-buckets", "2"]) == 0
+        assert main(["verify", "--out", out, "--snapshot", "s1"]) == 0
+        RT.compact_tiers(spark, out, ["s1"], "c1", n_buckets=2, chunk_rows=8)
+        buckets = sorted(_decode_tier(spark, out, "1m", snap="c1")["bucket"].unique())
+        exp = RT.expire_tier(spark, out, "c1", "1m", buckets[len(buckets) // 2])
+        assert exp["chunks_dropped"] > 0
+        capsys.readouterr()
+        assert main(["verify", "--out", out, "--snapshot", "c1"]) == 0
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    man = RT.read_manifest(spark, out).where(F.col("snapshot_id") == "c1").toPandas()
+    assert {t: v["rows"] for t, v in rep["tiers"].items()} == (
+        man.groupby("tier")["n_rows"].sum().to_dict()
+    )
+    with pytest.raises(ValueError, match="no manifest rows"):
+        RT.verify_snapshot(spark, out, "nope")
+
+
+def test_verify_snapshot_rejects_truncated_blob_and_wrong_n_rows(
+    spark, pages_small, tmp_path
+):
+    """One truncated blob, or one manifest n_rows off by one, makes
+    verify_snapshot raise CorruptBlobError; the untouched store passes."""
+    from sprintz_spark.codecs.sprintz import CorruptBlobError
+
+    clean = str(tmp_path / "clean")
+    RT.run_retention(pages_small, clean, "s1", n_buckets=2, chunk_rows=64)
+    rep = RT.verify_snapshot(spark, clean, "s1")
+    assert set(rep) == {"1m", "1h", "1d"}
+    assert all(v["containers"] > 0 for v in rep.values())
+
+    blob = str(tmp_path / "blob")
+    shutil.copytree(clean, blob)
+    path = sorted(glob.glob(f"{blob}/snap=s1/encoded_tier=1h/part=0/*.parquet"))[0]
+    t = pq.read_table(path)
+    col = t.column("blob_byte_size_sum").to_pylist()
+    col[0] = col[0][:-3]
+    t = t.set_column(
+        t.schema.get_field_index("blob_byte_size_sum"), "blob_byte_size_sum",
+        pa.array(col, pa.binary()),
+    )
+    pq.write_table(t, path, use_deprecated_int96_timestamps=True)
+    # drop Hadoop's checksum sidecar, which no longer matches the file
+    os.remove(os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc"))
+    with pytest.raises(CorruptBlobError, match="tier 1h part 0: blob_byte_size_sum"):
+        RT.verify_snapshot(spark, blob, "s1")
+
+    rows = str(tmp_path / "rows")
+    shutil.copytree(clean, rows)
+    man_path = os.path.join(rows, "manifest")
+    man = spark.read.parquet(man_path).toPandas()
+    man.loc[man.index[0], "n_rows"] += 1
+    shutil.rmtree(man_path)
+    spark.createDataFrame(man).write.parquet(man_path)
+    with pytest.raises(CorruptBlobError, match="manifest says"):
+        RT.verify_snapshot(spark, rows, "s1")

@@ -7,14 +7,11 @@ import datetime as dt
 import time
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from sprintz_spark.operators import rollup as R
-from sprintz_spark.operators.encode import decode_series
-from sprintz_spark.streaming.rollup_stream import (
-    encoded_stream_sink,
-    stream_derive_series,
-)
+from sprintz_spark.streaming.rollup_stream import stream_derive_series
 
 
 def test_stream_rollup_matches_batch(spark, pages_small, tmp_path):
@@ -51,18 +48,19 @@ def test_stream_rollup_matches_batch(spark, pages_small, tmp_path):
         .option("latestFirst", "false")
         .parquet(src)
     )
-    out = str(tmp_path / "enc_out")
-    chk = str(tmp_path / "chk")
-    series = stream_derive_series(stream, "1m", watermark="1 minute")
-    q = encoded_stream_sink(series, out, chk, trigger={"availableNow": True})
+    out = str(tmp_path / "series_out")
+    q = (
+        stream_derive_series(stream, "1m", watermark="1 minute")
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .trigger(availableNow=True)
+        .format("parquet")
+        .start(out)
+    )
     q.awaitTermination(300)
 
     got = (
-        decode_series(
-            spark.read.parquet(out),
-            key_cols=["url"],
-            value_cols=["crawl_count", "byte_size_sum", "byte_size_max", "byte_size_min"],
-        )
+        spark.read.parquet(out)
         .where(F.col("url") != "zz-sentinel")
         .toPandas()
         .sort_values(["url", "bucket"])
@@ -75,81 +73,6 @@ def test_stream_rollup_matches_batch(spark, pages_small, tmp_path):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(want[got.columns], got)
-
-
-def test_stateful_stream_encoder(spark, tmp_path):
-    """applyInPandasWithState sprintz encoder: points buffered across
-    micro-batches come back exactly after decode, and small early batches
-    do NOT emit (buffering works) until min_rows or the flush marker."""
-    import numpy as np
-
-    from sprintz_spark.codecs import sprintz as sz
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    for u in ("a", "b"):
-        for i in range(90):
-            rows.append((u, t0 + dt.timedelta(minutes=i), (i * 7) % 101, False))
-    pdf = pd.DataFrame(rows, columns=["url", "bucket", "v", "flush"])
-    src = str(tmp_path / "pts_src")
-    sdf = spark.createDataFrame(pdf)
-    # three ordered slices of 30 points/url: 30 pending after slice 1
-    # (below min_rows=50, buffered), 60 after slice 2 (emitted), 30 after
-    # slice 3 (buffered until the flush markers)
-    for lo, hi in ((0, 30), (30, 60), (60, 90)):
-        sl = sdf.where(
-            (F.col("bucket") >= F.lit(t0 + dt.timedelta(minutes=lo)))
-            & (F.col("bucket") < F.lit(t0 + dt.timedelta(minutes=hi)))
-        )
-        sl.coalesce(1).write.mode("append").parquet(src)
-        time.sleep(1.2)
-    markers = spark.createDataFrame(
-        pd.DataFrame(
-            [("a", t0, 0, True), ("b", t0, 0, True)],
-            columns=["url", "bucket", "v", "flush"],
-        ),
-        schema=sdf.schema,
-    )
-    markers.coalesce(1).write.mode("append").parquet(src)
-
-    from sprintz_spark.streaming.rollup_stream import stream_encode_stateful
-
-    stream = (
-        spark.readStream.schema(sdf.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    enc = stream_encode_stateful(stream, value_col="v", min_rows=50)
-    out = str(tmp_path / "enc_out2")
-    q = (
-        enc.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "chk2"))
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(out).toPandas()
-    # per url: first emit at 64+ pending (after slice 2), second at flush
-    assert set(got["url"]) == {"a", "b"}
-    for u in ("a", "b"):
-        chunks = got[got["url"] == u].sort_values("start_bucket")
-        assert chunks["n"].sum() == 90
-        assert list(chunks["n"]) == [60, 30]  # mid-stream emit + flush
-        ts_all, v_all = [], []
-        for _, r in chunks.iterrows():
-            ts_all.append(sz.decode_column(r["ts_blob"]).view(np.int64))
-            v_all.append(sz.decode_column(r["value_blob"]).view(np.int64))
-        ts_cat = np.concatenate(ts_all)
-        v_cat = np.concatenate(v_all)
-        want = pdf[(pdf["url"] == u) & (~pdf["flush"])].sort_values("bucket")
-        np.testing.assert_array_equal(
-            ts_cat, want["bucket"].astype("datetime64[us]").to_numpy().view(np.int64)
-        )
-        np.testing.assert_array_equal(v_cat, want["v"].to_numpy(np.int64))
 
 
 def test_stream_exact_dedup(spark, tmp_path):
@@ -330,52 +253,79 @@ def test_stream_m4_matches_batch(spark, tmp_path):
     pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
 
 
-def test_stream_gap_alerts(spark, tmp_path):
+@pytest.mark.parametrize("zone", ["UTC", "America/New_York"])
+def test_stream_gap_alerts(spark, tmp_path, zone):
     """Gap monitor: alerts fire exactly for inter-event gaps over the
     bound, including a gap that SPANS micro-batches (proving the 8-byte
-    last_ts state carries across batches)."""
-    import datetime as dt
-
+    last_ts state carries across batches). Gaps are between instants, so
+    the session zone changes nothing: u3's 110-minute gap spans New
+    York's 2024 fall-back hour (50 minutes of wall clock) and u4's
+    20-minute gap spans the spring-forward hour (80 minutes of wall
+    clock)."""
     from sprintz_spark.streaming.rollup_stream import stream_gap_alerts
 
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
+    utc = dt.timezone.utc
+    t0 = dt.datetime(2026, 1, 1, 0, 0, 0, tzinfo=utc)
     m = dt.timedelta(minutes=1)
+    fall = dt.datetime(2024, 11, 3, 4, 50, tzinfo=utc)
+    spring = dt.datetime(2024, 3, 10, 6, 50, tzinfo=utc)
     src = str(tmp_path / "gap_src")
     batches = [
         # u1: events at 0, 1, 2 min (no gap); u2: 0 min only
-        [("u1", t0), ("u1", t0 + m), ("u1", t0 + 2 * m), ("u2", t0)],
+        [("u1", t0), ("u1", t0 + m), ("u1", t0 + 2 * m), ("u2", t0),
+         ("u3", fall), ("u4", spring)],
         # u1 resumes at 62 min -> 60-min gap from 2 min (cross-batch);
         # u2 at 5 min -> 5-min gap, under the bound
-        [("u1", t0 + 62 * m), ("u2", t0 + 5 * m)],
+        [("u1", t0 + 62 * m), ("u2", t0 + 5 * m),
+         ("u3", fall + 110 * m), ("u4", spring + 20 * m)],
         # u1 at 63 min (no gap); u2 at 200 min -> 195-min gap
         [("u1", t0 + 63 * m), ("u2", t0 + 200 * m)],
     ]
-    for rows in batches:
-        spark.createDataFrame(rows, "url string, bucket timestamp") \
-            .coalesce(1).write.mode("append").parquet(src)
-        time.sleep(1.2)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    out = str(tmp_path / "gap_out")
-    q = (
-        stream_gap_alerts(stream, max_gap_seconds=30 * 60)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "chk_gap"))
-        .trigger(availableNow=True)
-        .format("parquet")
-        .start(out)
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(out).toPandas().sort_values(["url", "gap_start"])
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+        for rows in batches:
+            spark.createDataFrame(rows, "url string, bucket timestamp") \
+                .coalesce(1).write.mode("append").parquet(src)
+            time.sleep(1.2)
+        stream = (
+            spark.readStream.schema(spark.read.parquet(src).schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("latestFirst", "false")
+            .parquet(src)
+        )
+        out = str(tmp_path / "gap_out")
+        q = (
+            stream_gap_alerts(stream, max_gap_seconds=30 * 60)
+            .writeStream.outputMode("append")
+            .option("checkpointLocation", str(tmp_path / "chk_gap"))
+            .trigger(availableNow=True)
+            .format("parquet")
+            .start(out)
+        )
+        q.awaitTermination(300)
+        got = (
+            spark.read.parquet(out)
+            .select(
+                "url",
+                F.unix_micros("gap_start").alias("start_us"),
+                F.unix_micros("gap_end").alias("end_us"),
+                "gap_us",
+            )
+            .toPandas()
+            .sort_values(["url", "start_us"])
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+    def us(t):
+        return (t - dt.datetime(1970, 1, 1, tzinfo=utc)) // dt.timedelta(microseconds=1)
+
     alerts = [
-        (r["url"], int(r["gap_us"] // 60_000_000))
-        for _, r in got.iterrows()
+        (r["url"], int(r["gap_us"] // 60_000_000)) for _, r in got.iterrows()
     ]
-    assert alerts == [("u1", 60), ("u2", 195)]
-    # gap endpoints are the exact neighboring event times
-    u1 = got[got["url"] == "u1"].iloc[0]
-    assert u1["gap_start"] == t0 + 2 * m and u1["gap_end"] == t0 + 62 * m
+    assert alerts == [("u1", 60), ("u2", 195), ("u3", 110)]
+    # gap endpoints are the exact neighboring event instants
+    ends = {r["url"]: (r["start_us"], r["end_us"]) for _, r in got.iterrows()}
+    assert ends["u1"] == (us(t0 + 2 * m), us(t0 + 62 * m))
+    assert ends["u3"] == (us(fall), us(fall + 110 * m))
