@@ -411,6 +411,65 @@ def test_payload_ends_matches_rstrip():
         assert payload[a:e] == payload[a:b].rstrip(b"\x00"), (a, b, e)
 
 
+def _container_golden_input(w):
+    lens = np.array([0, 1, 13, 5, 40, 1], np.int64)  # empty, 1 point, > 1 block
+    i = np.arange(int(lens.sum()), dtype=np.int64)
+    if w in (8, 32):  # ramps: 'auto' picks doubledelta
+        v = 3 * i + (i == 30)
+    else:  # a jittered walk: 'auto' picks delta
+        v = (i * 7 + (i * i) % 11 - 20) % (1 << min(w - 1, 20))
+    v = v.astype(f"int{w}")
+    if w == 64:  # firsts whose zigzag needs a 10-byte varint
+        v[1] = -(2**63) + 5
+        v[-1] = 2**63 - 3
+    return v, lens
+
+
+# sha256 of encode_container's output, recorded before the container
+# codec moved onto the shared batch kernels: the wire bytes must not move
+_CONTAINER_GOLDEN = {
+    (8, "delta", False): "cd1d2e6c08cf427794402ab3fec117821bf92c8b1566ec8b9838230cb18a3dcc",
+    (8, "delta", True): "cd1d2e6c08cf427794402ab3fec117821bf92c8b1566ec8b9838230cb18a3dcc",
+    (8, "doubledelta", False): "ac32523169bc928ec29f065cc02ca1af104a0ca4bcff95e2ef349d413534b40b",
+    (8, "doubledelta", True): "ac32523169bc928ec29f065cc02ca1af104a0ca4bcff95e2ef349d413534b40b",
+    (8, "auto", False): "ac32523169bc928ec29f065cc02ca1af104a0ca4bcff95e2ef349d413534b40b",
+    (8, "auto", True): "ac32523169bc928ec29f065cc02ca1af104a0ca4bcff95e2ef349d413534b40b",
+    (16, "delta", False): "28be1e5c0560294f55f42ec2c2c5af03522c29a18fc9ac2af28df439326997d7",
+    (16, "delta", True): "28be1e5c0560294f55f42ec2c2c5af03522c29a18fc9ac2af28df439326997d7",
+    (16, "doubledelta", False): "e0a0a208d05b263bc7ee0c9c63e897db2670c8d5d9b6f5f9da5ccb13ded85691",
+    (16, "doubledelta", True): "4b2bf8e9618c3e328c15fcc8ea3722795e58c1dec228217e9e419a94094835da",
+    (16, "auto", False): "28be1e5c0560294f55f42ec2c2c5af03522c29a18fc9ac2af28df439326997d7",
+    (16, "auto", True): "28be1e5c0560294f55f42ec2c2c5af03522c29a18fc9ac2af28df439326997d7",
+    (32, "delta", False): "8d458d09cc54a469220d6e2ea4b550de5474809b8e4baf4c347ea56a3218f1ba",
+    (32, "delta", True): "8d458d09cc54a469220d6e2ea4b550de5474809b8e4baf4c347ea56a3218f1ba",
+    (32, "doubledelta", False): "5e2561cd97b3c45474b5c735f73b0a2dbe40d65213f9d785465f3e55464683b4",
+    (32, "doubledelta", True): "5e2561cd97b3c45474b5c735f73b0a2dbe40d65213f9d785465f3e55464683b4",
+    (32, "auto", False): "5e2561cd97b3c45474b5c735f73b0a2dbe40d65213f9d785465f3e55464683b4",
+    (32, "auto", True): "5e2561cd97b3c45474b5c735f73b0a2dbe40d65213f9d785465f3e55464683b4",
+    (64, "delta", False): "dded64015cf7db9718a32c8e9e825f8a8d77be851b3c73838f560c51b674b5d0",
+    (64, "delta", True): "321e177617b60d068eca2b6941400c789f7cc422cd2bfd12cf4e093857f60b4b",
+    (64, "doubledelta", False): "e4a04be3325f06695f472ce2da576790b4ebbdb62e453ad7558cc4d95bcba201",
+    (64, "doubledelta", True): "780e32c3c47baf5969b4943bf26b012a80106ad44a90fff5afa840b3b3d0b515",
+    (64, "auto", False): "dded64015cf7db9718a32c8e9e825f8a8d77be851b3c73838f560c51b674b5d0",
+    (64, "auto", True): "321e177617b60d068eca2b6941400c789f7cc422cd2bfd12cf4e093857f60b4b",
+}
+
+
+@pytest.mark.parametrize("w", [8, 16, 32, 64])
+def test_container_wire_bytes_golden(w):
+    import hashlib
+
+    v, lens = _container_golden_input(w)
+    for mode in ("delta", "doubledelta", "auto"):
+        for deflate in (False, True):
+            blob = sz.encode_container(v, lens, mode, deflate)
+            got = hashlib.sha256(blob).hexdigest()
+            assert got == _CONTAINER_GOLDEN[w, mode, deflate], (mode, deflate)
+            back, ns = sz.decode_container(blob)
+            np.testing.assert_array_equal(ns, lens)
+            np.testing.assert_array_equal(back.view(v.dtype), v)
+
+
 def _corrupt_blobs():
     vals = np.arange(200, dtype=np.int64) ** 2
     lens = np.array([50, 150])
