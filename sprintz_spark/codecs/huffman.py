@@ -51,7 +51,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from sprintz_spark.codecs.sprintz import CorruptBlobError
+from sprintz_spark.codecs.rle import CorruptBlobError, read_uvarints, uvarint_batch
 
 MAGIC = b"HUF1"
 MAX_LEN = 15
@@ -159,54 +159,15 @@ def _canonical_codes(lens: np.ndarray) -> np.ndarray:
     return codes
 
 
-def _uvarint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        out.append(b | (0x80 if v else 0))
-        if not v:
-            return bytes(out)
-
-
-def _read_uvarint(buf: memoryview, pos: int) -> tuple[int, int]:
-    v = shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        v |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            return v, pos
-        shift += 7
-
-
-def _read_uvarints_vec(buf: memoryview, pos: int, count: int) -> tuple[np.ndarray, int]:
-    """Decode ``count`` consecutive LEB128 varints in one vectorized pass
-    (terminal bytes have the high bit CLEAR; 7-bit groups low-first).
-    Returns (values int64, next byte position). Replaces a per-block
-    Python loop that cost ~0.5us/varint on the decode hot path."""
-    if not count:
-        return np.zeros(0, np.int64), pos
-    # each varint is <=10 bytes; scan only a conservative prefix
-    arr = np.frombuffer(buf[pos : pos + 10 * count], np.uint8)
-    term = np.flatnonzero((arr & 0x80) == 0)[:count]
-    if len(term) < count:
-        raise ValueError("truncated varint block header")
-    end = int(term[-1]) + 1
-    arr = arr[:end]
-    starts = np.empty(count, np.int64)
-    starts[0] = 0
-    starts[1:] = term[:-1] + 1
-    widths = term - starts + 1
-    if int(widths.max()) > 9:
-        # 9 bytes carry 63 payload bits — the int64 ceiling. A 10-byte
-        # varint (value >= 2^63, or a corrupt header's continuation run)
-        # would left-shift past bit 63 and silently wrap negative below;
-        # fail loudly like the truncated-varint path instead.
-        raise ValueError("varint overflows int64 in block header")
-    within = np.arange(end, dtype=np.int64) - np.repeat(starts, widths)
-    vals7 = (arr & np.uint8(0x7F)).astype(np.int64) << (7 * within)
-    return np.add.reduceat(vals7, starts), pos + end
+def _block_bit_starts(mv: memoryview) -> tuple[np.ndarray, int]:
+    """Bit offsets of the block starts (cumsum of the varint deltas after
+    the u32 block count at byte 138) and the payload's byte offset."""
+    n_blocks = int(np.frombuffer(mv[138:142], np.uint32)[0])
+    deltas, pos = read_uvarints(mv, 142, n_blocks)
+    if (deltas >= np.uint64(1 << 63)).any():
+        # would wrap the int64 bit offsets negative
+        raise CorruptBlobError("varint overflows int64 in block header")
+    return np.cumsum(deltas.astype(np.int64)), pos
 
 
 def huffman_encode(data) -> bytes:
@@ -258,11 +219,9 @@ def huffman_encode(data) -> bytes:
     head += np.uint16(bs).tobytes()
     head += nibbles.astype(np.uint8).tobytes()  # 128 bytes of code lengths
     head += np.uint32(len(blk_starts)).tobytes()
-    # vectorized LEB128 of the block-start deltas (byte-identical to the
-    # scalar _uvarint loop this replaces; the Python loop was ~0.5us per
-    # block and capped how many decode lanes a blob could afford)
-    from sprintz_spark.codecs.rle import uvarint_batch
-
+    # vectorized LEB128 of the block-start deltas (a per-block Python loop
+    # was ~0.5us per block and capped how many decode lanes a blob could
+    # afford)
     deltas, _offs = uvarint_batch(np.diff(blk_starts, prepend=0).astype(np.uint64))
     head += deltas
     return bytes(head) + payload
@@ -374,9 +333,8 @@ def huffman_decode_batch(blobs: list[bytes]) -> list[np.ndarray]:
         lens_tbl = np.empty(256, np.uint8)
         lens_tbl[0::2] = nib >> 4
         lens_tbl[1::2] = nib & 0x0F
-        n_blocks = int(np.frombuffer(mv[138:142], np.uint32)[0])
-        deltas, pos = _read_uvarints_vec(mv, 142, n_blocks)
-        small.append((i, n, bs, lens_tbl, np.cumsum(deltas), bytes(mv[pos:])))
+        blk_bits, pos = _block_bit_starts(mv)
+        small.append((i, n, bs, lens_tbl, blk_bits, bytes(mv[pos:])))
     if not small:
         return out
     m = len(small)
@@ -464,9 +422,8 @@ def huffman_decode(buf: bytes) -> np.ndarray:
     lens_tbl = np.empty(256, np.uint8)
     lens_tbl[0::2] = nib >> 4
     lens_tbl[1::2] = nib & 0x0F
-    n_blocks = int(np.frombuffer(mv[138:142], np.uint32)[0])
-    deltas, pos = _read_uvarints_vec(mv, 142, n_blocks)
-    blk_bits = np.cumsum(deltas)
+    blk_bits, pos = _block_bit_starts(mv)
+    n_blocks = len(blk_bits)
     payload = np.frombuffer(mv[pos:], np.uint8)
     if not n:
         return np.zeros(0, np.uint8)

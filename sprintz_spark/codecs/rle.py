@@ -1,4 +1,5 @@
-"""Run-length coding of the per-block bitwidth (header) stream + varints.
+"""Run-length coding of the per-block bitwidth (header) stream, and the
+package's varint codes.
 
 The reference RLE-codes runs of all-zero blocks with a 7-bit-continuation
 varint run counter capped at 0x7fff blocks (reference:
@@ -6,6 +7,13 @@ cpp/Compress/sprintz_delta_rle.cpp:214-276, run cap at :68). We generalize:
 the whole header stream is (value, run-length) coded — a run of zero-width
 blocks (constant signal under delta) costs ~3 bytes total regardless of
 length, and so does any other constant-width stretch.
+
+Two varint codes live here. Run lengths use a one-or-two-byte code
+(varint_encode / varint_decode) whose second byte holds 8 bits, so it is
+LEB128 only below 2^14. Everything else — 'Y' and container heads, run
+counts, Huffman block offsets — is LEB128 u64 (uvarint_batch to write;
+read_uvarints for consecutive varints, uvarints_at for one varint at
+each of many offsets).
 """
 
 from __future__ import annotations
@@ -13,11 +21,17 @@ from __future__ import annotations
 import numpy as np
 
 RUN_CAP = 0x7FFF  # max blocks per run (reference: sprintz_delta_rle.cpp:68)
+_FEW_VARINTS = 32  # varint readers loop in Python up to this count
+
+
+class CorruptBlobError(ValueError):
+    """A blob that is malformed (bad magic, truncated) or that its row contradicts."""
 
 
 def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-style 7-bit-continuation varint, vectorized for values < 2^15
-    (the RUN_CAP guarantees this for run lengths)."""
+    """The header run-length code, vectorized, for values <= RUN_CAP:
+    one byte below 128, else two — (v & 0x7F) | 0x80, then v >> 7. The
+    second byte holds 8 bits, so from 2^14 on this is not LEB128."""
     values = np.asarray(values, dtype=np.int64)
     assert (values >= 0).all() and (values <= RUN_CAP).all()
     small = values < 128
@@ -32,20 +46,36 @@ def varint_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def varint_decode(buf: bytes, count: int) -> tuple[np.ndarray, int]:
-    """Decode ``count`` varints; returns (values, bytes_consumed)."""
-    arr = np.frombuffer(buf, dtype=np.uint8)
-    values = np.empty(count, dtype=np.int64)
-    pos = 0
-    for i in range(count):
-        b0 = int(arr[pos])
-        if b0 & 0x80:
-            values[i] = (b0 & 0x7F) | (int(arr[pos + 1]) << 7)
-            pos += 2
-        else:
-            values[i] = b0
-            pos += 1
-    return values, pos
+def varint_decode(buf, count: int) -> tuple[np.ndarray, int]:
+    """Decode ``count`` run lengths of varint_encode's code from the start
+    of ``buf``; returns (values int64, bytes consumed). A code cut off by
+    the end of ``buf`` raises CorruptBlobError."""
+    if count <= _FEW_VARINTS:
+        vals, pos = [], 0
+        try:
+            for _ in range(count):
+                b0 = buf[pos]
+                vals.append((b0 & 0x7F) | buf[pos + 1] << 7 if b0 >= 0x80 else b0)
+                pos += 1 + (b0 >= 0x80)
+        except IndexError:
+            raise CorruptBlobError("blob truncated inside a run length") from None
+        return np.array(vals, np.int64), pos
+    arr = np.frombuffer(buf, np.uint8)[: 2 * count]
+    hi = arr >= 0x80
+    # byte p starts a code unless byte p-1 started a two-byte one: from
+    # each byte after a low byte (a sure start), starts alternate along
+    # the run of high bytes
+    p = np.arange(len(arr))
+    sure = np.ones(len(arr), bool)
+    sure[1:] = ~hi[:-1]
+    last_sure = np.maximum.accumulate(np.where(sure, p, 0))
+    starts = p[(p - last_sure) % 2 == 0][:count]
+    if len(starts) < count or starts[-1] + hi[starts[-1]] >= len(arr):
+        raise CorruptBlobError("blob truncated inside a run length")
+    two = hi[starts]
+    second = arr[np.minimum(starts + 1, len(arr) - 1)].astype(np.int64)
+    vals = np.where(two, (arr[starts] & 0x7F) | (second << 7), arr[starts])
+    return vals.astype(np.int64), int(starts[-1] + 1 + two[-1])
 
 
 def rle_encode(seq: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -71,30 +101,83 @@ def rle_encode(seq: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return values, lengths.astype(np.int64)
 
 
-def rle_decode(values: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    return np.repeat(values, lengths)
+_VARINT_LIMITS = np.uint64(1) << np.arange(7, 64, 7, dtype=np.uint64)  # 2^7 .. 2^63
 
 
 def uvarint_batch(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     """LEB128 varints for arbitrary uint64 values, vectorized across the
     batch; returns (concatenated bytes, offsets[n+1]) so value i's varint
-    is buf[offsets[i]:offsets[i+1]]. Byte-identical to the scalar encoder."""
-    from sprintz_spark.codecs import bitpack
-
+    is buf[offsets[i]:offsets[i+1]]."""
     v = np.asarray(values, dtype=np.uint64)
-    if len(v) == 0:
-        return b"", np.zeros(1, np.int64)
-    bl = bitpack.bit_length(v).astype(np.int64)
-    nb = np.maximum(1, (bl + 6) // 7)
+    nb = 1 + np.searchsorted(_VARINT_LIMITS, v, side="right")  # bytes each
     offs = np.concatenate([[0], np.cumsum(nb)])
-    out = np.zeros(int(offs[-1]), np.uint8)
-    starts = offs[:-1]
-    for j in range(int(nb.max())):
-        sel = nb > j
-        byte = ((v[sel] >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nb[sel] - 1 > j).astype(np.uint8) << 7
-        out[starts[sel] + j] = byte | cont
-    return out.tobytes(), offs
+    idx = np.repeat(np.arange(len(v)), nb)
+    j = np.arange(offs[-1]) - offs[idx]  # byte j of value idx
+    out = (v[idx] >> (7 * j).astype(np.uint64)) & np.uint64(0x7F)
+    out |= (j < nb[idx] - 1).astype(np.uint64) << np.uint64(7)  # continuation
+    return out.astype(np.uint8).tobytes(), offs
+
+
+def read_uvarints(buf, pos: int, count: int) -> tuple[np.ndarray, int]:
+    """Read ``count`` consecutive LEB128 varints from ``buf[pos:]`` in one
+    vectorized pass. Returns (values u64, position after the last one).
+    A varint cut off by the end of ``buf`` or longer than 64 bits raises
+    CorruptBlobError."""
+    if count <= _FEW_VARINTS:
+        # a handful: numpy's per-call cost would dominate, so loop
+        vals = []
+        try:
+            for _ in range(count):
+                v = shift = 0
+                while buf[pos] >= 0x80:
+                    v |= (buf[pos] & 0x7F) << shift
+                    pos += 1
+                    shift += 7
+                    if shift > 63:
+                        raise CorruptBlobError("varint overflows 64 bits")
+                vals.append(v | buf[pos] << shift)
+                pos += 1
+        except IndexError:
+            raise CorruptBlobError("blob truncated inside a varint") from None
+        if vals and max(vals) >> 64:
+            raise CorruptBlobError("varint overflows 64 bits")
+        return np.array(vals, np.uint64), pos
+    # a u64 varint is at most 10 bytes: scan only that prefix
+    arr = np.frombuffer(buf, np.uint8, offset=pos)[: 10 * count]
+    term = np.flatnonzero(arr < 0x80)[:count]
+    if len(term) < count:
+        raise CorruptBlobError("blob truncated inside a varint")
+    starts = np.empty(count, np.int64)
+    starts[0] = 0
+    starts[1:] = term[:-1] + 1
+    widths = term + 1 - starts
+    # 10 bytes carry 70 bits: the 10th may only hold bit 63
+    if widths.max() > 10 or (arr[term[widths == 10]] > 1).any():
+        raise CorruptBlobError("varint overflows 64 bits")
+    end = int(term[-1]) + 1
+    shift = 7 * (np.arange(end, dtype=np.int64) - np.repeat(starts, widths))
+    vals = (arr[:end] & 0x7F).astype(np.uint64) << shift.astype(np.uint64)
+    return np.bitwise_or.reduceat(vals, starts), pos + end
+
+
+def uvarints_at(big: np.ndarray, pos: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Read one LEB128 varint starting at each position of ``pos`` in the
+    u8 array ``big`` — vectorized across positions (<= 10 masked passes,
+    one per varint byte). Returns (values u64, positions after them)."""
+    m = len(pos)
+    vals = np.zeros(m, np.uint64)
+    cur = pos.astype(np.int64).copy()
+    if not m:
+        return vals, cur
+    active = np.arange(m)
+    shift = np.uint64(0)
+    while len(active):
+        b = big[cur[active]].astype(np.uint64)
+        vals[active] |= (b & np.uint64(0x7F)) << shift
+        cur[active] += 1
+        active = active[(b & np.uint64(0x80)) != 0]
+        shift += np.uint64(7)
+    return vals, cur
 
 
 def rle_runs_segmented(
@@ -163,23 +246,18 @@ def encode_headers(nbits: np.ndarray) -> bytes:
     return nruns + values.astype(np.uint8).tobytes() + varint_encode(lengths)
 
 
+def read_runs(buf, pos: int, nruns: int) -> tuple[np.ndarray, np.ndarray, int]:
+    """The ``nruns`` header runs at ``buf[pos:]`` — run values (u8 each),
+    then run lengths (varint_encode's code each). Returns (values,
+    lengths, end)."""
+    if nruns > len(buf) - pos:
+        raise CorruptBlobError("blob truncated: more header runs than bytes left")
+    values = np.frombuffer(buf, np.uint8, nruns, pos)
+    lengths, used = varint_decode(memoryview(buf)[pos + nruns :], nruns)
+    return values, lengths, pos + nruns + used
+
+
 def decode_headers(buf: bytes) -> tuple[np.ndarray, int]:
-    """Returns (nbits array, bytes consumed)."""
-    nruns = int.from_bytes(buf[:4], "little")
-    if nruns < 16:
-        # pure-python fast path for tiny headers
-        values, lengths, pos = [], [], 4 + nruns
-        for i in range(nruns):
-            values.append(buf[4 + i])
-            b0 = buf[pos]
-            if b0 & 0x80:
-                lengths.append((b0 & 0x7F) | (buf[pos + 1] << 7))
-                pos += 2
-            else:
-                lengths.append(b0)
-                pos += 1
-        out = np.repeat(np.array(values, dtype=np.uint8), lengths) if nruns else np.zeros(0, np.uint8)
-        return out, pos
-    values = np.frombuffer(buf[4 : 4 + nruns], dtype=np.uint8)
-    lengths, used = varint_decode(buf[4 + nruns :], nruns)
-    return rle_decode(values, lengths), 4 + nruns + used
+    """Inverse of encode_headers: (nbits array, bytes consumed)."""
+    values, lengths, end = read_runs(buf, 4, int.from_bytes(buf[:4], "little"))
+    return np.repeat(values, lengths), end

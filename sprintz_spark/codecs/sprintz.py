@@ -27,8 +27,8 @@ Wire formats (one BinaryType cell per series chunk; first byte selects):
       headers (u32-nruns) | payload.
   'C' (0x43) — multi-series container: many series of one column in a
       single blob (shared headers/payload, per-series varint length +
-      varint firsts) — see encode_container; used by tiers whose
-      per-key series are tiny (the daily tier).
+      varint firsts) — see encode_container; every retention tier is
+      stored as containers.
   'W' (0x57) — zlib wrapper around any of the above, applied per blob
       when it shrinks it (cost-based entropy post-pass — the paper's
       Huffman stage, method.tex:300-303).
@@ -44,6 +44,7 @@ import zlib
 import numpy as np
 
 from sprintz_spark.codecs import bitpack, delta, ewma, fire, rle, zigzag
+from sprintz_spark.codecs.rle import CorruptBlobError
 
 MAGIC = b"SZ1"
 MAGIC2 = 0x5A  # b'Z': compact head for small chunks (n < 65536, no extra)
@@ -55,10 +56,6 @@ BLOCK = bitpack.BLOCK
 # expressed with stdlib zlib): applied per blob when it actually shrinks
 # it. ~10µs/blob; disable for max-throughput encoding.
 DEFLATE_MIN = 64  # don't bother below this size
-
-
-class CorruptBlobError(ValueError):
-    """A blob that is malformed (bad magic, truncated) or that its row contradicts."""
 
 
 def _maybe_deflate(blob: bytes, enable: bool = True) -> bytes:
@@ -111,62 +108,6 @@ def _headers_compact(nbits: np.ndarray) -> bytes:
 #   'Y' | mode(3b)|w_code(2b)|pad(3b) | (n-1) u16 | uvarint zz(x0)
 #   [| uvarint zz(d1) if doubledelta] | uvarint nruns | run vals u8[] |
 #   run lens varint[] | payload (trailing zeros stripped)
-
-
-def _uvarint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _read_uvarint(buf, pos: int) -> tuple[int, int]:
-    v = shift = 0
-    try:
-        while True:
-            b = buf[pos]
-            pos += 1
-            v |= (b & 0x7F) << shift
-            if not (b & 0x80):
-                return v, pos
-            shift += 7
-    except IndexError:
-        raise CorruptBlobError("blob truncated inside a varint") from None
-
-
-def _zz_scalar(u_val: int, w: int) -> int:
-    """Zigzag of a stored w-bit value (interpreted as signed), python ints."""
-    mask = (1 << w) - 1
-    s = u_val & mask
-    if s >> (w - 1):
-        s -= 1 << w
-    return ((s << 1) ^ (s >> (w - 1))) & mask
-
-
-def _unzz_scalar(zz: int, w: int) -> int:
-    """Inverse of _zz_scalar; returns the unsigned w-bit bit pattern."""
-    return ((zz >> 1) ^ -(zz & 1)) & ((1 << w) - 1)
-
-
-def _head3(mode: str, w: int, n: int, pad: int, x0: int, d1: int | None) -> bytes:
-    packed = (MODES[mode] << 5) | (_W_CODE[w] << 3) | pad
-    out = bytes([MAGIC3, packed]) + (int(n) - 1).to_bytes(2, "little")
-    out += _uvarint(_zz_scalar(int(x0), w))
-    if d1 is not None:
-        out += _uvarint(_zz_scalar(int(d1), w))
-    return out
-
-
-def _headers_v(nbits: np.ndarray) -> bytes:
-    """rle.encode_headers with a varint run count (any nruns)."""
-    full = rle.encode_headers(nbits)
-    nruns = int.from_bytes(full[:4], "little")
-    return _uvarint(nruns) + full[4:]
 
 
 def _payload_ends(payload: bytes, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
@@ -245,7 +186,7 @@ def encode_column(x: np.ndarray, mode: str = "delta", deflate: bool = True) -> b
     if mode == "delta":
         z = zigzag.encode(delta.delta_encode(padded))
         if 1 <= n <= 65536:
-            firsts = (int(padded[0]), None)
+            firsts = [int(padded[0])]
             z[0] = 0
     elif mode == "doubledelta":
         z = zigzag.encode(delta.double_delta_encode(padded))
@@ -253,7 +194,7 @@ def encode_column(x: np.ndarray, mode: str = "delta", deflate: bool = True) -> b
         # would otherwise put a -d1 spike in the last block
         if 1 <= n <= 65536:
             d1 = (int(padded[1]) - int(padded[0])) & ((1 << w) - 1)
-            firsts = (int(padded[0]), d1)
+            firsts = [int(padded[0]), d1]
             z[0] = 0
             z[1] = 0
     elif mode == "dyndelta":
@@ -281,11 +222,13 @@ def encode_column(x: np.ndarray, mode: str = "delta", deflate: bool = True) -> b
         raise ValueError(f"unknown mode {mode}")
     nbits = bitpack.block_nbits(z, BLOCK)
     payload = bitpack.pack_blocks(z, nbits, BLOCK).rstrip(b"\x00")
-    if firsts is not None:
+    if firsts is not None:  # 'Y' head: firsts and nruns as varints
+        hdr = rle.encode_headers(nbits)
+        zz = zigzag.encode(np.array(firsts, _UNSIGNED[w])).tolist()
+        varints, _ = rle.uvarint_batch(zz + [int.from_bytes(hdr[:4], "little")])
+        head = bytes([MAGIC3, (MODES[mode] << 5) | (_W_CODE[w] << 3) | pad])
         return _maybe_deflate(
-            _head3(mode, w, n, pad, firsts[0], firsts[1])
-            + _headers_v(nbits)
-            + payload,
+            head + (n - 1).to_bytes(2, "little") + varints + hdr[4:] + payload,
             deflate,
         )
     if not extra and n < 65536 and len(nbits) <= 255:
@@ -319,36 +262,22 @@ def _parse(buf: bytes):
     ``payload`` may be trailing-zero truncated (see _zero_extend).
     """
     buf = _inflate(buf)
-    if buf[0] == MAGIC3:  # 'Y': compact head + out-of-band firsts
-        packed = buf[1]
-        mode = _MODE_NAMES[packed >> 5]
-        w = _W_FROM_CODE[(packed >> 3) & 0x3]
-        pad = packed & 0x7
-        n = int.from_bytes(buf[2:4], "little") + 1
-        pos = 4
-        zz0, pos = _read_uvarint(buf, pos)
-        d1 = None
-        if mode == "doubledelta":
-            zz1, pos = _read_uvarint(buf, pos)
-            d1 = _unzz_scalar(zz1, w)
-        nruns, pos = _read_uvarint(buf, pos)
-        nbits, used = rle.decode_headers(
-            nruns.to_bytes(4, "little") + buf[pos:]
-        )
-        payload = buf[pos + used - 4 :]
-        return mode, w, n, pad, b"", nbits, payload, (_unzz_scalar(zz0, w), d1)
-    if buf[0] == MAGIC2:  # 'Z': compact head
+    if buf[0] in (MAGIC2, MAGIC3):  # compact heads
         packed = buf[1]
         mode = _MODE_NAMES[packed >> 5]
         w = _W_FROM_CODE[(packed >> 3) & 0x3]
         pad = packed & 0x7
         n = int.from_bytes(buf[2:4], "little")
-        nruns = buf[4]
-        nbits, used = rle.decode_headers(
-            nruns.to_bytes(4, "little") + buf[5:]
-        )
-        payload = buf[5 + used - 4 :]
-        return mode, w, n, pad, b"", nbits, payload, None
+        if buf[0] == MAGIC2:  # 'Z': in-stream firsts, u8 nruns
+            firsts, nruns, pos = None, buf[4], 5
+        else:  # 'Y': n-1, varints zz(x0) [zz(d1)] nruns
+            n += 1
+            v, pos = rle.read_uvarints(buf, 4, 2 + (mode == "doubledelta"))
+            *zz, nruns = v.tolist()
+            f = [((z >> 1) ^ -(z & 1)) & ((1 << w) - 1) for z in zz]  # unzigzag
+            firsts = (f[0], f[1] if len(f) > 1 else None)
+        vals, lens, end = rle.read_runs(buf, pos, nruns)
+        return mode, w, n, pad, b"", np.repeat(vals, lens), buf[end:], firsts
     if buf[:3] != MAGIC:
         raise CorruptBlobError(f"bad magic {bytes(buf[:3])!r}")
     mode = _MODE_NAMES[buf[3]]
@@ -412,54 +341,29 @@ def _segmented_cumsum(d: np.ndarray, starts: np.ndarray, plens: np.ndarray) -> n
     return c - np.repeat(off, plens)
 
 
-def _group_pass(mode, w, idx, ns, plens, nbits_concat, payload_concat,
-                f_pos, f0_u, f1_u, out) -> None:
-    """Shared per-(mode, w) decode pass: unpack the concatenated payload,
-    scatter out-of-band firsts, run the mode's inverse transform, slice
-    each blob's values into ``out``. ``f_pos``/``f0_u``/``f1_u`` are the
-    value-domain positions and unsigned bit patterns of 'Y' firsts
-    (``f1_u`` pre-adjusted to the residual slot value, or None)."""
+def _group_pass(mode, w, plens, nbits, payload, f_pos, x0s, d1s) -> np.ndarray:
+    """Inverse transform of many block-padded series of one (mode, w),
+    concatenated with ``plens`` samples each: unpack, then for delta /
+    doubledelta zigzag-decode, put the out-of-band firsts back (x0 at
+    value position ``f_pos``, the doubledelta first gap ``d1s`` after
+    it) and undo one or two segmented cumsums. Returns the padded
+    values; callers drop pads or cut per-blob slices."""
     su = _UNSIGNED[w]
     dst_starts = _cumsum0(plens)
-    z = bitpack.unpack_blocks(payload_concat, nbits_concat, su, BLOCK)
-    starts = dst_starts[:-1]
-    nonempty = plens > 0
-    s_idx = starts[nonempty]
+    z = bitpack.unpack_blocks(payload, nbits, su, BLOCK)
     if mode == "raw":
-        x = z
-    elif mode == "fire":
-        x = fire.fire_decode_multi(z, dst_starts, plens, w)
-    else:
-        d = zigzag.decode(z).view(su)
-        if f_pos is not None and len(f_pos):
-            d[f_pos] = f0_u.astype(su)
-            if mode == "doubledelta":
-                d[f_pos + 1] = f1_u.astype(su)
-        x = _segmented_cumsum(d, s_idx, plens[nonempty]) if len(d) else d
-        if mode == "doubledelta":
-            x = _segmented_cumsum(x, s_idx, plens[nonempty])
-    for i, lo, n in zip(idx, starts, ns):
-        out[i] = x[lo : lo + int(n)]
-
-
-def _uvarints_at(big, pos):
-    """Read one LEB128 varint starting at each position of ``pos`` —
-    vectorized across positions (<= 10 masked passes, one per varint
-    byte). Returns (values u64, positions after the varints)."""
-    m = len(pos)
-    vals = np.zeros(m, np.uint64)
-    cur = pos.astype(np.int64).copy()
-    if not m:
-        return vals, cur
-    active = np.arange(m)
-    shift = np.uint64(0)
-    while len(active):
-        b = big[cur[active]].astype(np.uint64)
-        vals[active] |= (b & np.uint64(0x7F)) << shift
-        cur[active] += 1
-        active = active[(b & np.uint64(0x80)) != 0]
-        shift += np.uint64(7)
-    return vals, cur
+        return z
+    if mode == "fire":
+        return fire.fire_decode_multi(z, dst_starts, plens, w)
+    d = zigzag.decode(z).view(su)
+    d[f_pos] = x0s
+    if mode == "doubledelta":
+        # unsigned subtraction wraps mod 2^w: the residual-domain d1 - x0
+        d[f_pos + 1] = d1s.astype(su) - x0s.astype(su)
+    nonempty = plens > 0
+    s_idx, seg = dst_starts[:-1][nonempty], plens[nonempty]
+    x = _segmented_cumsum(d, s_idx, seg)
+    return _segmented_cumsum(x, s_idx, seg) if mode == "doubledelta" else x
 
 
 # batchable compact-head modes (delta / doubledelta / fire / raw);
@@ -471,28 +375,17 @@ _BATCH_MAX_RUNS = 128  # larger headers amortize the scalar parse fine
 def _decode_items(mode, w, items, out) -> None:
     """Legacy per-blob-parsed route (v1 heads, deflated blobs, big
     headers): items are (i, n, pad, nbits, payload, firsts) tuples."""
-    mask = (1 << w) - 1
-    nbits_concat = (
-        np.concatenate([it[3] for it in items]) if items else np.zeros(0, np.uint8)
-    )
-    payload_concat = b"".join(it[4] for it in items)
-    ns = np.array([it[1] for it in items], dtype=np.int64)
-    plens = ns + np.array([it[2] for it in items], dtype=np.int64)
+    plens = np.array([it[1] + it[2] for it in items], dtype=np.int64)
     starts = _cumsum0(plens)[:-1]
-    with_f = [
-        (k, it) for k, it in enumerate(items) if it[5] is not None and it[1]
-    ]
-    f_pos = np.array([starts[k] for k, _ in with_f], dtype=np.int64)
-    f0 = np.array([it[5][0] for _, it in with_f], dtype=np.uint64)
-    f1 = None
-    if mode == "doubledelta":
-        f1 = np.array(
-            [(it[5][1] - it[5][0]) & mask for _, it in with_f], dtype=np.uint64
-        )
-    _group_pass(
-        mode, w, [it[0] for it in items], ns, plens, nbits_concat,
-        payload_concat, f_pos, f0, f1, out,
+    with_f = [k for k, it in enumerate(items) if it[5] is not None and it[1]]
+    x = _group_pass(
+        mode, w, plens, np.concatenate([it[3] for it in items]),
+        b"".join(it[4] for it in items), starts[with_f],
+        np.array([items[k][5][0] for k in with_f], np.uint64),
+        np.array([items[k][5][1] or 0 for k in with_f], np.uint64),
     )
+    for it, lo in zip(items, starts):
+        out[it[0]] = x[lo : lo + it[1]]
 
 
 def decode_batch(blobs: list[bytes]) -> list[np.ndarray]:
@@ -561,12 +454,12 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
     zz1 = np.zeros(m, np.uint64)
     y_sel = np.flatnonzero(is_y)
     if len(y_sel):
-        v, p = _uvarints_at(big, pos[y_sel])
+        v, p = rle.uvarints_at(big, pos[y_sel])
         zz0[y_sel] = v
         pos[y_sel] = p
         dd_sel = y_sel[mode_c[y_sel] == 1]
         if len(dd_sel):
-            v, p = _uvarints_at(big, pos[dd_sel])
+            v, p = rle.uvarints_at(big, pos[dd_sel])
             zz1[dd_sel] = v
             pos[dd_sel] = p
     nruns = np.zeros(m, np.int64)
@@ -575,7 +468,7 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
         nruns[z_sel] = big[pos[z_sel]]
         pos[z_sel] += 1
     if len(y_sel):
-        v, p = _uvarints_at(big, pos[y_sel])
+        v, p = rle.uvarints_at(big, pos[y_sel])
         nruns[y_sel] = v.astype(np.int64)
         pos[y_sel] = p
     # over-large headers -> legacy parse (bounded masked-pass loop below)
@@ -648,33 +541,17 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
             )
             payload_g = np.zeros(int(exp_g.sum()), np.uint8)
             payload_g[dst] = big[src]
-            # firsts ('Y' blobs with n > 0): unsigned bit patterns
-            if w < 64:
-                mask = np.uint64((1 << int(w)) - 1)
-            else:
-                mask = np.uint64(0xFFFFFFFFFFFFFFFF)
-            f_pos = f0_u = f1_u = None
-            if mode in ("delta", "doubledelta"):
-                plens_g = ns[g] + pads[g]
-                starts_g = _cumsum0(plens_g)[:-1]
-                has_f = is_y[g] & (ns[g] > 0)
-                f_pos = starts_g[has_f]
-                zz0_g = zz0[g][has_f]
-                f0_u = (
-                    (zz0_g >> np.uint64(1))
-                    ^ (np.uint64(0) - (zz0_g & np.uint64(1)))
-                ) & mask
-                if mode == "doubledelta":
-                    zz1_g = zz1[g][has_f]
-                    d1_u = (
-                        (zz1_g >> np.uint64(1))
-                        ^ (np.uint64(0) - (zz1_g & np.uint64(1)))
-                    ) & mask
-                    f1_u = (d1_u - f0_u) & mask
-            _group_pass(
-                mode, int(w), [batch[j] for j in g], ns[g], ns[g] + pads[g],
-                nbits_g, payload_g, f_pos, f0_u, f1_u, out,
+            # firsts ('Y' blobs; n >= 1): zigzag-decoded bit patterns
+            plens_g = ns[g] + pads[g]
+            starts_g = _cumsum0(plens_g)[:-1]
+            y_g = g[is_y[g]]
+            x = _group_pass(
+                mode, int(w), plens_g, nbits_g, payload_g, starts_g[is_y[g]],
+                zigzag.decode(zz0[y_g]).view(np.uint64),
+                zigzag.decode(zz1[y_g]).view(np.uint64),
             )
+            for j, lo, n in zip(g, starts_g, ns[g]):
+                out[batch[j]] = x[lo : lo + n]
 
 
 def choose_mode(x: np.ndarray, candidates=("delta", "doubledelta", "fire")) -> str:
@@ -848,41 +725,47 @@ def encode_batch_concat_fire(
     return out
 
 
-def _encode_padded_concat(u, ns, pads, plens, dst_starts, w, mode, deflate=True):
-    su = _UNSIGNED[w]
+def _residuals(u, ns, pads, plens, dst_starts, w, oob):
+    """Zigzagged delta (z1) and double-delta (z2) residuals of a
+    block-padded concat ``u``, restarting at each series, plus each
+    series' x0 and first gap. Series in the mask ``oob`` carry those
+    firsts out of band, so their leading residual slots are zeroed and
+    the first block packs small. Pad-slot double-deltas are zeroed for
+    every series: decode discards them, and repeat-last padding would
+    otherwise put a -d1 spike in the last block. Returns (z1, z2, x0s,
+    gaps)."""
     starts = dst_starts[:-1]
     nonempty = plens > 0
     s_idx = starts[nonempty]
     d1 = np.empty_like(u)
-    if len(u):
-        d1[0] = u[0]
-        np.subtract(u[1:], u[:-1], out=d1[1:])
-        d1[s_idx] = u[s_idx]
-    d2 = np.empty_like(d1)
-    if len(u):
-        d2[0] = d1[0]
-        np.subtract(d1[1:], d1[:-1], out=d2[1:])
-        d2[s_idx] = u[s_idx]
-        s1 = s_idx[plens[nonempty] > 1] + 1
-        d2[s1] = d1[s1] - d1[s1 - 1]
-    # out-of-band firsts ('Y' format): remember per-series x0 and first gap,
-    # then zero those residual slots so the first block packs small
-    elig = (ns >= 1) & (ns <= 65536)
-    x0s = np.zeros(len(ns), dtype=su)
-    gaps = np.zeros(len(ns), dtype=su)
-    if len(u):
-        x0s[nonempty] = u[s_idx]
-        gaps[nonempty] = u[s_idx + 1] - u[s_idx]  # plens>=BLOCK when nonempty
+    d1[:1] = u[:1]
+    np.subtract(u[1:], u[:-1], out=d1[1:])
+    d1[s_idx] = u[s_idx]
+    d2 = np.empty_like(u)
+    d2[:1] = d1[:1]
+    np.subtract(d1[1:], d1[:-1], out=d2[1:])
+    d2[s_idx] = u[s_idx]
+    x0s = np.zeros(len(ns), dtype=u.dtype)
+    gaps = np.zeros(len(ns), dtype=u.dtype)
+    x0s[nonempty] = u[s_idx]
+    gaps[nonempty] = u[s_idx + 1] - u[s_idx]  # plens >= BLOCK when nonempty
     z1 = zigzag.encode(d1.view(_SIGNED[w]))
     z2 = zigzag.encode(d2.view(_SIGNED[w]))
-    if len(u):
-        e_idx = starts[elig & nonempty]
-        z1[e_idx] = 0
-        z2[e_idx] = 0
-        z2[e_idx + 1] = 0
-        z2[_pad_positions(ns, pads, dst_starts)] = 0  # match encode_column
-    nb1 = bitpack.block_nbits(z1, BLOCK) if len(u) else np.zeros(0, np.uint8)
-    nb2 = bitpack.block_nbits(z2, BLOCK) if len(u) else np.zeros(0, np.uint8)
+    e_idx = starts[oob]
+    z1[e_idx] = 0
+    z2[e_idx] = 0
+    z2[e_idx + 1] = 0
+    z2[_pad_positions(ns, pads, dst_starts)] = 0
+    return z1, z2, x0s, gaps
+
+
+def _encode_padded_concat(u, ns, pads, plens, dst_starts, w, mode, deflate=True):
+    starts = dst_starts[:-1]
+    # out-of-band firsts: the 'Y' head
+    elig = (ns >= 1) & (ns <= 65536)
+    z1, z2, x0s, gaps = _residuals(u, ns, pads, plens, dst_starts, w, elig)
+    nb1 = bitpack.block_nbits(z1, BLOCK)
+    nb2 = bitpack.block_nbits(z2, BLOCK)
     blk_starts = (starts // BLOCK).astype(np.int64)
     blk_lens = plens // BLOCK
     n_series = len(ns)
@@ -902,7 +785,7 @@ def _encode_padded_concat(u, ns, pads, plens, dst_starts, w, mode, deflate=True)
     nb = np.where(blk_mask, nb2, nb1).astype(np.uint8)
     samp_mask = np.repeat(choose2, plens)
     z = np.where(samp_mask, z2, z1)
-    payload = bitpack.pack_blocks(z, nb, BLOCK) if len(u) else b""
+    payload = bitpack.pack_blocks(z, nb, BLOCK)
     byte_off = _cumsum0(nb.astype(np.int64))
     out: list[bytes] = []
     pv = memoryview(payload)
@@ -910,11 +793,9 @@ def _encode_padded_concat(u, ns, pads, plens, dst_starts, w, mode, deflate=True)
     mode_bytes = [bytes([MODES["delta"]]), bytes([MODES["doubledelta"]])]
     wb = bytes([w])
     zero16 = b"\x00\x00"
-    mode_names = ["delta", "doubledelta"]
     f, f_hi, vb, lb, lo = _headers_batch(nb, blk_starts, blk_hi)
     nruns_arr = f_hi - f
-    # vectorized compact heads ('Y'/'Z' share the 4-byte layout) and firsts
-    # varints — byte-identical to _head3/_head2 per series
+    # vectorized compact heads ('Y'/'Z' share the 4-byte layout) and varints
     packed = (
         (choose2.astype(np.uint8) << 5)
         | np.uint8(_W_CODE[w] << 3)
@@ -929,7 +810,7 @@ def _encode_padded_concat(u, ns, pads, plens, dst_starts, w, mode, deflate=True)
     hb = heads4.tobytes()
     vx_b, vx_off = rle.uvarint_batch(zigzag.encode(x0s).astype(np.uint64))
     vd_b, vd_off = rle.uvarint_batch(zigzag.encode(gaps).astype(np.uint64))
-    small_run = nruns_arr < 128
+    vr_b, vr_off = rle.uvarint_batch(nruns_arr)
     p_lo = byte_off[blk_starts]
     p_hi = _payload_ends(payload, p_lo, byte_off[blk_hi])
     compact_ok = (ns < 65536) & (blk_hi - blk_starts <= 255)
@@ -942,7 +823,7 @@ def _encode_padded_concat(u, ns, pads, plens, dst_starts, w, mode, deflate=True)
                 hb[i4 : i4 + 4],
                 vx_b[vx_off[i] : vx_off[i + 1]],
                 vd_b[vd_off[i] : vd_off[i + 1]] if choose2[i] else b"",
-                bytes([nruns]) if small_run[i] else _uvarint(nruns),
+                vr_b[vr_off[i] : vr_off[i + 1]],
                 vb[f[i] : f_hi[i]], lb[lo[f[i]] : lo[f_hi[i]]],
                 pv[p_lo[i] : p_hi[i]],
             ))
@@ -1100,14 +981,21 @@ def _run_partials_i64(
             bmin[nz] = np.where(m, xx, _I64_MAX).min(axis=1)
     else:  # pragma: no cover
         raise ValueError(f"no run fast path for mode {mode}")
-    sums = np.zeros(n_series, np.int64)
-    maxs = np.full(n_series, _I64_MIN)
-    mins = np.full(n_series, _I64_MAX)
-    if has_blocks.any():
-        idx0 = b0[has_blocks]
-        sums[has_blocks] = np.add.reduceat(bsum, idx0)
-        maxs[has_blocks] = np.maximum.reduceat(bmax, idx0)
-        mins[has_blocks] = np.minimum.reduceat(bmin, idx0)
+    return _series_partials(bsum, bmax, bmin, b0, has_blocks)
+
+
+def _series_partials(vsum, vmax, vmin, starts, nonempty):
+    """Per-series (sum, max, min) of element arrays cut at ``starts``; an
+    empty series (``nonempty`` False) gives (0, INT64_MIN, INT64_MAX)."""
+    n = len(nonempty)
+    sums = np.zeros(n, np.int64)
+    maxs = np.full(n, _I64_MIN)
+    mins = np.full(n, _I64_MAX)
+    if nonempty.any():
+        i = starts[nonempty]
+        sums[nonempty] = np.add.reduceat(vsum, i)
+        maxs[nonempty] = np.maximum.reduceat(vmax, i)
+        mins[nonempty] = np.minimum.reduceat(vmin, i)
     return sums, maxs, mins
 
 
@@ -1129,32 +1017,6 @@ def _firsts_i64(firsts) -> tuple[int, int]:
     x0 = int(np.uint64(firsts[0]).astype(np.int64))
     d1 = int(np.uint64(firsts[1]).astype(np.int64)) if firsts[1] is not None else 0
     return x0, d1
-
-
-def query_blob_partials(buf: bytes) -> tuple[int, int, int | None, int | None]:
-    """(count, sum, max, min) of one blob, int64 value semantics.
-
-    64-bit delta/doubledelta blobs take the RLE-run fast path
-    (_run_partials_i64): zero-width blocks never touch payload bytes and
-    aggregate in closed form. Other modes (fire/raw/dyndelta, narrow
-    widths) decode fully — their residuals aren't run-structured.
-    """
-    mode, w, n, pad, extra, nbits, payload, firsts = _parse(buf)
-    if n == 0:
-        return 0, 0, None, None
-    if w == 64 and mode in ("delta", "doubledelta") and _runs_worthwhile(nbits):
-        x0, d1 = _firsts_i64(firsts)
-        s, mx, mn = _run_partials_i64(
-            nbits,
-            _zero_extend(payload, nbits),
-            np.array([n], np.int64),
-            np.array([x0], np.int64),
-            np.array([d1], np.int64),
-            mode,
-        )
-        return n, int(s[0]), int(mx[0]), int(mn[0])
-    vals = decode_column(buf).astype(np.int64)
-    return n, int(vals.sum()), int(vals.max()), int(vals.min())
 
 
 def query_batch_partials(
@@ -1212,16 +1074,15 @@ def query_compressed(buf: bytes, op: str) -> int | None:
     decoder).
     """
     if op == "count":
-        mode, w, n, pad, extra, nbits, payload, _f = _parse(buf)
-        return n
-    n, s, mx, mn = query_blob_partials(buf)
+        return _parse(buf)[2]
+    if op not in ("sum", "max", "min"):
+        raise ValueError(f"unknown op {op}")
+    n, s, mx, mn = (int(a[0]) for a in query_batch_partials([buf]))
     if op == "sum":
         return s
-    if op == "max":
-        return mx
-    if op == "min":
-        return mn
-    raise ValueError(f"unknown op {op}")
+    if n == 0:
+        return None
+    return mx if op == "max" else mn
 
 
 def compressed_size_report(buf: bytes) -> dict:
@@ -1271,104 +1132,80 @@ def encode_container(
     if values.dtype.kind not in "iu":
         raise TypeError(f"encode_container takes integer arrays, got {values.dtype}")
     w = values.dtype.itemsize * 8
-    su = _UNSIGNED[w]
     ns = np.asarray(lengths, dtype=np.int64)
-    u, pads, plens, dst_starts = _pad_concat(values, ns, su)
-    starts = dst_starts[:-1]
-    nonempty = plens > 0
-    s_idx = starts[nonempty]
-    # residual stream with per-series restarts, firsts zeroed out-of-band
-    d1 = np.empty_like(u)
-    if len(u):
-        d1[0] = u[0]
-        np.subtract(u[1:], u[:-1], out=d1[1:])
-        d1[s_idx] = u[s_idx]
-    x0s = np.zeros(len(ns), dtype=su)
-    gaps = np.zeros(len(ns), dtype=su)
-    if len(u):
-        x0s[nonempty] = u[s_idx]
-        gaps[nonempty] = u[s_idx + 1] - u[s_idx]
-
-    def _z_delta():
-        z = zigzag.encode(d1.view(_SIGNED[w]))
-        if len(u):
-            z[s_idx] = 0
-        return z
-
-    def _z_dd():
-        d2 = np.empty_like(d1)
-        if len(u):
-            d2[0] = d1[0]
-            np.subtract(d1[1:], d1[:-1], out=d2[1:])
-            s1 = s_idx[plens[nonempty] > 1] + 1
-            d2[s1] = d1[s1] - d1[s1 - 1]
-        z = zigzag.encode(d2.view(_SIGNED[w]))
-        if len(u):
-            z[s_idx] = 0
-            z[s_idx + 1] = 0
-            z[_pad_positions(ns, pads, dst_starts)] = 0
-        return z
-
+    u, pads, plens, dst_starts = _pad_concat(values, ns, _UNSIGNED[w])
+    z1, z2, x0s, gaps = _residuals(u, ns, pads, plens, dst_starts, w, ns > 0)
     if mode == "auto":
-        z1, z2 = _z_delta(), _z_dd()
-        nb1 = bitpack.block_nbits(z1, BLOCK) if len(u) else np.zeros(0, np.uint8)
-        nb2 = bitpack.block_nbits(z2, BLOCK) if len(u) else np.zeros(0, np.uint8)
+        nb1 = bitpack.block_nbits(z1, BLOCK)
+        nb2 = bitpack.block_nbits(z2, BLOCK)
         # dd pays an extra varint per series for d1; compare payload+firsts
-        cost1 = int(nb1.astype(np.int64).sum())
-        cost2 = int(nb2.astype(np.int64).sum()) + len(ns)
-        if cost2 < cost1:
-            mode, z, nb = "doubledelta", z2, nb2
-        else:
-            mode, z, nb = "delta", z1, nb1
-    elif mode == "doubledelta":
-        z = _z_dd()
-        nb = bitpack.block_nbits(z, BLOCK) if len(u) else np.zeros(0, np.uint8)
+        dd = int(nb2.sum()) + len(ns) < int(nb1.sum())
+        z, nb = (z2, nb2) if dd else (z1, nb1)
     else:
-        z = _z_delta()
-        nb = bitpack.block_nbits(z, BLOCK) if len(u) else np.zeros(0, np.uint8)
-    payload = (bitpack.pack_blocks(z, nb, BLOCK) if len(u) else b"").rstrip(b"\x00")
-    head = bytearray([MAGIC_CONTAINER, (MODES[mode] << 5) | (_W_CODE[w] << 3)])
-    head += _uvarint(len(ns))
-    for n in ns.tolist():
-        head += _uvarint(int(n))
-    for v in x0s.tolist():
-        head += _uvarint(_zz_scalar(int(v), w))
-    if mode == "doubledelta":
-        for v in gaps.tolist():
-            head += _uvarint(_zz_scalar(int(v), w))
-    blob = bytes(head) + _headers_v(nb) + payload
-    return _maybe_deflate(blob, deflate)
+        dd = mode == "doubledelta"
+        z = z2 if dd else z1
+        nb = bitpack.block_nbits(z, BLOCK)
+    payload = bitpack.pack_blocks(z, nb, BLOCK).rstrip(b"\x00")
+    hdr = rle.encode_headers(nb)
+    head = [[len(ns)], ns, zigzag.encode(x0s)] + [zigzag.encode(gaps)] * dd
+    head.append([int.from_bytes(hdr[:4], "little")])  # nruns
+    varints, _ = rle.uvarint_batch(
+        np.concatenate([np.asarray(h).astype(np.uint64) for h in head])
+    )
+    packed = (MODES["doubledelta" if dd else "delta"] << 5) | (_W_CODE[w] << 3)
+    return _maybe_deflate(
+        bytes([MAGIC_CONTAINER, packed]) + varints + hdr[4:] + payload, deflate
+    )
 
 
 def _parse_container(buf: bytes):
     """Container head parse shared by decode and the query fast path:
-    returns (mode, w, ns, x0s, gaps_or_None, nbits, payload)."""
+    returns (mode, w, ns, x0s, gaps_or_None, nbits, payload). A head that
+    runs past the blob or disagrees with its block headers raises
+    CorruptBlobError."""
     buf = _inflate(buf)
     if buf[0] != MAGIC_CONTAINER:
         raise CorruptBlobError(f"bad container magic {buf[0]:#04x}")
-    packed = buf[1]
-    mode = _MODE_NAMES[packed >> 5]
-    w = _W_FROM_CODE[(packed >> 3) & 0x3]
+    if len(buf) < 2 or buf[1] >> 5 not in (MODES["delta"], MODES["doubledelta"]):
+        raise CorruptBlobError("container truncated or of a mode it cannot hold")
+    mode = _MODE_NAMES[buf[1] >> 5]
+    w = _W_FROM_CODE[(buf[1] >> 3) & 0x3]
+    (m,), pos = rle.read_uvarints(buf, 2, 1)
+    if m > len(buf) - pos:
+        raise CorruptBlobError("container truncated: more series than bytes left")
+    m = int(m)
+    # ns, zz(x0)s [, zz(d1)s], nruns
+    head, pos = rle.read_uvarints(buf, pos, (3 if mode == "doubledelta" else 2) * m + 1)
+    run_vals, run_lens, pos = rle.read_runs(buf, pos, int(head[-1]))
+    blocks = int(run_lens.sum())
+    ns = head[:m]
+    if (ns > BLOCK * blocks).any() or run_vals.max(initial=0) > w:
+        raise CorruptBlobError("container head disagrees with its block headers")
+    ns = ns.astype(np.int64)
+    if (ns + (-ns) % BLOCK).sum() != BLOCK * blocks:
+        raise CorruptBlobError("container head disagrees with its block headers")
     su = _UNSIGNED[w]
-    pos = 2
-    n_series, pos = _read_uvarint(buf, pos)
-    ns = np.empty(n_series, dtype=np.int64)
-    for i in range(n_series):
-        ns[i], pos = _read_uvarint(buf, pos)
-    x0s = np.empty(n_series, dtype=su)
-    for i in range(n_series):
-        v, pos = _read_uvarint(buf, pos)
-        x0s[i] = su(_unzz_scalar(v, w))
+    x0s = zigzag.decode(head[m : 2 * m]).view(np.uint64).astype(su)
     gaps = None
     if mode == "doubledelta":
-        gaps = np.empty(n_series, dtype=su)
-        for i in range(n_series):
-            v, pos = _read_uvarint(buf, pos)
-            gaps[i] = su(_unzz_scalar(v, w))
-    nruns, pos = _read_uvarint(buf, pos)
-    nbits, used = rle.decode_headers(nruns.to_bytes(4, "little") + buf[pos:])
-    payload = _zero_extend(buf[pos + used - 4 :], nbits)
-    return mode, w, ns, x0s, gaps, nbits, payload
+        gaps = zigzag.decode(head[2 * m : 3 * m]).view(np.uint64).astype(su)
+    nbits = np.repeat(run_vals, run_lens)
+    return mode, w, ns, x0s, gaps, nbits, _zero_extend(buf[pos:], nbits)
+
+
+def _container_values(mode, w, ns, x0s, gaps, nbits, payload) -> np.ndarray:
+    """The concatenated values of a parsed container, pad slots dropped."""
+    pads = (-ns) % BLOCK
+    plens = ns + pads
+    dst_starts = _cumsum0(plens)
+    ne = ns > 0
+    x = _group_pass(
+        mode, w, plens, nbits, payload, dst_starts[:-1][ne], x0s[ne],
+        None if gaps is None else gaps[ne],
+    )
+    keep = np.ones(len(x), dtype=bool)
+    keep[_pad_positions(ns, pads, dst_starts)] = False
+    return x[keep]
 
 
 def query_container_partials(
@@ -1378,48 +1215,19 @@ def query_container_partials(
 
     Container series are individually block-padded, so each series owns
     whole blocks and the RLE-run fast path applies per series: the tiny
-    constant-heavy daily-tier series aggregate from headers alone."""
-    mode, w, ns, x0s, gaps, nbits, payload = _parse_container(buf)
-    if w == 64 and mode in ("delta", "doubledelta") and _runs_worthwhile(nbits):
-        x0_i = x0s.view(np.int64)
+    constant-heavy daily-tier series aggregate from headers alone. Other
+    containers decode from the same parsed head. An empty series gives
+    (0, 0, INT64_MIN, INT64_MAX)."""
+    head = _parse_container(buf)
+    mode, w, ns, x0s, gaps, nbits, payload = head
+    if w == 64 and _runs_worthwhile(nbits):
         d1_i = gaps.view(np.int64) if gaps is not None else np.zeros(len(ns), np.int64)
-        sums, maxs, mins = _run_partials_i64(nbits, payload, ns, x0_i, d1_i, mode)
-        return ns, sums, maxs, mins
-    vals, ns = decode_container(buf)  # narrow widths: no fast path
-    v = vals.astype(np.int64)
-    starts = _cumsum0(ns)[:-1]
-    return (
-        ns,
-        np.add.reduceat(v, starts),
-        np.maximum.reduceat(v, starts),
-        np.minimum.reduceat(v, starts),
-    )
+        return ns, *_run_partials_i64(nbits, payload, ns, x0s.view(np.int64), d1_i, mode)
+    v = _container_values(*head).astype(np.int64)
+    return ns, *_series_partials(v, v, v, _cumsum0(ns)[:-1], ns > 0)
 
 
 def decode_container(buf: bytes) -> tuple[np.ndarray, np.ndarray]:
     """Inverse of encode_container: (values_concat, lengths)."""
-    mode, w, ns, x0s, gaps, nbits, payload = _parse_container(buf)
-    su = _UNSIGNED[w]
-    mask = (1 << w) - 1
-    pads = (-ns) % BLOCK
-    plens = ns + pads
-    dst_starts = _cumsum0(plens)
-    starts = dst_starts[:-1]
-    nonempty = plens > 0
-    s_idx = starts[nonempty]
-    z = bitpack.unpack_blocks(payload, nbits, su, BLOCK)
-    d = zigzag.decode(z).view(su)
-    if len(d):
-        d[s_idx] = x0s[nonempty]
-        if mode == "doubledelta":
-            # unsigned subtraction wraps mod 2^w — the residual-domain d1-x0
-            d[s_idx + 1] = gaps[nonempty] - x0s[nonempty]
-    x = _segmented_cumsum(d, s_idx, plens[nonempty]) if len(d) else d
-    if mode == "doubledelta" and len(d):
-        x = _segmented_cumsum(x, s_idx, plens[nonempty])
-    # drop pad slots
-    if pads.any():
-        keep = np.ones(len(x), dtype=bool)
-        keep[_pad_positions(ns, pads, dst_starts)] = False
-        x = x[keep]
-    return x, ns
+    head = _parse_container(buf)
+    return _container_values(*head), head[2]

@@ -788,9 +788,10 @@ def query_encoded_container(
     key_col: str = "url",
 ) -> DataFrame:
     """query_encoded over the container format: per-series sum/max/min/count
-    partials come from one decode_container + reduceat per blob (the whole
-    container's series in two numpy passes); Catalyst's partial+final
-    aggregate combines across containers/partitions. No materialization."""
+    partials come from one query_container_partials per blob (the RLE-run
+    fast path where enough blocks are zero-width, else a decode of the
+    parsed head and a reduceat); Catalyst's partial+final aggregate
+    combines across containers/partitions. No materialization."""
     key_t = enc.schema["keys"].dataType.elementType
     schema = _partials_schema([StructField(key_col, key_t)])
     blob_col = f"blob_{value_col}"

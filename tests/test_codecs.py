@@ -125,11 +125,18 @@ def test_bitpack_width_promotion():
 
 
 def test_rle_varint_and_headers():
-    lengths = np.array([0, 1, 127, 128, 129, rle.RUN_CAP])
+    lengths = np.array([0, 1, 127, 128, 129, 16384, rle.RUN_CAP])
     buf = rle.varint_encode(lengths)
+    # one byte below 128, else two whose second holds 8 bits (so from
+    # 2^14 on the run-length code is not LEB128)
+    assert buf[-4:] == b"\x80\x80\xff\xff"
     vals, used = rle.varint_decode(buf, len(lengths))
     assert used == len(buf)
     np.testing.assert_array_equal(vals, lengths)
+    many = np.tile(lengths, 20)  # past the reader's Python-loop count
+    vals, used = rle.varint_decode(rle.varint_encode(many) + b"\xff", len(many))
+    assert used == len(rle.varint_encode(many))
+    np.testing.assert_array_equal(vals, many)
     # long zero run crosses the 0x7fff cap (reference run cap semantics)
     nbits = np.concatenate([
         np.full(rle.RUN_CAP + 10, 0, np.uint8),
@@ -365,17 +372,31 @@ def test_ewma_rejects_wide_dtypes():
         sz.encode_column(np.arange(100, dtype=np.int64), "ewma")
 
 
+def _uvarint(v: int) -> bytes:
+    """Scalar LEB128 reference: 7-bit groups low first, high bit = more."""
+    out = bytearray()
+    while True:
+        out.append((v & 0x7F) | (0x80 if v >> 7 else 0))
+        v >>= 7
+        if not v:
+            return bytes(out)
+
+
 def test_uvarint_batch_matches_scalar():
     from sprintz_spark.codecs import rle
-    from sprintz_spark.codecs.sprintz import _uvarint
 
     vals = np.concatenate(
         [rng.integers(0, 2**k, 100) for k in (7, 14, 28, 49, 63)]
         + [np.array([0, 1, 127, 128, 16383, 16384, 2**63 - 1])]
     ).astype(np.uint64)
+    vals = np.append(vals, np.array([2**63, 2**64 - 1], np.uint64))
     buf, offs = rle.uvarint_batch(vals)
     for i, v in enumerate(vals.tolist()):
         assert buf[offs[i] : offs[i + 1]] == _uvarint(int(v))
+    # the shared reader inverts it, 10-byte varints included
+    got, end = rle.read_uvarints(b"\xaa" + buf, 1, len(vals))
+    np.testing.assert_array_equal(got, vals)
+    assert end == 1 + len(buf)
 
 
 def test_rle_runs_segmented_matches_per_segment():
@@ -470,6 +491,23 @@ def test_container_wire_bytes_golden(w):
             np.testing.assert_array_equal(back.view(v.dtype), v)
 
 
+def test_long_header_run_wire_bytes():
+    """A run of 17,500 zero-width blocks takes the run-length code's
+    two-byte form with a high second byte (dc 88): the container and SZ1
+    bytes, recorded before the container moved onto the shared kernels,
+    must not move."""
+    v = np.concatenate([np.full(140_000, 7, np.int64), np.arange(5, dtype=np.int64)])
+    lens = np.array([140_000, 5])
+    cont = sz.encode_container(v, lens, "delta", deflate=False)
+    assert cont.hex() == "431802e0c508050e00020002dc8801a802"
+    back, ns = sz.decode_container(cont)
+    np.testing.assert_array_equal(back.view(np.int64), v)
+    np.testing.assert_array_equal(ns, lens)
+    col = sz.encode_column(v[:140_000], "delta", deflate=False)
+    assert col.hex() == "535a310040e022020000000002000000040001db880e"
+    np.testing.assert_array_equal(sz.decode_column(col).view(np.int64), v[:140_000])
+
+
 def _corrupt_blobs():
     vals = np.arange(200, dtype=np.int64) ** 2
     lens = np.array([50, 150])
@@ -502,6 +540,50 @@ def test_corrupt_blob_truncated():
         sz.decode_container(cont[:4])
     with pytest.raises(sz.CorruptBlobError, match="truncated"):
         sz.query_container_partials(cont[:4])
+
+
+def test_corrupt_raw_container_raises_only_corrupt_blob_error():
+    """Cut, bit-flipped and 0xFF-stamped raw containers either return or
+    raise CorruptBlobError: no IndexError, OverflowError or bare numpy
+    ValueError gets out. (A cut payload tail or a flipped payload bit
+    can decode silently: the format strips trailing zeros and has no
+    checksum.)"""
+    r = np.random.default_rng(8)
+    blobs = []
+    for w in (8, 16, 32, 64):
+        info = np.iinfo(f"int{w}")
+        for mode in ("delta", "doubledelta", "auto"):
+            lens = r.integers(0, 30, 40)  # empty series included
+            n = int(lens.sum())
+            for v in (
+                np.cumsum(r.integers(-3, 4, n)),
+                r.integers(info.min, info.max, n, endpoint=True),
+                np.repeat(r.integers(-50, 50, len(lens)), lens),  # run fast path
+            ):
+                blobs.append(
+                    sz.encode_container(v.astype(f"int{w}"), lens, mode, deflate=False)
+                )
+
+    def mutants(blob, k):
+        for _ in range(k):
+            yield blob[: int(r.integers(0, len(blob)))]
+        for _ in range(k):
+            b = bytearray(blob)
+            b[int(r.integers(0, len(b)))] ^= 1 << int(r.integers(0, 8))
+            yield bytes(b)
+        for _ in range(k):
+            b = bytearray(blob)
+            b[int(r.integers(2, min(40, len(b))))] = 0xFF  # head bytes
+            yield bytes(b)
+
+    for blob in blobs:
+        assert blob[:1] == b"C"
+        for bad in mutants(blob, 40):
+            for fn in (sz.decode_container, sz.query_container_partials):
+                try:
+                    fn(bad)
+                except sz.CorruptBlobError:
+                    pass
 
 
 def test_magic_check_survives_python_O():

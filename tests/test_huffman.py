@@ -13,6 +13,7 @@ from sprintz_spark.codecs.huffman import (
     _canonical_codes,
     _code_lengths,
     huffman_decode,
+    huffman_decode_batch,
     huffman_encode,
 )
 
@@ -145,7 +146,7 @@ def test_uvarints_vec_matches_scalar():
     multi-byte and zero deltas."""
     import numpy as np
 
-    from sprintz_spark.codecs.huffman import _read_uvarint, _read_uvarints_vec, _uvarint
+    from sprintz_spark.codecs.rle import read_uvarints, uvarint_batch, uvarints_at
 
     rng = np.random.default_rng(11)
     vals = np.concatenate(
@@ -154,20 +155,21 @@ def test_uvarints_vec_matches_scalar():
             rng.integers(0, 2**30, 500),
         ]
     ).astype(np.int64)
-    buf = memoryview(b"\xff\xee" + b"".join(_uvarint(int(v)) for v in vals) + b"\xaa")
-    got, end = _read_uvarints_vec(buf, 2, len(vals))
+    enc, offs = uvarint_batch(vals)
+    buf = memoryview(b"\xff\xee" + enc + b"\xaa")
+    got, end = read_uvarints(buf, 2, len(vals))
     np.testing.assert_array_equal(got, vals)
-    # scalar replay agrees on every value and the final cursor
-    pos = 2
-    for v in vals:
-        s, pos = _read_uvarint(buf, pos)
-        assert s == v
-    assert pos == end
+    assert end == 2 + len(enc)
+    # the one-varint-per-offset reader agrees on every value and cursor
+    big = np.frombuffer(buf, np.uint8)
+    at, after = uvarints_at(big, offs[:-1] + 2)
+    np.testing.assert_array_equal(at, vals)
+    np.testing.assert_array_equal(after, offs[1:] + 2)
     # truncated header fails loudly
     import pytest
 
     with pytest.raises(ValueError):
-        _read_uvarints_vec(memoryview(b"\x80\x80"), 0, 1)
+        read_uvarints(memoryview(b"\x80\x80"), 0, 1)
 
 
 def test_uvarints_vec_overflow_raises():
@@ -176,14 +178,20 @@ def test_uvarints_vec_overflow_raises():
     int64 shift negative and cumsum garbage block offsets."""
     import pytest
 
-    from sprintz_spark.codecs.huffman import _read_uvarints_vec, _uvarint
+    from sprintz_spark.codecs.rle import read_uvarints, uvarint_batch
 
-    blob = _uvarint(2**63)  # 10 bytes
+    blob, _ = uvarint_batch(np.array([2**63], np.uint64))  # 10 bytes
     assert len(blob) == 10
-    with pytest.raises(ValueError, match="overflows int64"):
-        _read_uvarints_vec(memoryview(blob), 0, 1)
-    # 9 bytes (63 payload bits) is the legal ceiling and still decodes
-    ok = _uvarint(2**63 - 1)
+    good = huffman_encode(np.arange(3000, dtype=np.uint8) % 5)
+    n_blocks = int(np.frombuffer(good[138:142], np.uint32)[0])
+    assert n_blocks > 1
+    # a HUF1 block-start delta of 2^63 overflows the int64 bit offsets
+    bad = good[:142] + blob + good[143:]
+    for fn in (huffman_decode, lambda b: huffman_decode_batch([b])):
+        with pytest.raises(ValueError, match="overflows int64"):
+            fn(bad)
+    # 9 bytes (63 payload bits) is the int64 ceiling and still decodes
+    ok, _ = uvarint_batch(np.array([2**63 - 1], np.uint64))
     assert len(ok) == 9
-    got, end = _read_uvarints_vec(memoryview(ok), 0, 1)
+    got, end = read_uvarints(memoryview(ok), 0, 1)
     assert int(got[0]) == 2**63 - 1 and end == 9

@@ -15,10 +15,14 @@ def _agg(vals: np.ndarray):
     return len(v), int(v.sum()), int(v.max()), int(v.min())
 
 
+def _blob_partials(buf: bytes):
+    return tuple(int(a[0]) for a in sz.query_batch_partials([buf]))
+
+
 def _check_blob(arr: np.ndarray, mode: str):
     buf = sz.encode_column(arr, mode)
     want = _agg(sz.decode_column(buf))
-    got = sz.query_blob_partials(buf)
+    got = _blob_partials(buf)
     assert got == want, f"mode={mode} n={len(arr)}"
 
 
@@ -104,7 +108,7 @@ def test_fastpath_skips_payload_on_constant_runs():
     # in-stream head (n > 65536): block 0 carries x0, everything after is runs
     assert (nbits[1:] == 0).all()
     assert len(payload) <= int(nbits[0])  # block 0 only (+ zero-truncated)
-    assert sz.query_blob_partials(buf) == (100_000, 700_000, 7, 7)
+    assert _blob_partials(buf) == (100_000, 700_000, 7, 7)
 
 
 def test_query_compressed_ops():
