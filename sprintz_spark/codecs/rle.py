@@ -21,7 +21,10 @@ from __future__ import annotations
 import numpy as np
 
 RUN_CAP = 0x7FFF  # max blocks per run (reference: sprintz_delta_rle.cpp:68)
-_FEW_VARINTS = 32  # varint readers loop in Python up to this count
+# read_uvarints loops in Python up to this count: numpy's fixed per-call
+# cost (~30-45 us) beats the loop from ~40 container-head varints (1-, 4-
+# and 8-byte mix) and ~150 one-byte ones (4 vCPUs, best of 5 x 200 calls)
+_FEW_VARINTS = 32
 
 
 class CorruptBlobError(ValueError):
@@ -50,32 +53,15 @@ def varint_decode(buf, count: int) -> tuple[np.ndarray, int]:
     """Decode ``count`` run lengths of varint_encode's code from the start
     of ``buf``; returns (values int64, bytes consumed). A code cut off by
     the end of ``buf`` raises CorruptBlobError."""
-    if count <= _FEW_VARINTS:
-        vals, pos = [], 0
-        try:
-            for _ in range(count):
-                b0 = buf[pos]
-                vals.append((b0 & 0x7F) | buf[pos + 1] << 7 if b0 >= 0x80 else b0)
-                pos += 1 + (b0 >= 0x80)
-        except IndexError:
-            raise CorruptBlobError("blob truncated inside a run length") from None
-        return np.array(vals, np.int64), pos
-    arr = np.frombuffer(buf, np.uint8)[: 2 * count]
-    hi = arr >= 0x80
-    # byte p starts a code unless byte p-1 started a two-byte one: from
-    # each byte after a low byte (a sure start), starts alternate along
-    # the run of high bytes
-    p = np.arange(len(arr))
-    sure = np.ones(len(arr), bool)
-    sure[1:] = ~hi[:-1]
-    last_sure = np.maximum.accumulate(np.where(sure, p, 0))
-    starts = p[(p - last_sure) % 2 == 0][:count]
-    if len(starts) < count or starts[-1] + hi[starts[-1]] >= len(arr):
-        raise CorruptBlobError("blob truncated inside a run length")
-    two = hi[starts]
-    second = arr[np.minimum(starts + 1, len(arr) - 1)].astype(np.int64)
-    vals = np.where(two, (arr[starts] & 0x7F) | (second << 7), arr[starts])
-    return vals.astype(np.int64), int(starts[-1] + 1 + two[-1])
+    vals, pos = [], 0
+    try:
+        for _ in range(count):
+            b0 = buf[pos]
+            vals.append((b0 & 0x7F) | buf[pos + 1] << 7 if b0 >= 0x80 else b0)
+            pos += 1 + (b0 >= 0x80)
+    except IndexError:
+        raise CorruptBlobError("blob truncated inside a run length") from None
+    return np.array(vals, np.int64), pos
 
 
 def rle_encode(seq: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

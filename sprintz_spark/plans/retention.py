@@ -429,10 +429,11 @@ def _check_container(blobs: list[bytes], n_keys: int, n: int) -> str | None:
         mode = "doubledelta" if col == "ts_blob" else "auto"
         try:
             v, lens = sz.decode_container(blob)
-            same = sz.encode_container(v.view(np.int64), lens, mode) == blob
         except sz.CorruptBlobError as e:
             return f"{col}: {type(e).__name__}: {e}"
-        if not same:
+        if v.dtype.itemsize != 8:
+            return f"{col}: {8 * v.dtype.itemsize}-bit elements, the store writes 64"
+        if sz.encode_container(v.view(np.int64), lens, mode) != blob:
             return f"{col}: re-encode differs from the stored bytes"
         if lens0 is None:
             if len(lens) != n_keys or lens.sum() != n:

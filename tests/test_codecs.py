@@ -133,7 +133,7 @@ def test_rle_varint_and_headers():
     vals, used = rle.varint_decode(buf, len(lengths))
     assert used == len(buf)
     np.testing.assert_array_equal(vals, lengths)
-    many = np.tile(lengths, 20)  # past the reader's Python-loop count
+    many = np.tile(lengths, 20)  # a header of 140 runs
     vals, used = rle.varint_decode(rle.varint_encode(many) + b"\xff", len(many))
     assert used == len(rle.varint_encode(many))
     np.testing.assert_array_equal(vals, many)

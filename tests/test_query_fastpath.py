@@ -83,20 +83,26 @@ def test_batch_partials_mixed_modes():
 
 @pytest.mark.parametrize("mode", ["delta", "doubledelta", "auto"])
 def test_container_partials(mode):
+    """int64 takes the run fast path, int16 the decode fallback; both
+    equal decode + aggregate, and an empty series, inside or last, gives
+    (0, 0, INT64_MIN, INT64_MAX)."""
     rng = np.random.default_rng(11)
     lens = rng.integers(1, 40, 50).astype(np.int64)
+    lens[[7, -1]] = 0
     vals = np.concatenate(
         [np.full(n, int(rng.integers(-100, 100)), np.int64) + np.arange(n) * int(rng.integers(-2, 3)) for n in lens]
     )
-    buf = sz.encode_container(vals, lens, mode)
-    dec_vals, dec_ns = sz.decode_container(buf)
-    ns, sums, maxs, mins = sz.query_container_partials(buf)
-    assert (ns == dec_ns).all()
-    starts = np.concatenate([[0], np.cumsum(dec_ns)[:-1]])
-    v = dec_vals.astype(np.int64)
-    assert (sums == np.add.reduceat(v, starts)).all()
-    assert (maxs == np.maximum.reduceat(v, starts)).all()
-    assert (mins == np.minimum.reduceat(v, starts)).all()
+    for dtype in (np.int64, np.int16):
+        buf = sz.encode_container(vals.astype(dtype), lens, mode)
+        dec_vals, dec_ns = sz.decode_container(buf)
+        ns, sums, maxs, mins = sz.query_container_partials(buf)
+        assert (ns == dec_ns).all() and (ns == lens).all()
+        v = dec_vals.astype(np.int64)
+        for i, s in enumerate(np.split(v, np.cumsum(lens)[:-1])):
+            want = (0, np.iinfo(np.int64).min, np.iinfo(np.int64).max)
+            if len(s):
+                want = (s.sum(), s.max(), s.min())
+            assert (sums[i], maxs[i], mins[i]) == want, (dtype, i)
 
 
 def test_fastpath_skips_payload_on_constant_runs():

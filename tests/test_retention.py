@@ -585,8 +585,12 @@ def test_cli_verify_after_compact_and_expire(spark, tmp_path, capsys):
 def test_verify_snapshot_rejects_truncated_blob_and_wrong_n_rows(
     spark, pages_small, tmp_path
 ):
-    """One truncated blob, or one manifest n_rows off by one, makes
-    verify_snapshot raise CorruptBlobError; the untouched store passes."""
+    """One truncated blob, one blob whose width code is flipped, or one
+    manifest n_rows off by one, makes verify_snapshot raise
+    CorruptBlobError; the untouched store passes."""
+    import numpy as np
+
+    from sprintz_spark.codecs import sprintz as sz
     from sprintz_spark.codecs.sprintz import CorruptBlobError
 
     clean = str(tmp_path / "clean")
@@ -595,21 +599,38 @@ def test_verify_snapshot_rejects_truncated_blob_and_wrong_n_rows(
     assert set(rep) == {"1m", "1h", "1d"}
     assert all(v["containers"] > 0 for v in rep.values())
 
-    blob = str(tmp_path / "blob")
-    shutil.copytree(clean, blob)
-    path = sorted(glob.glob(f"{blob}/snap=s1/encoded_tier=1h/part=0/*.parquet"))[0]
-    t = pq.read_table(path)
-    col = t.column("blob_byte_size_sum").to_pylist()
-    col[0] = col[0][:-3]
-    t = t.set_column(
-        t.schema.get_field_index("blob_byte_size_sum"), "blob_byte_size_sum",
-        pa.array(col, pa.binary()),
-    )
-    pq.write_table(t, path, use_deprecated_int96_timestamps=True)
-    # drop Hadoop's checksum sidecar, which no longer matches the file
-    os.remove(os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc"))
+    def rewrite_first_blob(name, col, fn):
+        """A copy of the clean store whose first ``col`` blob of tier 1h
+        part 0 is replaced by fn(blob)."""
+        out = str(tmp_path / name)
+        shutil.copytree(clean, out)
+        path = sorted(glob.glob(f"{out}/snap=s1/encoded_tier=1h/part=0/*.parquet"))[0]
+        t = pq.read_table(path)
+        blobs = t.column(col).to_pylist()
+        blobs[0] = fn(blobs[0])
+        t = t.set_column(t.schema.get_field_index(col), col, pa.array(blobs, pa.binary()))
+        pq.write_table(t, path, use_deprecated_int96_timestamps=True)
+        # drop Hadoop's checksum sidecar, which no longer matches the file
+        os.remove(os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc"))
+        return out
+
+    blob = rewrite_first_blob("blob", "blob_byte_size_sum", lambda b: b[:-3])
     with pytest.raises(CorruptBlobError, match="tier 1h part 0: blob_byte_size_sum"):
         RT.verify_snapshot(spark, blob, "s1")
+
+    def width_64_to_32(b):
+        # a raw copy of the blob with one bit flipped: its width code
+        # reads 32, and every block width fits 32 bits, so it parses and
+        # decodes to uint32 values
+        v, lens = sz.decode_container(b)
+        raw = bytearray(sz.encode_container(v.view(np.int64), lens, "auto", deflate=False))
+        raw[1] ^= 0x08
+        assert sz.decode_container(bytes(raw))[0].dtype == np.uint32
+        return bytes(raw)
+
+    width = rewrite_first_blob("width", "blob_crawl_count", width_64_to_32)
+    with pytest.raises(CorruptBlobError, match="blob_crawl_count: 32-bit elements"):
+        RT.verify_snapshot(spark, width, "s1")
 
     rows = str(tmp_path / "rows")
     shutil.copytree(clean, rows)
