@@ -67,9 +67,12 @@ def _maybe_deflate(blob: bytes, enable: bool = True) -> bytes:
 
 def _inflate(buf: bytes) -> bytes:
     try:
-        return zlib.decompress(memoryview(buf)[1:]) if buf[0] == MAGIC_DEFLATE else buf
+        out = zlib.decompress(memoryview(buf)[1:]) if buf[0] == MAGIC_DEFLATE else buf
     except (IndexError, zlib.error) as e:
         raise CorruptBlobError(f"empty blob or bad zlib stream ({e})") from None
+    if not out:
+        raise CorruptBlobError("empty blob inside its zlib stream")
+    return out
 
 MODES = {"delta": 0, "doubledelta": 1, "dyndelta": 2, "fire": 3, "raw": 4,
          "ewma": 5, "booldelta": 6}
@@ -246,6 +249,13 @@ def encode_column(x: np.ndarray, mode: str = "delta", deflate: bool = True) -> b
     return _maybe_deflate(head + rle.encode_headers(nbits) + payload, deflate)
 
 
+def _mode_name(code: int) -> str:
+    try:
+        return _MODE_NAMES[code]
+    except KeyError:
+        raise CorruptBlobError(f"unknown mode code {code}") from None
+
+
 def blob_mode(buf: bytes) -> str:
     """Codec mode of a blob (works for all head formats)."""
     buf = _inflate(buf)
@@ -254,17 +264,41 @@ def blob_mode(buf: bytes) -> str:
     return _MODE_NAMES[buf[3]]
 
 
+# element widths each mode's decoder takes (the encoder's own limits)
+_MODE_WIDTHS = {"fire": (8, 16), "ewma": (8, 16), "booldelta": (8,)}
+
+
+def _check_head(mode, w, n, pad, firsts, nbits, payload) -> None:
+    """CorruptBlobError unless a parsed SZ1 head agrees with itself and
+    with its block headers, as every encoder writes them: the blocks
+    hold exactly the n + pad padded samples, no block is wider than w,
+    the payload is no longer than the blocks' bytes, the mode takes w,
+    and out-of-band firsts come only with delta / doubledelta."""
+    if w not in _UNSIGNED or w not in _MODE_WIDTHS.get(mode, (w,)):
+        raise CorruptBlobError(f"{mode} blob of {w}-bit elements")
+    if firsts is not None and mode not in ("delta", "doubledelta"):
+        raise CorruptBlobError(f"{mode} blob with out-of-band first values")
+    if pad >= BLOCK or BLOCK * len(nbits) != n + pad:
+        raise CorruptBlobError("blob head disagrees with its block headers")
+    if len(nbits) and (nbits.max() > w or len(payload) > int(nbits.sum(dtype=np.int64))):
+        raise CorruptBlobError("blob head disagrees with its block headers")
+
+
 def _parse(buf: bytes):
     """Returns (mode, w, n, pad, extra, nbits, payload, firsts).
 
     ``firsts`` is None for in-stream-start formats ('Z'/SZ1) or
     ``(x0, d1_or_None)`` unsigned bit patterns for the 'Y' format.
     ``payload`` may be trailing-zero truncated (see _zero_extend).
+    A head that is cut short or disagrees with its block headers raises
+    CorruptBlobError (_check_head).
     """
     buf = _inflate(buf)
     if buf[0] in (MAGIC2, MAGIC3):  # compact heads
+        if len(buf) < 5:
+            raise CorruptBlobError("blob truncated inside its head")
         packed = buf[1]
-        mode = _MODE_NAMES[packed >> 5]
+        mode = _mode_name(packed >> 5)
         w = _W_FROM_CODE[(packed >> 3) & 0x3]
         pad = packed & 0x7
         n = int.from_bytes(buf[2:4], "little")
@@ -277,18 +311,27 @@ def _parse(buf: bytes):
             f = [((z >> 1) ^ -(z & 1)) & ((1 << w) - 1) for z in zz]  # unzigzag
             firsts = (f[0], f[1] if len(f) > 1 else None)
         vals, lens, end = rle.read_runs(buf, pos, nruns)
-        return mode, w, n, pad, b"", np.repeat(vals, lens), buf[end:], firsts
+        nbits = np.repeat(vals, lens)
+        _check_head(mode, w, n, pad, firsts, nbits, buf[end:])
+        return mode, w, n, pad, b"", nbits, buf[end:], firsts
     if buf[:3] != MAGIC:
         raise CorruptBlobError(f"bad magic {bytes(buf[:3])!r}")
-    mode = _MODE_NAMES[buf[3]]
+    if len(buf) < 12:
+        raise CorruptBlobError("blob truncated inside its head")
+    mode = _mode_name(buf[3])
     w = buf[4]
-    n = int(np.frombuffer(buf[5:9], dtype=np.uint32)[0])
+    n = int.from_bytes(buf[5:9], "little")
     pad = buf[9]
-    extra_len = int(np.frombuffer(buf[10:12], dtype=np.uint16)[0])
+    extra_len = int.from_bytes(buf[10:12], "little")
+    if 12 + extra_len + 4 > len(buf):
+        raise CorruptBlobError("blob truncated inside its head")
     extra = buf[12 : 12 + extra_len]
     rest = buf[12 + extra_len :]
     nbits, used = rle.decode_headers(rest)
     payload = rest[used:]
+    _check_head(mode, w, n, pad, None, nbits, payload)
+    if mode == "dyndelta" and 8 * len(extra) < len(nbits):
+        raise CorruptBlobError("dyndelta blob's block mask is cut short")
     return mode, w, n, pad, extra, nbits, payload, None
 
 
@@ -405,8 +448,11 @@ def decode_batch(blobs: list[bytes]) -> list[np.ndarray]:
     batch: list = []
     scalar: list = []
     for i, buf in enumerate(blobs):
-        b0 = buf[0]
-        if (b0 == MAGIC2 or b0 == MAGIC3) and ((buf[1] >> 5) in _BATCH_MODES):
+        # a compact head is >= 5 bytes; shorter blobs go to _parse, which
+        # names what is cut
+        if len(buf) >= 5 and (buf[0] == MAGIC2 or buf[0] == MAGIC3) and (
+            (buf[1] >> 5) in _BATCH_MODES
+        ):
             batch.append(i)
         else:
             scalar.append(i)
@@ -431,7 +477,10 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
     """Vectorized parse of 'Z'/'Y' compact-head blobs; feeds each
     (mode, w) group straight into _group_pass with gathered concat
     arrays. Over-large headers (> _BATCH_MAX_RUNS runs) fall back to the
-    caller's ``groups`` dict (legacy per-blob parse)."""
+    caller's ``groups`` dict (legacy per-blob parse). Every read is
+    bounded by its own blob's end, and a blob whose head disagrees with
+    its block headers raises CorruptBlobError (the checks of _check_head,
+    vectorized)."""
     m = len(batch)
     L = np.fromiter((len(blobs[i]) for i in batch), np.int64, m)
     # trailing guard bytes: the 2-byte run-length varint read below
@@ -440,11 +489,16 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
         b"".join([blobs[i] for i in batch] + [b"\x00\x00"]), np.uint8
     )
     offs = _cumsum0(L)[:-1]
+    ends = offs + L
     packed = big[offs + 1].astype(np.int64)
     mode_c = (packed >> 5).astype(np.int64)
     w_arr = np.array([8, 16, 32, 64], np.int64)[(packed >> 3) & 3]
     pads = (packed & 7).astype(np.int64)
     is_y = big[offs] == MAGIC3
+    if (is_y & (mode_c > MODES["doubledelta"])).any():
+        raise CorruptBlobError("fire/raw blob with out-of-band first values")
+    if ((mode_c == MODES["fire"]) & (w_arr > 16)).any():
+        raise CorruptBlobError("fire blob of more than 16-bit elements")
     ns = (
         big[offs + 2].astype(np.int64)
         | (big[offs + 3].astype(np.int64) << 8)
@@ -453,15 +507,21 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
     zz0 = np.zeros(m, np.uint64)
     zz1 = np.zeros(m, np.uint64)
     y_sel = np.flatnonzero(is_y)
+
+    def y_varints(sel):
+        # the guard zeros end any varint by big's end; one that ends
+        # past its own blob's last byte is cut (nruns still follows)
+        v, p = rle.uvarints_at(big, pos[sel])
+        if (p >= ends[sel]).any():
+            raise CorruptBlobError("blob truncated inside a varint")
+        pos[sel] = p
+        return v
+
     if len(y_sel):
-        v, p = rle.uvarints_at(big, pos[y_sel])
-        zz0[y_sel] = v
-        pos[y_sel] = p
+        zz0[y_sel] = y_varints(y_sel)
         dd_sel = y_sel[mode_c[y_sel] == 1]
         if len(dd_sel):
-            v, p = rle.uvarints_at(big, pos[dd_sel])
-            zz1[dd_sel] = v
-            pos[dd_sel] = p
+            zz1[dd_sel] = y_varints(dd_sel)
     nruns = np.zeros(m, np.int64)
     z_sel = np.flatnonzero(~is_y)
     if len(z_sel):
@@ -469,7 +529,10 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
         pos[z_sel] += 1
     if len(y_sel):
         v, p = rle.uvarints_at(big, pos[y_sel])
-        nruns[y_sel] = v.astype(np.int64)
+        if (p > ends[y_sel]).any():
+            raise CorruptBlobError("blob truncated inside a varint")
+        # a count past int64 stays positive: it goes to _parse, which rejects it
+        nruns[y_sel] = np.minimum(v, np.uint64(1 << 62)).astype(np.int64)
         pos[y_sel] = p
     # over-large headers -> legacy parse (bounded masked-pass loop below)
     for j in np.flatnonzero(nruns > _BATCH_MAX_RUNS):
@@ -481,14 +544,16 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
     keep = nruns <= _BATCH_MAX_RUNS
     if not keep.all():
         batch = [b for b, k in zip(batch, keep) if k]
-        (L, offs, mode_c, w_arr, pads, is_y, ns, pos, zz0, zz1, nruns) = (
-            L[keep], offs[keep], mode_c[keep], w_arr[keep], pads[keep],
-            is_y[keep], ns[keep], pos[keep], zz0[keep], zz1[keep],
+        (L, offs, ends, mode_c, w_arr, pads, is_y, ns, pos, zz0, zz1, nruns) = (
+            L[keep], offs[keep], ends[keep], mode_c[keep], w_arr[keep],
+            pads[keep], is_y[keep], ns[keep], pos[keep], zz0[keep], zz1[keep],
             nruns[keep],
         )
         m = len(batch)
     if not m:
         return
+    if (pos + nruns > ends).any():
+        raise CorruptBlobError("blob truncated: more header runs than bytes left")
     # header run values: nruns[i] bytes at pos[i]
     total_runs = int(nruns.sum())
     run_base = _cumsum0(nruns)[:-1]
@@ -501,9 +566,11 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
         s = np.flatnonzero(nruns > k)
         b0 = big[cur[s]].astype(np.int64)
         two = (b0 & 0x80) != 0
-        ln = np.where(
-            two, (b0 & 0x7F) | (big[cur[s] + 1].astype(np.int64) << 7), b0
-        )
+        b1 = big[cur[s] + 1].astype(np.int64)
+        # cur <= its blob's end <= len(big) - 2, so both loads are in big
+        if ((cur[s] + 1 + two > ends[s]) | (two & (b1 >= 0x80))).any():
+            raise CorruptBlobError("blob truncated inside a header run length")
+        ln = np.where(two, (b0 & 0x7F) | (b1 << 7), b0)
         run_lens[run_base[s] + k] = ln
         cur[s] += 1 + two
     # per-blob block counts / expected+available payload bytes (BLOCK=8:
@@ -512,12 +579,18 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
     nblocks = rl_cum[run_base + nruns] - rl_cum[run_base]
     exp_cum = _cumsum0(run_vals.astype(np.int64) * run_lens)
     exp_bytes = exp_cum[run_base + nruns] - exp_cum[run_base]
-    avail = offs + L - cur
+    avail = ends - cur
+    if (
+        (BLOCK * nblocks != ns + pads).any()
+        or (avail > exp_bytes).any()
+        or (run_vals > np.repeat(w_arr, nruns)).any()
+    ):
+        raise CorruptBlobError("blob head disagrees with its block headers")
     nbits_all = np.repeat(run_vals, run_lens)
     blk_base = _cumsum0(nblocks)[:-1]
     # group by (mode, w) and gather each group's concat arrays
     for mc in np.unique(mode_c):
-        mode = _MODE_NAMES[int(mc)]
+        mode = _mode_name(int(mc))
         for w in np.unique(w_arr[mode_c == mc]):
             g = np.flatnonzero((mode_c == mc) & (w_arr == w))
             # nbits gather
@@ -999,6 +1072,13 @@ def _series_partials(vsum, vmax, vmin, starts, nonempty):
     return sums, maxs, mins
 
 
+def series_partials(values: np.ndarray, lengths: np.ndarray):
+    """Per-series (sum, max, min) of int64 ``values`` cut by ``lengths``,
+    as query_container_partials reports them."""
+    lengths = np.asarray(lengths, np.int64)
+    return _series_partials(values, values, values, _cumsum0(lengths)[:-1], lengths > 0)
+
+
 # Run fast path only when enough blocks are zero-width to pay for the
 # block-level bookkeeping; below this the plain vectorized cumsum decode
 # is faster (measured ~0.9x on run-free random walks, 4-10x on runs).
@@ -1223,8 +1303,7 @@ def query_container_partials(
     if w == 64 and _runs_worthwhile(nbits):
         d1_i = gaps.view(np.int64) if gaps is not None else np.zeros(len(ns), np.int64)
         return ns, *_run_partials_i64(nbits, payload, ns, x0s.view(np.int64), d1_i, mode)
-    v = _container_values(*head).astype(np.int64)
-    return ns, *_series_partials(v, v, v, _cumsum0(ns)[:-1], ns > 0)
+    return ns, *series_partials(_container_values(*head).astype(np.int64), ns)
 
 
 def decode_container(buf: bytes) -> tuple[np.ndarray, np.ndarray]:

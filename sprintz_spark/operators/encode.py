@@ -69,6 +69,7 @@ from pyspark.sql.types import (
 from sprintz_spark.codecs import gorilla
 from sprintz_spark.codecs import quantize as Q
 from sprintz_spark.codecs import sprintz as sz
+from sprintz_spark.codecs.extras import colsum_residual, colsum_restore
 
 try:  # C JSON parser if present — chunk metas are parsed once per blob
     from orjson import loads as _json_loads  # type: ignore
@@ -625,6 +626,129 @@ def query_encoded(
 
 
 # --- multi-series containers (the retention store layout) ------------------
+#
+# Each container row's ``meta`` records two lossless transforms its
+# encoder chose, and every reader undoes them from that meta alone:
+#
+#   * ``"ts": {..., "scale": s}`` — the ts blob holds ts // s, where s is
+#     the gcd of the container's ts (1 when that gcd is 0): a tier's
+#     whole-bucket micros are stored in bucket units.
+#   * ``"<col>": {..., "pred": "<base>"}`` — the blob holds the int64
+#     residual col - base (extras.colsum_residual; wraps) against a
+#     value column earlier in the meta, which lists the encoder's
+#     value_cols in order.
+#
+# A key the meta lacks means no transform: stores written before the
+# transforms read unchanged. Every blob is still a plain container of
+# the values it decodes to.
+
+_I64_MAX = int(np.iinfo(np.int64).max)
+
+
+def _encode_container_row(
+    ts: np.ndarray, vals: list[np.ndarray], value_cols: list[str], lens: np.ndarray
+) -> tuple[list[bytes], str]:
+    """The blobs (ts first, then ``value_cols``) and meta of one
+    container. A value column after the first is stored as its residual
+    against the column before it only when that blob is strictly
+    smaller — the cost rule of the 'auto' mode."""
+    g = int(np.gcd.reduce(ts)) if len(ts) else 0
+    scale = g if g > 0 else 1
+    blobs = [sz.encode_container(ts // scale if scale > 1 else ts, lens, "doubledelta")]
+    meta = {"ts": {"codec": "sprintz-container", "mode": "doubledelta", "scale": scale}}
+    for j, (c, v) in enumerate(zip(value_cols, vals)):
+        blob = sz.encode_container(v, lens, "auto")
+        meta[c] = {"codec": "sprintz-container", "np_dtype": "int64"}
+        if j:
+            resid = sz.encode_container(colsum_residual(v, [vals[j - 1]]), lens, "auto")
+            if len(resid) < len(blob):
+                blob = resid
+                meta[c]["pred"] = value_cols[j - 1]
+        blobs.append(blob)
+    return blobs, json.dumps(meta)
+
+
+def container_meta(meta: str) -> tuple[int, dict[str, str]]:
+    """(ts scale, {predicted column: base column}) of a container row's
+    meta. CorruptBlobError unless the meta is a JSON object of objects,
+    the scale a positive int64 and every base a column earlier in it."""
+    try:
+        m = _json_loads(meta)
+    except (ValueError, TypeError) as e:
+        raise sz.CorruptBlobError(f"container meta is not JSON ({e})") from None
+    if not isinstance(m, dict) or not all(isinstance(v, dict) for v in m.values()):
+        raise sz.CorruptBlobError("container meta is not a JSON object of objects")
+    scale = m.get("ts", {}).get("scale", 1)
+    if type(scale) is not int or not 0 < scale <= _I64_MAX:
+        raise sz.CorruptBlobError(f"container meta: ts scale {scale!r} is not a positive int64")
+    preds: dict[str, str] = {}
+    earlier: list[str] = []
+    for c, cm in m.items():
+        if c == "ts":
+            continue
+        if "pred" in cm:
+            if cm["pred"] not in earlier:
+                raise sz.CorruptBlobError(
+                    f"container meta: {c} is predicted from {cm['pred']!r}, "
+                    "not from an earlier column"
+                )
+            preds[c] = cm["pred"]
+        earlier.append(c)
+    return scale, preds
+
+
+def _int64_values(v: np.ndarray, col: str) -> np.ndarray:
+    if v.dtype.itemsize != 8:
+        raise sz.CorruptBlobError(
+            f"{col}: {8 * v.dtype.itemsize}-bit elements, the store writes 64"
+        )
+    return v.view(np.int64)
+
+
+def unscale_ts(ts: np.ndarray, scale: int) -> np.ndarray:
+    """A ts blob's decoded values times the meta's ``scale``, as int64
+    micros; CorruptBlobError when a product overflows int64."""
+    v = _int64_values(ts, "ts_blob")
+    if scale == 1:
+        return v
+    if len(v) and (v.max() > _I64_MAX // scale or v.min() < -((_I64_MAX + 1) // scale)):
+        raise sz.CorruptBlobError(f"ts_blob: a value times its scale {scale} overflows int64")
+    return v * np.int64(scale)
+
+
+def _restore(
+    column, i: int, col: str, preds: dict, memo: dict
+) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 values, series lengths) of value column ``col`` of
+    container row ``i``: its blob (``column(col)[i]``) decoded and, when
+    ``preds`` names a base for it, the base's values (restored the same
+    way, kept in ``memo``) added back."""
+    if col not in memo:
+        v, lens = sz.decode_container(column(col)[i])
+        v = _int64_values(v, f"blob_{col}")
+        base = preds.get(col)
+        if base is not None:
+            bv, blens = _restore(column, i, base, preds, memo)
+            if not np.array_equal(lens, blens):
+                raise sz.CorruptBlobError(f"blob_{col} and its base blob_{base} disagree")
+            v = colsum_restore(v, [bv])
+        memo[col] = v, lens
+    return memo[col]
+
+
+def _blob_columns(b: pa.RecordBatch):
+    """col -> the batch's ``blob_<col>`` cells as bytes, each column read
+    once; CorruptBlobError for a column the batch has no blobs of."""
+    cache: dict[str, list] = {}
+
+    def column(col: str) -> list:
+        if col not in cache:
+            if b.schema.get_field_index(f"blob_{col}") < 0:
+                raise sz.CorruptBlobError(f"container meta names {col}, which has no blobs")
+            cache[col] = b.column(f"blob_{col}").to_pylist()
+        return cache[col]
+
+    return column
 
 
 def encode_series_container(
@@ -647,7 +771,15 @@ def encode_series_container(
     a container holds fewer than 2 * ``chunk_rows`` rows (decode memory
     is bounded regardless of series length), and TTL expiry finds whole
     old pieces to drop. ``start_bucket`` / ``end_bucket`` are the
-    container's min / max bucket. int64 measures only."""
+    container's min / max bucket. int64 measures only.
+
+    Two lossless transforms run per container before encode_container,
+    each recorded in the row's ``meta`` JSON (see the section comment):
+    the ts blob holds ts // ``scale`` (the gcd of the container's ts, so
+    a tier's bucket micros become bucket units), and each value column
+    after the first, in ``value_cols`` order, is stored as its int64
+    residual against the column before it, with ``"pred": <that
+    column>`` in its meta, when that blob is strictly smaller."""
     if len(list(key_cols)) != 1:
         raise ValueError("container encoding supports a single key column")
     key = list(key_cols)[0]
@@ -669,10 +801,6 @@ def encode_series_container(
         StructField("encode_secs", DoubleType()),
     ] + [StructField(f"blob_{c}", BinaryType()) for c in value_cols]
     schema = StructType(fields)
-    meta = json.dumps({
-        "ts": {"codec": "sprintz-container", "mode": "doubledelta"},
-        **{c: {"codec": "sprintz-container", "np_dtype": "int64"} for c in value_cols},
-    })
 
     def enc(table: pa.Table) -> pa.Table:
         t0 = time.perf_counter()
@@ -689,12 +817,10 @@ def encode_series_container(
         offsets = np.append(firsts, len(p_starts))  # of each container's keys
         p_ends = p_starts + p_lens - 1
         lens = np.split(p_lens, firsts[1:])
-        cols = [ts] + [t.column(c).to_numpy().astype(np.int64, copy=False)
-                       for c in value_cols]
-        blobs = [
-            [sz.encode_container(v[lo:hi], ln, mode) for lo, hi, ln in
-             zip(bounds[:-1], bounds[1:], lens)]
-            for v, mode in zip(cols, ["doubledelta"] + ["auto"] * len(value_cols))
+        vals = [t.column(c).to_numpy().astype(np.int64, copy=False) for c in value_cols]
+        rows = [
+            _encode_container_row(ts[lo:hi], [v[lo:hi] for v in vals], value_cols, ln)
+            for lo, hi, ln in zip(bounds[:-1], bounds[1:], lens)
         ]
         n_cont = len(firsts)
         totals = np.diff(bounds)
@@ -709,12 +835,12 @@ def encode_series_container(
             "start_bucket": pa.array(np.minimum.reduceat(ts[p_starts], firsts), _UTC_US),
             "end_bucket": pa.array(np.maximum.reduceat(ts[p_ends], firsts), _UTC_US),
             "n": totals,
-            "ts_blob": blobs[0],
-            "meta": [meta] * n_cont,
-            "raw_bytes": totals * 8 * len(cols),
-            "comp_bytes": [sum(map(len, bs)) for bs in zip(*blobs)],
+            "ts_blob": [r[0][0] for r in rows],
+            "meta": [r[1] for r in rows],
+            "raw_bytes": totals * 8 * (1 + len(value_cols)),
+            "comp_bytes": [sum(map(len, r[0])) for r in rows],
         }
-        out |= {f"blob_{c}": bs for c, bs in zip(value_cols, blobs[1:])}
+        out |= {f"blob_{c}": [r[0][j] for r in rows] for j, c in enumerate(value_cols, 1)}
         if not drop_part:
             out[part_col] = pa.repeat(table.column(part_col)[0], n_cont)
         out["encode_secs"] = np.full(n_cont, (time.perf_counter() - t0) / n_cont)
@@ -740,8 +866,13 @@ def decode_series_container(
     """Explode container rows back to the original series rows (narrow;
     mapInArrow, one output batch per input batch). Any scalar column
     outside the container wire schema (e.g. the encoder's part_col,
-    whatever it was named) passes through per row. A row whose blobs
-    disagree with its ``keys`` / ``n`` or each other raises CorruptBlobError."""
+    whatever it was named) passes through per row. Each row's ``meta``
+    says how to undo its transforms: ts values are multiplied by its
+    ``scale`` and a column with a ``pred`` gets its base column's values
+    added back (the base restored first); absent keys mean neither. A
+    row whose blobs disagree with its ``keys`` / ``n`` or each other, or
+    whose meta is not valid (see container_meta) or scales a ts past
+    int64, raises CorruptBlobError."""
     key = list(key_cols)[0]
     value_cols = list(value_cols)
     wire = {
@@ -761,6 +892,7 @@ def decode_series_container(
             if not b.num_rows:
                 continue
             keys, n = b.column("keys"), b.column("n").to_numpy(zero_copy_only=False)
+            metas = list(map(container_meta, b.column("meta").to_pylist()))
             ts, counts = zip(*map(sz.decode_container, b.column("ts_blob").to_pylist()))
             series_ns = _series_lengths(counts, keys)
             if not np.array_equal([c.sum() for c in counts], n):
@@ -769,14 +901,19 @@ def decode_series_container(
             arrays = [b.column(p).take(rows) for p in extra]
             key_idx = np.repeat(np.arange(len(series_ns)), series_ns)
             arrays.append(keys.flatten().take(key_idx))
-            arrays.append(pa.array(np.concatenate(ts).view(np.int64), _UTC_US))
+            arrays.append(pa.array(
+                np.concatenate([unscale_ts(t, m[0]) for t, m in zip(ts, metas)]), _UTC_US
+            ))
+            column = _blob_columns(b)
+            memos = [{} for _ in metas]
             for c in value_cols:
-                vals, lens = zip(
-                    *map(sz.decode_container, b.column(f"blob_{c}").to_pylist())
-                )
-                if not all(map(np.array_equal, lens, counts)):
-                    raise sz.CorruptBlobError(f"blob_{c} disagrees with ts_blob")
-                arrays.append(pa.array(np.concatenate(vals).view(np.int64)))
+                vals = []
+                for i, ((_, preds), memo) in enumerate(zip(metas, memos)):
+                    v, lens = _restore(column, i, c, preds, memo)
+                    if not np.array_equal(lens, counts[i]):
+                        raise sz.CorruptBlobError(f"blob_{c} disagrees with ts_blob")
+                    vals.append(v)
+                arrays.append(pa.array(np.concatenate(vals)))
             yield pa.RecordBatch.from_arrays(arrays, names=schema.names)
 
     return enc.mapInArrow(dec, schema)
@@ -791,20 +928,31 @@ def query_encoded_container(
     partials come from one query_container_partials per blob (the RLE-run
     fast path where enough blocks are zero-width, else a decode of the
     parsed head and a reduceat); Catalyst's partial+final aggregate
-    combines across containers/partitions. No materialization."""
+    combines across containers/partitions. No materialization. A row
+    whose meta gives ``value_col`` a ``pred`` cannot aggregate from
+    headers (max(base + r) is not built from partials): it decodes the
+    column and its chain of base columns and reduces the restored values
+    (codecs.sprintz.series_partials). The ts blob and its ``scale`` are
+    not read. A row with an invalid meta raises CorruptBlobError."""
     key_t = enc.schema["keys"].dataType.elementType
     schema = _partials_schema([StructField(key_col, key_t)])
-    blob_col = f"blob_{value_col}"
 
     def partials(batches):
         for b in batches:
             if not b.num_rows:
                 continue
-            # RLE-run fast path: per-series partials from block headers
-            # (constant/affine runs never unpack payload)
-            ns, sums, maxs, mins = zip(
-                *map(sz.query_container_partials, b.column(blob_col).to_pylist())
-            )
+            column = _blob_columns(b)
+            parts = []
+            for i, m in enumerate(b.column("meta").to_pylist()):
+                _, preds = container_meta(m)
+                if value_col in preds:
+                    v, lens = _restore(column, i, value_col, preds, {})
+                    parts.append((lens, *sz.series_partials(v, lens)))
+                else:
+                    # RLE-run fast path: per-series partials from block
+                    # headers (constant/affine runs never unpack payload)
+                    parts.append(sz.query_container_partials(column(value_col)[i]))
+            ns, sums, maxs, mins = zip(*parts)
             keys = b.column("keys")
             arrays = [keys.flatten()]
             arrays += [pa.array(np.concatenate(x)) for x in (sums, maxs, mins)]

@@ -43,9 +43,11 @@ from sprintz_spark.codecs import sprintz as sz
 from sprintz_spark.operators import rollup as R
 from sprintz_spark.operators.encode import (
     DEFAULT_CHUNK,
+    container_meta,
     decode_series_container,
     encode_series_container,
     query_encoded_container,
+    unscale_ts,
 )
 from sprintz_spark.session import local_values_df
 
@@ -419,11 +421,18 @@ def query_tier(
     return query_encoded_container(enc, value_col, key_col="url")
 
 
-def _check_container(blobs: list[bytes], n_keys: int, n: int) -> str | None:
+def _check_container(
+    blobs: list[bytes], n_keys: int, n: int, meta: str, start: int, end: int
+) -> str | None:
     """None when every blob of one container row re-encodes to its own
     bytes (ts by doubledelta, measures by auto, as the encoder writes
-    them) and holds ``n_keys`` series of ``n`` rows in total; otherwise
-    what is wrong."""
+    them), holds ``n_keys`` series of ``n`` rows in total, the row's
+    ``meta`` is valid, and its ts, times the meta's scale, span exactly
+    [``start``, ``end``] (epoch micros); otherwise what is wrong."""
+    try:
+        scale, _ = container_meta(meta)
+    except sz.CorruptBlobError as e:
+        return f"meta: {e}"
     lens0 = None
     for col, blob in zip(_BLOB_COLS, blobs):
         mode = "doubledelta" if col == "ts_blob" else "auto"
@@ -440,6 +449,13 @@ def _check_container(blobs: list[bytes], n_keys: int, n: int) -> str | None:
                 return (f"{col}: {len(lens)} series of {lens.sum()} rows, "
                         f"row says {n_keys} of {n}")
             lens0 = lens
+            try:
+                ts = unscale_ts(v, scale)
+            except sz.CorruptBlobError as e:
+                return str(e)
+            if len(ts) and (ts.min(), ts.max()) != (start, end):
+                return (f"{col}: buckets span [{ts.min()}, {ts.max()}] us, row "
+                        f"says [{start}, {end}]")
         elif not np.array_equal(lens, lens0):
             return f"{col}: series lengths differ from ts_blob's"
     return None
@@ -449,7 +465,8 @@ def verify_snapshot(spark: SparkSession, out_dir: str, snapshot_id: str) -> dict
     """Check every stored blob of a snapshot without its input: one
     mapInArrow over the snapshot's encoded tiers decodes each container
     blob, re-encodes it and requires the same bytes, and requires each
-    row's ``keys`` and ``n`` to match its blobs (_check_container); the
+    row's ``keys``, ``n``, ``meta`` and bucket range to match its blobs
+    (_check_container); the
     rows per (tier, part) must then equal the manifest's ``n_rows``.
     Raises CorruptBlobError naming the first mismatches; returns
     {tier: {containers, rows}}."""
@@ -468,20 +485,28 @@ def verify_snapshot(spark: SparkSession, out_dir: str, snapshot_id: str) -> dict
         spark,
         [_enc_dir(out_dir, snapshot_id, t) for t in tiers],
         os.path.join(out_dir, f"snap={snapshot_id}"),
-    ).select("encoded_tier", "part", "keys", "n", *_BLOB_COLS)
+    ).select(
+        "encoded_tier", "part", "keys", "n", "meta", "start_bucket", "end_bucket",
+        *_BLOB_COLS,
+    )
 
     def check(batches):
         for b in batches:
-            n_keys = b.column("keys").value_lengths().to_pylist()
             blobs = zip(*(b.column(c).to_pylist() for c in _BLOB_COLS))
+            # the zero-copy int64 cast of a UTC timestamp: epoch micros
+            rows = zip(
+                blobs,
+                b.column("keys").value_lengths().to_pylist(),
+                b.column("n").to_pylist(),
+                b.column("meta").to_pylist(),
+                b.column("start_bucket").cast(pa.int64()).to_pylist(),
+                b.column("end_bucket").cast(pa.int64()).to_pylist(),
+            )
             yield pa.RecordBatch.from_pydict({
                 "tier": b.column("encoded_tier"),
                 "part": b.column("part"),
                 "rows": b.column("n"),
-                "bad": [
-                    _check_container(list(bl), k, n)
-                    for bl, k, n in zip(blobs, n_keys, b.column("n").to_pylist())
-                ],
+                "bad": [_check_container(list(bl), *rest) for bl, *rest in rows],
             })
 
     got = (

@@ -586,6 +586,44 @@ def test_corrupt_raw_container_raises_only_corrupt_blob_error():
                     pass
 
 
+def test_corrupt_raw_sz1_blob_raises_only_corrupt_blob_error():
+    """Cut and 0xFF-stamped raw compact-head SZ1 blobs ('Y' for delta /
+    doubledelta, 'Z' for fire / raw) either return or raise
+    CorruptBlobError from decode_batch, decode_column and
+    query_batch_partials: no IndexError, KeyError (an unknown mode code)
+    or bare numpy ValueError gets out."""
+    r = np.random.default_rng(9)
+    blobs = []
+    for w in (8, 16, 32, 64):
+        modes = ["delta", "doubledelta", "raw"] + ["fire"] * (w <= 16)
+        for mode in modes:
+            n = int(r.integers(20, 60))
+            v = np.cumsum(r.integers(-300, 300, n)).astype(f"int{w}")
+            blobs.append(sz.encode_column(v, mode, deflate=False))
+
+    def mutants(blob):
+        for k in range(len(blob)):
+            yield blob[:k]
+        for _ in range(60):
+            b = bytearray(blob)
+            b[int(r.integers(0, len(b)))] = 0xFF
+            yield bytes(b)
+
+    calls = (
+        lambda b: sz.decode_batch([b]),
+        sz.decode_column,
+        lambda b: sz.query_batch_partials([b]),
+    )
+    for blob in blobs:
+        assert blob[:1] in (b"Y", b"Z")
+        for bad in mutants(blob):
+            for fn in calls:
+                try:
+                    fn(bad)
+                except sz.CorruptBlobError:
+                    pass
+
+
 def test_magic_check_survives_python_O():
     """The SZ1, container and HUF1 magic checks are raises, not asserts:
     ``python -O`` keeps them."""

@@ -475,8 +475,14 @@ def test_container_piece_cap_roundtrip(spark, pages_small):
 def test_container_short_series_layout_unchanged(spark, pages_small):
     """With every series at most chunk_rows rows, containers pack WHOLE
     series by cumulative row offset and their blobs are exactly
-    codecs.sprintz.encode_container over those whole series."""
+    codecs.sprintz.encode_container over those whole series, transformed
+    as the row's meta names: ts divided by its ``scale`` (the gcd of the
+    container's ts), a measure with a ``pred`` as its residual against
+    the measure before it. Each recorded choice is the smaller blob."""
+    import json
+
     from sprintz_spark.codecs import sprintz as sz
+    from sprintz_spark.codecs.extras import colsum_residual
     from sprintz_spark.operators.encode import encode_series_container
 
     t1d = R.derive_series(pages_small, "1d").withColumn("p", F.lit(0))
@@ -496,19 +502,36 @@ def test_container_short_series_layout_unchanged(spark, pages_small):
     cont = (lens.cumsum() - lens) // chunk_rows
     assert len(enc) == cont.nunique() > 1
     ts = want["bucket"].astype("datetime64[us]").to_numpy().view(np.int64)
+    preds = 0
     for row in enc.itertuples():
         keys = cont.index[cont == row.chunk].tolist()
         assert list(row.keys) == keys
         sel = want["url"].isin(keys).to_numpy()
         lens_c = lens[keys].to_numpy()
-        assert row.ts_blob == sz.encode_container(ts[sel], lens_c, "doubledelta")
-        for c in cols:
-            blob = sz.encode_container(
-                want[c].to_numpy(np.int64)[sel], lens_c, "auto"
-            )
-            assert getattr(row, f"blob_{c}") == blob
+        meta = json.loads(row.meta)
+        scale = meta["ts"]["scale"]
+        assert scale == np.gcd.reduce(ts[sel]) > 1
+        assert row.ts_blob == sz.encode_container(ts[sel] // scale, lens_c, "doubledelta")
+        for j, c in enumerate(cols):
+            v = want[c].to_numpy(np.int64)[sel]
+            plain = sz.encode_container(v, lens_c, "auto")
+            if j == 0:
+                assert "pred" not in meta[c]
+                assert getattr(row, f"blob_{c}") == plain
+                continue
+            base = want[cols[j - 1]].to_numpy(np.int64)[sel]
+            resid = sz.encode_container(colsum_residual(v, [base]), lens_c, "auto")
+            if meta[c].get("pred") == cols[j - 1]:
+                preds += 1
+                assert getattr(row, f"blob_{c}") == resid
+                assert len(resid) < len(plain)
+            else:
+                assert "pred" not in meta[c]
+                assert getattr(row, f"blob_{c}") == plain
+                assert len(plain) <= len(resid)
         assert row.start_bucket == want["bucket"][sel].min()
         assert row.end_bucket == want["bucket"][sel].max()
+    assert preds  # some container stores a measure as a residual
 
 
 def test_expire_tier_drops_pieces_of_long_series(spark, pages_small, tmp_path):

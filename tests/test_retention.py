@@ -4,6 +4,7 @@ byte-identical tier output and that completed partitions were skipped)."""
 
 import datetime as dt
 import glob
+import json
 import os
 import shutil
 
@@ -585,9 +586,10 @@ def test_cli_verify_after_compact_and_expire(spark, tmp_path, capsys):
 def test_verify_snapshot_rejects_truncated_blob_and_wrong_n_rows(
     spark, pages_small, tmp_path
 ):
-    """One truncated blob, one blob whose width code is flipped, or one
-    manifest n_rows off by one, makes verify_snapshot raise
-    CorruptBlobError; the untouched store passes."""
+    """One truncated blob, one blob whose width code is flipped, one
+    end_bucket that is not its container's last bucket, or one manifest
+    n_rows off by one, makes verify_snapshot raise CorruptBlobError; the
+    untouched store passes."""
     import numpy as np
 
     from sprintz_spark.codecs import sprintz as sz
@@ -600,19 +602,7 @@ def test_verify_snapshot_rejects_truncated_blob_and_wrong_n_rows(
     assert all(v["containers"] > 0 for v in rep.values())
 
     def rewrite_first_blob(name, col, fn):
-        """A copy of the clean store whose first ``col`` blob of tier 1h
-        part 0 is replaced by fn(blob)."""
-        out = str(tmp_path / name)
-        shutil.copytree(clean, out)
-        path = sorted(glob.glob(f"{out}/snap=s1/encoded_tier=1h/part=0/*.parquet"))[0]
-        t = pq.read_table(path)
-        blobs = t.column(col).to_pylist()
-        blobs[0] = fn(blobs[0])
-        t = t.set_column(t.schema.get_field_index(col), col, pa.array(blobs, pa.binary()))
-        pq.write_table(t, path, use_deprecated_int96_timestamps=True)
-        # drop Hadoop's checksum sidecar, which no longer matches the file
-        os.remove(os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc"))
-        return out
+        return _rewrite_first_cell(clean, str(tmp_path / name), col, fn)
 
     blob = rewrite_first_blob("blob", "blob_byte_size_sum", lambda b: b[:-3])
     with pytest.raises(CorruptBlobError, match="tier 1h part 0: blob_byte_size_sum"):
@@ -632,6 +622,10 @@ def test_verify_snapshot_rejects_truncated_blob_and_wrong_n_rows(
     with pytest.raises(CorruptBlobError, match="blob_crawl_count: 32-bit elements"):
         RT.verify_snapshot(spark, width, "s1")
 
+    late = rewrite_first_blob("late", "end_bucket", lambda t: t + dt.timedelta(hours=1))
+    with pytest.raises(CorruptBlobError, match="tier 1h part 0: ts_blob: buckets span"):
+        RT.verify_snapshot(spark, late, "s1")
+
     rows = str(tmp_path / "rows")
     shutil.copytree(clean, rows)
     man_path = os.path.join(rows, "manifest")
@@ -641,3 +635,164 @@ def test_verify_snapshot_rejects_truncated_blob_and_wrong_n_rows(
     spark.createDataFrame(man).write.parquet(man_path)
     with pytest.raises(CorruptBlobError, match="manifest says"):
         RT.verify_snapshot(spark, rows, "s1")
+
+
+def _rewrite_parquet(path, fn):
+    """Replace the parquet file ``path`` of a Spark-written store by
+    fn(its table), timestamps kept as the store writes them."""
+    pq.write_table(fn(pq.read_table(path)), path, use_deprecated_int96_timestamps=True)
+    # drop Hadoop's checksum sidecar, which no longer matches the file
+    os.remove(os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc"))
+
+
+def _set_cells(t, col, cells):
+    field = t.schema.field(col)
+    return t.set_column(t.schema.get_field_index(col), field, pa.array(cells, field.type))
+
+
+def _rewrite_first_cell(src, dst, col, fn):
+    """A copy at ``dst`` of the store ``src`` whose first ``col`` cell of
+    snapshot s1, tier 1h, part 0 is replaced by fn(cell)."""
+    shutil.copytree(src, dst)
+    path = sorted(glob.glob(f"{dst}/snap=s1/encoded_tier=1h/part=0/*.parquet"))[0]
+
+    def first(t):
+        cells = t.column(col).to_pylist()
+        cells[0] = fn(cells[0])
+        return _set_cells(t, col, cells)
+
+    _rewrite_parquet(path, first)
+    return dst
+
+
+def _altered_meta(change):
+    """A meta rewrite: ``change`` mutates the parsed meta dict."""
+    def fn(s):
+        meta = json.loads(s)
+        change(meta)
+        return json.dumps(meta)
+    return fn
+
+
+_META_FAULTS = {
+    "not_json": lambda s: s[: len(s) // 2],
+    "scale_zero": _altered_meta(lambda m: m["ts"].update(scale=0)),
+    "scale_float": _altered_meta(lambda m: m["ts"].update(scale=float(m["ts"]["scale"]))),
+    "scale_overflows": _altered_meta(lambda m: m["ts"].update(scale=1 << 62)),
+    "pred_later_column": _altered_meta(
+        lambda m: m["crawl_count"].update(pred="byte_size_min")
+    ),
+}
+
+
+def test_container_meta_faults_raise_corrupt_blob_error(spark, pages_small, tmp_path):
+    """A container row whose meta is not JSON, whose ts scale is not a
+    positive integer or scales a ts past int64, or which predicts a
+    column from one that is not earlier, makes decode, range read and
+    verify_snapshot raise CorruptBlobError; query_tier raises it too,
+    except for the overflow, which cannot reach its answer: it never
+    reads ts."""
+    from sprintz_spark.codecs.sprintz import CorruptBlobError
+
+    clean = str(tmp_path / "clean")
+    RT.run_retention(pages_small, clean, "s1", n_buckets=2, chunk_rows=64)
+    lo, hi = dt.datetime(2000, 1, 1), dt.datetime(2100, 1, 1)
+    for fault, fn in _META_FAULTS.items():
+        out = _rewrite_first_cell(clean, str(tmp_path / fault), "meta", fn)
+        reads = [
+            lambda: RT.read_tier_decoded(spark, out, "s1", "1h").collect(),
+            lambda: RT.read_tier_range(spark, out, "s1", "1h", lo, hi).collect(),
+        ]
+        if fault != "scale_overflows":
+            reads.append(
+                lambda: RT.query_tier(spark, out, "s1", "1h", "byte_size_max").collect()
+            )
+        for read in reads:
+            with pytest.raises(Exception, match="CorruptBlobError: (container meta|ts_blob)"):
+                read()
+        with pytest.raises(CorruptBlobError, match="tier 1h part 0: (meta|ts_blob)"):
+            RT.verify_snapshot(spark, out, "s1")
+
+
+def _write_legacy_rows(store):
+    """Rewrite every container row under ``store`` as stores written
+    before the container transforms were: plain ts and measure blobs
+    under one constant meta with neither ``scale`` nor ``pred``."""
+    from sprintz_spark.codecs import sprintz as sz
+    from sprintz_spark.operators.encode import container_meta
+
+    legacy_meta = json.dumps({
+        "ts": {"codec": "sprintz-container", "mode": "doubledelta"},
+        **{c: {"codec": "sprintz-container", "np_dtype": "int64"} for c in RT.MEASURES},
+    })
+
+    def plain(t):
+        cols = {c: t.column(c).to_pylist() for c in RT._BLOB_COLS}
+        for i, meta in enumerate(t.column("meta").to_pylist()):
+            scale, preds = container_meta(meta)
+            ts, lens = sz.decode_container(cols["ts_blob"][i])
+            cols["ts_blob"][i] = sz.encode_container(ts.view("int64") * scale, lens, "doubledelta")
+            vals = {}
+            for c in RT.MEASURES:
+                v = sz.decode_container(cols[f"blob_{c}"][i])[0].view("int64")
+                vals[c] = v + vals[preds[c]] if c in preds else v
+                cols[f"blob_{c}"][i] = sz.encode_container(vals[c], lens, "auto")
+        for c, cells in cols.items():
+            t = _set_cells(t, c, cells)
+        return _set_cells(t, "meta", [legacy_meta] * t.num_rows)
+
+    paths = glob.glob(f"{store}/snap=*/encoded_tier=*/part=*/*.parquet")
+    assert paths
+    for path in paths:
+        _rewrite_parquet(path, plain)
+    return legacy_meta
+
+
+def test_legacy_store_reads_unchanged(spark, pages_small, tmp_path):
+    """A store whose rows carry the constant meta and plain blobs of the
+    stores written before the container transforms gives the same
+    answers from every reader, compaction, expiry and verify as the same
+    data written today; compacting it writes the transforms' meta."""
+    new = str(tmp_path / "new")
+    RT.run_retention(pages_small, new, "s1", n_buckets=2, chunk_rows=64)
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(new, legacy)
+    legacy_meta = _write_legacy_rows(legacy)
+    metas = {
+        store: set(
+            spark.read.parquet(f"{store}/snap=s1").select("meta").toPandas()["meta"]
+        )
+        for store in (new, legacy)
+    }
+    assert metas[legacy] == {legacy_meta} and legacy_meta not in metas[new]
+
+    def answers(store):
+        got = {"verify": RT.verify_snapshot(spark, store, "s1")}
+        for tier in ("1m", "1h", "1d"):
+            got[tier] = _decode_tier(spark, store, tier, snap="s1")
+            for c in RT.MEASURES:
+                got[tier, c] = (
+                    RT.query_tier(spark, store, "s1", tier, c).toPandas()
+                    .sort_values("url").reset_index(drop=True)
+                )
+        cut = got["1m"]["bucket"].sort_values().iloc[len(got["1m"]) // 2]
+        got["range"] = (
+            RT.read_tier_range(spark, store, "s1", "1m", cut, cut + dt.timedelta(hours=6))
+            .toPandas().sort_values(["url", "bucket"]).reset_index(drop=True)
+        )
+        got["compact"] = RT.compact_tiers(spark, store, ["s1"], "c1", n_buckets=2, chunk_rows=64)
+        got["expire"] = RT.expire_tier(spark, store, "c1", "1h", cut)
+        got["expired"] = _decode_tier(spark, store, "1h", snap="c1")
+        got["verify_c1"] = RT.verify_snapshot(spark, store, "c1")
+        return got
+
+    want, got = answers(new), answers(legacy)
+    assert want.keys() == got.keys()
+    for k in want:
+        if isinstance(want[k], pd.DataFrame):
+            pd.testing.assert_frame_equal(got[k], want[k], obj=str(k))
+        else:
+            assert got[k] == want[k], k
+    assert want["expire"]["chunks_dropped"] > 0
+    compacted = spark.read.parquet(f"{legacy}/snap=c1").select("meta").toPandas()["meta"]
+    assert all("scale" in json.loads(m)["ts"] for m in compacted)
