@@ -71,10 +71,6 @@ def run_pipeline(spark, n_rows: int) -> dict:
                 t: round(v["disk_bytes"] / v["raw_bytes"], 4)
                 for t, v in sorted(ratios.items())
             },
-            "tier_encode_rows_per_sec": {
-                t: round(v["encode_rows_per_sec"], 1)
-                for t, v in sorted(ratios.items())
-            },
         }
         # decode-only throughput (the reference's headline is decompression
         # speed): every tier of the store just written, decoded into a noop

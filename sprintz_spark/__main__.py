@@ -16,9 +16,9 @@ package zip travels to executors):
 
 Every command works on one retention store (plans.retention). Each prints
 ONE JSON metrics line (rows, seconds, rows/sec, and per-tier compression
-ratios where applicable) — the manifest carries the same metrics per
+ratios where applicable) — the manifest carries the rows and bytes per
 partition for lineage. ``verify`` re-encodes every stored blob and checks
-the row counts against the manifest; it raises CorruptBlobError on any
+the row and byte counts against the manifest; it raises CorruptBlobError on any
 mismatch.
 """
 

@@ -46,7 +46,6 @@ encoding happens AFTER rollup.
 from __future__ import annotations
 
 import json
-import time
 
 import numpy as np
 import pandas as pd
@@ -58,6 +57,7 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     BooleanType,
+    DataType,
     DoubleType,
     LongType,
     StringType,
@@ -344,7 +344,6 @@ def _enc_schema(key_cols: list[str], value_cols: list[str], key_types) -> Struct
         StructField("meta", StringType()),
         StructField("raw_bytes", LongType()),
         StructField("comp_bytes", LongType()),
-        StructField("encode_secs", DoubleType()),
     ]
     fields += [StructField(f"blob_{c}", BinaryType()) for c in value_cols]
     return StructType(fields)
@@ -459,7 +458,6 @@ def encode_series(
     ts_meta = {"ts": {"codec": "sprintz", "mode": "doubledelta"}}
 
     def enc(table: pa.Table) -> pa.Table:
-        t0 = time.perf_counter()
         t, ts, piece_ord, piece_starts, piece_lens = _sort_pieces(
             table, key_cols, ts_col, chunk_rows
         )
@@ -505,7 +503,6 @@ def encode_series(
                 sum(map(len, bs))
                 for bs in zip(out["ts_blob"], *(out[f"blob_{c}"] for c in value_cols))
             ],
-            "encode_secs": np.full(n_pieces, (time.perf_counter() - t0) / n_pieces),
         }
         return pa.Table.from_pydict(out).select(schema.names)
 
@@ -644,14 +641,36 @@ def query_encoded(
 
 _I64_MAX = int(np.iinfo(np.int64).max)
 
+# Fewest bytes a residual blob must save to be kept: a predicted column
+# cannot aggregate from block headers. On the perfbench stores predicting
+# byte_size_sum saved at most 11 B a container, byte_size_max/min 48 B+.
+_PRED_MIN_SAVING = 16
+
+
+def container_schema(key_t: DataType, value_cols: list[str]) -> StructType:
+    """The container row, declared once. It stores nothing a reader can
+    derive: series count, raw and compressed bytes follow from ``keys``,
+    ``n`` and the blob lengths."""
+    return StructType(
+        [
+            StructField("keys", ArrayType(key_t)),
+            StructField("start_bucket", TimestampType()),
+            StructField("end_bucket", TimestampType()),
+            StructField("n", LongType()),
+            StructField("ts_blob", BinaryType()),
+            StructField("meta", StringType()),
+        ]
+        + [StructField(f"blob_{c}", BinaryType()) for c in value_cols]
+    )
+
 
 def _encode_container_row(
     ts: np.ndarray, vals: list[np.ndarray], value_cols: list[str], lens: np.ndarray
 ) -> tuple[list[bytes], str]:
     """The blobs (ts first, then ``value_cols``) and meta of one
     container. A value column after the first is stored as its residual
-    against the column before it only when that blob is strictly
-    smaller — the cost rule of the 'auto' mode."""
+    against the column before it only when that blob is at least
+    ``_PRED_MIN_SAVING`` bytes smaller."""
     g = int(np.gcd.reduce(ts)) if len(ts) else 0
     scale = g if g > 0 else 1
     blobs = [sz.encode_container(ts // scale if scale > 1 else ts, lens, "doubledelta")]
@@ -661,7 +680,7 @@ def _encode_container_row(
         meta[c] = {"codec": "sprintz-container", "np_dtype": "int64"}
         if j:
             resid = sz.encode_container(colsum_residual(v, [vals[j - 1]]), lens, "auto")
-            if len(resid) < len(blob):
+            if len(resid) + _PRED_MIN_SAVING <= len(blob):
                 blob = resid
                 meta[c]["pred"] = value_cols[j - 1]
         blobs.append(blob)
@@ -779,31 +798,20 @@ def encode_series_container(
     a tier's bucket micros become bucket units), and each value column
     after the first, in ``value_cols`` order, is stored as its int64
     residual against the column before it, with ``"pred": <that
-    column>`` in its meta, when that blob is strictly smaller."""
+    column>`` in its meta, when that blob saves at least
+    ``_PRED_MIN_SAVING`` bytes. Rows follow container_schema, after
+    ``part_col`` when the caller names it."""
     if len(list(key_cols)) != 1:
         raise ValueError("container encoding supports a single key column")
     key = list(key_cols)[0]
     value_cols = list(value_cols)
     df, part_col, drop_part = _pin_parts(df, [key], part_col, n_parts)
-    key_t = df.schema[key].dataType
-    part_t = df.schema[part_col].dataType
-    fields = ([] if drop_part else [StructField(part_col, part_t)]) + [
-        StructField("chunk", LongType()),
-        StructField("n_series", LongType()),
-        StructField("keys", ArrayType(key_t)),
-        StructField("start_bucket", TimestampType()),
-        StructField("end_bucket", TimestampType()),
-        StructField("n", LongType()),
-        StructField("ts_blob", BinaryType()),
-        StructField("meta", StringType()),
-        StructField("raw_bytes", LongType()),
-        StructField("comp_bytes", LongType()),
-        StructField("encode_secs", DoubleType()),
-    ] + [StructField(f"blob_{c}", BinaryType()) for c in value_cols]
-    schema = StructType(fields)
+    schema = container_schema(df.schema[key].dataType, value_cols)
+    if not drop_part:
+        part_f = StructField(part_col, df.schema[part_col].dataType)
+        schema = StructType([part_f] + schema.fields)
 
     def enc(table: pa.Table) -> pa.Table:
-        t0 = time.perf_counter()
         t, ts, _, p_starts, p_lens = _sort_pieces(table, [key], ts_col, chunk_rows)
         n = t.num_rows
         # the pieces tile the rows, so a piece's first row is its
@@ -822,11 +830,7 @@ def encode_series_container(
             _encode_container_row(ts[lo:hi], [v[lo:hi] for v in vals], value_cols, ln)
             for lo, hi, ln in zip(bounds[:-1], bounds[1:], lens)
         ]
-        n_cont = len(firsts)
-        totals = np.diff(bounds)
         out = {
-            "chunk": cont[firsts],
-            "n_series": np.diff(offsets),
             "keys": pa.ListArray.from_arrays(
                 offsets, t.column(key).take(p_starts).combine_chunks()
             ),
@@ -834,16 +838,13 @@ def encode_series_container(
             # spans its pieces' first and last buckets
             "start_bucket": pa.array(np.minimum.reduceat(ts[p_starts], firsts), _UTC_US),
             "end_bucket": pa.array(np.maximum.reduceat(ts[p_ends], firsts), _UTC_US),
-            "n": totals,
+            "n": np.diff(bounds),
             "ts_blob": [r[0][0] for r in rows],
             "meta": [r[1] for r in rows],
-            "raw_bytes": totals * 8 * (1 + len(value_cols)),
-            "comp_bytes": [sum(map(len, r[0])) for r in rows],
         }
         out |= {f"blob_{c}": [r[0][j] for r in rows] for j, c in enumerate(value_cols, 1)}
         if not drop_part:
-            out[part_col] = pa.repeat(table.column(part_col)[0], n_cont)
-        out["encode_secs"] = np.full(n_cont, (time.perf_counter() - t0) / n_cont)
+            out[part_col] = pa.repeat(table.column(part_col)[0], len(rows))
         return pa.Table.from_pydict(out).select(schema.names)
 
     return df.groupBy(part_col).applyInArrow(enc, schema)
@@ -865,8 +866,8 @@ def decode_series_container(
 ) -> DataFrame:
     """Explode container rows back to the original series rows (narrow;
     mapInArrow, one output batch per input batch). Any scalar column
-    outside the container wire schema (e.g. the encoder's part_col,
-    whatever it was named) passes through per row. Each row's ``meta``
+    outside container_schema (e.g. the encoder's part_col, whatever it
+    was named) passes through per row. Each row's ``meta``
     says how to undo its transforms: ts values are multiplied by its
     ``scale`` and a column with a ``pred`` gets its base column's values
     added back (the base restored first); absent keys mean neither. A
@@ -875,12 +876,9 @@ def decode_series_container(
     int64, raises CorruptBlobError."""
     key = list(key_cols)[0]
     value_cols = list(value_cols)
-    wire = {
-        "chunk", "n_series", "keys", "start_bucket", "end_bucket", "n",
-        "ts_blob", "meta", "raw_bytes", "comp_bytes", "encode_secs",
-    } | {f"blob_{c}" for c in value_cols}
-    extra = [c for c in enc.columns if c not in wire]
     key_t = enc.schema["keys"].dataType.elementType
+    wire = set(container_schema(key_t, value_cols).names)
+    extra = [c for c in enc.columns if c not in wire]
     schema = StructType(
         [StructField(p, enc.schema[p].dataType) for p in extra]
         + [StructField(key, key_t), StructField(ts_col, TimestampType())]

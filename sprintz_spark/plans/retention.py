@@ -6,9 +6,10 @@ Lineage model (north_star: "resumable from a per-partition checkpoint
 manifest carrying lineage (source Iceberg snapshot-id, block offsets) and
 encode-throughput metrics"): in this sandbox the source-of-truth table is
 parquet, so ``snapshot_id`` is caller-supplied (in an Iceberg deployment it
-is the snapshot being read; the manifest schema is identical). Per-chunk
-"block offsets" (chunk index, row count, start bucket) live in the encoded
-tier parquet; the manifest carries per-(tier, part) rollup metrics.
+is the snapshot being read; the manifest schema is identical). Per-container
+"block offsets" (keys, row count, bucket range) live in the encoded tier
+parquet; the manifest carries per-(tier, part) counts and bytes derived
+from them. Neither stores a timing: reruns write equal data.
 
 Resume semantics: a (tier, part, snapshot_id) row in the manifest means
 that partition's output is complete. ``run_retention`` anti-joins pending
@@ -36,14 +37,16 @@ from urllib.parse import urlparse
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructType
 
 from sprintz_spark.codecs import sprintz as sz
 from sprintz_spark.operators import rollup as R
 from sprintz_spark.operators.encode import (
     DEFAULT_CHUNK,
     container_meta,
+    container_schema,
     decode_series_container,
     encode_series_container,
     query_encoded_container,
@@ -53,6 +56,12 @@ from sprintz_spark.session import local_values_df
 
 MEASURES = ["crawl_count", "byte_size_sum", "byte_size_max", "byte_size_min"]
 _BLOB_COLS = ["ts_blob"] + [f"blob_{c}" for c in MEASURES]
+# An encoded-tier read: the container row, then the directory columns
+_ROW_COLS = container_schema(StringType(), MEASURES).names
+_DIR_COLS = ("snap", "encoded_tier", "part")
+# The manifest row, declared once: one per (tier, part, snapshot)
+_MANIFEST = ("part int, n_chunks long, n_rows long, raw_bytes long, comp_bytes long,"
+             " min_bucket timestamp, tier string, snapshot_id string")
 
 # Serializes manifest-directory mutations (appends, rewrites) within one
 # driver process so INDEPENDENT snapshots can ingest concurrently (guide
@@ -117,16 +126,24 @@ def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "manifest")
 
 
+def _as_manifest(df: DataFrame) -> DataFrame:
+    """``df``'s _MANIFEST columns, in order and cast to their types."""
+    return df.select(*[F.col(f.name).cast(f.dataType) for f in StructType.fromDDL(_MANIFEST)])
+
+
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The manifest as _MANIFEST rows: the timings older files carry are
+    not read, whichever footer gives the schema, and rewrites drop them."""
     path = _manifest_path(out_dir)
     # cheap existence probe first: spark.read.parquet on a missing path logs
     # a JVM-side stack trace before we can catch the AnalysisException
     if "://" not in path and not os.path.exists(path):
         return None
     try:
-        return spark.read.parquet(path)
+        man = spark.read.parquet(path)
     except Exception:
         return None
+    return _as_manifest(man)
 
 
 def _enc_dir(out_dir: str, snapshot_id: str, tier: str) -> str:
@@ -140,7 +157,9 @@ def _read_encoded(
     partition discovery turns the dir names under it (snap /
     encoded_tier / part) into columns, so several directories read as
     one scan. Spark's listing skips ``_``/``.``-prefixed paths, so a
-    leftover ``_temporary`` file of a failed write is never read.
+    leftover ``_temporary`` file of a failed write is never read. Only
+    _ROW_COLS and _DIR_COLS are read, so older rows that stored more
+    (``chunk``, ``raw_bytes``, ``encode_secs``…) read as today's.
     Raises ValueError on a store without the container ``keys`` column
     (the per-series chunk layout older versions could write)."""
     reader = spark.read
@@ -153,7 +172,7 @@ def _read_encoded(
             "the retention store reads only the multi-series container "
             "layout — rebuild it with run_retention"
         )
-    return enc
+    return enc.select(*_ROW_COLS, *[c for c in _DIR_COLS if c in enc.columns])
 
 
 def _encoded_writer(df: DataFrame) -> DataFrameWriter:
@@ -207,25 +226,28 @@ def _write_encoded(
     ).parquet(dest_dir)
 
 
-def _chunk_stats(enc: DataFrame, snapshot_id: str, t0: float) -> DataFrame:
+def _row_bytes() -> tuple[Column, Column]:
+    """(raw, compressed) bytes of a container row: 8 per bucket and per
+    measure, and the sum of its blob lengths."""
+    raw = F.col("n") * (8 * (1 + len(MEASURES)))
+    comp = sum((F.octet_length(c).cast("long") for c in _BLOB_COLS), F.lit(0))
+    return raw, comp
+
+
+def _chunk_stats(enc: DataFrame, snapshot_id: str) -> DataFrame:
     """Manifest rows, one per (tier, part), from encoded chunk rows read
     with ``encoded_tier`` as a partition column."""
-    return (
+    raw, comp = _row_bytes()
+    return _as_manifest(
         enc.groupBy(F.col("encoded_tier").alias("tier"), "part")
         .agg(
             F.count(F.lit(1)).alias("n_chunks"),
             F.sum("n").alias("n_rows"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("comp_bytes").alias("comp_bytes"),
-            F.sum("encode_secs").alias("encode_secs"),
+            F.sum(raw).alias("raw_bytes"),
+            F.sum(comp).alias("comp_bytes"),
             F.min("start_bucket").alias("min_bucket"),
         )
         .withColumn("snapshot_id", F.lit(snapshot_id))
-        .withColumn("wall_secs", F.lit(time.perf_counter() - t0))
-        .select(
-            "part", "n_chunks", "n_rows", "raw_bytes", "comp_bytes",
-            "encode_secs", "min_bucket", "tier", "snapshot_id", "wall_secs",
-        )
     )
 
 
@@ -259,8 +281,8 @@ def run_retention(
         pages are never re-read;
       * ONE encode job covers all pending tiers (see _write_encoded);
       * ONE stats job over the written chunks appends every tier's
-        manifest rows (wall_secs is the whole run's wall, attributed to
-        each row — per-tier encode cost stays separable via encode_secs).
+        manifest rows (_chunk_stats). No row holds a timing, so two runs
+        over the same input write the same data.
     The staged series are deleted once the manifest append has committed
     (or the run failed): nothing reads them again, and each run restages
     them, so they are no resume checkpoint — the manifest is. The
@@ -270,7 +292,6 @@ def run_retention(
     """
     spark = pages.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    t_run0 = time.perf_counter()
     tiers = tuple(tiers)
     snap_dir = os.path.join(out_dir, f"snap={snapshot_id}")
     stage_dir = os.path.join(snap_dir, "_cascade")
@@ -343,9 +364,7 @@ def run_retention(
             written = _read_encoded(
                 spark, [_enc_dir(out_dir, snapshot_id, t) for t in todo], snap_dir
             )
-            stats = _chunk_stats(
-                written.where(_is_pending("encoded_tier")), snapshot_id, t_run0
-            )
+            stats = _chunk_stats(written.where(_is_pending("encoded_tier")), snapshot_id)
             with _MANIFEST_LOCK:
                 stats.write.mode("append").parquet(_manifest_path(out_dir))
     finally:
@@ -369,7 +388,7 @@ def _dir_bytes(path: str) -> int:
 
 
 def tier_ratio_report(spark: SparkSession, out_dir: str, snapshot_id: str) -> dict:
-    """Compression ratio + throughput per tier from the manifest, with
+    """Compression ratio per tier from the manifest, with
     ``disk_bytes``: every byte under the tier's encoded dir (blobs plus
     parquet framing and footers) for a local ``out_dir``, None for an
     object store (same guard as lineage.json)."""
@@ -384,7 +403,6 @@ def tier_ratio_report(spark: SparkSession, out_dir: str, snapshot_id: str) -> di
             F.sum("n_rows").alias("rows"),
             F.sum("raw_bytes").alias("raw"),
             F.sum("comp_bytes").alias("comp"),
-            F.sum("encode_secs").alias("enc_s"),
         )
         .collect()
     )
@@ -394,7 +412,6 @@ def tier_ratio_report(spark: SparkSession, out_dir: str, snapshot_id: str) -> di
             "raw_bytes": r["raw"],
             "comp_bytes": r["comp"],
             "ratio": r["raw"] / r["comp"] if r["comp"] else None,
-            "encode_rows_per_sec": r["rows"] / r["enc_s"] if r["enc_s"] else None,
             "disk_bytes": (
                 _dir_bytes(_enc_dir(out_dir, snapshot_id, r["tier"])) if local else None
             ),
@@ -466,28 +483,31 @@ def verify_snapshot(spark: SparkSession, out_dir: str, snapshot_id: str) -> dict
     mapInArrow over the snapshot's encoded tiers decodes each container
     blob, re-encodes it and requires the same bytes, and requires each
     row's ``keys``, ``n``, ``meta`` and bucket range to match its blobs
-    (_check_container); the
-    rows per (tier, part) must then equal the manifest's ``n_rows``.
-    Raises CorruptBlobError naming the first mismatches; returns
-    {tier: {containers, rows}}."""
+    (_check_container); the rows, raw bytes and compressed bytes per
+    (tier, part) must then equal the manifest's ``n_rows``,
+    ``raw_bytes`` and ``comp_bytes``. Raises CorruptBlobError naming the
+    first mismatches; returns {tier: {containers, rows}}."""
+    counts = ("n_rows", "raw_bytes", "comp_bytes")
     man = read_manifest(spark, out_dir)
     want = {} if man is None else {
-        (r["tier"], r["part"]): r["n_rows"]
+        (r["tier"], r["part"]): tuple(r[c] for c in counts)
         for r in man.where(F.col("snapshot_id") == snapshot_id)
         .groupBy("tier", "part")
-        .agg(F.sum("n_rows").alias("n_rows"))
+        .agg(*[F.sum(c).alias(c) for c in counts])
         .collect()
     }
     if not want:
         raise ValueError(f"no manifest rows for snapshot {snapshot_id!r} in {out_dir}")
     tiers = sorted({t for t, _ in want})
+    raw, comp = _row_bytes()
     enc = _read_encoded(
         spark,
         [_enc_dir(out_dir, snapshot_id, t) for t in tiers],
         os.path.join(out_dir, f"snap={snapshot_id}"),
     ).select(
         "encoded_tier", "part", "keys", "n", "meta", "start_bucket", "end_bucket",
-        *_BLOB_COLS,
+        *_BLOB_COLS, F.col("n").alias("n_rows"), raw.alias("raw_bytes"),
+        comp.alias("comp_bytes"),
     )
 
     def check(batches):
@@ -505,16 +525,16 @@ def verify_snapshot(spark: SparkSession, out_dir: str, snapshot_id: str) -> dict
             yield pa.RecordBatch.from_pydict({
                 "tier": b.column("encoded_tier"),
                 "part": b.column("part"),
-                "rows": b.column("n"),
+                **{c: b.column(c) for c in counts},
                 "bad": [_check_container(list(bl), *rest) for bl, *rest in rows],
             })
 
     got = (
-        enc.mapInArrow(check, "tier string, part int, rows long, bad string")
+        enc.mapInArrow(check, f"tier string, part int, {' long, '.join(counts)} long, bad string")
         .groupBy("tier", "part")
         .agg(
             F.count(F.lit(1)).alias("containers"),
-            F.sum("rows").alias("rows"),
+            *[F.sum(c).alias(c) for c in counts],
             F.max("bad").alias("bad"),
         )
         .collect()
@@ -522,19 +542,21 @@ def verify_snapshot(spark: SparkSession, out_dir: str, snapshot_id: str) -> dict
     errors = [
         f"tier {r['tier']} part {r['part']}: {r['bad']}" for r in got if r["bad"]
     ]
-    have = {(r["tier"], r["part"]): r["rows"] for r in got}
+    have = {(r["tier"], r["part"]): tuple(r[c] for c in counts) for r in got}
+    none = (0,) * len(counts)
     errors += [
-        f"tier {t} part {p}: {have.get((t, p), 0)} rows stored, manifest says "
-        f"{want.get((t, p), 0)}"
+        f"tier {t} part {p}: {h} {c} stored, manifest says {w}"
         for t, p in sorted(want.keys() | have.keys())
-        if have.get((t, p), 0) != want.get((t, p), 0)
+        for c, h, w in zip(counts, have.get((t, p), none), want.get((t, p), none))
+        if h != w
     ]
     if errors:
         raise sz.CorruptBlobError(
             f"snapshot {snapshot_id!r}: " + "; ".join(errors[:5])
         )
     return {
-        t: {k: sum(r[k] for r in got if r["tier"] == t) for k in ("containers", "rows")}
+        t: {"containers": sum(r["containers"] for r in got if r["tier"] == t),
+            "rows": sum(r["n_rows"] for r in got if r["tier"] == t)}
         for t in tiers
     }
 
@@ -570,61 +592,50 @@ def compact_tiers(
     Returns {tier: {src_chunks, dst_chunks, rows}}.
     """
     report: dict = {}
-    lineage: dict = {"source_snapshots": list(snapshot_ids), "tiers": {}}
+    lineage = {"source_snapshots": list(snapshot_ids), "tiers": report}
     # resume idempotence (mirrors run_retention's pending parts): a tier
     # whose (tier, dest_snapshot_id) manifest rows already exist was fully
     # compacted by a prior run — re-running must not append a second set
     # of rows (which would double-count bytes in tier_ratio_report)
     man = read_manifest(spark, out_dir)
-    done_tiers: set = set()
+    done: dict = {}
     src_chunks: dict = {}
     src_covered: set = set()
     if man is not None:
-        # ONE collect serves both resume detection (dest rows) and the
-        # per-tier source chunk counts (the manifest is reconciled to the
-        # store by expire_tier, so summing its n_chunks equals counting
-        # the chunk rows) — the prior shape paid a separate count job
+        # ONE collect serves resume detection and the report of a done
+        # tier (dest rows) and the per-tier source chunk counts: the
+        # manifest is reconciled to the store by expire_tier, so its sums
+        # equal counting the chunk rows, with no job over the store
         man_rows = (
             man.where(
                 F.col("snapshot_id").isin([dest_snapshot_id, *snapshot_ids])
                 & F.col("tier").isin(list(tiers))
             )
             .groupBy("tier", "snapshot_id")
-            .agg(F.sum("n_chunks").alias("n_chunks"))
+            .agg(F.sum("n_chunks").alias("n_chunks"), F.sum("n_rows").alias("n_rows"))
             .collect()
         )
-        done_tiers = {
-            r["tier"] for r in man_rows if r["snapshot_id"] == dest_snapshot_id
-        }
         for r in man_rows:
-            if r["snapshot_id"] != dest_snapshot_id:
-                src_chunks[r["tier"]] = src_chunks.get(r["tier"], 0) + int(
-                    r["n_chunks"]
-                )
+            if r["snapshot_id"] == dest_snapshot_id:
+                done[r["tier"]] = r
+            else:
+                src_chunks[r["tier"]] = src_chunks.get(r["tier"], 0) + int(r["n_chunks"])
                 src_covered.add((r["tier"], r["snapshot_id"]))
-    for tier in tiers:
-        if tier in done_tiers:
-            agg = (
-                _read_encoded(spark, [_enc_dir(out_dir, dest_snapshot_id, tier)])
-                .agg(F.count(F.lit(1)).alias("c"), F.sum("n").alias("r"))
-                .collect()[0]
-            )
-            report[tier] = {
-                "src_chunks": None,
-                "dst_chunks": agg["c"],
-                "rows": agg["r"],
-                "skipped": True,
-            }
-            lineage["tiers"][tier] = report[tier]
+    for tier in (t for t in tiers if t in done):
+        report[tier] = {
+            "src_chunks": None,
+            "dst_chunks": done[tier]["n_chunks"],
+            "rows": done[tier]["n_rows"],
+            "skipped": True,
+        }
     # ALL pending tiers compact in one pass (r8 verdict item 3 — the
     # per-tier loop was 4 driver actions x tiers): ONE partition-discovery
     # read of every (source snapshot, tier) directory (snap / encoded_tier
     # become columns from the dir names), one decode, one hash
     # aggregation resolving newest-wins across every (tier, url, bucket),
     # and one encode job + write (_write_encoded).
-    todo = tuple(t for t in tiers if t not in done_tiers)
+    todo = tuple(t for t in tiers if t not in done)
     if todo:
-        t0 = time.perf_counter()
         dest_dir = os.path.join(out_dir, f"snap={dest_snapshot_id}")
         enc = _read_encoded(
             spark,
@@ -662,13 +673,12 @@ def compact_tiers(
                 dest_dir,
             ),
             dest_snapshot_id,
-            t0,
         )
         stats_rows = stats.collect()
         with _MANIFEST_LOCK:
             # VALUES relation, not createDataFrame: a Python-RDD-backed
             # parquet write stalls seconds in driver planning (r10)
-            local_values_df(spark, stats_rows, stats.schema).write.mode(
+            local_values_df(spark, stats_rows, _MANIFEST).write.mode(
                 "append"
             ).parquet(_manifest_path(out_dir))
         for tier in todo:
@@ -678,7 +688,6 @@ def compact_tiers(
                 "dst_chunks": sum(r["n_chunks"] for r in rows_t),
                 "rows": sum(r["n_rows"] for r in rows_t),
             }
-            lineage["tiers"][tier] = report[tier]
     lin_path = os.path.join(out_dir, f"snap={dest_snapshot_id}", "lineage.json")
     if urlparse(out_dir).scheme in ("", "file"):
         with open(lin_path, "w") as f:
@@ -767,22 +776,22 @@ def expire_tier(
     enc = _read_encoded(spark, [enc_path])
     keep = enc.where(F.col("end_bucket") >= F.lit(older_than))
     # ONE metadata pass yields the drop totals AND the surviving-chunk
-    # manifest stats per part (this frame is chunk metadata — tiny — but
-    # at 10^12-doc scale it is still millions of chunk rows; separate
+    # manifest stats per part (chunk metadata and blob lengths, but at
+    # 10^12-doc scale it is still millions of chunk rows; separate
     # jobs over it, or a post-swap re-read of the store, were pure
     # scheduler tax). <= n_buckets rows come back to the driver.
     _dead = F.col("end_bucket") < F.lit(older_than)
     _live = ~_dead
+    raw, comp = _row_bytes()
     per_part = enc.groupBy("part").agg(
         F.count(F.lit(1)).alias("total"),
         F.sum(F.when(_dead, 1).otherwise(0)).alias("dropped"),
         F.sum(F.when(_dead, F.col("n"))).alias("r"),
-        F.sum(F.when(_dead, F.col("raw_bytes"))).alias("b"),
+        F.sum(F.when(_dead, raw)).alias("b"),
         F.sum(F.when(_live, 1).otherwise(0)).alias("n_chunks"),
         F.sum(F.when(_live, F.col("n"))).alias("n_rows"),
-        F.sum(F.when(_live, F.col("raw_bytes"))).alias("raw_bytes"),
-        F.sum(F.when(_live, F.col("comp_bytes"))).alias("comp_bytes"),
-        F.sum(F.when(_live, F.col("encode_secs"))).alias("encode_secs"),
+        F.sum(F.when(_live, raw)).alias("raw_bytes"),
+        F.sum(F.when(_live, comp)).alias("comp_bytes"),
         F.min(F.when(_live, F.col("start_bucket"))).alias("min_bucket"),
     ).collect()
     total = sum(r["total"] for r in per_part)
@@ -838,22 +847,14 @@ def expire_tier(
             (
                 r["part"], int(r["n_chunks"]), int(r["n_rows"] or 0),
                 int(r["raw_bytes"] or 0), int(r["comp_bytes"] or 0),
-                float(r["encode_secs"] or 0.0), r["min_bucket"],
-                tier, snapshot_id, 0.0,
+                r["min_bucket"], tier, snapshot_id,
             )
             for r in per_part
             if int(r["n_chunks"] or 0) > 0
         ]
-        fresh = local_values_df(
-            spark,
-            fresh_rows,
-            "part int, n_chunks long, n_rows long, raw_bytes long,"
-            " comp_bytes long, encode_secs double, min_bucket timestamp,"
-            " tier string, snapshot_id string, wall_secs double",
-        )
         rows = man.where(
             ~((F.col("tier") == tier) & (F.col("snapshot_id") == snapshot_id))
-        ).unionByName(fresh.select(*man.columns))
+        ).unionByName(local_values_df(spark, fresh_rows, _MANIFEST))
         with _MANIFEST_LOCK:
             _swap_in(rows.write, _manifest_path(out_dir), ".rewriting", ".old")
     log_row = [

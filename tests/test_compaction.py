@@ -108,7 +108,7 @@ def test_compact_rerun_is_idempotent(spark, pages_small, tmp_path):
     double-count bytes otherwise (round-3 advice item)."""
     out = str(tmp_path / "store")
     RT.run_retention(pages_small, out, snapshot_id="s1", n_buckets=2, chunk_rows=8)
-    RT.compact_tiers(spark, out, ["s1"], "c1", n_buckets=2)
+    rep1 = RT.compact_tiers(spark, out, ["s1"], "c1", n_buckets=2)
     man1 = (
         RT.read_manifest(spark, out)
         .where(F.col("snapshot_id") == "c1")
@@ -122,6 +122,10 @@ def test_compact_rerun_is_idempotent(spark, pages_small, tmp_path):
     )
     assert man2 == man1  # no duplicate rows
     assert all(t.get("skipped") for t in rep2.values())
+    # a skipped tier reports the chunks and rows the first run wrote
+    assert {t: (v["dst_chunks"], v["rows"]) for t, v in rep2.items()} == {
+        t: (v["dst_chunks"], v["rows"]) for t, v in rep1.items()
+    }
     # ratios still computable and finite after the rerun
     ratios = RT.tier_ratio_report(spark, out, "c1")
     for v in ratios.values():

@@ -367,8 +367,13 @@ def test_container_series_roundtrip(spark, pages_small):
     got = dec.toPandas().sort_values(["url", "bucket"]).reset_index(drop=True)
     want = t1d.toPandas().sort_values(["url", "bucket"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
-    # size win vs per-series blobs
-    c_sizes = enc.agg(F.sum("comp_bytes"), F.sum("raw_bytes")).first()
+    # size win vs per-series blobs; a container's compressed bytes are
+    # its blob lengths, its raw bytes 8 per bucket and per measure
+    blobs = ["ts_blob"] + [f"blob_{c}" for c in cols]
+    c_sizes = enc.agg(
+        F.sum(sum(F.octet_length(b) for b in blobs)),
+        F.sum(F.col("n") * 8 * (1 + len(cols))),
+    ).first()
     p = encode_series(t1d, key_cols=["url"], value_cols=cols)
     p_sizes = p.agg(F.sum("comp_bytes")).first()
     assert c_sizes[0] < p_sizes[0], (c_sizes[0], p_sizes[0])
@@ -473,64 +478,70 @@ def test_container_piece_cap_roundtrip(spark, pages_small):
 
 
 def test_container_short_series_layout_unchanged(spark, pages_small):
-    """With every series at most chunk_rows rows, containers pack WHOLE
+    """On the daily and hourly tiers, with every series at most
+    chunk_rows rows, containers pack WHOLE
     series by cumulative row offset and their blobs are exactly
     codecs.sprintz.encode_container over those whole series, transformed
     as the row's meta names: ts divided by its ``scale`` (the gcd of the
     container's ts), a measure with a ``pred`` as its residual against
-    the measure before it. Each recorded choice is the smaller blob."""
+    the measure before it. A measure is predicted exactly when that saves
+    at least ``_PRED_MIN_SAVING`` bytes."""
     import json
 
     from sprintz_spark.codecs import sprintz as sz
     from sprintz_spark.codecs.extras import colsum_residual
-    from sprintz_spark.operators.encode import encode_series_container
+    from sprintz_spark.operators.encode import _PRED_MIN_SAVING, encode_series_container
 
-    t1d = R.derive_series(pages_small, "1d").withColumn("p", F.lit(0))
-    want = t1d.toPandas().sort_values(["url", "bucket"]).reset_index(drop=True)
-    lens = want.groupby("url", sort=True).size()
-    chunk_rows = int(lens.max())  # every series fits, several containers
     cols = ["crawl_count", "byte_size_sum", "byte_size_max", "byte_size_min"]
-    enc = (
-        encode_series_container(
-            t1d, key_cols=["url"], value_cols=cols, chunk_rows=chunk_rows,
-            part_col="p",
-        )
-        .toPandas()
-        .sort_values("chunk")
-        .reset_index(drop=True)
-    )
-    cont = (lens.cumsum() - lens) // chunk_rows
-    assert len(enc) == cont.nunique() > 1
-    ts = want["bucket"].astype("datetime64[us]").to_numpy().view(np.int64)
     preds = 0
-    for row in enc.itertuples():
-        keys = cont.index[cont == row.chunk].tolist()
-        assert list(row.keys) == keys
-        sel = want["url"].isin(keys).to_numpy()
-        lens_c = lens[keys].to_numpy()
-        meta = json.loads(row.meta)
-        scale = meta["ts"]["scale"]
-        assert scale == np.gcd.reduce(ts[sel]) > 1
-        assert row.ts_blob == sz.encode_container(ts[sel] // scale, lens_c, "doubledelta")
-        for j, c in enumerate(cols):
-            v = want[c].to_numpy(np.int64)[sel]
-            plain = sz.encode_container(v, lens_c, "auto")
-            if j == 0:
-                assert "pred" not in meta[c]
-                assert getattr(row, f"blob_{c}") == plain
-                continue
-            base = want[cols[j - 1]].to_numpy(np.int64)[sel]
-            resid = sz.encode_container(colsum_residual(v, [base]), lens_c, "auto")
-            if meta[c].get("pred") == cols[j - 1]:
-                preds += 1
-                assert getattr(row, f"blob_{c}") == resid
-                assert len(resid) < len(plain)
-            else:
-                assert "pred" not in meta[c]
-                assert getattr(row, f"blob_{c}") == plain
-                assert len(plain) <= len(resid)
-        assert row.start_bucket == want["bucket"][sel].min()
-        assert row.end_bucket == want["bucket"][sel].max()
+    # the daily tier's containers are too small for a prediction to save
+    # _PRED_MIN_SAVING bytes; the hourly tier's byte_size_min saves more
+    for tier in ("1d", "1h"):
+        series = R.derive_series(pages_small, tier).withColumn("p", F.lit(0))
+        want = series.toPandas().sort_values(["url", "bucket"]).reset_index(drop=True)
+        lens = want.groupby("url", sort=True).size()
+        chunk_rows = int(lens.max())  # every series fits, several containers
+        enc = (
+            encode_series_container(
+                series, key_cols=["url"], value_cols=cols, chunk_rows=chunk_rows,
+                part_col="p",
+            )
+            .toPandas()
+        )
+        # containers are cut from key-sorted rows: their first keys order them
+        enc = enc.iloc[enc["keys"].map(lambda k: k[0]).argsort()].reset_index(drop=True)
+        cont = (lens.cumsum() - lens) // chunk_rows
+        assert len(enc) == cont.nunique() > 1
+        assert [cont[k[0]] for k in enc["keys"]] == sorted(cont.unique())
+        ts = want["bucket"].astype("datetime64[us]").to_numpy().view(np.int64)
+        for row in enc.itertuples():
+            keys = cont.index[cont == cont[row.keys[0]]].tolist()
+            assert list(row.keys) == keys
+            sel = want["url"].isin(keys).to_numpy()
+            lens_c = lens[keys].to_numpy()
+            meta = json.loads(row.meta)
+            scale = meta["ts"]["scale"]
+            assert scale == np.gcd.reduce(ts[sel]) > 1
+            assert row.ts_blob == sz.encode_container(ts[sel] // scale, lens_c, "doubledelta")
+            for j, c in enumerate(cols):
+                v = want[c].to_numpy(np.int64)[sel]
+                plain = sz.encode_container(v, lens_c, "auto")
+                if j == 0:
+                    assert "pred" not in meta[c]
+                    assert getattr(row, f"blob_{c}") == plain
+                    continue
+                base = want[cols[j - 1]].to_numpy(np.int64)[sel]
+                resid = sz.encode_container(colsum_residual(v, [base]), lens_c, "auto")
+                if meta[c].get("pred") == cols[j - 1]:
+                    preds += 1
+                    assert getattr(row, f"blob_{c}") == resid
+                    assert len(plain) - len(resid) >= _PRED_MIN_SAVING
+                else:
+                    assert "pred" not in meta[c]
+                    assert getattr(row, f"blob_{c}") == plain
+                    assert len(plain) - len(resid) < _PRED_MIN_SAVING
+            assert row.start_bucket == want["bucket"][sel].min()
+            assert row.end_bucket == want["bucket"][sel].max()
     assert preds  # some container stores a measure as a residual
 
 

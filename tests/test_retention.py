@@ -10,8 +10,10 @@ import shutil
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 import pytest
 
@@ -360,15 +362,19 @@ def test_expire_tier_drops_old_chunks_conservatively(spark, pages_small, tmp_pat
     # audit row recorded
     log = spark.read.parquet(f"{out}/expiry_log").collect()
     assert log and log[0]["chunks_dropped"] == rep["chunks_dropped"]
-    # manifest recomputed: no stale bytes from expired chunks
+    # manifest recomputed: no stale bytes from expired chunks. The
+    # store's bytes derive from each row: raw = 8 B per bucket and per
+    # measure, compressed = the blob lengths
     man = RT.read_manifest(spark, out)
-    man_raw = (
+    man_bytes = (
         man.where((F.col("tier") == "1h") & (F.col("snapshot_id") == "s1"))
-        .agg(F.sum("raw_bytes"))
-        .first()[0]
+        .agg(F.sum("raw_bytes"), F.sum("comp_bytes"))
+        .first()
     )
-    store_raw = enc.agg(F.sum("raw_bytes")).first()[0]
-    assert man_raw == store_raw
+    rows = enc.toPandas()
+    store_raw = int(rows["n"].sum()) * 8 * (1 + len(RT.MEASURES))
+    store_comp = sum(int(rows[c].map(len).sum()) for c in RT._BLOB_COLS)
+    assert tuple(man_bytes) == (store_raw, store_comp)
 
 
 def test_expire_snapshots_gc_after_compaction(spark, pages_small, tmp_path):
@@ -429,12 +435,103 @@ def _expired_store(spark, pages_small, tmp_path, name):
     return out, cutoff
 
 
-def _tier_state(spark, out):
-    enc = spark.read.parquet(f"{out}/snap=s1/encoded_tier=1h").toPandas()
-    man = RT.read_manifest(spark, out).toPandas()
+def _containers(spark, path):
+    """Every container row under the tier directory ``path`` with its
+    ``part``, in store order: containers are cut from key-sorted rows, so
+    within a part their first keys order them. The pieces of one long
+    series share a first key; the rest of ``keys`` and then
+    ``start_bucket`` order those."""
     return (
-        enc.sort_values(["part", "chunk"]).reset_index(drop=True),
-        man.sort_values(["tier", "snapshot_id", "part"]).reset_index(drop=True),
+        spark.read.parquet(path).orderBy("part", "keys", "start_bucket")
+        .toPandas().reset_index(drop=True)
+    )
+
+
+def _manifest(spark, out):
+    return (
+        RT.read_manifest(spark, out).toPandas()
+        .sort_values(["tier", "snapshot_id", "part"]).reset_index(drop=True)
+    )
+
+
+def _tier_state(spark, out):
+    return _containers(spark, f"{out}/snap=s1/encoded_tier=1h"), _manifest(spark, out)
+
+
+def _store_state(spark, out, sids):
+    """Every encoded tier of the snapshots ``sids`` and the manifest."""
+    tiers = {
+        (sid, t): _containers(spark, RT._enc_dir(out, sid, t))
+        for sid in sids for t in ("1m", "1h", "1d")
+    }
+    return tiers, _manifest(spark, out)
+
+
+def _assert_same_store(got, want):
+    """Equal stores, compared column by column: no column is exempt."""
+    for k, rows in want[0].items():
+        pd.testing.assert_frame_equal(got[0][k], rows, obj=str(k))
+    pd.testing.assert_frame_equal(got[1], want[1], obj="manifest")
+
+
+def test_store_writes_are_deterministic(spark, pages_small, tmp_path):
+    """Two ingests of the same input into two directories, then the same
+    compaction and expiry in each, write equal data: no stored row holds
+    a timing. Every container row holds exactly the declared container
+    columns (plus its ``part`` directory) and every manifest row the
+    declared manifest columns."""
+    states = []
+    for name in ("a", "b"):
+        out = str(tmp_path / name)
+        RT.run_retention(pages_small, out, "s1", n_buckets=2, chunk_rows=8)
+        ingested = _store_state(spark, out, ["s1"])
+        RT.compact_tiers(spark, out, ["s1"], "c1", n_buckets=2, chunk_rows=8)
+        buckets = sorted(ingested[0]["s1", "1h"]["start_bucket"])
+        assert RT.expire_tier(
+            spark, out, "c1", "1h", buckets[len(buckets) // 2]
+        )["chunks_dropped"] > 0
+        states.append((ingested, _store_state(spark, out, ["s1", "c1"])))
+    for got, want in zip(*states):
+        _assert_same_store(got, want)
+    tiers, man = states[0][1]
+    for k, rows in tiers.items():
+        assert list(rows.columns) == [*RT._ROW_COLS, "part"], k
+        assert len(rows) > 0, k
+    assert list(man.columns) == StructType.fromDDL(RT._MANIFEST).names
+
+
+def test_run_retention_crash_before_manifest_append(
+    spark, pages_small, tmp_path, monkeypatch
+):
+    """Kill run_retention after its encode write and before its manifest
+    append, first into an empty directory and then, for a second
+    snapshot, into a store with a manifest: a plain rerun of each leaves
+    the same store and manifest as clean runs."""
+    ref = str(tmp_path / "ref")
+    for sid in ("s1", "s2"):
+        RT.run_retention(pages_small, ref, sid, n_buckets=2, chunk_rows=8)
+    out = str(tmp_path / "crashed")
+    write = RT._write_encoded
+
+    def write_then_crash(*args, **kwargs):
+        write(*args, **kwargs)
+        raise OSError("injected crash after the encode write")
+
+    for sid in ("s1", "s2"):
+        monkeypatch.setattr(RT, "_write_encoded", write_then_crash)
+        with pytest.raises(OSError, match="injected crash"):
+            RT.run_retention(pages_small, out, sid, n_buckets=2, chunk_rows=8)
+        monkeypatch.setattr(RT, "_write_encoded", write)
+        # every tier is on disk, the manifest holds none of its rows and
+        # the staged cascade is gone
+        assert all(os.path.isdir(RT._enc_dir(out, sid, t)) for t in ("1m", "1h", "1d"))
+        man = RT.read_manifest(spark, out)
+        assert man is None or man.where(F.col("snapshot_id") == sid).count() == 0
+        assert not os.path.exists(f"{out}/snap={sid}/_cascade")
+        rep = RT.run_retention(pages_small, out, sid, n_buckets=2, chunk_rows=8)
+        assert all(r["parts_written"] == 2 for r in rep.values())
+    _assert_same_store(
+        _store_state(spark, out, ["s1", "s2"]), _store_state(spark, ref, ["s1", "s2"])
     )
 
 
@@ -467,11 +564,8 @@ def test_expire_tier_crash_windows_idempotent(spark, pages_small, tmp_path, monk
         # rerun heals and converges to the clean-run state
         rep = RT.expire_tier(spark, out, "s1", "1h", cut)
         enc, man = _tier_state(spark, out)
-        pd.testing.assert_frame_equal(
-            enc.drop(columns=["encode_secs"]), ref_enc.drop(columns=["encode_secs"])
-        )
-        agg_cols = ["tier", "snapshot_id", "part", "n_chunks", "n_rows", "raw_bytes"]
-        pd.testing.assert_frame_equal(man[agg_cols], ref_man[agg_cols])
+        pd.testing.assert_frame_equal(enc, ref_enc)
+        pd.testing.assert_frame_equal(man, ref_man)
         # no stale swap siblings survive
         assert not os.path.exists(f"{out}/snap=s1/encoded_tier=1h.expiring")
         assert not os.path.exists(f"{out}/snap=s1/encoded_tier=1h.expired")
@@ -588,8 +682,8 @@ def test_verify_snapshot_rejects_truncated_blob_and_wrong_n_rows(
 ):
     """One truncated blob, one blob whose width code is flipped, one
     end_bucket that is not its container's last bucket, or one manifest
-    n_rows off by one, makes verify_snapshot raise CorruptBlobError; the
-    untouched store passes."""
+    n_rows, raw_bytes or comp_bytes off by one, makes verify_snapshot
+    raise CorruptBlobError; the untouched store passes."""
     import numpy as np
 
     from sprintz_spark.codecs import sprintz as sz
@@ -636,6 +730,13 @@ def test_verify_snapshot_rejects_truncated_blob_and_wrong_n_rows(
     with pytest.raises(CorruptBlobError, match="manifest says"):
         RT.verify_snapshot(spark, rows, "s1")
 
+    for col in ("raw_bytes", "comp_bytes"):
+        off = _rewrite_first_cell(
+            clean, str(tmp_path / col), col, lambda v: v + 1, where="manifest"
+        )
+        with pytest.raises(CorruptBlobError, match=rf"\d+ {col} stored, manifest says \d+"):
+            RT.verify_snapshot(spark, off, "s1")
+
 
 def _rewrite_parquet(path, fn):
     """Replace the parquet file ``path`` of a Spark-written store by
@@ -650,11 +751,12 @@ def _set_cells(t, col, cells):
     return t.set_column(t.schema.get_field_index(col), field, pa.array(cells, field.type))
 
 
-def _rewrite_first_cell(src, dst, col, fn):
-    """A copy at ``dst`` of the store ``src`` whose first ``col`` cell of
-    snapshot s1, tier 1h, part 0 is replaced by fn(cell)."""
+def _rewrite_first_cell(src, dst, col, fn, where="snap=s1/encoded_tier=1h/part=0"):
+    """A copy at ``dst`` of the store ``src`` whose first ``col`` cell in
+    the directory ``where`` (by default snapshot s1, tier 1h, part 0) is
+    replaced by fn(cell)."""
     shutil.copytree(src, dst)
-    path = sorted(glob.glob(f"{dst}/snap=s1/encoded_tier=1h/part=0/*.parquet"))[0]
+    path = sorted(glob.glob(f"{dst}/{where}/*.parquet"))[0]
 
     def first(t):
         cells = t.column(col).to_pylist()
@@ -717,7 +819,9 @@ def test_container_meta_faults_raise_corrupt_blob_error(spark, pages_small, tmp_
 def _write_legacy_rows(store):
     """Rewrite every container row under ``store`` as stores written
     before the container transforms were: plain ts and measure blobs
-    under one constant meta with neither ``scale`` nor ``pred``."""
+    under one constant meta with neither ``scale`` nor ``pred``, in the
+    old row layout that also stored ``chunk``, ``n_series``,
+    ``raw_bytes``, ``comp_bytes`` and ``encode_secs``."""
     from sprintz_spark.codecs import sprintz as sz
     from sprintz_spark.operators.encode import container_meta
 
@@ -739,7 +843,23 @@ def _write_legacy_rows(store):
                 cols[f"blob_{c}"][i] = sz.encode_container(vals[c], lens, "auto")
         for c, cells in cols.items():
             t = _set_cells(t, c, cells)
-        return _set_cells(t, "meta", [legacy_meta] * t.num_rows)
+        t = _set_cells(t, "meta", [legacy_meta] * t.num_rows)
+        old = {
+            "chunk": pa.array(range(t.num_rows), pa.int64()),
+            "n_series": pc.list_value_length(t.column("keys")).cast(pa.int64()),
+            "raw_bytes": pc.multiply(t.column("n"), 8 * (1 + len(RT.MEASURES))),
+            "comp_bytes": pa.array([sum(map(len, bl)) for bl in zip(*cols.values())]),
+            "encode_secs": pa.array([0.25] * t.num_rows),
+        }
+        for c, cells in old.items():
+            t = t.append_column(c, cells)
+        # Spark reads a footer's own schema JSON before its columns: drop
+        # the one copied from today's rows
+        return t.replace_schema_metadata(None).select([
+            "chunk", "n_series", "keys", "start_bucket", "end_bucket", "n", "ts_blob",
+            "meta", "raw_bytes", "comp_bytes", "encode_secs",
+            *[f"blob_{c}" for c in RT.MEASURES],
+        ])
 
     paths = glob.glob(f"{store}/snap=*/encoded_tier=*/part=*/*.parquet")
     assert paths
@@ -748,16 +868,48 @@ def _write_legacy_rows(store):
     return legacy_meta
 
 
+def _write_legacy_manifest(store):
+    """Replace the manifest of ``store`` by one file in the old manifest
+    schema: its rows plus the timings ``encode_secs`` and ``wall_secs``,
+    each (tier, part)'s ``comp_bytes`` summed from its rows' own
+    ``comp_bytes``. The file name sorts before Spark's ``part-*`` files,
+    so Spark takes a read's schema from this old footer."""
+    path = RT._manifest_path(store)
+    man = pq.read_table(path).to_pandas()
+    comp = {}
+    for f in glob.glob(f"{store}/snap=*/encoded_tier=*/part=*/*.parquet"):
+        tier = f.split("encoded_tier=")[1].split("/")[0]
+        part = int(f.split("part=")[1].split("/")[0])
+        comp[tier, part] = comp.get((tier, part), 0) + pc.sum(
+            pq.read_table(f, columns=["comp_bytes"]).column("comp_bytes")
+        ).as_py()
+    man["comp_bytes"] = [comp[k] for k in zip(man["tier"], man["part"])]
+    man.insert(man.columns.get_loc("min_bucket"), "encode_secs", 0.5)
+    man["wall_secs"] = 3.0
+    shutil.rmtree(path)
+    os.makedirs(path)
+    pq.write_table(
+        pa.Table.from_pandas(man, preserve_index=False), f"{path}/a-legacy.parquet",
+        use_deprecated_int96_timestamps=True,
+    )
+
+
 def test_legacy_store_reads_unchanged(spark, pages_small, tmp_path):
-    """A store whose rows carry the constant meta and plain blobs of the
-    stores written before the container transforms gives the same
-    answers from every reader, compaction, expiry and verify as the same
-    data written today; compacting it writes the transforms' meta."""
+    """A store whose rows carry the constant meta, plain blobs and five
+    derivable or timing columns of the stores written before, and whose
+    manifest holds an old-schema file (with the timings ``encode_secs``
+    and ``wall_secs``) next to rows appended today, gives the same
+    answers from every reader, compaction, expiry, snapshot GC, verify
+    and tier_ratio_report as the same data written today; compacting it
+    writes the transforms' meta, and rewriting its manifest drops the
+    old columns."""
     new = str(tmp_path / "new")
     RT.run_retention(pages_small, new, "s1", n_buckets=2, chunk_rows=64)
     legacy = str(tmp_path / "legacy")
     shutil.copytree(new, legacy)
     legacy_meta = _write_legacy_rows(legacy)
+    _write_legacy_manifest(legacy)
+    assert {"chunk", "encode_secs"} <= set(spark.read.parquet(f"{legacy}/snap=s1").columns)
     metas = {
         store: set(
             spark.read.parquet(f"{store}/snap=s1").select("meta").toPandas()["meta"]
@@ -766,8 +918,13 @@ def test_legacy_store_reads_unchanged(spark, pages_small, tmp_path):
     }
     assert metas[legacy] == {legacy_meta} and legacy_meta not in metas[new]
 
+    def ratios(store, sid, keep):
+        rep = RT.tier_ratio_report(spark, store, sid)
+        return {t: {k: v[k] for k in keep} for t, v in rep.items()}
+
     def answers(store):
         got = {"verify": RT.verify_snapshot(spark, store, "s1")}
+        got["decoded_cols"] = RT.read_tier_decoded(spark, store, "s1", "1m").columns
         for tier in ("1m", "1h", "1d"):
             got[tier] = _decode_tier(spark, store, tier, snap="s1")
             for c in RT.MEASURES:
@@ -781,9 +938,17 @@ def test_legacy_store_reads_unchanged(spark, pages_small, tmp_path):
             .toPandas().sort_values(["url", "bucket"]).reset_index(drop=True)
         )
         got["compact"] = RT.compact_tiers(spark, store, ["s1"], "c1", n_buckets=2, chunk_rows=64)
+        if store == legacy:  # the old file still gives the schema
+            assert "wall_secs" in spark.read.parquet(RT._manifest_path(store)).columns
+        # the plain legacy blobs are longer, so s1's comp_bytes differ
+        got["ratios_s1"] = ratios(store, "s1", ("rows", "raw_bytes"))
+        got["ratios_c1"] = ratios(store, "c1", ("rows", "raw_bytes", "comp_bytes", "ratio"))
         got["expire"] = RT.expire_tier(spark, store, "c1", "1h", cut)
         got["expired"] = _decode_tier(spark, store, "1h", snap="c1")
         got["verify_c1"] = RT.verify_snapshot(spark, store, "c1")
+        got["gc"] = RT.expire_snapshots(spark, store, ["c1"])
+        got["manifest"] = _manifest(spark, store)
+        got["manifest_file_cols"] = spark.read.parquet(RT._manifest_path(store)).columns
         return got
 
     want, got = answers(new), answers(legacy)
