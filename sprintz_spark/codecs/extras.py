@@ -27,6 +27,7 @@ import lzma as _lzma
 import numpy as np
 
 from sprintz_spark.codecs import bitpack
+from sprintz_spark.codecs.rle import CorruptBlobError
 
 BLOCK = 8
 
@@ -42,7 +43,10 @@ def byteshuffle_encode(x: np.ndarray) -> np.ndarray:
 
 
 def byteshuffle_decode(shuffled: np.ndarray, dtype, n: int) -> np.ndarray:
+    """CorruptBlobError unless ``shuffled`` holds n values' bytes."""
     k = np.dtype(dtype).itemsize
+    if shuffled.size != k * n:
+        raise CorruptBlobError(f"{shuffled.size} shuffled bytes for {n} {k}-byte values")
     b = shuffled.reshape(k, n).T
     return np.ascontiguousarray(b).reshape(-1).view(dtype)
 

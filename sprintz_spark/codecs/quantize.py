@@ -70,15 +70,6 @@ def _choose_uint(span: int, need_sentinel: bool) -> np.dtype:
     raise ValueError(f"span {span} too large for uint64")
 
 
-def quantizable(series: pd.Series) -> bool:
-    """True if this column can be losslessly quantized to unsigned ints."""
-    try:
-        quantize(series)
-        return True
-    except (ValueError, TypeError):
-        return False
-
-
 def quantize(series: pd.Series) -> tuple[np.ndarray, QuantizeParams]:
     orig_dtype = str(series.dtype)
     if pd.api.types.is_bool_dtype(series.dtype) and not isinstance(

@@ -17,6 +17,7 @@ import numpy as np
 
 from sprintz_spark.codecs import extras, gorilla
 from sprintz_spark.codecs import sprintz as sz
+from sprintz_spark.codecs.rle import CorruptBlobError
 
 _DTYPES = [np.uint8, np.uint16, np.uint32, np.uint64,
            np.int8, np.int16, np.int32, np.int64, np.float64]
@@ -148,8 +149,7 @@ EWMA_MAX_LEN = 1 << 20
 # search container header: magic | version | pipeline-id | dtype | u32 n.
 # The magic/version pair makes stale or reordered-id blobs fail loudly
 # instead of silently decoding with the wrong pipeline (the id byte is an
-# index into the APPEND-ONLY table above). Pre-versioned round-3 blobs
-# (bare id byte first, always <= 0x0B) can never alias the magic.
+# index into the APPEND-ONLY table above).
 MAGIC = 0xA5
 VERSION = 1
 
@@ -258,108 +258,78 @@ def search_encode(
     return head + np.uint32(len(x)).tobytes() + payload
 
 
-def search_decode(buf: bytes, allow_legacy: bool = False) -> np.ndarray:
-    """Decode a search container. ``allow_legacy`` opts into the
-    pre-versioned (round-3) 6-byte-header format for old retention
-    stores; it is OFF by default because a corrupted v1 blob whose magic
-    byte mutated into the legacy id range (0x00-0x0B) is header-
-    indistinguishable from a legacy blob, and the default should be the
-    unconditional loud refusal, not a guess. Only the retention read
-    path (operators.encode._decode_value_column), which may face pre-v1
-    stores, sets it."""
-    if buf[0] == MAGIC and buf[1] == VERSION:
-        pipeline_i = buf[2]
-        dt = np.dtype(_DTYPES[buf[3]])
-        n = int(np.frombuffer(buf[4:8], dtype=np.uint32)[0])
-        _name, (_enc, dec) = PIPELINES[pipeline_i]
-        return dec(buf[8:], dt, n)
-    if (
-        allow_legacy
-        and len(buf) >= 6
-        and buf[0] < len(PIPELINES)
-        and buf[1] < len(_DTYPES)
-    ):
-        # back-compat: pre-versioned (round-3) container — bare pipeline
-        # id first, 6-byte header [id | dtype | u32 n]. The id byte is
-        # always <= 0x0B so it can never alias the 0xA5 magic; retention
-        # stores written before the v1 header stay readable. A CORRUPTED
-        # v1 blob whose first byte mutated into the legacy range is
-        # indistinguishable from a legacy blob by headers alone; the
-        # except below converts the inner codec's failure into the same
-        # loud refusal instead of a deep assertion.
-        pipeline_i = buf[0]
-        dt = np.dtype(_DTYPES[buf[1]])
-        n = int(np.frombuffer(buf[2:6], dtype=np.uint32)[0])
-        _name, (_enc, dec) = PIPELINES[pipeline_i]
-        try:
-            out = dec(buf[6:], dt, n)
-        except Exception as e:
-            raise ValueError(
-                "buffer is neither a valid v1 search container nor a "
-                f"decodable legacy (round-3) blob — likely corrupted ({e}); "
-                "refusing to guess a pipeline id [bad magic/version]"
-            ) from e
-        if len(out) != n:
-            raise ValueError(
-                "legacy-blob decode length mismatch — likely a corrupted "
-                "v1 container [bad magic/version]"
-            )
-        return out
-    raise ValueError(
-        "not a search container (bad magic/version bytes "
-        f"{buf[0]:#04x} {buf[1]:#04x}); refusing to guess a pipeline id"
-    )
+def _head(buf: bytes) -> tuple[int, np.dtype, int]:
+    """(pipeline id, dtype, n) of a v1 container's 8-byte head.
+    CorruptBlobError for a blob shorter than the head, wrong magic/version
+    bytes, or a pipeline id or dtype code outside its table."""
+    if len(buf) < 8:
+        raise CorruptBlobError(f"search container of {len(buf)} bytes, under its 8-byte head")
+    if buf[0] != MAGIC or buf[1] != VERSION:
+        raise CorruptBlobError(
+            "not a search container (bad magic/version bytes "
+            f"{buf[0]:#04x} {buf[1]:#04x}); refusing to guess a pipeline id"
+        )
+    if buf[2] >= len(PIPELINES) or buf[3] >= len(_DTYPES):
+        raise CorruptBlobError(f"search head names pipeline {buf[2]}, dtype code {buf[3]}")
+    return buf[2], np.dtype(_DTYPES[buf[3]]), int(np.frombuffer(buf[4:8], np.uint32)[0])
 
 
-def search_decode_batch(
-    blobs: list[bytes], allow_legacy: bool = False
-) -> list[np.ndarray]:
+def _check_len(out: np.ndarray, n: int) -> np.ndarray:
+    if len(out) != n:
+        raise CorruptBlobError(f"search payload decodes to {len(out)} values, its head says {n}")
+    return out
+
+
+def search_decode(buf: bytes) -> np.ndarray:
+    """Decode a v1 search container. A bad head (see _head), or a payload
+    that decodes to other than the head's n values, raises
+    CorruptBlobError."""
+    pipeline_i, dt, n = _head(buf)
+    _name, (_enc, dec) = PIPELINES[pipeline_i]
+    return _check_len(dec(buf[8:], dt, n), n)
+
+
+_SPRINTZ_PIPELINES = frozenset({
+    "sprintz-delta", "sprintz-doubledelta", "sprintz-dyndelta",
+    "sprintz-fire", "raw", "sprintz-ewma",
+})
+
+
+def search_decode_batch(blobs: list[bytes]) -> list[np.ndarray]:
     """Decode MANY search containers with batched inner decoders.
 
-    v1 containers group by pipeline family: sprintz-* / raw payloads go
+    Containers group by pipeline family: sprintz-* / raw payloads go
     through sz.decode_batch (global width-grouped passes), huffman /
     byteshuffle-huffman through huffman_decode_batch (lockstep across
-    blobs); every other pipeline — and legacy headers — falls back to
-    the per-blob search_decode. Output arrays are identical to
-    search_decode per blob (tests/test_search.py pins it)."""
+    blobs); every other pipeline decodes one blob at a time. Non-v1
+    heads and length mismatches raise CorruptBlobError, as in
+    search_decode. Output arrays are identical to search_decode per blob
+    (tests/test_search.py pins it)."""
+    heads = [_head(buf) for buf in blobs]
     out: list = [None] * len(blobs)
-    sprintz_names = {
-        "sprintz-delta", "sprintz-doubledelta", "sprintz-dyndelta",
-        "sprintz-fire", "raw", "sprintz-ewma",
-    }
-    sz_grp: list[tuple[int, bytes, np.dtype]] = []
-    hf_grp: list[tuple[int, bytes, np.dtype]] = []
-    shf_grp: list[tuple[int, bytes, np.dtype, int]] = []
-    for i, buf in enumerate(blobs):
-        if not (buf[0] == MAGIC and buf[1] == VERSION):
-            out[i] = search_decode(buf, allow_legacy)
-            continue
-        name = PIPELINES[buf[2]][0]
-        dt = np.dtype(_DTYPES[buf[3]])
-        n = int(np.frombuffer(buf[4:8], dtype=np.uint32)[0])
-        if name in sprintz_names:
-            sz_grp.append((i, buf[8:], dt))
+    sz_grp, hf_grp, shf_grp = [], [], []  # blob indices per pipeline family
+    for i, (buf, (pipeline_i, dt, n)) in enumerate(zip(blobs, heads)):
+        name, (_enc, dec) = PIPELINES[pipeline_i]
+        if name in _SPRINTZ_PIPELINES:
+            sz_grp.append(i)
         elif name == "huffman":
-            hf_grp.append((i, buf[8:], dt))
+            hf_grp.append(i)
         elif name == "byteshuffle-huffman":
-            shf_grp.append((i, buf[8:], dt, n))
+            shf_grp.append(i)
         else:
-            out[i] = search_decode(buf, allow_legacy)
-    if sz_grp:
-        arrs = sz.decode_batch([b for _, b, _ in sz_grp])
-        for (i, _b, dt), a in zip(sz_grp, arrs):
-            out[i] = a.view(dt)
+            out[i] = dec(buf[8:], dt, n)
+    for i, a in zip(sz_grp, sz.decode_batch([blobs[i][8:] for i in sz_grp])):
+        out[i] = a.view(heads[i][1])
     if hf_grp or shf_grp:
         from sprintz_spark.codecs import huffman as hf
 
-        arrs = hf.huffman_decode_batch(
-            [b for _, b, *_ in hf_grp] + [b for _, b, *_ in shf_grp]
-        )
-        for (i, _b, dt), a in zip(hf_grp, arrs[: len(hf_grp)]):
-            out[i] = a.view(dt)
-        for (i, _b, dt, n), a in zip(shf_grp, arrs[len(hf_grp):]):
+        arrs = hf.huffman_decode_batch([blobs[i][8:] for i in hf_grp + shf_grp])
+        for i, a in zip(hf_grp, arrs):
+            out[i] = a.view(heads[i][1])
+        for i, a in zip(shf_grp, arrs[len(hf_grp):]):
+            _pipeline_i, dt, n = heads[i]
             out[i] = extras.byteshuffle_decode(a, dt, n)
-    return out
+    return [_check_len(a, n) for a, (_p, _dt, n) in zip(out, heads)]
 
 
 def search_report(x: np.ndarray) -> dict:

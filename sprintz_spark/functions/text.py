@@ -69,10 +69,6 @@ def lang_id(text: str) -> str:
     return best
 
 
-def lang_id_series(text: pd.Series) -> pd.Series:
-    return text.map(lang_id)
-
-
 # --- quality scoring -------------------------------------------------------
 
 _WORD_RE = re.compile(r"\S+")
@@ -120,11 +116,6 @@ def quality_score(text: str) -> float:
 # BPE-ish pre-tokenizer regex (GPT-2 style, public): words, numbers,
 # punctuation runs, whitespace-prefixed words
 _BPE_RE = re.compile(r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]|\s+(?!\S)")
-
-
-def token_count_ws(text: str) -> int:
-    """Whitespace token count."""
-    return len(_WORD_RE.findall(text))
 
 
 def token_count_bpe(text: str) -> int:

@@ -68,6 +68,7 @@ from pyspark.sql.types import (
 
 from sprintz_spark.codecs import gorilla
 from sprintz_spark.codecs import quantize as Q
+from sprintz_spark.codecs import search as CS
 from sprintz_spark.codecs import sprintz as sz
 from sprintz_spark.codecs.extras import colsum_residual, colsum_restore
 
@@ -109,8 +110,6 @@ def _encode_value_column(s: pd.Series, force: str | None = None) -> tuple[bytes,
              "bool": True},
         )
     if force is not None and force.startswith("search"):
-        from sprintz_spark.codecs import search as CS
-
         excl = tuple(x for x in force.partition("!")[2].split(",") if x)
         name = force.partition(":")[2] or None
         return (
@@ -144,39 +143,14 @@ def _encode_value_column(s: pd.Series, force: str | None = None) -> tuple[bytes,
     return sz.encode_column(arr, mode), meta
 
 
-def _decode_value_column(buf: bytes, meta: dict) -> pd.Series:
-    if meta["codec"] == "gorilla":
-        return pd.Series(gorilla.decode(buf))
-    if meta["codec"] == "search":
-        from sprintz_spark.codecs import search as CS
-
-        # the retention read path may face pre-v1 stores: explicitly opt
-        # into the legacy 6-byte-header format (see search_decode)
-        return pd.Series(CS.search_decode(buf, allow_legacy=True))
-    u = sz.decode_column(buf)
-    arr = u.view(np.dtype(meta["np_dtype"]))
-    if "qparams" in meta:
-        return Q.unquantize(arr.view(np.dtype(meta["qparams"]["dtype"])),
-                            Q.QuantizeParams.from_dict(meta["qparams"]))
-    if "offset" in meta:  # narrow-width offset quantization (FIRE path)
-        return pd.Series(arr.astype(np.int64) + np.int64(meta["offset"]))
-    if meta.get("bool"):
-        return pd.Series(arr.view(bool))
-    return pd.Series(arr)
-
-
 def _transform_decoded(arr: np.ndarray, meta: dict) -> np.ndarray | pd.Series:
-    """Apply a blob's meta transform to a decode_batch output array."""
-    if meta["codec"] == "gorilla":  # pragma: no cover - handled per blob
-        raise ValueError("gorilla blobs are not SZ1 decode_batch outputs")
+    """Undo a sprintz blob's meta transform on its decode_batch output."""
     out = arr.view(np.dtype(meta["np_dtype"]))
     if "qparams" in meta:
         return Q.unquantize(
             out.view(np.dtype(meta["qparams"]["dtype"])),
             Q.QuantizeParams.from_dict(meta["qparams"]),
         )
-    if "offset" in meta:
-        return out.astype(np.int64) + np.int64(meta["offset"])
     if meta.get("bool"):
         return out.view(bool)
     return out
@@ -185,56 +159,22 @@ def _transform_decoded(arr: np.ndarray, meta: dict) -> np.ndarray | pd.Series:
 def decode_value_columns_batch(
     blobs: list[bytes], metas: list[dict]
 ) -> list[np.ndarray | pd.Series]:
-    """Batched decode of one value column across many chunks; gorilla blobs
-    fall back to the per-blob path, everything else (including quantized
-    chunks — unquantize is a cheap per-chunk numpy transform applied to the
-    batch-decoded array) shares decode_batch's global passes."""
-    simple_idx = [i for i, m in enumerate(metas) if m["codec"] == "sprintz"]
-    out: list = [None] * len(blobs)
-    if simple_idx:
-        decoded = sz.decode_batch([blobs[i] for i in simple_idx])
-        # the narrow-width offset transform (FIRE path) is batched per
-        # dtype: one concat + one astype + one repeated add across ALL
-        # such blobs, then views split back — the per-blob
-        # astype-and-add was ~5 us per tiny chunk, dominating decode of
-        # short-series stores (r10 measurement)
-        off_groups: dict[str, list[int]] = {}
-        for j, i in enumerate(simple_idx):
-            m = metas[i]
-            if "offset" in m and "qparams" not in m and not m.get("bool"):
-                off_groups.setdefault(m["np_dtype"], []).append(j)
-            else:
-                out[i] = _transform_decoded(decoded[j], m)
-        for dt, js in off_groups.items():
-            npdt = np.dtype(dt)
-            arrs = [decoded[j].view(npdt) for j in js]
-            lens = np.fromiter((len(a) for a in arrs), np.int64, len(arrs))
-            offs = np.fromiter(
-                (metas[simple_idx[j]]["offset"] for j in js), np.int64, len(js)
-            )
-            big = np.concatenate(arrs).astype(np.int64) if arrs else np.zeros(0, np.int64)
-            big += np.repeat(offs, lens)
-            bounds = np.concatenate([[0], np.cumsum(lens)])
-            for k, j in enumerate(js):
-                out[simple_idx[j]] = big[bounds[k] : bounds[k + 1]]
-    search_idx = [
-        i for i, m in enumerate(metas) if out[i] is None and m["codec"] == "search"
-    ]
-    if search_idx:
-        from sprintz_spark.codecs import search as CS
-
-        # batched container dispatch (r10): sprintz-family payloads share
-        # decode_batch's global passes, huffman payloads the lockstep
-        # batch decoder — the retention read path may face pre-v1
-        # stores, hence allow_legacy (same as _decode_value_column)
-        arrs = CS.search_decode_batch(
-            [blobs[i] for i in search_idx], allow_legacy=True
-        )
-        for i, a in zip(search_idx, arrs):
-            out[i] = np.asarray(a)
+    """Decode one value column's per-series blobs, each by the codec its
+    meta names: sprintz blobs share decode_batch's global passes and then
+    undo their meta transform (unquantize, bool view), search blobs share
+    search_decode_batch's batched inner decoders, gorilla blobs decode
+    one at a time. A codec no encoder writes raises KeyError."""
+    idx: dict[str, list[int]] = {"sprintz": [], "search": [], "gorilla": []}
     for i, m in enumerate(metas):
-        if out[i] is None:
-            out[i] = _decode_value_column(blobs[i], m).to_numpy()
+        idx[m["codec"]].append(i)
+    out: list = [None] * len(blobs)
+    sz_idx, cs_idx = idx["sprintz"], idx["search"]
+    for i, a in zip(sz_idx, sz.decode_batch([blobs[i] for i in sz_idx])):
+        out[i] = _transform_decoded(a, metas[i])
+    for i, a in zip(cs_idx, CS.search_decode_batch([blobs[i] for i in cs_idx])):
+        out[i] = a
+    for i in idx["gorilla"]:
+        out[i] = gorilla.decode(blobs[i])
     return out
 
 
@@ -600,7 +540,7 @@ def query_encoded(
             # aggregate from headers with no payload unpack
             is_plain = np.array([
                 m.get("codec") == "sprintz" and m.get("np_dtype") == "int64"
-                and "qparams" not in m and "offset" not in m
+                and "qparams" not in m
                 for m in metas
             ], dtype=bool)
             plain, rest = np.flatnonzero(is_plain), np.flatnonzero(~is_plain)

@@ -101,15 +101,3 @@ def derive_series_salted(pages: DataFrame, tier: str = "1m", n_salts: int = 8) -
         F.min("byte_size_min").alias("byte_size_min"),
     )
 
-
-def hot_url_prefixes(pages: DataFrame, top_n: int = 20) -> DataFrame:
-    """Heavy-hitter detection: row counts per url prefix (site host).
-    Used to decide which prefixes get salted encode groups."""
-    host = F.regexp_extract("url", r"^https?://([^/]+)/", 1).alias("host")
-    return (
-        pages.select(host)
-        .groupBy("host")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .orderBy(F.desc("n_rows"))
-        .limit(top_n)
-    )

@@ -99,7 +99,6 @@ def test_decoders_never_hang_or_abort_on_garbage(buf):
     for dec in (
         sz.decode_column,
         S.search_decode,
-        lambda b: S.search_decode(b, allow_legacy=True),
         gorilla.decode,
     ):
         try:

@@ -99,9 +99,9 @@ def test_float_batch_matches_per_piece_quantize():
 
     from sprintz_spark.codecs import quantize as Q
     from sprintz_spark.operators.encode import (
-        _decode_value_column,
         _encode_float_batch,
         _encode_value_column,
+        decode_value_columns_batch,
     )
 
     pieces = [
@@ -123,13 +123,52 @@ def test_float_batch_matches_per_piece_quantize():
         if blobs[i] is None:
             continue
         assert metas[i]["qparams"] == ref_meta["qparams"], i
-        got = _decode_value_column(blobs[i], metas[i]).to_numpy()
-        ref = _decode_value_column(ref_blob, ref_meta).to_numpy()
+        got = np.asarray(decode_value_columns_batch([blobs[i]], [metas[i]])[0])
+        ref = np.asarray(decode_value_columns_batch([ref_blob], [ref_meta])[0])
         # sentinel semantics (reference dfquantize2): NaN and ±inf both
         # round-trip to NaN — compare against the per-piece path's output
         np.testing.assert_array_equal(got, ref, err_msg=f"piece {i}")
         finite = np.isfinite(p)
         np.testing.assert_array_equal(got[finite], p[finite], err_msg=f"piece {i}")
+
+
+def test_batch_decoder_takes_every_meta_kind():
+    """One decode_value_columns_batch call over blobs of every meta kind
+    the per-series encoders write (plain int64 sprintz, quantized float,
+    quantize-forced, booldelta, gorilla, search v1) returns every input,
+    dtype included."""
+    import pandas as pd
+
+    from sprintz_spark.operators.encode import (
+        _encode_value_column,
+        decode_value_columns_batch,
+    )
+
+    r = np.random.default_rng(17)
+    with_nan = np.round(r.normal(0, 3, 150), 1)
+    with_nan[::7] = np.nan
+    cases = [
+        (pd.Series(np.cumsum(r.integers(-9, 10, 300))), None),
+        (pd.Series(np.round(r.normal(50, 5, 200), 2)), None),
+        (pd.Series(with_nan), "quantize"),
+        (pd.Series(r.integers(0, 2, 90).astype(bool)), "booldelta"),
+        (pd.Series(r.normal(0, 1, 120)), "gorilla"),
+        (pd.Series(np.cumsum(r.integers(-2, 3, 250))), "search"),
+    ]
+    blobs, metas = zip(*(_encode_value_column(s, force) for s, force in cases))
+    assert [(m["codec"], "qparams" in m, m.get("bool", False)) for m in metas] == [
+        ("sprintz", False, False),
+        ("sprintz", True, False),
+        ("sprintz", True, False),
+        ("sprintz", False, True),
+        ("gorilla", False, False),
+        ("search", False, False),
+    ]
+    outs = decode_value_columns_batch(list(blobs), list(metas))
+    for (s, force), out in zip(cases, outs):
+        out = np.asarray(out)
+        assert out.dtype == s.dtype, force
+        np.testing.assert_array_equal(out, s.to_numpy(), err_msg=str(force))
 
 
 def test_batch_auto_picks_fire_when_smaller():
@@ -171,8 +210,8 @@ def test_float_batch_uses_fire_mode():
     import pandas as pd
 
     from sprintz_spark.operators.encode import (
-        _decode_value_column,
         _encode_float_batch,
+        decode_value_columns_batch,
     )
     from sprintz_spark.codecs import sprintz as sz
 
@@ -190,7 +229,7 @@ def test_float_batch_uses_fire_mode():
     fire = sz.encode_batch_concat_fire(sub, lens)
     want = "fire" if len(fire[0]) < len(base[0]) else sz.blob_mode(base[0])
     assert metas[0]["mode"] == want == "fire"
-    out = _decode_value_column(blobs[0], metas[0])
+    out = decode_value_columns_batch([blobs[0]], [metas[0]])[0]
     assert (np.asarray(out, dtype=np.float64) == vals).all()
 
 

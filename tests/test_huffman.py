@@ -103,15 +103,15 @@ def test_encode_value_column_forced_search():
     import pandas as pd
 
     from sprintz_spark.operators.encode import (
-        _decode_value_column,
         _encode_value_column,
+        decode_value_columns_batch,
     )
 
     s = pd.Series(np.cumsum(rng.integers(-5, 6, 4000)).astype(np.int64))
     for force in ("search", "search:huffman", "search:byteshuffle-huffman"):
         buf, meta = _encode_value_column(s, force)
         assert meta == {"codec": "search"}
-        np.testing.assert_array_equal(_decode_value_column(buf, meta), s)
+        np.testing.assert_array_equal(decode_value_columns_batch([buf], [meta])[0], s)
 
 
 def test_search_report_includes_huffman():

@@ -61,17 +61,9 @@ def test_container_magic_version():
     x = np.arange(64, dtype=np.int64)
     buf = S.search_encode(x)
     assert buf[0] == S.MAGIC and buf[1] == S.VERSION
-    # a pre-versioned (round-3) blob started with the bare pipeline id
-    # (<= 0x0B, can never alias the 0xA5 magic) — the back-compat branch
-    # must still decode it, so retention stores written before the v1
-    # header stay readable
     legacy = buf[2:]  # [id | dtype | u32 n | payload]
-    np.testing.assert_array_equal(
-        S.search_decode(legacy, allow_legacy=True).view(np.int64), x
-    )
-    # without the explicit opt-in (round-6): a blob whose first byte
-    # falls in the legacy id range is refused, not silently reinterpreted
-    # — a corrupted v1 container is header-indistinguishable from legacy
+    # a blob whose first byte falls in the pipeline id range is refused,
+    # not reinterpreted as a bare-id head
     with pytest.raises(ValueError, match="magic/version"):
         S.search_decode(legacy)
     # bytes that are neither v1 nor a plausible legacy id are refused
@@ -79,6 +71,47 @@ def test_container_magic_version():
         S.search_decode(bytes([0x7F]) + buf[1:])
     with pytest.raises(ValueError, match="magic/version"):
         S.search_decode(bytes([S.MAGIC, 99]) + buf[2:])
+
+
+def test_corrupt_search_head_raises_only_corrupt_blob_error():
+    """Every cut of the 8-byte v1 head, out-of-range pipeline ids and
+    dtype codes, and a head n that differs from the payload's length
+    raise CorruptBlobError from search_decode and search_decode_batch:
+    no IndexError, reshape ValueError or silent decode gets out."""
+    from sprintz_spark.codecs.rle import CorruptBlobError
+
+    r = np.random.default_rng(13)
+    blobs = []
+    for name, _ in S.PIPELINES:
+        if name == "gorilla":
+            x = np.round(np.cumsum(r.normal(0, 1, 100)), 2)
+        else:
+            dt = np.uint16 if name in ("sprintz-fire", "sprintz-ewma") else np.int64
+            x = np.cumsum(r.integers(-3, 4, 100)).astype(dt)
+        blobs.append(S.search_encode(x, pipeline=name))
+
+    def mutants(blob):
+        for k in range(8):
+            yield blob[:k]
+        for pos, table in ((2, S.PIPELINES), (3, S._DTYPES)):
+            for v in (len(table), 0xFF, int(r.integers(len(table), 256))):
+                b = bytearray(blob)
+                b[pos] = v
+                yield bytes(b)
+        n = int(np.frombuffer(blob[4:8], np.uint32)[0])
+        for m in (n - 1, n + 1, 5, 1_000_000):
+            yield blob[:4] + np.uint32(m).tobytes() + blob[8:]
+
+    for blob in blobs:
+        assert len(S.search_decode(blob)) == 100
+        for bad in mutants(blob):
+            for fn in (
+                S.search_decode,
+                lambda b: S.search_decode_batch([b]),
+                lambda b: S.search_decode_batch([blob, b]),
+            ):
+                with pytest.raises(CorruptBlobError):
+                    fn(bad)
 
 
 def test_forced_pipeline_validation():
