@@ -24,17 +24,32 @@ _DTYPES = [np.uint8, np.uint16, np.uint32, np.uint64,
 _DTYPE_CODE = {np.dtype(d): i for i, d in enumerate(_DTYPES)}
 
 
+def _view(a: np.ndarray, dt: np.dtype, n: int) -> np.ndarray:
+    """A decoded inner payload ``a`` as the head's ``n`` values of
+    ``dt``. Sprintz payloads decode to their own element width, byte
+    payloads (bzip2, huffman) to uint8 and gorilla to float64;
+    CorruptBlobError unless ``a`` holds exactly n values' bytes in
+    elements of dt's width or single bytes (a head dtype code of the
+    wrong width, or a wrong n)."""
+    if a.nbytes != n * dt.itemsize or a.dtype.itemsize not in (1, dt.itemsize):
+        raise CorruptBlobError(
+            f"search payload of {a.nbytes} bytes in {8 * a.dtype.itemsize}-bit "
+            f"elements; its head says {n} values of {dt}"
+        )
+    return a.view(dt)
+
+
 def _sz(mode):
     return (
         lambda x: sz.encode_column(x, mode),
-        lambda b, dt, n: sz.decode_column(b).view(dt),
+        lambda b, dt, n: _view(sz.decode_column(b), dt, n),
     )
 
 
 def _bzip2():
     return (
         extras.bzip2_encode,
-        lambda b, dt, n: extras.bzip2_decode(b, dt),
+        lambda b, dt, n: _view(extras.bzip2_decode(b, np.uint8), dt, n),
     )
 
 
@@ -61,7 +76,7 @@ def _huffman():
 
     return (
         lambda x: hf.huffman_encode(x.view(np.uint8)),
-        lambda b, dt, n: hf.huffman_decode(b).view(dt),
+        lambda b, dt, n: _view(hf.huffman_decode(b), dt, n),
     )
 
 
@@ -77,7 +92,7 @@ def _shuffle_huffman():
 def _gorilla():
     return (
         lambda x: gorilla.encode(x.astype(np.float64, copy=False)),
-        lambda b, dt, n: gorilla.decode(b).astype(dt, copy=False),
+        lambda b, dt, n: _view(gorilla.decode(b), dt, n),
     )
 
 
@@ -261,7 +276,11 @@ def search_encode(
 def _head(buf: bytes) -> tuple[int, np.dtype, int]:
     """(pipeline id, dtype, n) of a v1 container's 8-byte head.
     CorruptBlobError for a blob shorter than the head, wrong magic/version
-    bytes, or a pipeline id or dtype code outside its table."""
+    bytes, or a pipeline id or dtype code outside its table. A dtype code
+    of the wrong width fails in the decoders (``_view``, byteshuffle's
+    byte count), but a wrong code of the payload's own width (uint16 for
+    int16, int64 for float64) decodes to the wrong type: the head has
+    no check bits to catch it."""
     if len(buf) < 8:
         raise CorruptBlobError(f"search container of {len(buf)} bytes, under its 8-byte head")
     if buf[0] != MAGIC or buf[1] != VERSION:
@@ -274,19 +293,13 @@ def _head(buf: bytes) -> tuple[int, np.dtype, int]:
     return buf[2], np.dtype(_DTYPES[buf[3]]), int(np.frombuffer(buf[4:8], np.uint32)[0])
 
 
-def _check_len(out: np.ndarray, n: int) -> np.ndarray:
-    if len(out) != n:
-        raise CorruptBlobError(f"search payload decodes to {len(out)} values, its head says {n}")
-    return out
-
-
 def search_decode(buf: bytes) -> np.ndarray:
     """Decode a v1 search container. A bad head (see _head), or a payload
-    that decodes to other than the head's n values, raises
-    CorruptBlobError."""
+    that decodes to other than the head's n values of its dtype's width,
+    raises CorruptBlobError."""
     pipeline_i, dt, n = _head(buf)
     _name, (_enc, dec) = PIPELINES[pipeline_i]
-    return _check_len(dec(buf[8:], dt, n), n)
+    return dec(buf[8:], dt, n)
 
 
 _SPRINTZ_PIPELINES = frozenset({
@@ -302,7 +315,7 @@ def search_decode_batch(blobs: list[bytes]) -> list[np.ndarray]:
     through sz.decode_batch (global width-grouped passes), huffman /
     byteshuffle-huffman through huffman_decode_batch (lockstep across
     blobs); every other pipeline decodes one blob at a time. Non-v1
-    heads and length mismatches raise CorruptBlobError, as in
+    heads, length and width mismatches raise CorruptBlobError, as in
     search_decode. Output arrays are identical to search_decode per blob
     (tests/test_search.py pins it)."""
     heads = [_head(buf) for buf in blobs]
@@ -319,17 +332,17 @@ def search_decode_batch(blobs: list[bytes]) -> list[np.ndarray]:
         else:
             out[i] = dec(buf[8:], dt, n)
     for i, a in zip(sz_grp, sz.decode_batch([blobs[i][8:] for i in sz_grp])):
-        out[i] = a.view(heads[i][1])
+        out[i] = _view(a, *heads[i][1:])
     if hf_grp or shf_grp:
         from sprintz_spark.codecs import huffman as hf
 
         arrs = hf.huffman_decode_batch([blobs[i][8:] for i in hf_grp + shf_grp])
         for i, a in zip(hf_grp, arrs):
-            out[i] = a.view(heads[i][1])
+            out[i] = _view(a, *heads[i][1:])
         for i, a in zip(shf_grp, arrs[len(hf_grp):]):
             _pipeline_i, dt, n = heads[i]
             out[i] = extras.byteshuffle_decode(a, dt, n)
-    return [_check_len(a, n) for a, (_p, _dt, n) in zip(out, heads)]
+    return out
 
 
 def search_report(x: np.ndarray) -> dict:

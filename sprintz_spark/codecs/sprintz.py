@@ -40,6 +40,7 @@ reference's C core — cpp/Compress/sprintz_delta_rle.cpp:58-61).
 from __future__ import annotations
 
 import zlib
+from typing import NamedTuple
 
 import numpy as np
 
@@ -384,29 +385,58 @@ def _segmented_cumsum(d: np.ndarray, starts: np.ndarray, plens: np.ndarray) -> n
     return c - np.repeat(off, plens)
 
 
-def _group_pass(mode, w, plens, nbits, payload, f_pos, x0s, d1s) -> np.ndarray:
-    """Inverse transform of many block-padded series of one (mode, w),
-    concatenated with ``plens`` samples each: unpack, then for delta /
-    doubledelta zigzag-decode, put the out-of-band firsts back (x0 at
-    value position ``f_pos``, the doubledelta first gap ``d1s`` after
-    it) and undo one or two segmented cumsums. Returns the padded
-    values; callers drop pads or cut per-blob slices."""
-    su = _UNSIGNED[w]
+class _Group(NamedTuple):
+    """Many block-padded series of one (mode, w), concatenated: the
+    series of one container blob, or many SZ1 blobs once parsed.
+    ``oob`` marks the series whose first values are stored out of band
+    ('Y' heads and container series); ``x0s`` / ``d1s`` hold their
+    first value and doubledelta first gap as uint64 bit patterns (0
+    for the other series). ``payload`` is zero-extended to its blocks'
+    bytes."""
+
+    mode: str
+    w: int
+    ns: np.ndarray
+    oob: np.ndarray
+    x0s: np.ndarray
+    d1s: np.ndarray
+    nbits: np.ndarray
+    payload: bytes | np.ndarray
+
+
+def _group_pass(g: _Group) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse transform of a group: unpack, then for delta /
+    doubledelta zigzag-decode, put the out-of-band firsts back and undo
+    one or two segmented cumsums. Returns the block-padded values and
+    each series' start in them."""
+    su = _UNSIGNED[g.w]
+    plens = g.ns + (-g.ns) % BLOCK
     dst_starts = _cumsum0(plens)
-    z = bitpack.unpack_blocks(payload, nbits, su, BLOCK)
-    if mode == "raw":
-        return z
-    if mode == "fire":
-        return fire.fire_decode_multi(z, dst_starts, plens, w)
+    starts = dst_starts[:-1]
+    z = bitpack.unpack_blocks(g.payload, g.nbits, su, BLOCK)
+    if g.mode == "raw":
+        return z, starts
+    if g.mode == "fire":
+        return fire.fire_decode_multi(z, dst_starts, plens, g.w), starts
     d = zigzag.decode(z).view(su)
+    f_pos = starts[g.oob]
+    x0s = g.x0s[g.oob].astype(su, copy=False)
     d[f_pos] = x0s
-    if mode == "doubledelta":
+    if g.mode == "doubledelta":
         # unsigned subtraction wraps mod 2^w: the residual-domain d1 - x0
-        d[f_pos + 1] = d1s.astype(su) - x0s.astype(su)
+        d[f_pos + 1] = g.d1s[g.oob].astype(su) - x0s
     nonempty = plens > 0
-    s_idx, seg = dst_starts[:-1][nonempty], plens[nonempty]
+    s_idx, seg = starts[nonempty], plens[nonempty]
     x = _segmented_cumsum(d, s_idx, seg)
-    return _segmented_cumsum(x, s_idx, seg) if mode == "doubledelta" else x
+    return (_segmented_cumsum(x, s_idx, seg) if g.mode == "doubledelta" else x), starts
+
+
+def _group_values(g: _Group) -> np.ndarray:
+    """The concatenated values of a group, pad slots dropped."""
+    x, starts = _group_pass(g)
+    keep = np.ones(len(x), dtype=bool)
+    keep[_pad_positions(g.ns, (-g.ns) % BLOCK, starts)] = False
+    return x[keep]
 
 
 # batchable compact-head modes (delta / doubledelta / fire / raw);
@@ -415,37 +445,18 @@ _BATCH_MODES = frozenset((0, 1, 3, 4))
 _BATCH_MAX_RUNS = 128  # larger headers amortize the scalar parse fine
 
 
-def _decode_items(mode, w, items, out) -> None:
-    """Legacy per-blob-parsed route (v1 heads, deflated blobs, big
-    headers): items are (i, n, pad, nbits, payload, firsts) tuples."""
-    plens = np.array([it[1] + it[2] for it in items], dtype=np.int64)
-    starts = _cumsum0(plens)[:-1]
-    with_f = [k for k, it in enumerate(items) if it[5] is not None and it[1]]
-    x = _group_pass(
-        mode, w, plens, np.concatenate([it[3] for it in items]),
-        b"".join(it[4] for it in items), starts[with_f],
-        np.array([items[k][5][0] for k in with_f], np.uint64),
-        np.array([items[k][5][1] or 0 for k in with_f], np.uint64),
-    )
-    for it, lo in zip(items, starts):
-        out[it[0]] = x[lo : lo + it[1]]
+def _parse_batch(blobs: list[bytes]) -> tuple[list, list[int]]:
+    """Parse MANY SZ1 blobs into (blob indices, _Group) pairs, plus the
+    indices of the dyndelta / ewma / booldelta blobs, whose per-blob
+    state only decode_column inverts.
 
-
-def decode_batch(blobs: list[bytes]) -> list[np.ndarray]:
-    """Decode MANY SZ1 blobs with shared numpy passes.
-
-    Compact-head blobs ('Z'/'Y', the small-chunk wire format) are parsed
-    in vectorized passes over ONE concatenation of all blob bytes —
-    heads, varints, RLE headers and zero-extension all come from global
-    fancy indexing, so per-blob Python cost is a few list appends (the
-    per-blob ``_parse`` loop was >40% of decode wall on ~40-row chunks,
-    r10 profile). v1 heads, deflated blobs, per-blob-state modes
-    (dyndelta/ewma/booldelta) and over-large headers take the legacy
-    per-blob parse. Each (mode, width) group then decodes in one unpack
-    + segmented-cumsum/FIRE pass. Returns arrays of the blob's stored
-    unsigned dtype (callers .view()/offset as their meta dictates)."""
-    out: list = [None] * len(blobs)
-    batch: list = []
+    Compact heads ('Z'/'Y', the small-chunk wire format) parse in
+    vectorized passes over ONE concatenation of all blob bytes
+    (_parse_compact: the per-blob ``_parse`` loop was >40% of decode
+    wall on ~40-row chunks, r10 profile). v1 heads, deflated blobs and
+    headers of more than _BATCH_MAX_RUNS runs take the per-blob
+    ``_parse``; both routes' blobs of one (mode, w) form one group."""
+    compact: list = []
     scalar: list = []
     for i, buf in enumerate(blobs):
         # a compact head is >= 5 bytes; shorter blobs go to _parse, which
@@ -453,38 +464,68 @@ def decode_batch(blobs: list[bytes]) -> list[np.ndarray]:
         if len(buf) >= 5 and (buf[0] == MAGIC2 or buf[0] == MAGIC3) and (
             (buf[1] >> 5) in _BATCH_MODES
         ):
-            batch.append(i)
+            compact.append(i)
         else:
             scalar.append(i)
-    groups: dict = {}
-    for i in scalar:
-        buf = blobs[i]
-        mode, w, n, pad, extra, nbits, payload, firsts = _parse(buf)
-        if mode in ("dyndelta", "ewma", "booldelta"):  # per-blob state
-            out[i] = decode_column(buf)
-            continue
-        groups.setdefault((mode, w), []).append(
-            (i, n, pad, nbits, _zero_extend(payload, nbits), firsts)
-        )
-    if batch:
-        _decode_compact_batch(blobs, batch, groups, out)
-    for (mode, w), items in groups.items():
-        _decode_items(mode, w, items, out)
+    groups, over = _parse_compact(blobs, compact) if compact else ([], [])
+    items: dict = {}
+    state = []
+    for i in scalar + over:
+        mode, w, n, pad, extra, nbits, payload, firsts = _parse(blobs[i])
+        if mode in ("dyndelta", "ewma", "booldelta"):
+            state.append(i)
+        else:
+            items.setdefault((mode, w), []).append(
+                (i, n, nbits, _zero_extend(payload, nbits), firsts)
+            )
+    for (mode, w), its in items.items():
+        idx, ns, nbits, payloads, firsts = zip(*its)
+        x0s = np.array([f[0] if f else 0 for f in firsts], np.uint64)
+        d1s = np.array([(f[1] or 0) if f else 0 for f in firsts], np.uint64)
+        groups.append((list(idx), _Group(
+            mode, w, np.array(ns, np.int64),
+            np.array([f is not None for f in firsts]), x0s, d1s,
+            np.concatenate(nbits), np.frombuffer(b"".join(payloads), np.uint8),
+        )))
+    # one group per (mode, w): a pass per group has a fixed cost
+    merged: dict = {}
+    for idx, g in groups:
+        if (g.mode, g.w) in merged:
+            idx0, g0 = merged[g.mode, g.w]
+            idx, g = idx0 + idx, _Group(g.mode, g.w, *map(np.concatenate, zip(g0[2:], g[2:])))
+        merged[g.mode, g.w] = (idx, g)
+    return list(merged.values()), state
+
+
+def decode_batch(blobs: list[bytes]) -> list[np.ndarray]:
+    """Decode MANY SZ1 blobs with shared numpy passes: _parse_batch
+    groups them by (mode, w), and each group decodes in one unpack +
+    segmented-cumsum / FIRE pass (_group_pass); dyndelta / ewma /
+    booldelta blobs decode one at a time. Returns arrays of the blob's
+    stored unsigned dtype (callers .view() as their meta dictates)."""
+    out: list = [None] * len(blobs)
+    groups, state = _parse_batch(blobs)
+    for idx, g in groups:
+        x, starts = _group_pass(g)
+        for i, lo, n in zip(idx, starts.tolist(), g.ns.tolist()):
+            out[i] = x[lo : lo + n]
+    for i in state:
+        out[i] = decode_column(blobs[i])
     return out
 
 
-def _decode_compact_batch(blobs, batch, groups, out) -> None:
-    """Vectorized parse of 'Z'/'Y' compact-head blobs; feeds each
-    (mode, w) group straight into _group_pass with gathered concat
-    arrays. Over-large headers (> _BATCH_MAX_RUNS runs) fall back to the
-    caller's ``groups`` dict (legacy per-blob parse). Every read is
-    bounded by its own blob's end, and a blob whose head disagrees with
-    its block headers raises CorruptBlobError (the checks of _check_head,
-    vectorized)."""
+def _parse_compact(blobs, batch) -> tuple[list, list[int]]:
+    """Vectorized parse of the 'Z'/'Y' compact-head blobs at indices
+    ``batch``: (blob indices, _Group) pairs, one per (mode, w), gathered
+    from ONE concatenation of the blobs' bytes, plus the indices of
+    over-large headers (> _BATCH_MAX_RUNS runs), left to the per-blob
+    parse. Every read is bounded by its own blob's end, and a blob whose
+    head disagrees with its block headers raises CorruptBlobError (the
+    checks of _check_head, vectorized)."""
     m = len(batch)
     L = np.fromiter((len(blobs[i]) for i in batch), np.int64, m)
-    # trailing guard bytes: the 2-byte run-length varint read below
-    # speculatively loads byte+1 even for 1-byte varints at a blob end
+    # trailing guard bytes: they end a head varint cut at the last blob's
+    # end (see y_varints)
     big = np.frombuffer(
         b"".join([blobs[i] for i in batch] + [b"\x00\x00"]), np.uint8
     )
@@ -534,15 +575,10 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
         # a count past int64 stays positive: it goes to _parse, which rejects it
         nruns[y_sel] = np.minimum(v, np.uint64(1 << 62)).astype(np.int64)
         pos[y_sel] = p
-    # over-large headers -> legacy parse (bounded masked-pass loop below)
-    for j in np.flatnonzero(nruns > _BATCH_MAX_RUNS):
-        buf = blobs[batch[j]]
-        mode, w, n, pad, extra, nbits, payload, firsts = _parse(buf)
-        groups.setdefault((mode, w), []).append(
-            (batch[j], n, pad, nbits, _zero_extend(payload, nbits), firsts)
-        )
+    # over-large headers -> per-blob parse (bounded masked-pass loop below)
     keep = nruns <= _BATCH_MAX_RUNS
-    if not keep.all():
+    over = [b for b, k in zip(batch, keep) if not k]
+    if over:
         batch = [b for b, k in zip(batch, keep) if k]
         (L, offs, ends, mode_c, w_arr, pads, is_y, ns, pos, zz0, zz1, nruns) = (
             L[keep], offs[keep], ends[keep], mode_c[keep], w_arr[keep],
@@ -550,8 +586,9 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
             nruns[keep],
         )
         m = len(batch)
+    groups: list = []
     if not m:
-        return
+        return groups, over
     if (pos + nruns > ends).any():
         raise CorruptBlobError("blob truncated: more header runs than bytes left")
     # header run values: nruns[i] bytes at pos[i]
@@ -559,20 +596,27 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
     run_base = _cumsum0(nruns)[:-1]
     within = np.arange(total_runs, dtype=np.int64) - np.repeat(run_base, nruns)
     run_vals = big[np.repeat(pos, nruns) + within]
-    # run lengths: nruns[i] sequential varints (1-2 bytes, RUN_CAP bound)
-    cur = pos + nruns
-    run_lens = np.zeros(total_runs, np.int64)
-    for k in range(int(nruns.max()) if m else 0):
-        s = np.flatnonzero(nruns > k)
-        b0 = big[cur[s]].astype(np.int64)
-        two = (b0 & 0x80) != 0
-        b1 = big[cur[s] + 1].astype(np.int64)
-        # cur <= its blob's end <= len(big) - 2, so both loads are in big
-        if ((cur[s] + 1 + two > ends[s]) | (two & (b1 >= 0x80))).any():
-            raise CorruptBlobError("blob truncated inside a header run length")
-        ln = np.where(two, (b0 & 0x7F) | (b1 << 7), b0)
-        run_lens[run_base[s] + k] = ln
-        cur[s] += 1 + two
+    # run lengths: nruns[i] sequential varints (1-2 bytes, RUN_CAP bound),
+    # read in one pass over a window of each blob's next 2 * nruns[i]
+    # bytes, cut at its end: varint k ends at the window's k-th byte
+    # below 0x80, and starts one byte past the previous one's end
+    c0 = pos + nruns
+    win = np.minimum(2 * nruns, ends - c0)
+    wb = _cumsum0(win)
+    at = np.arange(int(wb[-1]), dtype=np.int64) + np.repeat(c0 - wb[:-1], win)
+    wbytes = big[at].astype(np.int64)
+    t = np.flatnonzero(wbytes < 0x80)
+    first = np.searchsorted(t, wb[:-1])
+    if (np.searchsorted(t, wb[1:]) - first < nruns).any():
+        raise CorruptBlobError("blob truncated inside a header run length")
+    e = t[np.repeat(first, nruns) + within]
+    b = np.where(within == 0, np.repeat(wb[:-1], nruns), np.append(-1, e[:-1]) + 1)
+    if (e - b > 1).any():
+        raise CorruptBlobError("blob truncated inside a header run length")
+    run_lens = np.where(e > b, (wbytes[b] & 0x7F) | (wbytes[e] << 7), wbytes[e])
+    cur = c0.copy()
+    last = (run_base + nruns - 1)[nruns > 0]
+    cur[nruns > 0] = at[e[last]] + 1
     # per-blob block counts / expected+available payload bytes (BLOCK=8:
     # a b-bit block is exactly b payload bytes)
     rl_cum = _cumsum0(run_lens)
@@ -614,17 +658,12 @@ def _decode_compact_batch(blobs, batch, groups, out) -> None:
             )
             payload_g = np.zeros(int(exp_g.sum()), np.uint8)
             payload_g[dst] = big[src]
-            # firsts ('Y' blobs; n >= 1): zigzag-decoded bit patterns
-            plens_g = ns[g] + pads[g]
-            starts_g = _cumsum0(plens_g)[:-1]
-            y_g = g[is_y[g]]
-            x = _group_pass(
-                mode, int(w), plens_g, nbits_g, payload_g, starts_g[is_y[g]],
-                zigzag.decode(zz0[y_g]).view(np.uint64),
-                zigzag.decode(zz1[y_g]).view(np.uint64),
-            )
-            for j, lo, n in zip(g, starts_g, ns[g]):
-                out[batch[j]] = x[lo : lo + n]
+            groups.append(([batch[j] for j in g], _Group(
+                mode, int(w), ns[g], is_y[g],
+                zigzag.decode(zz0[g]).view(np.uint64),
+                zigzag.decode(zz1[g]).view(np.uint64), nbits_g, payload_g,
+            )))
+    return groups, over
 
 
 def choose_mode(x: np.ndarray, candidates=("delta", "doubledelta", "fire")) -> str:
@@ -648,13 +687,14 @@ def _cumsum0(a: np.ndarray) -> np.ndarray:
     return np.concatenate([[0], np.cumsum(a)])
 
 
-def _pad_positions(ns: np.ndarray, pads: np.ndarray, dst_starts: np.ndarray) -> np.ndarray:
-    """Indices of pad slots in the block-padded concat array."""
+def _pad_positions(ns: np.ndarray, pads: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Indices of pad slots in the block-padded concat array whose
+    series begin at ``starts``."""
     sel = pads > 0
     p = pads[sel]
     if not len(p):
         return np.zeros(0, np.int64)
-    base = dst_starts[:-1][sel] + ns[sel]
+    base = starts[sel] + ns[sel]
     intra = np.arange(int(p.sum()), dtype=np.int64) - np.repeat(_cumsum0(p)[:-1], p)
     return np.repeat(base, p) + intra
 
@@ -754,7 +794,7 @@ def encode_batch_concat_fire(
             if hi > lo:
                 z[lo:hi] = fire.fire_encode(u[lo:hi], w)
     if len(u):
-        z[_pad_positions(ns, pads, dst_starts)] = 0  # match encode_column
+        z[_pad_positions(ns, pads, dst_starts[:-1])] = 0  # match encode_column
     nb = bitpack.block_nbits(z, BLOCK) if len(u) else np.zeros(0, np.uint8)
     payload = bitpack.pack_blocks(z, nb, BLOCK) if len(u) else b""
     byte_off = _cumsum0(nb.astype(np.int64))
@@ -828,7 +868,7 @@ def _residuals(u, ns, pads, plens, dst_starts, w, oob):
     z1[e_idx] = 0
     z2[e_idx] = 0
     z2[e_idx + 1] = 0
-    z2[_pad_positions(ns, pads, dst_starts)] = 0
+    z2[_pad_positions(ns, pads, starts)] = 0
     return z1, z2, x0s, gaps
 
 
@@ -945,18 +985,11 @@ _I64_MIN = np.iinfo(np.int64).min
 _I64_MAX = np.iinfo(np.int64).max
 
 
-def _run_partials_i64(
-    nbits: np.ndarray,
-    payload: bytes,
-    ns: np.ndarray,
-    x0s: np.ndarray,
-    d1s: np.ndarray,
-    mode: str,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per-series (sum, max, min) from block headers WITHOUT unpacking
-    zero-width blocks — the RLE-run fast path (reference:
-    cpp/Compress/query.hpp:77-136 aggregates runs as func(v, prev, prev,
-    ncopies); sprintz_delta_rle_query.hpp:272-311).
+def _run_partials_i64(g: _Group) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per-series (sum, max, min) of a 64-bit delta / doubledelta group
+    from block headers WITHOUT unpacking zero-width blocks — the RLE-run
+    fast path (reference: cpp/Compress/query.hpp:77-136 aggregates runs
+    as func(v, prev, prev, ncopies); sprintz_delta_rle_query.hpp:272-311).
 
     Series are block-aligned (every encoder pads each series to a BLOCK
     multiple), so a series occupies whole blocks. Zero-width blocks carry
@@ -976,11 +1009,11 @@ def _run_partials_i64(
     engine's domain (counters/sizes never approach 2^63); callers with
     adversarial inputs should force the decode path.
 
-    ``ns``: true series lengths; ``x0s``: absolute first values (0 for
-    in-stream-firsts blobs where the stream embeds x0); ``d1s``: first
-    gaps for doubledelta out-of-band-firsts series (0 otherwise).
+    The group's ``x0s`` / ``d1s`` are 0 for in-stream-firsts series,
+    whose stream embeds x0, so they enter the sums with no branch.
     """
-    ns = np.asarray(ns, np.int64)
+    ns, nbits, mode = g.ns, g.nbits, g.mode
+    x0s, d1s = g.x0s.view(np.int64), g.d1s.view(np.int64)
     n_series = len(ns)
     pads = (-ns) % BLOCK
     plens = ns + pads
@@ -991,7 +1024,7 @@ def _run_partials_i64(
     sob = np.repeat(np.arange(n_series, dtype=np.int64), bps)  # series of block
     b0rep = np.repeat(b0, bps)
     nz = nbits > 0
-    z = bitpack.unpack_blocks(payload, nbits[nz], np.uint64, BLOCK)
+    z = bitpack.unpack_blocks(g.payload, nbits[nz], np.uint64, BLOCK)
     e_nz = zigzag.decode(z).view(np.int64).reshape(-1, BLOCK)
     c_nz = e_nz.cumsum(axis=1)  # within-block cumsum of residuals
     S1 = np.zeros(nblocks, np.int64)
@@ -1085,58 +1118,39 @@ def series_partials(values: np.ndarray, lengths: np.ndarray):
 _RUN_FRACTION_MIN = 0.10
 
 
-def _runs_worthwhile(nbits: np.ndarray) -> bool:
-    return len(nbits) > 0 and (nbits == 0).sum() >= _RUN_FRACTION_MIN * len(nbits)
-
-
-def _firsts_i64(firsts) -> tuple[int, int]:
-    """(x0, d1) as int64 reinterpretations of the stored 64-bit patterns;
-    (0, 0) for in-stream-firsts blobs."""
-    if firsts is None:
-        return 0, 0
-    x0 = int(np.uint64(firsts[0]).astype(np.int64))
-    d1 = int(np.uint64(firsts[1]).astype(np.int64)) if firsts[1] is not None else 0
-    return x0, d1
+def _group_partials(g: _Group) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per-series (sum, max, min) of a group, and the one place the
+    RLE-run fast path is chosen: a 64-bit delta / doubledelta group with
+    enough zero-width blocks aggregates from its block headers
+    (_run_partials_i64); any other group decodes, then aggregates."""
+    nb = g.nbits
+    if (
+        g.w == 64 and g.mode in ("delta", "doubledelta") and len(nb)
+        and (nb == 0).sum() >= _RUN_FRACTION_MIN * len(nb)
+    ):
+        return _run_partials_i64(g)
+    return series_partials(_group_values(g).astype(np.int64), g.ns)
 
 
 def query_batch_partials(
     blobs: list[bytes],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(counts, sums, maxs, mins) across many blobs. Fast-path-eligible
-    blobs (64-bit delta/doubledelta) are concatenated per mode and share
-    ONE unpack + block-level pass; the rest fall back to decode_batch."""
-    n_b = len(blobs)
-    cnts = np.zeros(n_b, np.int64)
-    sums = np.zeros(n_b, np.int64)
-    maxs = np.full(n_b, _I64_MIN)
-    mins = np.full(n_b, _I64_MAX)
-    fast: dict[str, list] = {}
-    slow: list[int] = []
-    for i, buf in enumerate(blobs):
-        mode, w, n, pad, extra, nbits, payload, firsts = _parse(buf)
-        cnts[i] = n
-        if n == 0:
-            continue
-        if w == 64 and mode in ("delta", "doubledelta") and _runs_worthwhile(nbits):
-            x0, d1 = _firsts_i64(firsts)
-            fast.setdefault(mode, []).append(
-                (i, n, nbits, _zero_extend(payload, nbits), x0, d1)
-            )
-        else:
-            slow.append(i)
-    for mode, items in fast.items():
-        idx = np.array([it[0] for it in items], np.int64)
-        nn = np.array([it[1] for it in items], np.int64)
-        nb = np.concatenate([it[2] for it in items])
-        pl = b"".join(it[3] for it in items)
-        x0s = np.array([it[4] for it in items], np.int64)
-        d1s = np.array([it[5] for it in items], np.int64)
-        s, mx, mn = _run_partials_i64(nb, pl, nn, x0s, d1s, mode)
-        sums[idx], maxs[idx], mins[idx] = s, mx, mn
-    if slow:
-        for i, arr in zip(slow, decode_batch([blobs[i] for i in slow])):
-            v = arr.astype(np.int64)
-            sums[i], maxs[i], mins[i] = int(v.sum()), int(v.max()), int(v.min())
+    """(counts, sums, maxs, mins) across many SZ1 blobs, from the groups
+    decode_batch parses (_parse_batch): each group's partials come from
+    _group_partials; dyndelta / ewma / booldelta blobs decode one at a
+    time. An empty blob gives (0, 0, INT64_MIN, INT64_MAX)."""
+    cnts = np.zeros(len(blobs), np.int64)
+    sums, maxs, mins = cnts.copy(), cnts.copy(), cnts.copy()
+    groups, state = _parse_batch(blobs)
+    for idx, g in groups:
+        cnts[idx] = g.ns
+        sums[idx], maxs[idx], mins[idx] = _group_partials(g)
+    if state:
+        vals = [decode_column(blobs[i]).astype(np.int64) for i in state]
+        cnts[state] = [len(v) for v in vals]
+        sums[state], maxs[state], mins[state] = series_partials(
+            np.concatenate(vals), cnts[state]
+        )
     return cnts, sums, maxs, mins
 
 
@@ -1147,7 +1161,7 @@ def query_compressed(buf: bytes, op: str) -> int | None:
     sprintz_delta_rle_query.hpp:272-311).
 
     op in {'max', 'min', 'sum', 'count'}. 64-bit delta/doubledelta blobs
-    use the RLE-run fast path (see _run_partials_i64): zero-width blocks
+    use the RLE-run fast path (see _group_partials): zero-width blocks
     contribute value*run_length to sums and one compare to max/min with
     no bit unpacking; only nonzero blocks touch payload. Other modes
     decode then aggregate. Values are int64 (wraparound-identical to the
@@ -1238,11 +1252,11 @@ def encode_container(
     )
 
 
-def _parse_container(buf: bytes):
-    """Container head parse shared by decode and the query fast path:
-    returns (mode, w, ns, x0s, gaps_or_None, nbits, payload). A head that
-    runs past the blob or disagrees with its block headers raises
-    CorruptBlobError."""
+def _parse_container(buf: bytes) -> _Group:
+    """The _Group of a container blob, shared by decode_container and
+    query_container_partials: every non-empty series has out-of-band
+    firsts. A head that runs past the blob or disagrees with its block
+    headers raises CorruptBlobError."""
     buf = _inflate(buf)
     if buf[0] != MAGIC_CONTAINER:
         raise CorruptBlobError(f"bad container magic {buf[0]:#04x}")
@@ -1264,28 +1278,13 @@ def _parse_container(buf: bytes):
     ns = ns.astype(np.int64)
     if (ns + (-ns) % BLOCK).sum() != BLOCK * blocks:
         raise CorruptBlobError("container head disagrees with its block headers")
-    su = _UNSIGNED[w]
-    x0s = zigzag.decode(head[m : 2 * m]).view(np.uint64).astype(su)
-    gaps = None
+    x0s = zigzag.decode(head[m : 2 * m]).view(np.uint64)
     if mode == "doubledelta":
-        gaps = zigzag.decode(head[2 * m : 3 * m]).view(np.uint64).astype(su)
+        d1s = zigzag.decode(head[2 * m : 3 * m]).view(np.uint64)
+    else:
+        d1s = np.zeros(m, np.uint64)
     nbits = np.repeat(run_vals, run_lens)
-    return mode, w, ns, x0s, gaps, nbits, _zero_extend(buf[pos:], nbits)
-
-
-def _container_values(mode, w, ns, x0s, gaps, nbits, payload) -> np.ndarray:
-    """The concatenated values of a parsed container, pad slots dropped."""
-    pads = (-ns) % BLOCK
-    plens = ns + pads
-    dst_starts = _cumsum0(plens)
-    ne = ns > 0
-    x = _group_pass(
-        mode, w, plens, nbits, payload, dst_starts[:-1][ne], x0s[ne],
-        None if gaps is None else gaps[ne],
-    )
-    keep = np.ones(len(x), dtype=bool)
-    keep[_pad_positions(ns, pads, dst_starts)] = False
-    return x[keep]
+    return _Group(mode, w, ns, ns > 0, x0s, d1s, nbits, _zero_extend(buf[pos:], nbits))
 
 
 def query_container_partials(
@@ -1294,19 +1293,14 @@ def query_container_partials(
     """Per-series (counts, sums, maxs, mins) straight from a container blob.
 
     Container series are individually block-padded, so each series owns
-    whole blocks and the RLE-run fast path applies per series: the tiny
-    constant-heavy daily-tier series aggregate from headers alone. Other
-    containers decode from the same parsed head. An empty series gives
-    (0, 0, INT64_MIN, INT64_MAX)."""
-    head = _parse_container(buf)
-    mode, w, ns, x0s, gaps, nbits, payload = head
-    if w == 64 and _runs_worthwhile(nbits):
-        d1_i = gaps.view(np.int64) if gaps is not None else np.zeros(len(ns), np.int64)
-        return ns, *_run_partials_i64(nbits, payload, ns, x0s.view(np.int64), d1_i, mode)
-    return ns, *series_partials(_container_values(*head).astype(np.int64), ns)
+    whole blocks and _group_partials' RLE-run fast path applies per
+    series: the tiny constant-heavy daily-tier series aggregate from
+    headers alone. An empty series gives (0, 0, INT64_MIN, INT64_MAX)."""
+    g = _parse_container(buf)
+    return g.ns, *_group_partials(g)
 
 
 def decode_container(buf: bytes) -> tuple[np.ndarray, np.ndarray]:
     """Inverse of encode_container: (values_concat, lengths)."""
-    head = _parse_container(buf)
-    return _container_values(*head), head[2]
+    g = _parse_container(buf)
+    return _group_values(g), g.ns

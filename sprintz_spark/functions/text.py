@@ -173,93 +173,6 @@ def simhash64(text: str, shingle: int = 3) -> int:
     return int(np.packbits((acc > 0).astype(np.uint8), bitorder="little").view(np.uint64)[0])
 
 
-def lang_id_expr(col: str = "text") -> str:
-    """Spark SQL replica of ``lang_id`` (r10: JVM codegen instead of a
-    per-doc Python map — zero Python workers in the scan). Marker counts
-    use the replace-length trick ((len(p)-len(replace(p,m)))/len(m), the
-    same non-overlapping left-to-right scan as str.count); the winner is
-    the FIRST language in LANG_MARKERS order attaining the strict max
-    (Python's ``score > best_score`` update rule), 'und' when all
-    scores are zero. Bit-equal to the scalar on every corpus the gates
-    run (asserted by tests/test_text_exprs.py)."""
-    langs = list(LANG_MARKERS)
-
-    def score(markers) -> str:
-        return " + ".join(
-            f"((length(_p) - length(replace(_p, '{m}'))) DIV {len(m)})"
-            for m in markers
-        )
-
-    scores = ", ".join(f"({score(ms)})" for ms in LANG_MARKERS.values())
-    whens = " ".join(
-        f"WHEN _s[{i}] = array_max(_s) THEN '{l}'"
-        for i, l in enumerate(langs[:-1])
-    )
-    # intermediates bind through single-element transform() lambdas (a
-    # correlated scalar subquery would not resolve as a column expr)
-    return (
-        f"transform(array(' ' || lower(coalesce({col}, '')) || ' '), _p -> "
-        f"transform(array(array({scores})), _s -> "
-        f"CASE WHEN array_max(_s) <= 0 THEN 'und' {whens} "
-        f"ELSE '{langs[-1]}' END)[0])[0]"
-    )
-
-
-def quality_score_expr(col: str = "text") -> str:
-    """Spark SQL replica of ``quality_score`` — identical arithmetic
-    order and bround (= Python round's half-even) so doubles are
-    bit-equal to the scalar (asserted by tests/test_text_exprs.py)."""
-    stop_arr = ", ".join(f"'{w}'" for w in sorted(STOPWORDS))
-    mwl = "(CAST(aggregate(_ws, 0L, (a, w) -> a + length(w)) AS DOUBLE) / size(_ws))"
-    n_stop = (
-        f"size(filter(_ws, w -> array_contains(array({stop_arr}),"
-        " trim(BOTH '.,!?;:' FROM lower(w)))))"
-    )
-    alpha = (
-        "(CASE WHEN length(_t) > 0 THEN"
-        " CAST(length(_t) - length(regexp_replace(_t, '[A-Za-z]', ''))"
-        " AS DOUBLE) / length(_t) ELSE CAST(0.0 AS DOUBLE) END)"
-    )
-    # intermediates bind through single-element transform() lambdas;
-    # inner lambdas may reference outer lambda variables
-    return (
-        f"transform(array(coalesce({col}, '')), _t -> "
-        f"transform(array(filter(split(_t, '\\\\s+'), x -> x != '')), _ws -> "
-        f"CASE WHEN size(_ws) = 0 THEN CAST(0.0 AS DOUBLE) ELSE bround("
-        f"0.4 * {alpha}"
-        f" + 0.4 * least(CAST(1.0 AS DOUBLE), 4.0 * (CAST({n_stop} AS DOUBLE) / size(_ws)))"
-        f" + 0.2 * (CASE WHEN {mwl} >= 3.0 AND {mwl} <= 10.0 THEN 1.0 ELSE 0.5 END)"
-        f", 6) END)[0])[0]"
-    )
-
-
-def token_count_bpe_expr(col: str = "text") -> str:
-    """Spark SQL replica of ``token_count_bpe`` (same pre-tokenizer
-    regex; Java and Python agree on it for the ASCII corpora the gates
-    run — asserted by tests/test_text_exprs.py)."""
-    return (
-        f"CAST(size(regexp_extract_all(coalesce({col}, ''),"
-        r" '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]|\\s+(?!\\S)', 0)) AS BIGINT)"
-    )
-
-
-def fingerprint_expr(col: str = "text") -> str:
-    """Spark SQL replica of ``fingerprint``: 63-bit md5 prefix of the
-    normalized (lower-cased, whitespace-collapsed) text. The top bit is
-    masked by rewriting the first hex digit mod 8 before conv(16, 10),
-    so the value always fits a BIGINT (bit-equal to the scalar —
-    tests/test_text_exprs.py)."""
-    norm = (
-        f"array_join(filter(split(lower(coalesce({col}, '')), '\\\\s+'),"
-        " x -> x != ''), ' ')"
-    )
-    return (
-        f"transform(array(md5({norm})), _h -> "
-        "cast(conv(concat(conv(conv(substring(_h, 1, 1), 16, 10) % 8,"
-        " 10, 16), substring(_h, 2, 15)), 16, 10) AS BIGINT))[0]"
-    )
-
-
 def winnow_fingerprint_exprs(k: int = 8, w: int = 4) -> tuple[str, str]:
     """MOSS-style winnowing document fingerprints (Schleimer, Wilkerson &
     Aiken, SIGMOD'03), built entirely from Spark SQL higher-order

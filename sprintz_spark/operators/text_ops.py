@@ -19,19 +19,16 @@ from sprintz_spark.functions import text as T
 # pyarrow count_substring route also loses to the scalar once the
 # pad/lower conversions are included.
 #
-# r10 closed the remaining question (r9 verdict item 3) by building the
-# full Spark SQL expression replicas (functions.text.lang_id_expr /
-# quality_score_expr / token_count_bpe_expr / fingerprint_expr — pinned
-# bit-equal to these scalars by tests/test_text_exprs.py) and A/B-ing
-# them on the gate corpus: the expression route runs 0.90 s warm vs
-# 0.66 s for this Arrow-UDF path (interleaved trials, sf0.1 feature
-# scan + agg) and pays ~3.7 s of one-time Janino codegen for its large
-# generated lambda/CASE chains — ~20 JVM string scans per doc for the
-# marker counts lose to str.count's C loop. The UDF path stays the hot
-# path; the expressions remain available for deployments that must keep
-# Python workers out of the scan entirely (at 100 TB the per-row cost
-# difference, not the worker boundary, dominates either way — both are
-# one narrow pass).
+# r10 closed the remaining question (r9 verdict item 3) by building
+# Spark SQL expression replicas of lang_id / quality_score /
+# token_count_bpe / fingerprint and A/B-ing them on the gate corpus: the
+# expression route ran 0.90 s warm vs 0.66 s for this Arrow-UDF path
+# (interleaved trials, sf0.1 feature scan + agg) and paid ~3.7 s of
+# one-time Janino codegen for its large generated lambda/CASE chains —
+# ~20 JVM string scans per doc for the marker counts lose to str.count's
+# C loop. The replicas were deleted; this UDF path is the only one (at
+# 100 TB the per-row cost difference, not the worker boundary, dominates
+# either way — both are one narrow pass).
 
 
 @F.pandas_udf(StringType())

@@ -68,17 +68,56 @@ def test_blob_fastpath_property(vals, mode):
 
 
 def test_batch_partials_mixed_modes():
-    blobs, want = [], []
+    """One query_batch_partials call over every blob kind the batch
+    parse routes: 'Y' and 'Z' heads (n = 0 among them), SZ1 heads with
+    in-stream firsts, deflated blobs, a header of more than 128 runs,
+    fire, dyndelta, ewma and booldelta, at widths 8 to 64. Each result
+    equals decode_column followed by an int64 aggregate."""
+    blobs = []
     rng = np.random.default_rng(3)
     for i in range(20):
         n = int(rng.integers(1, 200))
         arr = np.cumsum(rng.integers(-2, 3, n)).astype(np.int64) + i
-        mode = ["delta", "doubledelta", "raw"][i % 3]
-        blobs.append(sz.encode_column(arr, mode))
-        want.append(_agg(arr))
+        blobs.append(sz.encode_column(arr, ["delta", "doubledelta", "raw"][i % 3]))
+    for w in (8, 16, 32, 64):
+        arr = np.cumsum(rng.integers(-2, 3, 150)).astype(f"int{w}")
+        for mode in ["delta", "doubledelta", "raw", "dyndelta"] + ["fire", "ewma"] * (w <= 16):
+            blobs += [sz.encode_column(arr, mode, deflate=d) for d in (False, True)]
+            blobs.append(sz.encode_column(arr[:0], mode))
+    blobs.append(sz.encode_column(rng.integers(0, 2, 300).astype(bool), "booldelta"))
+    # n > 65536: SZ1 head, firsts in the stream
+    big = np.cumsum(rng.integers(-3, 4, 70_000)).astype(np.int64)
+    blobs += [sz.encode_column(big, m, deflate=False) for m in ("delta", "doubledelta")]
+    # alternating widths: one header run per block
+    spiky = np.where(
+        np.arange(4096) % 16 < 8,
+        rng.integers(0, 3, 4096),
+        rng.integers(1 << 30, 1 << 40, 4096),
+    ).astype(np.int64)
+    blobs.append(sz.encode_column(spiky, "delta", deflate=False))
+    assert (np.diff(sz._parse(blobs[-1])[5]) != 0).sum() > 128
+    assert {b"Y", b"Z", b"W"} <= {b[:1] for b in blobs}
+    assert any(b[:3] == b"SZ1" for b in blobs)
     cnts, sums, maxs, mins = sz.query_batch_partials(blobs)
-    for i, (n, s, mx, mn) in enumerate(want):
-        assert (cnts[i], sums[i], maxs[i], mins[i]) == (n, s, mx, mn)
+    for i, buf in enumerate(blobs):
+        v = sz.decode_column(buf).astype(np.int64)
+        want = (len(v), v.sum(), v.max(initial=np.iinfo(np.int64).min),
+                v.min(initial=np.iinfo(np.int64).max))
+        assert (cnts[i], sums[i], maxs[i], mins[i]) == want, i
+
+
+def test_batch_partials_parse_compact_heads_in_one_pass(monkeypatch):
+    """query_batch_partials reads raw compact-head blobs through the
+    batch's vectorized parse: no per-blob _parse call."""
+    rng = np.random.default_rng(4)
+    arrs = [np.cumsum(rng.integers(-2, 3, 20)).astype(np.int64) for _ in range(250)]
+    blobs = [sz.encode_column(a, "delta", deflate=False) for a in arrs]
+    assert all(b[:1] == b"Y" for b in blobs)
+    parse, calls = sz._parse, []
+    monkeypatch.setattr(sz, "_parse", lambda buf: calls.append(1) or parse(buf))
+    cnts, sums, maxs, mins = sz.query_batch_partials(blobs)
+    assert len(calls) == 0
+    assert [(cnts[i], sums[i], maxs[i], mins[i]) for i in range(250)] == [_agg(a) for a in arrs]
 
 
 @pytest.mark.parametrize("mode", ["delta", "doubledelta", "auto"])

@@ -77,18 +77,20 @@ def test_corrupt_search_head_raises_only_corrupt_blob_error():
     """Every cut of the 8-byte v1 head, out-of-range pipeline ids and
     dtype codes, and a head n that differs from the payload's length
     raise CorruptBlobError from search_decode and search_decode_batch:
-    no IndexError, reshape ValueError or silent decode gets out."""
+    no IndexError, reshape ValueError or silent decode gets out. Every
+    in-range dtype code either decodes the payload's bytes (a code of
+    the payload's own width) or raises CorruptBlobError."""
     from sprintz_spark.codecs.rle import CorruptBlobError
 
     r = np.random.default_rng(13)
     blobs = []
     for name, _ in S.PIPELINES:
         if name == "gorilla":
-            x = np.round(np.cumsum(r.normal(0, 1, 100)), 2)
+            xs = [np.round(np.cumsum(r.normal(0, 1, 101)), 2)]
         else:
-            dt = np.uint16 if name in ("sprintz-fire", "sprintz-ewma") else np.int64
-            x = np.cumsum(r.integers(-3, 4, 100)).astype(dt)
-        blobs.append(S.search_encode(x, pipeline=name))
+            dts = (np.uint16,) if name in ("sprintz-fire", "sprintz-ewma") else (np.int64, np.int16)
+            xs = [np.cumsum(r.integers(-3, 4, 101)).astype(dt) for dt in dts]
+        blobs += [(x, S.search_encode(x, pipeline=name)) for x in xs]
 
     def mutants(blob):
         for k in range(8):
@@ -102,16 +104,26 @@ def test_corrupt_search_head_raises_only_corrupt_blob_error():
         for m in (n - 1, n + 1, 5, 1_000_000):
             yield blob[:4] + np.uint32(m).tobytes() + blob[8:]
 
-    for blob in blobs:
-        assert len(S.search_decode(blob)) == 100
+    decoders = (
+        S.search_decode,
+        lambda b: S.search_decode_batch([b])[0],
+        lambda b: S.search_decode_batch([blob, b])[1],
+    )
+    for x, blob in blobs:
+        assert len(S.search_decode(blob)) == 101
         for bad in mutants(blob):
-            for fn in (
-                S.search_decode,
-                lambda b: S.search_decode_batch([b]),
-                lambda b: S.search_decode_batch([blob, b]),
-            ):
+            for fn in decoders:
                 with pytest.raises(CorruptBlobError):
                     fn(bad)
+        for code, dt in enumerate(S._DTYPES):
+            bad = blob[:3] + bytes([code]) + blob[4:]
+            for fn in decoders:
+                if np.dtype(dt).itemsize == x.itemsize:
+                    out = fn(bad)
+                    assert out.dtype == dt and out.tobytes() == x.tobytes()
+                else:
+                    with pytest.raises(CorruptBlobError):
+                        fn(bad)
 
 
 def test_forced_pipeline_validation():
